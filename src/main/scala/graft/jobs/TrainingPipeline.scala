@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Dedup, Html, Redact, Sampling, Similarity, TextOps}
+import graft.operators.{Dedup, Html, Pins, Redact, Sampling, Similarity, TextOps}
 
 /** The end-to-end training-data preparation pipeline, assembled from the
   * library's verified stages — the workload this engine exists for, and
@@ -181,7 +181,8 @@ object TrainingPipeline {
           scrubPii: Boolean = false,
           shardsOut: Option[String] = None,
           outShards: Int = 8,
-          report: Boolean = true): (DataFrame, Report) = {
+          report: Boolean = true): (DataFrame, Report) =
+    Pins(pinDir(spark)) { pins =>
     // report = false is the hot-path mode: skip the per-stage count
     // jobs (each is a full scheduler barrier over a cached frame) and
     // return -1 counts — the packed output is identical; the persists
@@ -189,73 +190,27 @@ object TrainingPipeline {
     // dashboard. A daily production run that only lands shards wants
     // this; a monitored run keeps the default.
     def tally(df: => DataFrame): Long = if (report) df.count() else -1L
-    // Stage-boundary pin = EAGER localCheckpoint, not bare persist
-    // (r14): a persist memoizes EXECUTION but not ANALYSIS — every
-    // downstream action re-analyzes the whole stacked logical plan
-    // before cache substitution, and by the packing stage that plan
-    // carries every gate, join and CC of the chain several times over
-    // (measured: pipeline_full spent 13.7 s of 35 s in driver gaps
-    // with no job running). Checkpointing truncates the plan to a leaf
-    // at each stage boundary — the substringDecontam stage's existing
-    // discipline applied to every pinned corpus frame. Same
-    // materialization count (the persist's first consumer becomes the
-    // eager checkpoint job), and the release fn unpersists the
-    // checkpointed blocks at end-of-run exactly like the old unpersist
-    // list (localCheckpoint has no Dataset-level unpersist, so the
-    // backing RDDs are resolved through sc.getPersistentRDDs).
+    // Stage-boundary pin = EAGER checkpoint, not bare persist (r14): a
+    // persist memoizes EXECUTION but not ANALYSIS — every downstream
+    // action re-analyzes the whole stacked logical plan before cache
+    // substitution, and by the packing stage that plan carries every
+    // gate, join and CC of the chain several times over (measured:
+    // pipeline_full spent 13.7 s of 35 s in driver gaps with no job
+    // running). Checkpointing truncates the plan to a leaf at each stage
+    // boundary, at the same materialization count. Every pin and persist
+    // of the run, the media elections' and CC calls' included, registers
+    // in `pins`, released when the run returns or throws.
+    // AQE-sized pin (hash exchange on doc_id, no explicit count): an
+    // explicit defaultParallelism pin was measured WORSE across all four
+    // pipeline lanes (pipeline_full 23.2 -> 35.1 s), and at 100 TB the
+    // producing SortMergeJoins are ALREADY hash-partitioned on doc_id, so
+    // EnsureRequirements drops the stacked REPARTITION_BY_COL (verified
+    // r15 — plans/r15/repartition_on_join_key.txt). The stage name is the
+    // job description, so per-stage pin cost is attributable (guide §1.5).
     val sc = spark.sparkContext
-    // SPARK_GRAFT_PIPELINE_PIN=local|reliable (default local): stage
-    // pins are the ONLY copy of the gated corpus mid-run, and a local
-    // checkpoint's blocks die with their executor — fine on one box,
-    // an unrecoverable job failure on a cluster that loses an executor
-    // after the source frames unpersist. `reliable` routes every stage
-    // pin through `sc.setCheckpointDir` + `checkpoint()` (HDFS/S3-
-    // durable; same persist-before-checkpoint discipline as the
-    // iterative operators — see Checkpoints.maker). The reliable pin
-    // costs one extra write+read of each pinned frame; its files stay
-    // until `spark.cleaner.referenceTracking.cleanCheckpoints=true`
-    // or the dir is cleaned post-job. SPARK_GRAFT_PIPELINE_PIN_DIR
-    // overrides the directory (default: the session checkpoint dir if
-    // set, else java.io.tmpdir/graft-pins-<pid>).
-    // conf first (`spark.graft.pipeline.pin`, testable in-session), env
-    // fallback (the deploy-time form); same for the directory
-    val reliablePins = spark.conf.getOption("spark.graft.pipeline.pin")
-      .orElse(sys.env.get("SPARK_GRAFT_PIPELINE_PIN"))
-      .contains("reliable")
-    lazy val reliableCkpt: DataFrame => DataFrame =
-      graft.operators.Checkpoints.maker(Some(
-        spark.conf.getOption("spark.graft.pipeline.pinDir")
-          .orElse(sys.env.get("SPARK_GRAFT_PIPELINE_PIN_DIR"))
-          .orElse(sc.getCheckpointDir)
-          .getOrElse(s"${System.getProperty("java.io.tmpdir", "/tmp")}" +
-            s"/graft-pins-${ProcessHandle.current().pid()}")))
-    def pin(df: DataFrame): (DataFrame, () => Unit) = {
-      // AQE-sized pin (hash exchange on doc_id, no explicit count): an
-      // explicit defaultParallelism pin was measured WORSE across all
-      // four pipeline lanes (pipeline_full 23.2 -> 35.1 s) — the
-      // re-inflated per-stage floors cost more than the lost
-      // compute-parallelism of the chunk/tokenize tail on this corpus,
-      // and at scale the bytes-proportional layout parallelizes anyway.
-      // At 100 TB the producing joins are SortMergeJoins ALREADY
-      // hash-partitioned on doc_id, and EnsureRequirements optimizes
-      // the stacked REPARTITION_BY_COL out (verified r15 — see
-      // plans/r15/repartition_on_join_key.txt), so no pin ever pays a
-      // second full-corpus exchange. Release is by the checkpoint
-      // leaf's EXACT backing RDD (Checkpoints.pinLocal) — a
-      // getPersistentRDDs set diff races the media elections'
-      // concurrent persists on other threads (the r14 WARN-burst
-      // source: a media pin's RDD id captured into a text pin's
-      // release set).
-      val keyed = df.repartition(col("doc_id"))
-      if (reliablePins) (reliableCkpt(keyed), () => ())
-      else graft.operators.Checkpoints.pinLocal(keyed)
-    }
-    // labelled pin: the stage name lands in the Spark UI / profilers as
-    // the job description (guide §1.5) so per-stage pin cost is
-    // attributable without code archaeology
-    def pinL(label: String)(df: DataFrame): (DataFrame, () => Unit) = {
+    def pinL(label: String)(df: DataFrame): DataFrame = {
       sc.setJobDescription(s"pipeline pin: $label")
-      try pin(df) finally sc.setJobDescription(null)
+      try pins.pin(df.repartition(col("doc_id"))) finally sc.setJobDescription(null)
     }
 
     // Stage 3c's media-duplicate elections launch HERE, before the text
@@ -265,7 +220,8 @@ object TrainingPipeline {
     // running them on pool threads overlaps their driver/scheduling
     // floors with the text stages' (guide §2.6), and stage 3c just
     // awaits the drop sets. Schema validation stays synchronous so a
-    // malformed frame still fails fast with its name.
+    // malformed frame still fails fast with its name. Each election
+    // joins the run's `pins` scope, which waits for it before releasing.
     def checkMedia(m: DataFrame, name: String): DataFrame = {
       val want = graft.multimodal.Multimodal.mediaSchema.fieldNames
       want.foreach(c => require(m.columns.contains(c),
@@ -280,19 +236,19 @@ object TrainingPipeline {
     val mediaDropFutures: Seq[scala.concurrent.Future[DataFrame]] =
       (audioMedia.map { m0 =>
         val m = checkMedia(m0, "audioMedia")
-        scala.concurrent.Future(dropsOf(m,
+        scala.concurrent.Future(pins.ambient(dropsOf(m,
           graft.multimodal.Multimodal.audioDedup(m,
-            minSupport = mediaMinSupport, maxBucket = mediaMaxBucket)))
+            minSupport = mediaMinSupport, maxBucket = mediaMaxBucket))))
       } ++ videoMedia.map { m0 =>
         val m = checkMedia(m0, "videoMedia")
-        scala.concurrent.Future(dropsOf(m,
+        scala.concurrent.Future(pins.ambient(dropsOf(m,
           graft.multimodal.Multimodal.videoDedup(m,
-            minSupport = mediaMinSupport, maxBucket = mediaMaxBucket)))
+            minSupport = mediaMinSupport, maxBucket = mediaMaxBucket))))
       } ++ imageMedia.map { m0 =>
         val m = checkMedia(m0, "imageMedia")
-        scala.concurrent.Future(dropsOf(m,
+        scala.concurrent.Future(pins.ambient(dropsOf(m,
           graft.multimodal.Multimodal.imageDedup(m,
-            maxDist = mediaHamming, maxBucket = mediaMaxBucket)))
+            maxDist = mediaHamming, maxBucket = mediaMaxBucket))))
       }).toSeq
     // 0. optional crawl ingestion: HTML -> line-structured prose, then
     // the C4 line gate — both pure projections riding the first scan
@@ -397,10 +353,7 @@ object TrainingPipeline {
     // and the anti-join's left side, so it is pinned for the gate's
     // lifetime — unpinned lineage would re-run the corpus scan +
     // tokenize + langID twice. Docs too short to emit a gram pass.
-    val gateInput =
-      if (maxRepetition.isDefined)
-        gated.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else gated
+    val gateInput = if (maxRepetition.isDefined) pins.persist(gated) else gated
     val ruleGated0 = maxRepetition.map { r =>
       gateInput.join(
         Dedup.repetitionStats(gateInput, "doc_id", "text", n = 2)
@@ -415,28 +368,25 @@ object TrainingPipeline {
     // re-run the corpus scan + tokenize + langID twice (the stage-1b
     // discipline)
     val ruleGated =
-      if (classifierWeights.isDefined)
-        ruleGated0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else ruleGated0
+      if (classifierWeights.isDefined) pins.persist(ruleGated0) else ruleGated0
     // eager pin BEFORE the gate-input unpersists below: in no-report
     // mode nothing else materializes `filtered` this early, and
     // unpinning the gate frames first would hand the checkpoint an
     // unpersisted lineage (the exact re-run the stage-1b pins exist to
     // avoid)
-    val (filtered, releaseFiltered) = pinL("filtered")(classifierWeights.map { w =>
+    val filtered = pinL("filtered")(classifierWeights.map { w =>
       val keep = graft.operators.Classify
         .scoreDocs(ruleGated, "doc_id", "text", w)
         .filter(col("pred") === 1).select("doc_id")
       ruleGated.join(keep, Seq("doc_id"), "left_semi")
     }.getOrElse(ruleGated))
     val afterFilter = tally(filtered)
-    if (maxRepetition.isDefined) gateInput.unpersist(false)
-    if (classifierWeights.isDefined) ruleGated.unpersist(false)
+    pins.release(gateInput) // no-op for a gate that is off
+    pins.release(ruleGated)
 
     // 2. exact dedup to representatives (16-byte digests shuffle)
     val reps = Dedup.exact(filtered, "doc_id", "text").select(col("keep_id").as("doc_id"))
-    val (exactKept, releaseExact) =
-      pinL("exactKept")(filtered.join(reps, Seq("doc_id"), "left_semi"))
+    val exactKept = pinL("exactKept")(filtered.join(reps, Seq("doc_id"), "left_semi"))
     val afterExact = tally(exactKept)
 
     // 3. near-dup clusters over the survivors; keep cluster representatives
@@ -445,7 +395,7 @@ object TrainingPipeline {
       maxDist = 3, maxBucket = 1000)
     val cc = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
       .withColumnRenamed("doc_a", "doc_id")
-    val (nearKept, releaseNear) = pinL("nearKept")(exactKept.join(cc, Seq("doc_id"), "left")
+    val nearKept = pinL("nearKept")(exactKept.join(cc, Seq("doc_id"), "left")
       .filter(col("cluster_id").isNull || col("cluster_id") === col("doc_id"))
       .drop("cluster_id"))
     val afterNearDup = tally(nearKept)
@@ -457,7 +407,7 @@ object TrainingPipeline {
     // keep each semantic cluster's min-id representative. Docs WITHOUT
     // an embedding row never pair, so they are always kept — the stage
     // only ever removes evidenced near-dups.
-    val (semKept, releaseSem) = embeddings match {
+    val semKept = embeddings match {
       case Some(embRaw) =>
         require(embRaw.columns.contains("doc_id") && embRaw.columns.contains("embedding"),
           "embeddings needs (doc_id, embedding) columns")
@@ -477,7 +427,7 @@ object TrainingPipeline {
         pinL("semKept")(nearKept.join(ccE, Seq("doc_id"), "left")
           .filter(col("cluster_id").isNull || col("cluster_id") === col("doc_id"))
           .drop("cluster_id"))
-      case None => (nearKept, () => ())
+      case None => nearKept
     }
     val afterSemantic = tally(semKept)
 
@@ -500,7 +450,7 @@ object TrainingPipeline {
     // bytes never ride a shuffle here.
     val mediaOn =
       audioMedia.isDefined || videoMedia.isDefined || imageMedia.isDefined
-    val (mediaKept, releaseMedia) = if (!mediaOn) (semKept, () => ()) else {
+    val mediaKept = if (!mediaOn) semKept else {
       // the modality elections are INDEPENDENT jobs (each eager —
       // fingerprint, digest, align, connected components — over its own
       // media frame, touching no pipeline frame), so they run
@@ -536,13 +486,9 @@ object TrainingPipeline {
         evRaw.withColumn("text", TextOps.normalizeText(col("text"))) else evRaw
       if (scrubPii) n.withColumn("text", Redact.scrubPii(col("text"))) else n
     }
-    var hs: Option[DataFrame] = None
-    var dsirScored: Option[DataFrame] = None
     val clean = evCanon match {
       case Some(ev) =>
-        val h = Dedup.shingleHashTable(mediaKept, "doc_id", "text", 3)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        hs = Some(h)
+        val h = pins.persist(Dedup.shingleHashTable(mediaKept, "doc_id", "text", 3))
         val overlap = Dedup.evalOverlapFromHashes(h,
           Dedup.shingleHashTable(ev, "doc_id", "text", 3).select(col("h1")),
           "doc_id", contamThreshold)
@@ -568,11 +514,8 @@ object TrainingPipeline {
     // substringDecontamApply contract); n_toks is refreshed to the
     // post-strip count so the token-budget stage sees real lengths.
     val substringOn = evCanon.isDefined && decontamSubstringW.isDefined
-    val cleanP =
-      if (substringOn)
-        clean.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else clean
-    val (stripped, releaseStripped) = (evCanon, decontamSubstringW) match {
+    val cleanP = if (substringOn) pins.persist(clean) else clean
+    val stripped = (evCanon, decontamSubstringW) match {
       case (Some(ev), Some(w)) =>
         val appl = Dedup.substringDecontamApply(
           cleanP, "doc_id", "text", ev, "text", w)
@@ -588,22 +531,19 @@ object TrainingPipeline {
         // not help because analysis runs before cache substitution).
         // Checkpointing truncates the lineage to a leaf at the stage
         // boundary, the packedOut discipline; the one materialization
-        // is work every downstream action needs anyway. pinLocal (r15)
-        // additionally registers the blocks for exact end-of-run
-        // release; deliberately NOT pin() — routing this boundary
-        // through the doc_id repartition was measured to SERIALIZE the
-        // whole downstream tail (AQE coalesces the tiny local frame to
+        // is work every downstream action needs anyway. Deliberately
+        // NOT pinL — routing this boundary through the doc_id
+        // repartition was measured to SERIALIZE the whole downstream tail (AQE coalesces the tiny local frame to
         // one partition, and every later stage over `stripped` then
         // runs single-task: pipeline_full 18.8 → 24.2 s, taskTime
         // 48 → 81 s), while the checkpoint of the join output at its
         // own partitioning keeps the tail parallel.
-        val (out, rel) = graft.operators.Checkpoints.pinLocal(
-          cleanP.drop("text", "n_toks").join(
-            appl.select(col("doc_id"), col("clean_text").as("text"),
-              col("n_kept").as("n_toks")), Seq("doc_id")))
-        cleanP.unpersist(false)
-        (out, rel)
-      case _ => (cleanP, () => ())
+        val out = pins.pin(cleanP.drop("text", "n_toks").join(
+          appl.select(col("doc_id"), col("clean_text").as("text"),
+            col("n_kept").as("n_toks")), Seq("doc_id")))
+        pins.release(cleanP)
+        out
+      case _ => cleanP
     }
     val afterSubstring = if (substringOn) tally(stripped) else afterDecontam
 
@@ -628,16 +568,13 @@ object TrainingPipeline {
         // and the crossJoin side), so an unpersisted plan tokenizes the
         // cleaned corpus twice — one full extra tokenize pass at any
         // scale (r15)
-        val scored = graft.operators.Dsir.importanceWeights(
-            stripped, "doc_id", "text", lam, dsirBuckets)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        dsirScored = Some(scored)
+        val scored = pins.persist(graft.operators.Dsir.importanceWeights(
+          stripped, "doc_id", "text", lam, dsirBuckets))
         // the keep set pins as a NARROW doc_id frame: without it every
         // downstream action re-tokenizes the cleaned corpus through
         // importanceWeights plus the global-mean aggregate
-        val keep = graft.operators.Dsir.selectAboveMean(scored)
-          .filter(col("keep") === 1L).select(col("doc_id"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val keep = pins.persist(graft.operators.Dsir.selectAboveMean(scored)
+          .filter(col("keep") === 1L).select(col("doc_id")))
         stripped.join(keep, Seq("doc_id"), "left_semi")
       case None => stripped
     }
@@ -658,13 +595,12 @@ object TrainingPipeline {
     // narrow chunk rows (no distinct, no rejoin, no text shuffle)
     val budgeted =
       if (tokenBudgets.isEmpty) selected
-      else selected.join(
+      else pins.persist(selected.join(
         Sampling.tokenBudgetSample(
           selected.select(col("doc_id"), col("source"), col("n_toks")),
           "source", "doc_id", col("n_toks"), tokenBudgets, budgetShards)
           .select(col("doc_id")),
-        Seq("doc_id"), "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Seq("doc_id"), "left_semi"))
     val weighted =
       if (rates.isEmpty) budgeted.withColumn("n_copies", lit(1L))
       else Sampling.mixtureWeights(budgeted, "source", "doc_id", rates)
@@ -693,19 +629,36 @@ object TrainingPipeline {
     // frames, so the landing costs one narrow recompute plus the one
     // shard exchange inside writeShards.
     shardsOut.foreach(out => Sampling.writeShards(chunkedU, "unit", outShards, out))
-    // the pack summary is small: pin it, then release the corpus-sized
+    // the pack summary is small: pin it locally and hand it to the
+    // caller; closing `pins` then releases the corpus-sized
     // intermediates (repeated runs in one session would otherwise pin
     // four full-corpus frames each, forever)
-    val packedOut = packed.localCheckpoint()
+    val packedOut = pins.keep(pins.pin(packed, local = true))
     val packs = packedOut.count()
-    Seq(releaseFiltered, releaseExact, releaseNear, releaseSem, releaseMedia,
-        releaseStripped)
-      .foreach(_.apply())
-    (hs ++ dsirScored ++ (if (tokenBudgets.nonEmpty) Seq(budgeted) else Nil))
-      .foreach(_.unpersist(false))
 
     (packedOut, Report(inputRows, afterFilter, afterExact, afterNearDup,
       afterSemantic, afterMedia, afterDecontam, afterSubstring, afterDsir,
       mixtureRows, chunks, packs))
+  }
+
+  /** The run's reliable checkpoint directory, or None to pin locally
+    * (the default). Stage pins are the ONLY copy of the gated corpus
+    * mid-run, and a local checkpoint dies with its executor — fine on
+    * one box, an unrecoverable failure on a cluster. `reliable` makes
+    * every pin of the run durable, CC rounds included, at one extra
+    * write+read per pinned frame (see [[Pins]] for file cleanup).
+    * Conf `spark.graft.pipeline.pin` / `.pinDir` first (testable
+    * in-session), env SPARK_GRAFT_PIPELINE_PIN / _PIN_DIR (deploy-time)
+    * second; the dir defaults to the session checkpoint dir, else
+    * java.io.tmpdir/graft-pins-<pid>.
+    */
+  private def pinDir(spark: SparkSession): Option[String] = {
+    def setting(conf: String, env: String) =
+      spark.conf.getOption(conf).orElse(sys.env.get(env))
+    if (!setting("spark.graft.pipeline.pin", "SPARK_GRAFT_PIPELINE_PIN").contains("reliable")) None
+    else Some(setting("spark.graft.pipeline.pinDir", "SPARK_GRAFT_PIPELINE_PIN_DIR")
+      .orElse(spark.sparkContext.getCheckpointDir)
+      .getOrElse(s"${System.getProperty("java.io.tmpdir", "/tmp")}" +
+        s"/graft-pins-${ProcessHandle.current().pid()}"))
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.Pins
+
 /** Multimodal (image/audio/video) column plumbing for training-data
   * pipelines: media as opaque `binary` content plus typed metadata.
   *
@@ -734,10 +736,12 @@ object Multimodal {
     * CACHING CONTRACT: the narrow (id, key) fingerprint table is
     * `persist(MEMORY_AND_DISK)`-pinned across the returned plan's
     * three branches (hot-key census + both self-join sides) so the
-    * media decode runs once, and stays pinned until the caller runs
-    * `spark.catalog.clearCache()` (the Verify/Bench harness does this
-    * between queries) — a long-lived library caller issuing many of
-    * these should clear the cache between calls.
+    * media decode runs once, and stays pinned until the enclosing
+    * [[graft.operators.Pins]] scope closes or, outside any scope, until
+    * the caller runs `spark.catalog.clearCache()` (the Verify/Bench
+    * harness does this between queries) — a long-lived library caller
+    * issuing many of these should open a scope or clear the cache
+    * between calls.
     */
   def audioNearDupPairs(media: DataFrame, minShared: Int = 2,
                         maxBucket: Int = 1000, window: Int = 64,
@@ -835,16 +839,13 @@ object Multimodal {
     // clearCache between them (the documented contract).
     val tbl =
       if (!collapseExact)
-        fp.select((col("doc_id") +: kc): _*).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Pins.persist(fp.select((col("doc_id") +: kc): _*).distinct())
       else {
         val ck = if (collapseKeys.isEmpty) keys else collapseKeys
-        val pos = fp.select((col("doc_id") +: ck.map(col)): _*).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val pos = Pins.persist(fp.select((col("doc_id") +: ck.map(col)): _*).distinct())
         val collapsed = collapseReps(pos, ck, collapseExact = true)
         if (ck == keys) collapsed
-        else collapsed.select((col("doc_id") +: kc): _*).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        else Pins.persist(collapsed.select((col("doc_id") +: kc): _*).distinct())
       }
     val ok = tbl.groupBy(kc: _*).agg(count(lit(1)).as("c"))
       .filter(col("c") <= maxBucket).select(kc: _*)
@@ -907,9 +908,8 @@ object Multimodal {
     // positioned collapse: an exact re-upload has the identical
     // (idx, key) SEQUENCE, so the digest hashes both columns
     val tbl = collapseReps(
-      fp.select(col("doc_id"), col(idxCol).as("idx"), col(keyCol).as("key"))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      Pins.persist(fp.select(col("doc_id"), col(idxCol).as("idx"), col(keyCol).as("key"))
+        .distinct()),
       Seq("idx", "key"), collapseExact)
     clipAlignOnTable(tbl, minSupport, maxBucket, aName, bName)
   }
@@ -1067,8 +1067,7 @@ object Multimodal {
                               qName: String, mName: String,
                               minSupport: Int, maxBucket: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val idx = idxFps
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val idx = Pins.persist(idxFps)
     val ok = idx.groupBy("key").agg(count(lit(1)).as("c"))
       .filter(col("c") <= maxBucket).select("key")
     val statik = idx.join(ok, Seq("key"))
@@ -1109,10 +1108,9 @@ object Multimodal {
     // AQE partitioning (a map-side pin would freeze the decode's
     // partition count into every downstream stage). Media bytes still
     // never ride a shuffle — fingerprints are the lightweight proxy.
-    val fp = audioSubfingerprints(media, window, bands)
+    val fp = Pins.persist(audioSubfingerprints(media, window, bands)
       .select(col("doc_id"), col("win_idx"), col("subfp"))
-      .repartition(col("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("doc_id")))
     mediaDedupOn(fp, "win_idx", "subfp", minSupport, maxBucket)
   }
 
@@ -1132,8 +1130,7 @@ object Multimodal {
     val pos = fp.filter(col(keyCol).isNotNull)
       .select(col("doc_id"), col(idxCol).as("idx"), col(keyCol).as("key"))
     // narrow (doc_id, rep_id) rows, two consumers (reps filter + edges)
-    val groups = exactFingerprintGroups(pos, Seq("idx", "key"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val groups = Pins.persist(exactFingerprintGroups(pos, Seq("idx", "key")))
     val reps = groups.filter(col("doc_id") === col("rep_id")).select("doc_id")
     val aligned = clipAlignOnTable(pos.join(reps, Seq("doc_id")),
         minSupport, maxBucket, "a", "b")
@@ -1158,12 +1155,11 @@ object Multimodal {
     */
   def videoDedup(media: DataFrame, minSupport: Int = 2,
                  maxBucket: Int = 1000): DataFrame = {
-    val fp = framePlanes(media, 8, 8)
+    val fp = Pins.persist(framePlanes(media, 8, 8)
       .select(col("doc_id"), col("frame_idx"),
         when(col("luma").isNotNull,
           graft.functions.MediaExpressions.ahash64(col("luma"))).as("fhash"))
-      .repartition(col("doc_id")) // adaptive pin layout, see audioDedup
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("doc_id"))) // adaptive pin layout, see audioDedup
     mediaDedupOn(fp, "frame_idx", "fhash", minSupport, maxBucket)
   }
 
@@ -1454,9 +1450,8 @@ object Multimodal {
     */
   def imageDedup(media: DataFrame, maxDist: Int = 3,
                  maxBucket: Int = 1000): DataFrame = {
-    val ft = imageFeatures(media)
-      .repartition(col("doc_id")) // adaptive pin layout, see audioDedup
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ft = Pins.persist(imageFeatures(media)
+      .repartition(col("doc_id"))) // adaptive pin layout, see audioDedup
     val universe = ft.select("doc_id").distinct()
     val dec = ft.filter(col("asig").isNotNull)
     val grp = dec.groupBy(col("n_bytes"), col("bhash"))
@@ -1558,8 +1553,7 @@ object Multimodal {
     */
   def probeImageSigIndex(index: ImageSigIndex, queries: DataFrame,
                          minSupport: Int = 2, maxBucket: Int = 1000): DataFrame = {
-    val idx = index.sigs
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val idx = Pins.persist(index.sigs)
     val ok = idx.groupBy("kind", "sig").agg(count(lit(1)).as("c"))
       .filter(col("c") <= maxBucket).select("kind", "sig")
     val statik = idx.join(ok, Seq("kind", "sig"))

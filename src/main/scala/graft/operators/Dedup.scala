@@ -306,9 +306,7 @@ object Dedup {
     // the batch signature table feeds two branches (banding + the
     // verify join's a-side); materialize avoids shingling the batch
     // twice — same contract as nearDuplicates' flag
-    val bsig = if (materialize)
-      bsig0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else bsig0
+    val bsig = if (materialize) Pins.persist(bsig0) else bsig0
     val bands = bandTable(bsig, id, n, index.rowsPerBand, maxBucket)
     val cand = bands.select(col(id).as("new_id"), col("band"), col("bh"))
       .join(index.bands.select(col(id).as("corpus_id"), col("band"), col("bh")),
@@ -477,10 +475,8 @@ object Dedup {
                          numPerm: Int, rowsPerBand: Int, threshold: Double,
                          maxBucket: Int = 0): DataFrame =
     fuzzyDecontaminateFromHashes(
-      shingleHashTable(corpus, id, text, k)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      shingleHashTable(eval, id, text, k)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      Pins.persist(shingleHashTable(corpus, id, text, k)),
+      Pins.persist(shingleHashTable(eval, id, text, k)),
       id, numPerm, rowsPerBand, threshold, maxBucket)
 
   /** The hash-level form of [[fuzzyDecontaminate]]: when the eval set
@@ -531,9 +527,7 @@ object Dedup {
     val hs0 = shingleHashTable(df, id, text, k)
     // the hashed table (id, h1, h2) feeds four branches; 8-byte keys
     // cross every shuffle instead of shingle strings
-    val hs = if (materialize)
-      hs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else hs0
+    val hs = if (materialize) Pins.persist(hs0) else hs0
     val cand = minhashCandidatesFromHashes(
       minhashSignaturesFromHashes(hs, id, numPerm), id, numPerm, rowsPerBand,
       maxBucket)
@@ -745,46 +739,38 @@ object Dedup {
     * after 2-3. The label result is iteration-order independent (min is
     * idempotent/commutative), so any cluster, partitioning, or retry
     * agrees.
-    */
-  /** Lineage-truncation fault-tolerance trade: `localCheckpoint` (the
-    * default) stores blocks on executors — fast, but an executor loss
-    * mid-iteration loses blocks AND the truncated lineage, killing the
-    * job. For a 100 TB cluster run, pass `checkpointDir` (HDFS/S3):
-    * `df.checkpoint()` writes each round's frame to reliable storage so
-    * iteration survives executor failure. Sets the session checkpoint
-    * dir to `dir` (once per invocation). Superseded rounds'
-    * files stay on disk for the app lifetime unless
+    *
+    * Lineage truncation: each round is an eager [[Pins]] pin in the
+    * enclosing scope's checkpoint mode — `localCheckpoint` outside any
+    * scope, which stores blocks on executors: fast, but an executor
+    * loss mid-iteration loses blocks AND the truncated lineage, killing
+    * the job. For a 100 TB cluster run, pass `checkpointDir` (HDFS/S3),
+    * or call inside a reliable scope: each round's frame is written to
+    * reliable storage so iteration survives executor failure.
+    * Superseded rounds' files stay on disk for the app lifetime unless
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (or the
     * dir is cleaned post-job) — enable it for long-running clusters.
+    * Every pin is released when the call fails; the returned labels go
+    * to the enclosing scope, or to the caller outside any scope.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 20,
-                          checkpointDir: Option[String] = None): DataFrame = {
-    val ckpt = Checkpoints.maker(checkpointDir)
-    // Deterministic release of SUPERSEDED round checkpoints (r15): each
-    // round's eager localCheckpoint leaves its blocks persisted, and
+                          checkpointDir: Option[String] = None): DataFrame =
+    Pins(checkpointDir) { pins =>
+    // A superseded round is released the moment the next one exists:
     // clearCache() never touches RDD-level persists, so an iterative
-    // session (a bench pass, a daily pipeline loop) piles dead label
-    // frames into storage memory until GC + ContextCleaner get around
-    // to them — measured as multi-second intermittent stalls. Releasing
-    // the previous round the moment its successor is materialized keeps
-    // exactly one labels frame + the edge frame live. No-op on the
-    // reliable path (data lives in checkpoint files, not blocks).
-    val releaseCkpt: DataFrame => Unit = df =>
-      org.apache.spark.sql.GraftDatasetShim.checkpointRdd(df).foreach(r =>
-        org.apache.spark.GraftCoreShim.unpersistRdd(
-          df.sparkSession.sparkContext, r.id))
+    // session would otherwise pile dead label frames into storage until
+    // GC + ContextCleaner get around to them (measured: multi-second
+    // stalls). One labels frame + the edge frame stay live.
     // the union references the pair table TWICE (forward + flipped), so
     // an expensive candidate generator upstream (an LSH join) would
     // execute twice inside this one edge job — exchange reuse dedupes
     // the shuffles, not the join probe. Persist the narrowed pair frame
     // for the duration of the (eager) checkpoint, then release.
-    val pIn = pairs
-      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edges =
-      try ckpt(pIn.union(pIn.select(col("dst").as("src"), col("src").as("dst"))))
-      finally pIn.unpersist(false)
+    val pIn = pins.persist(pairs
+      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst")))
+    val edges = pins.pin(pIn.union(pIn.select(col("dst").as("src"), col("src").as("dst"))))
+    pins.release(pIn)
     // labels only ever DECREASE, so an unchanged label sum is an exact
     // fixpoint test. The sum rides the checkpoint job itself as an
     // `observe` metric — ONE job per round, not a materialization plus
@@ -802,7 +788,7 @@ object Dedup {
     // than starting from self-labels (per-round cost is the scheduling
     // floor on a near-dup graph's tiny frames)
     val obs0 = org.apache.spark.sql.Observation()
-    var labels = ckpt(edges.groupBy(col("src").as("id"))
+    var labels = pins.pin(edges.groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("nbr"))
       .select(col("id"), least(col("id"), col("nbr")).as("label"))
       .observe(obs0, sumExpr))
@@ -816,17 +802,14 @@ object Dedup {
       // (`labels`' id set never changes, so every node keeps a row even
       // with no messages). One join + one agg per round where the
       // nbrMin + left-outer-rejoin form paid two joins + one agg — one
-      // exchange fewer per round, and with measured checkpoint-leaf
-      // stats the edge⋈label join broadcasts its genuinely-small side
-      // instead of sort-merging two "unknown = huge" leaves.
+      // exchange fewer per round.
       val msgs = edges.join(labels.withColumnRenamed("id", "dst"), "dst")
         .select(col("src").as("id"), col("label"))
       // persisted: the self-join below references prop on BOTH sides —
       // unpersisted, the edge-join + min-agg subplan would execute twice
       // per round (exchange reuse dedupes the shuffles, not the probe)
-      val prop = msgs.union(labels)
-        .groupBy(col("id")).agg(min(col("label")).as("label"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val prop = pins.persist(msgs.union(labels)
+        .groupBy(col("id")).agg(min(col("label")).as("label")))
       // pointer doubling: label := label(label). Every label value IS a
       // node id (labels are mins over ids), so the self-join always
       // resolves and label(y) <= y keeps the decrease monotone. Each
@@ -836,25 +819,24 @@ object Dedup {
       // The extra join is on the label frame itself: near-dup-graph
       // sized, far smaller than the corpus.
       val obsI = org.apache.spark.sql.Observation()
-      val next = ckpt(prop.join(
+      val next = pins.pin(prop.join(
           prop.select(col("id").as("label"), col("label").as("ll")),
           Seq("label"), "left")
         .select(col("id"), coalesce(col("ll"), col("label")).as("label"))
         .observe(obsI, sumExpr))
       val nextSum = observedSum(obsI)
-      prop.unpersist(false)
-      releaseCkpt(labels) // superseded round — next is materialized
+      pins.release(prop)
+      pins.release(labels) // superseded round — next is materialized
       converged = nextSum.compareTo(curSum) == 0
       curSum = nextSum
       labels = next
       i += 1
     }
-    releaseCkpt(edges) // no further rounds read the edge frame
     if (!converged)
       org.slf4j.LoggerFactory.getLogger(getClass)
         .warn(s"connectedComponents: not converged after $maxIter rounds " +
           "(component diameter exceeds maxIter); labels may be non-minimal")
-    labels.select(col("id").as(aCol), col("label").as("cluster_id"))
+    pins.keep(labels).select(col("id").as(aCol), col("label").as("cluster_id"))
   }
 
   /** Edit-distance-1 string similarity join over a vocabulary — the

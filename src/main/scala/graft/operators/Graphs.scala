@@ -34,6 +34,9 @@ object Graphs {
     * declarative tree; for `iters` ≳ 8 pass `checkpointEvery` > 0 to
     * truncate lineage, and on a cluster pass `checkpointDir` to use
     * reliable-storage checkpoints (same trade as connectedComponents).
+    * The pins the result reads go to the enclosing [[Pins]] scope, or
+    * to the caller outside any scope; superseded rank checkpoints are
+    * released when the call returns.
     *
     * Overflow bound: Σ contrib at one node < total mass ≤ |V|·scale, and
     * the update multiplies by 85 — keep |V|·scale·85 < 2⁶³ (at the
@@ -45,20 +48,20 @@ object Graphs {
                   checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1, "need at least one iteration")
     require(scale >= 100L, "scale below 100 truncates the damping terms to 0")
-    // lineage-truncation fault-tolerance trade: see Checkpoints
-    val ckpt = Checkpoints.maker(checkpointDir)
+    Pins(checkpointDir) { pins =>
     // The three per-round invariants are materialized ONCE (eager
     // checkpoint): without this every iteration re-scans the raw
     // edge table and re-runs its distinct — linear-in-iters source I/O,
     // the wrong slope at 100 TB. After the checkpoint each round joins
     // executor-resident blocks only.
-    val e = ckpt(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val e = pins.pin(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct())
-    val nodes = ckpt(e.select(col("src").as("node"))
+    val nodes = pins.pin(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
-    val deg = ckpt(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")))
+    val deg = pins.pin(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")))
     val baseAdd = (15L * scale) / 100L
     var pr = nodes.withColumn("pr", lit(scale))
+    var pinnedPr = pr
     for (i <- 1 to iters) {
       val contrib = e
         .join(pr.withColumnRenamed("node", "src"), "src")
@@ -68,10 +71,14 @@ object Graphs {
       pr = nodes.join(inSum, Seq("node"), "left")
         .select(col("node"),
           (lit(baseAdd) + expr("85 * coalesce(s, 0L) div 100")).as("pr"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters)
-        pr = ckpt(pr)
+      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters) {
+        pr = pins.pin(pr)
+        pinnedPr = pr
+      }
     }
+    Seq(e, nodes, deg, pinnedPr).foreach(pins.keep)
     pr
+    }
   }
 
   /** Per-vertex triangle counts over an undirected graph, by

@@ -163,10 +163,8 @@ object Similarity {
     // persisted across Lloyd rounds (the Kmeans.fit discipline): each
     // iteration is one cached-block pass, not a re-scan of the source
     val vecs0 = base.select(col(vecCol).cast("array<double>").as("v"))
-    val vecs = if (iters > 1)
-      vecs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else vecs0
-    try {
+    Pins() { pins =>
+      val vecs = if (iters > 1) pins.persist(vecs0) else vecs0
       for (_ <- 1 to iters) {
         val assigned = vecs.withColumn("cell",
           element_at(graft.functions.VectorExpressions.nearest_cells(
@@ -184,7 +182,7 @@ object Similarity {
         cb = next.toSeq                     // empty cells keep their centroid
       }
       cb
-    } finally if (iters > 1) vecs.unpersist(false)
+    }
   }
 
   private case class VecSum(dim: Int)
@@ -551,14 +549,12 @@ object Similarity {
     val b = tgt.select(col(idCol).cast("long").as("tgt_id"), col(vecCol).as("bv"))
     // persisted: the sim table feeds both neighborhood averages, the
     // margin join and the best-pair rejoin (four consumers)
-    val sims = a.crossJoin(broadcast(b))
-      .withColumn("sim", cosine(col("av"), col("bv")))
-      .select("src_id", "tgt_id", "sim")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = graft.operators.Checkpoints.measured(
-      marginTail(sims, k, threshold).localCheckpoint())
-    sims.unpersist(false)
-    out
+    Pins() { pins =>
+      val sims = pins.persist(a.crossJoin(broadcast(b))
+        .withColumn("sim", cosine(col("av"), col("bv")))
+        .select("src_id", "tgt_id", "sim"))
+      pins.keep(pins.pin(marginTail(sims, k, threshold)))
+    }
   }
 
   /** Candidate-fed bitext mining — the scale path: `candidates` is a
@@ -821,12 +817,11 @@ object Similarity {
     // persisted: candidate-bounded (not quadratic), and the margin tail
     // consumes it four times — released by the session's cache
     // discipline, the dedup_embedding_blocked pattern
-    val sims = candidates.select(col("src_id").cast("long"), col("tgt_id").cast("long"))
+    val sims = Pins.persist(candidates.select(col("src_id").cast("long"), col("tgt_id").cast("long"))
       .distinct()
       .join(a, "src_id").join(b, "tgt_id")
       .withColumn("sim", cosine(col("av"), col("bv")))
-      .select("src_id", "tgt_id", "sim")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select("src_id", "tgt_id", "sim"))
     marginTail(sims, k, threshold)
   }
 
@@ -1071,40 +1066,26 @@ object Similarity {
     * representatives, and expand cluster membership afterwards.
     */
   private def capCells(assigned: DataFrame, maxBucket: Int): DataFrame =
-    if (maxBucket <= 0) assigned
-    else {
-      // pin the assignment table: the cap's bucket-count aggregation
-      // AND both sides of the downstream self-join consume it — without
-      // the persist the base scan + codebook aggregation + cell-scoring
-      // projection would run three times instead of once. The pin's
-      // LIFETIME is bounded by the caller ([[boundedCandidates]]):
-      // capped consumers materialize their result eagerly and
-      // unpersist before returning, so repeated calls in a long
-      // session can't accumulate cache entries.
-      val a = assigned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      a.join(
-        a.groupBy("t", "cell").agg(count(lit(1)).as("n"))
-          .filter(col("n") <= maxBucket).select("t", "cell"),
-        Seq("t", "cell"), "left_semi")
-    }
+    assigned.join(
+      assigned.groupBy("t", "cell").agg(count(lit(1)).as("n"))
+        .filter(col("n") <= maxBucket).select("t", "cell"),
+      Seq("t", "cell"), "left_semi")
 
-  /** Run `consume` over the (possibly capped) assignment table; when
-    * the cap pinned the assignments, materialize the (small) result
-    * eagerly via localCheckpoint and release the pin — the dedup
-    * family's `materialize` discipline, here mandatory because the
-    * operator owns the persist.
+  /** Run `consume` over the (possibly capped) assignment table. The cap
+    * persists the assignments — its bucket-count aggregation AND both
+    * sides of the downstream self-join read them, so unpersisted the
+    * base scan + codebook aggregation + cell-scoring projection would
+    * run three times instead of once — and the (small) result is then
+    * pinned eagerly so the persist is released before returning: the
+    * dedup family's `materialize` discipline, here mandatory because
+    * the operator owns the persist.
     */
   private def boundedCandidates(assigned: DataFrame, maxBucket: Int)
-                               (consume: DataFrame => DataFrame): DataFrame = {
-    val capped = capCells(assigned, maxBucket)
-    val out = consume(capped)
-    if (maxBucket <= 0) out
-    else {
-      val materialized = Checkpoints.measured(out.localCheckpoint())
-      assigned.unpersist(false)
-      materialized
+                               (consume: DataFrame => DataFrame): DataFrame =
+    if (maxBucket <= 0) consume(assigned)
+    else Pins() { pins =>
+      pins.keep(pins.pin(consume(capCells(pins.persist(assigned), maxBucket))))
     }
-  }
 
   /** The deterministic multi-table LSH assignment shared by
     * [[cosinePairsLsh]] and [[knnJoinLsh]]: every row fans out to its

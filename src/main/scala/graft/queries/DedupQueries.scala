@@ -1,10 +1,12 @@
 package graft.queries
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.Dedup
+import graft.operators.{Dedup, Pins}
 
 /** Dedup suite over `documents`: exact, n-gram Jaccard, MinHash+LSH,
   * SimHash, winnowing fingerprints. The oracle SQL replays the identical
@@ -26,36 +28,33 @@ object DedupQueries extends QueryModule {
   // The cluster map is the pipeline's materialization boundary: computed
   // once per (session, sfDir) and reused by dedup_apply, so "apply" is a
   // filter on the materialized map — not a second CC run. The map is
-  // localCheckpointed (RDD blocks, not SQL cache), so it survives
+  // an eager checkpoint pin (RDD blocks, not SQL cache), so it survives
   // spark.catalog.clearCache(); dedup_clusters itself always recomputes
   // and refreshes the memo (bench honesty: the clustering cost is always
   // paid inside the clustering query).
   private val ccMemo =
     scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
 
+  // One scope per call: the components' labels and every round pin are
+  // released once the map is pinned, or when the call fails; the map
+  // itself outlives the scope as the memo.
   private def computeClusters(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
-    val pairs = Dedup.simhashPairs(
-      Dedup.simhash(d, "doc_id", "text"), "doc_id", maxDist = 3,
-      maxBucket = MaxBucket)
-    val cc = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
-      .withColumnRenamed("doc_a", "doc_id")
-    // measured stats on the checkpointed map (r15): dedup_apply /
-    // cluster_split join the corpus against this leaf — with the real
-    // block size it broadcasts when genuinely small instead of
-    // sort-merging against an unknown-size (= huge) leaf
-    val ck = d.select(col("doc_id")).join(cc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("cluster_id"), col("doc_id")).cast("long").as("cluster_id"))
-      .localCheckpoint()
-    val out = graft.operators.Checkpoints.measured(ck)
+    val out = Pins() { pins =>
+      val d = docs(s, dir)
+      val pairs = Dedup.simhashPairs(
+        Dedup.simhash(d, "doc_id", "text"), "doc_id", maxDist = 3,
+        maxBucket = MaxBucket)
+      val cc = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
+        .withColumnRenamed("doc_a", "doc_id")
+      pins.keep(pins.pin(d.select(col("doc_id")).join(cc, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("cluster_id"), col("doc_id")).cast("long").as("cluster_id"))))
+    }
     // release the superseded map's blocks eagerly and EXACTLY (the
-    // leaf's own backing RDD, via the ContextCleaner's silent path —
-    // the old toRdd.unpersist released a derived RDD, not the blocks)
+    // leaf's own backing RDD, via the ContextCleaner's silent path)
     ccMemo.put((s, dir), out).foreach { old =>
-      try org.apache.spark.sql.GraftDatasetShim.checkpointRdd(old).foreach(
-        r => org.apache.spark.GraftCoreShim.unpersistRdd(s.sparkContext, r.id))
-      catch { case _: Throwable => () }
+      try Pins.unpin(old)
+      catch { case NonFatal(_) => () }
     }
     out
   }
@@ -222,8 +221,7 @@ object DedupQueries extends QueryModule {
       // persist the SAME (id, h1, h2) plan dedup_minhash materializes:
       // the cache manager matches plans, so one session running both
       // queries shingles the corpus once
-      val hs = Dedup.shingleHashTable(docs(s, dir), "doc_id", "text", 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val hs = Pins.persist(Dedup.shingleHashTable(docs(s, dir), "doc_id", "text", 3))
       Dedup.jaccardPairs(hs.select(col("doc_id"), col("h1").as("sh")),
         "doc_id", 0.5, maxDf = 100)
     }),
@@ -245,8 +243,7 @@ object DedupQueries extends QueryModule {
     // full-outer join on pair keys.
     "dedup_pairs_eval" -> ((s, dir) => {
       val d = docs(s, dir)
-      val hs = Dedup.shingleHashTable(d, "doc_id", "text", 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val hs = Pins.persist(Dedup.shingleHashTable(d, "doc_id", "text", 3))
       val truth = Dedup.jaccardPairs(hs.select(col("doc_id"), col("h1").as("sh")),
           "doc_id", 0.5, maxDf = 100)
         .select(col("doc_a"), col("doc_b"), lit(1L).as("y"))
@@ -272,15 +269,13 @@ object DedupQueries extends QueryModule {
     // persisted: simhash_pairs persists the identical signature plan, so
     // a session running both computes signatures once (cache-manager
     // plan matching, as with the jaccard/minhash shingle table)
-    "simhash" -> ((s, dir) => Dedup.simhash(docs(s, dir), "doc_id", "text")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)),
+    "simhash" -> ((s, dir) => Pins.persist(Dedup.simhash(docs(s, dir), "doc_id", "text"))),
 
     // hamming-banded near-dup pairs over the signatures (the pairs side
     // of SimHash dedup — candidates from a band equi-join, verified by
     // exact xor+bit_count hamming)
     "simhash_pairs" -> ((s, dir) => {
-      val sig = Dedup.simhash(docs(s, dir), "doc_id", "text")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sig = Pins.persist(Dedup.simhash(docs(s, dir), "doc_id", "text"))
       Dedup.simhashPairs(sig, "doc_id", maxDist = 3, maxBucket = MaxBucket)
     }),
 
@@ -293,8 +288,7 @@ object DedupQueries extends QueryModule {
     // dedup queries share) — one corpus scan for the whole test, eval
     // side broadcast, corpus never shuffled (see Dedup.evalOverlap)
     "decontaminate" -> ((s, dir) => {
-      val hs = Dedup.shingleHashTable(docs(s, dir), "doc_id", "text", 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val hs = Pins.persist(Dedup.shingleHashTable(docs(s, dir), "doc_id", "text", 3))
       Dedup.evalOverlapFromHashes(hs,
         hs.filter(col("doc_id") % 97 === 0).select(col("h1")),
         "doc_id", threshold = 0.8)
@@ -305,8 +299,7 @@ object DedupQueries extends QueryModule {
     // doc_id % 97 and % 89 slices); corpus hash table scanned once,
     // tagged suite hashes broadcast, one row per (doc, suite) hit
     "decontaminate_by_set" -> ((s, dir) => {
-      val hs = Dedup.shingleHashTable(docs(s, dir), "doc_id", "text", 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val hs = Pins.persist(Dedup.shingleHashTable(docs(s, dir), "doc_id", "text", 3))
       val sets =
         hs.filter(col("doc_id") % 97 === 0)
           .select(lit("suite_a").as("eval_set"), col("h1"))
@@ -326,8 +319,7 @@ object DedupQueries extends QueryModule {
     "decontaminate_fuzzy" -> ((s, dir) => {
       // one shingle scan for both sides: corpus/eval are filters of the
       // same persisted hash table (the evalOverlapFromHashes discipline)
-      val hs = Dedup.shingleHashTable(docs(s, dir), "doc_id", "text", 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val hs = Pins.persist(Dedup.shingleHashTable(docs(s, dir), "doc_id", "text", 3))
       Dedup.fuzzyDecontaminateFromHashes(
         hs.filter(col("doc_id") % 20 =!= 0),
         hs.filter(col("doc_id") % 20 === 0),
@@ -348,8 +340,7 @@ object DedupQueries extends QueryModule {
     // the exact hit count AND the bloom flag covers the exact flag.
     // The FP-budget property stays spec'd (statistical).
     "decontaminate_bloom" -> ((s, dir) => {
-      val hs = Dedup.shingleHashTable(docs(s, dir), "doc_id", "text", 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val hs = Pins.persist(Dedup.shingleHashTable(docs(s, dir), "doc_id", "text", 3))
       val ev = hs.filter(col("doc_id") % 97 === 0).select(col("h1"))
       val exact = Dedup.evalOverlapFromHashes(hs, ev, "doc_id", 0.8)
         .select(col("doc_id"), col("n_hit").as("n_hit_exact"),

@@ -32,31 +32,33 @@ object StreamingOps {
     * Scale shape: per batch, ONE latest-per-key fold of the batch
     * (change-sized) + ONE full-outer equi-join against the state —
     * exactly the batch operator's cost, paid per micro-batch. The state
-    * materializes per batch (`localCheckpoint`), so lineage stays one
-    * merge deep no matter how many batches arrive; a production
-    * deployment lands the state in a table format (Delta/Iceberg) and
-    * lets the sink do the materializing.
+    * is pinned per batch (an eager checkpoint held by a `Pins` scope),
+    * so lineage stays one merge deep no matter how many batches arrive,
+    * and the superseded state is released once its successor exists; a
+    * production deployment lands the state in a table format
+    * (Delta/Iceberg) and lets the sink do the materializing.
     */
   def runMergeStream(base: DataFrame, changes: DataFrame, key: String,
-                     seqCol: String, opCol: String): DataFrame = {
-    // written from the stream-execution thread (foreachBatch), read on
-    // the caller thread after processAllAvailable — an explicit
-    // AtomicReference makes the cross-thread handoff self-evidently
-    // safe instead of leaning on StreamExecution's internal
-    // awaitProgressLock for the happens-before edge
-    val state = new java.util.concurrent.atomic.AtomicReference[DataFrame](
-      base.localCheckpoint())
-    val q = changes.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        state.set(graft.operators.Cdc
-          .applyChanges(state.get(), batch.toDF(), key, seqCol, opCol)
-          .localCheckpoint())
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    state.get()
-  }
+                     seqCol: String, opCol: String): DataFrame =
+    graft.operators.Pins() { pins =>
+      // written from the stream-execution thread (foreachBatch), read on
+      // the caller thread after processAllAvailable — an explicit
+      // AtomicReference makes the cross-thread handoff self-evidently
+      // safe instead of leaning on StreamExecution's internal
+      // awaitProgressLock for the happens-before edge
+      val state = new java.util.concurrent.atomic.AtomicReference[DataFrame](
+        pins.pin(base))
+      val q = changes.writeStream
+        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
+          val prev = state.get()
+          state.set(pins.pin(graft.operators.Cdc
+            .applyChanges(prev, batch.toDF(), key, seqCol, opCol)))
+          pins.release(prev)
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      pins.keep(state.get())
+    }
 
   /** Watermarked tumbling-window aggregation (readStream -> agg).
     * State per (window, event_type) only; the watermark bounds it.

@@ -1,5 +1,7 @@
 package org.apache.spark
 
+import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
+
 /** End-of-life release of persisted RDD blocks through the
   * ContextCleaner's own path (`sc.unpersistRDD`, `private[spark]`).
   * `RDD.unpersist` on a locally-checkpointed RDD unconditionally logs
@@ -15,4 +17,11 @@ package org.apache.spark
 object GraftCoreShim {
   def unpersistRdd(sc: SparkContext, rddId: Int): Unit =
     sc.unpersistRDD(rddId, blocking = false)
+
+  /** Whether `rdd` is marked for (or done with) a local checkpoint. */
+  def isLocalCheckpoint(rdd: RDD[_]): Boolean =
+    rdd.checkpointData.exists(_.isInstanceOf[LocalRDDCheckpointData[_]])
+
+  /** Block until every listener event posted so far has been handled. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

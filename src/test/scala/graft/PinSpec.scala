@@ -4,61 +4,40 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Checkpoints
+import graft.operators.Pins
 
-/** The r15 pin/checkpoint mechanics: measured statistics on eager
-  * checkpoint leaves, exact (race-free, silent) release of pin blocks,
-  * and the pipeline's reliable-checkpoint durability knob.
+/** The pin/checkpoint mechanics: exact (race-free, silent) release of
+  * pin blocks, and the pipeline's reliable-checkpoint durability knob.
   */
 class PinSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.build("4")
 
-  test("measured checkpoint leaf replaces an inflated origin estimate with real bytes") {
-    // origin whose ESTIMATE is enormous (cross-join) but whose
-    // materialized size is a handful of rows — the CC pair-graph shape.
-    // The rebuild is OPT-IN (`spark.graft.checkpointStats=measured`,
-    // default `origin` — see Checkpoints.measured for the r15 A/B); the
-    // mechanism itself is what this test pins.
-    spark.conf.set("spark.graft.checkpointStats", "measured")
-    val a = spark.range(0, 2000).select(col("id").as("x"))
-    val b = spark.range(0, 2000).select(col("id").as("y"))
-    val tiny = a.crossJoin(b).filter(col("x") === col("y") && col("x") < 5)
-    val plain = tiny.localCheckpoint()
-    val claimed = plain.queryExecution.optimizedPlan.stats.sizeInBytes
-    val measured = try Checkpoints.measured(plain)
-      finally spark.conf.unset("spark.graft.checkpointStats")
-    val real = measured.queryExecution.optimizedPlan.stats.sizeInBytes
-    assert(real > 0, "measured leaf must carry a positive size")
-    assert(real < 1024 * 1024, s"5 rows measured as $real bytes — not the real block size")
-    assert(real < claimed,
-      s"measured size $real should undercut the origin estimate $claimed")
-    // the honest size makes the static planner broadcast the leaf
-    val big = spark.range(0, 200000).select(col("id").as("x"), (col("id") * 2).as("v"))
-    val joined = big.join(measured, Seq("x"))
-    assert(joined.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
-      "join against a measured-tiny checkpoint leaf should plan as a broadcast join:\n" +
-        joined.queryExecution.executedPlan.toString)
-    assert(measured.collect().map(_.getLong(0)).sorted.sameElements(Array(0L, 1L, 2L, 3L, 4L)),
-      "measured rebuild must not change the frame's rows")
-  }
-
-  test("pinLocal releases exactly its own checkpoint blocks, silently") {
+  test("Pins releases exactly its own registrations, silently") {
     val sc = spark.sparkContext
-    val (pinned, release) = Checkpoints.pinLocal(
-      spark.range(0, 100).select(col("id").as("doc_id")))
-    val rdd = org.apache.spark.sql.GraftDatasetShim.checkpointRdd(pinned)
-    assert(rdd.isDefined, "pinned frame must expose its checkpoint RDD")
-    val id = rdd.get.id
-    assert(sc.getPersistentRDDs.contains(id), "pin must register its blocks")
     // a concurrent persist from another consumer must survive the release
     val bystander = spark.range(0, 50).persist()
     bystander.count()
-    val bystanderIds = sc.getPersistentRDDs.keySet -- Set(id)
-    release()
-    assert(!sc.getPersistentRDDs.contains(id), "release must drop the pin's own RDD")
-    assert(bystanderIds.subsetOf(sc.getPersistentRDDs.keySet),
-      "release must never touch another consumer's persisted RDDs")
+    val (pinId, persistIds) = Pins() { pins =>
+      val pinned = pins.pin(spark.range(0, 100).select(col("id").as("doc_id")))
+      val rdd = Pins.checkpointRdd(pinned)
+      assert(rdd.isDefined, "pinned frame must expose its checkpoint RDD")
+      val id = rdd.get.id
+      assert(sc.getPersistentRDDs.contains(id), "pin must register its blocks")
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val persisted = pins.persist(spark.range(0, 70).select((col("id") * 3).as("x")))
+      persisted.count()
+      val bystanderIds = sc.getPersistentRDDs.keySet.toSet - id
+      pins.release(pinned)
+      assert(!sc.getPersistentRDDs.contains(id), "release must drop the pin's own RDD")
+      assert(bystanderIds.subsetOf(sc.getPersistentRDDs.keySet),
+        "release must never touch another registration or consumer")
+      (id, sc.getPersistentRDDs.keySet.toSet -- before)
+    }
+    assert(persistIds.nonEmpty, "the scope's persist must register its cache blocks")
+    assert((persistIds + pinId).intersect(sc.getPersistentRDDs.keySet).isEmpty,
+      "closing the scope must release what is still registered")
+    assert(bystander.storageLevel.useMemory, "close must never touch a bystander")
     bystander.unpersist(true)
   }
 
@@ -81,6 +60,15 @@ class PinSpec extends AnyFunSuite {
       val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(java.nio.file.Files.isRegularFile(_)).count()
       assert(files > 0, "reliable mode must write checkpoint files under the pin dir")
+      // one rdd-<id> directory per reliable pin: the default chain's
+      // three stage pins (filtered, exactKept, nearKept), then the
+      // near-dup connected components' edge frame, initial labels and at
+      // least one round — so CC rounds checkpoint reliably too
+      val pinDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(p => java.nio.file.Files.isDirectory(p) &&
+          p.getFileName.toString.startsWith("rdd-")).count()
+      assert(pinDirs >= 6,
+        s"$pinDirs reliable checkpoints: the CC rounds did not land under the pin dir")
     } finally {
       spark.conf.unset("spark.graft.pipeline.pin")
       spark.conf.unset("spark.graft.pipeline.pinDir")

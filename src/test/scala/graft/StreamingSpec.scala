@@ -705,7 +705,18 @@ class StreamingSpec extends AnyFunSuite {
       df.select(col("o_orderkey").cast("long"), col("o_custkey").cast("long"),
           col("o_orderstatus"), col("o_orderpriority"))
         .as[(Long, Long, String, String)].collect().toSet
-    val streamed = shape(SparkEntry.queries("streaming_cdc")(spark, dir))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val merged = SparkEntry.queries("streaming_cdc")(spark, dir)
+    val streamed = shape(merged)
+    // one state pin per micro-batch, each released once its successor
+    // exists: only the final state's RDD stays registered
+    val state = merged.queryExecution.analyzed.collectLeaves().collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }
+    assert(state.size == 1 && (sc.getPersistentRDDs.keySet.toSet -- before) == state.toSet,
+      s"state RDDs left registered: ${sc.getPersistentRDDs.keySet.toSet -- before}")
+    state.foreach(org.apache.spark.GraftCoreShim.unpersistRdd(sc, _))
     val batches = queries.StreamingQueries.cdcBatches(spark, dir)
     val oneShot = shape(graft.operators.Cdc.applyChanges(
       Tables(spark, dir, "orders"), batches.reduce(_ unionByName _),

@@ -2,11 +2,12 @@
 # Dev-only A/B config experiment: run the Bench protocol over a lane
 # subset with an optional SPARK_GRAFT_EXTRA_CONF overlay, print the
 # per-lane medians. Usage: tools/ab.sh <tag> "<lanes,csv>" ["k=v;k2=v2"]
+# SPARK_GRAFT_SF_DIR and SPARK_GRAFT_CPUS pass through (defaults: Bench's
+# sf0.1 fixture dir, and every core via tools/run.sh).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 TAG="$1"; LANES="$2"; CONF="${3:-}"
 OUT="/tmp/ab_${TAG}.json"
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
 SPARK_GRAFT_LANES="$LANES" SPARK_GRAFT_PROBES=none \
 SPARK_GRAFT_RETRY_WORST=0 SPARK_GRAFT_BENCH_OUT="$OUT" \
 SPARK_GRAFT_EXTRA_CONF="$CONF" \

@@ -14,8 +14,13 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
+# defaults sized to the host: every core, and half the memory clamped to
+# 2-8 GiB
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
+HEAP="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' \
+  </proc/meminfo 2>/dev/null || echo 2g)"
 exec java $ADD_OPENS \
-  -Xmx"${SPARK_DRIVER_MEM:-48g}" \
+  -Xmx"${SPARK_DRIVER_MEM:-$HEAP}" \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*" \
