@@ -744,7 +744,7 @@ object Bench {
       noop(operators.Dedup.substringDedupApply(df, "doc_id", "text", w = 10))
     }),
 
-    // semantic dedup: LSH pairs → pointer-doubling CC → representatives,
+    // semantic dedup: LSH pairs → connected components → representatives,
     // the suite's top CC cost center. Replicas are NOT near-dups of the
     // originals: each replica i sign-flips half the embedding dims
     // (i=1: odd dims, i=2: even dims — replicas 1 and 2 are mutual

@@ -445,9 +445,9 @@ object TrainingPipeline {
     // duplicates; undecodable media keeps itself (the audioDedup
     // contract). Scale shape: fingerprints are narrow pinned rows,
     // candidate joins are hot-key-capped among exact-collapse
-    // representatives, components use pointer doubling, and the drop
-    // set is universe ∖ keepers — one narrow doc_id anti-join; media
-    // bytes never ride a shuffle here.
+    // representatives, components finish on the driver below their
+    // edge cap, and the drop set is universe ∖ keepers — one narrow
+    // doc_id anti-join; media bytes never ride a shuffle here.
     val mediaOn =
       audioMedia.isDefined || videoMedia.isDefined || imageMedia.isDefined
     val mediaKept = if (!mediaOn) semKept else {

@@ -1096,8 +1096,9 @@ object Multimodal {
     * keeper doc_ids. Scale shape: the narrow fingerprint rows are
     * pinned once for every branch (decode never re-runs), exact-group
     * edges are linear in members, pair candidates ride the hot-capped
-    * key equi-join, and components use pointer-doubling — no stage is
-    * all-pairs. Caching contract as [[audioNearDupPairs]].
+    * key equi-join, and components finish on the driver below their
+    * edge cap (distributed rounds above it) — no stage is all-pairs.
+    * Caching contract as [[audioNearDupPairs]].
     */
   def audioDedup(media: DataFrame, minSupport: Int = 2,
                  maxBucket: Int = 1000, window: Int = 64,
@@ -1436,7 +1437,7 @@ object Multimodal {
     * the component step; the dHash verify is a row-local filter over
     * the already-bounded candidates, so precision costs no extra
     * shuffle) — then exact-group edges glued back, connected
-    * components (pointer doubling), min-id keeper per cluster. Items
+    * components, min-id keeper per cluster. Items
     * that do not decode keep themselves (byte-exact dup detection
     * among undecodables is [[graft.operators.Dedup.exact]]'s job on
     * whatever that content really is — this operator only ever removes

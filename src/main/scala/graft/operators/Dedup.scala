@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
 
 /** Document deduplication for training-data pipelines: exact, word-shingle
   * Jaccard, and MinHash-LSH near-dup detection (scale extensions; SURVEY
@@ -725,118 +725,193 @@ object Dedup {
     * Takes the signature table (from [[simhash]]) so callers can
     * materialize it across the plan's branches.
     */
-  /** Connected components over a near-dup pair graph by min-label
-    * propagation: every node's label converges to the smallest id in
-    * its component — the clustering step that turns pairwise near-dup
-    * evidence into dedup groups (keep one representative per cluster).
+  /** Directed edge rows (both directions of every pair) below which
+    * [[connectedComponents]] finishes on the driver: 2^20 rows, so the
+    * collected (src, dst) longs stay under 16 MiB.
+    */
+  private[graft] val DriverFinishEdges: Long = 1L << 20
+
+  /** Connected components over a near-dup pair graph: every node is
+    * labelled with the smallest id in its component — the clustering
+    * step that turns pairwise near-dup evidence into dedup groups (keep
+    * one representative per cluster). Pairs with a null endpoint are
+    * ignored; a node exists only through a pair with both ends set.
     *
-    * Each round is one edge join + one min-aggregation plus a pointer-
-    * doubling self-join on the label frame (label := label(label));
-    * `localCheckpoint` truncates the iterative plan's lineage so round
-    * N doesn't replay rounds 1..N-1. Doubling makes rounds scale with
-    * LOG of the component diameter — a 300-node chain converges in ~8
-    * rounds, not 300 — with a convergence check so typical data stops
-    * after 2-3. The label result is iteration-order independent (min is
-    * idempotent/commutative), so any cluster, partitioning, or retry
-    * agrees.
+    * The pair graph is pinned once as directed edges, and the pin's
+    * job counts them (an `observe` metric, no extra job). Then:
+    *  - Driver finish, below [[DriverFinishEdges]] edge rows: one job
+    *    collects one direction of each edge into primitive arrays, and
+    *    union-find over sorted ids labels every node. The labels return
+    *    as a local relation with exact stats (downstream joins
+    *    broadcast it) holding no pin. Two jobs per call.
+    *  - Distributed rounds, at or above the cap: each round is one
+    *    edge join + one min-aggregation plus a pointer-doubling
+    *    self-join on the label frame (label := label(label)), pinned so
+    *    round N doesn't replay rounds 1..N-1. Doubling makes rounds scale with LOG of
+    *    the component diameter — a 300-node chain converges in ~8
+    *    rounds, not 300 — and an unchanged label sum stops the loop, so
+    *    typical data stops after 2-3. Not converging within `maxIter`
+    *    logs a WARN: labels may then be non-minimal.
+    * Both paths give the same labels, columns and types. One INFO line
+    * per call says which path ran, the edge count, the rounds and
+    * whether they converged.
     *
-    * Lineage truncation: each round is an eager [[Pins]] pin in the
+    * Pins: the edge pin and each round are eager [[Pins]] pins in the
     * enclosing scope's checkpoint mode — `localCheckpoint` outside any
     * scope, which stores blocks on executors: fast, but an executor
     * loss mid-iteration loses blocks AND the truncated lineage, killing
     * the job. For a 100 TB cluster run, pass `checkpointDir` (HDFS/S3),
-    * or call inside a reliable scope: each round's frame is written to
-    * reliable storage so iteration survives executor failure.
-    * Superseded rounds' files stay on disk for the app lifetime unless
+    * or call inside a reliable scope: each pin is written to reliable
+    * storage so iteration survives executor failure. Superseded pins'
+    * files stay on disk for the app lifetime unless
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (or the
     * dir is cleaned post-job) — enable it for long-running clusters.
-    * Every pin is released when the call fails; the returned labels go
-    * to the enclosing scope, or to the caller outside any scope.
+    * Every pin is released when the call fails; the distributed path's
+    * labels go to the enclosing scope, or to the caller outside any
+    * scope.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 20,
                           checkpointDir: Option[String] = None): DataFrame =
+    connectedComponents(pairs, aCol, bCol, maxIter, checkpointDir, DriverFinishEdges)
+
+  /** [[connectedComponents]] with the driver-finish cap as a parameter:
+    * `driverFinishEdges` 0 forces the distributed rounds.
+    */
+  private[graft] def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
+                                         maxIter: Int, checkpointDir: Option[String],
+                                         driverFinishEdges: Long): DataFrame =
     Pins(checkpointDir) { pins =>
-    // A superseded round is released the moment the next one exists:
-    // clearCache() never touches RDD-level persists, so an iterative
-    // session would otherwise pile dead label frames into storage until
-    // GC + ContextCleaner get around to them (measured: multi-second
-    // stalls). One labels frame + the edge frame stay live.
+    val log = org.slf4j.LoggerFactory.getLogger(getClass)
     // the union references the pair table TWICE (forward + flipped), so
     // an expensive candidate generator upstream (an LSH join) would
     // execute twice inside this one edge job — exchange reuse dedupes
     // the shuffles, not the join probe. Persist the narrowed pair frame
     // for the duration of the (eager) checkpoint, then release.
     val pIn = pins.persist(pairs
-      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst")))
-    val edges = pins.pin(pIn.union(pIn.select(col("dst").as("src"), col("src").as("dst"))))
+      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
+      .where(col("src").isNotNull && col("dst").isNotNull))
+    val obsE = Observation()
+    val edges = pins.pin(pIn.union(pIn.select(col("dst").as("src"), col("src").as("dst")))
+      .observe(obsE, count(lit(1)).as("n")))
     pins.release(pIn)
-    // labels only ever DECREASE, so an unchanged label sum is an exact
-    // fixpoint test. The sum rides the checkpoint job itself as an
-    // `observe` metric — ONE job per round, not a materialization plus
-    // a separate aggregate action (at cluster scale each saved action
-    // is a full scheduler barrier). Decimal sum: overflow-proof for
-    // 64-bit ids; sum over an EMPTY graph is SQL NULL → ZERO, so a
-    // corpus with no near-dup pairs converges on the first round.
-    val sumExpr = sum(col("label").cast("decimal(38,0)")).as("s")
-    def observedSum(o: org.apache.spark.sql.Observation): java.math.BigDecimal =
-      Option(o.get("s").asInstanceOf[java.math.BigDecimal])
-        .getOrElse(java.math.BigDecimal.ZERO)
+    val nEdges = obsE.get("n").asInstanceOf[Long]
     // init = round one for free: the node inventory needs one agg over
     // the edges anyway, and min(id, min neighbor) on that same shuffle
     // is the first propagation round — one fewer join+checkpoint cycle
     // than starting from self-labels (per-round cost is the scheduling
     // floor on a near-dup graph's tiny frames)
-    val obs0 = org.apache.spark.sql.Observation()
-    var labels = pins.pin(edges.groupBy(col("src").as("id"))
+    val init = edges.groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("nbr"))
       .select(col("id"), least(col("id"), col("nbr")).as("label"))
-      .observe(obs0, sumExpr))
-    var curSum = observedSum(obs0)
-    var i = 0
-    var converged = false
-    while (i < maxIter && !converged) {
-      // each node adopts the min of its own and its neighbors' labels —
-      // the MESSAGE-UNION form (r15): neighbor labels become (src,
-      // label) messages and the self rows ride the same min-aggregation
-      // (`labels`' id set never changes, so every node keeps a row even
-      // with no messages). One join + one agg per round where the
-      // nbrMin + left-outer-rejoin form paid two joins + one agg — one
-      // exchange fewer per round.
-      val msgs = edges.join(labels.withColumnRenamed("id", "dst"), "dst")
+    // each node adopts the min of its own and its neighbors' labels —
+    // the MESSAGE-UNION form: neighbor labels become (src, label)
+    // messages and the self rows ride the same min-aggregation
+    // (`labels`' id set never changes, so every node keeps a row even
+    // with no messages). One join + one agg per round.
+    def propagate(labels: DataFrame): DataFrame =
+      edges.join(labels.withColumnRenamed("id", "dst"), "dst")
         .select(col("src").as("id"), col("label"))
-      // persisted: the self-join below references prop on BOTH sides —
-      // unpersisted, the edge-join + min-agg subplan would execute twice
-      // per round (exchange reuse dedupes the shuffles, not the probe)
-      val prop = pins.persist(msgs.union(labels)
-        .groupBy(col("id")).agg(min(col("label")).as("label")))
-      // pointer doubling: label := label(label). Every label value IS a
-      // node id (labels are mins over ids), so the self-join always
-      // resolves and label(y) <= y keeps the decrease monotone. Each
-      // round now covers 2x the path distance of plain propagation —
-      // rounds scale with log(diameter), not diameter, which is what a
-      // chain-shaped dup cluster (crawl mirror sprawl) hits at scale.
-      // The extra join is on the label frame itself: near-dup-graph
-      // sized, far smaller than the corpus.
-      val obsI = org.apache.spark.sql.Observation()
-      val next = pins.pin(prop.join(
-          prop.select(col("id").as("label"), col("label").as("ll")),
+        .union(labels)
+        .groupBy(col("id")).agg(min(col("label")).as("label"))
+    // pointer doubling: label := label(label). Every label value IS a
+    // node id (labels are mins over ids), so the self-join always
+    // resolves and label(y) <= y keeps the decrease monotone. Each
+    // round covers 2x the path distance of plain propagation — rounds
+    // scale with log(diameter), not diameter, which is what a
+    // chain-shaped dup cluster (crawl mirror sprawl) hits at scale.
+    def double(prop: DataFrame): DataFrame =
+      prop.join(prop.select(col("id").as("label"), col("label").as("ll")),
           Seq("label"), "left")
         .select(col("id"), coalesce(col("ll"), col("label")).as("label"))
-        .observe(obsI, sumExpr))
-      val nextSum = observedSum(obsI)
-      pins.release(prop)
-      pins.release(labels) // superseded round — next is materialized
-      converged = nextSum.compareTo(curSum) == 0
-      curSum = nextSum
-      labels = next
-      i += 1
-    }
-    if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass)
-        .warn(s"connectedComponents: not converged after $maxIter rounds " +
+    val found = if (nEdges < driverFinishEdges) {
+      // the rounds' output schema (nullability included), analysed only
+      val schema = (if (maxIter > 0) double(propagate(init)) else init).schema
+      val out = unionFindLabels(edges, schema)
+      pins.release(edges)
+      log.info(s"connectedComponents: driver finish, $nEdges edge rows, 0 rounds, converged")
+      out
+    } else {
+      // labels only ever DECREASE, so an unchanged label sum is an exact
+      // fixpoint test. The sum rides each pin's own job as an `observe`
+      // metric — ONE job per round, not a materialization plus a
+      // separate aggregate action. Decimal sum: overflow-proof for
+      // 64-bit ids; an empty graph's NULL sum reads as zero.
+      val sumExpr = sum(col("label").cast("decimal(38,0)")).as("s")
+      def observedSum(o: Observation): java.math.BigDecimal =
+        Option(o.get("s").asInstanceOf[java.math.BigDecimal])
+          .getOrElse(java.math.BigDecimal.ZERO)
+      val obs0 = Observation()
+      var labels = pins.pin(init.observe(obs0, sumExpr))
+      var curSum = observedSum(obs0)
+      var i = 0
+      var converged = false
+      while (i < maxIter && !converged) {
+        // persisted: the doubling self-join references prop on BOTH
+        // sides — unpersisted, the edge-join + min-agg subplan would
+        // execute twice per round (exchange reuse dedupes the shuffles,
+        // not the probe)
+        val prop = pins.persist(propagate(labels))
+        val obsI = Observation()
+        val next = pins.pin(double(prop).observe(obsI, sumExpr))
+        val nextSum = observedSum(obsI)
+        // a superseded round is released the moment the next one exists:
+        // clearCache() never touches RDD-level pins, so an iterative
+        // session would otherwise pile dead label frames into storage
+        pins.release(prop)
+        pins.release(labels)
+        converged = nextSum.compareTo(curSum) == 0
+        curSum = nextSum
+        labels = next
+        i += 1
+      }
+      log.info(s"connectedComponents: distributed, $nEdges edge rows, $i rounds, " +
+        (if (converged) "converged" else "not converged"))
+      if (!converged)
+        log.warn(s"connectedComponents: not converged after $maxIter rounds " +
           "(component diameter exceeds maxIter); labels may be non-minimal")
-    pins.keep(labels).select(col("id").as(aCol), col("label").as("cluster_id"))
+      pins.keep(labels)
+    }
+    found.select(col("id").as(aCol), col("label").as("cluster_id"))
+  }
+
+  /** Min-id labels of the pinned directed `edges` by union-find on the
+    * driver, as a local (id, label) relation of `schema`. One job
+    * collects one direction of each edge (self-loops kept) packed into
+    * a `long[]` per partition; ids are sorted and deduplicated into a
+    * `long[]`, and an `int[]` parent links each index to a smaller one,
+    * so a root is its set's least index, i.e. its least id.
+    */
+  private def unionFindLabels(edges: DataFrame, schema: StructType): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val ends = edges.where(col("src") <= col("dst")).as[(Long, Long)]
+      .mapPartitions { it =>
+        val b = Array.newBuilder[Long]
+        it.foreach { case (s, d) => b += s; b += d }
+        Iterator.single(b.result())
+      }.collect().flatten
+    val ids = ends.clone()
+    java.util.Arrays.sort(ids)
+    var n = 0
+    for (i <- ids.indices) if (n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
+      var i = x
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    var e = 0
+    while (e < ends.length) {
+      val a = find(index(ends(e)))
+      val b = find(index(ends(e + 1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      e += 2
+    }
+    val rows = new java.util.ArrayList[Row](n)
+    for (i <- 0 until n) rows.add(Row(ids(i), ids(find(i))))
+    spark.createDataFrame(rows, schema)
   }
 
   /** Edit-distance-1 string similarity join over a vocabulary — the

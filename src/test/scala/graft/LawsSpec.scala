@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalacheck.{Gen, Properties}
+import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.forAll
 
 /** Property-based laws for the deterministic row-local operators —
@@ -724,6 +724,78 @@ object LawsSpec extends Properties("graft.laws") {
       } { counts(u) += 1; counts(v) += 1; counts(w) += 1 }
       got == counts.toMap
     }
+
+  // --- connected components: driver finish ≡ distributed rounds ------
+
+  /** Min-id labels by a plain fixpoint over the pair list. */
+  private def ccRef(es: Seq[(Long, Long)]): Set[(Long, Long)] = {
+    var lab = es.flatMap(e => Seq(e._1, e._2)).map(v => v -> v).toMap
+    var changed = true
+    while (changed) {
+      val next = es.foldLeft(lab) { case (m, (a, b)) =>
+        val l = math.min(m(a), m(b)); m.updated(a, l).updated(b, l) }
+      changed = next != lab
+      lab = next
+    }
+    lab.toSet
+  }
+
+  /** Both paths over the (a, b) pairs agree with each other — rows,
+    * column names, types, nullability — and with `want`.
+    */
+  private def ccAgrees(pairs: org.apache.spark.sql.DataFrame, want: Set[(Long, Long)]): Boolean =
+    graft.operators.Pins() { _ =>
+      val df = pairs.repartition(3)
+      val driver = graft.operators.Dedup.connectedComponents(df, "a", "b")
+      val rounds = graft.operators.Dedup.connectedComponents(df, "a", "b", 20, None, 0L)
+      val rows = driver.as[(Long, Long)].collect().toSet
+      driver.schema == rounds.schema && driver.columns.toSeq == Seq("a", "cluster_id") &&
+        rows == rounds.as[(Long, Long)].collect().toSet && rows == want
+    }
+
+  private def ccAgrees(es: Seq[(Long, Long)]): Boolean = ccAgrees(es.toDF("a", "b"), ccRef(es))
+
+  private val genIds: Gen[List[Long]] =
+    Gen.chooseNum(2, 30).flatMap(n => Gen.listOfN(n, Gen.chooseNum(0L, 1000000L)))
+      .map(_.distinct).suchThat(_.size >= 2)
+
+  // a random, chain (ids in random order) or star graph, decorated with
+  // self-loops, duplicated and reversed edges
+  private val genShape: Gen[List[(Long, Long)]] = for {
+    base <- Gen.oneOf(
+      Gen.listOfN(25, Gen.zip(Gen.chooseNum(0L, 20L), Gen.chooseNum(0L, 20L))),
+      genIds.map(ids => ids.zip(ids.tail)),
+      genIds.map(ids => ids.tail.map(ids.head -> _)))
+    loops <- Gen.someOf(base.map(_._1))
+    dups <- Gen.someOf(base)
+    flips <- Gen.someOf(base)
+  } yield base ++ loops.map(v => (v, v)) ++ dups ++ flips.map(_.swap)
+
+  // four shapes on disjoint id ranges per graph: each call pays a fixed
+  // job floor, so one graph carries several shapes
+  private val genGraph: Gen[List[(Long, Long)]] =
+    Gen.listOfN(4, genShape).map(_.zipWithIndex.flatMap { case (es, k) =>
+      es.map { case (a, b) => (a + k * 10000000L, b + k * 10000000L) } })
+
+  // 25 graphs (100 shapes): every case runs both paths' jobs
+  property("connectedComponents: driver finish equals distributed rounds (random, chain, star)") = {
+    val r = Test.check(Test.Parameters.default.withMinSuccessfulTests(25),
+      forAll(genGraph)(ccAgrees))
+    Prop(r.passed) :| r.status.toString
+  }
+
+  property("connectedComponents: driver finish equals distributed rounds (fixed shapes)") =
+    Seq(
+      (1L until 300L).map(i => (i, i + 1)),          // the 300-node chain
+      (1L until 300L).map(i => (i + 1, i)).reverse,  // reversed, descending
+      (2L to 40L).map(1000L -> _),                    // a star, centre largest
+      Seq((5L, 5L), (7L, 7L), (7L, 7L)),              // self-loops only
+      Seq((1L, 2L), (2L, 1L), (1L, 2L), (3L, 3L)),    // dup, reversed, loop
+      Seq.empty[(Long, Long)],                        // the empty graph
+    ).forall(ccAgrees) &&
+      // a pair with a null endpoint names no node: only 1-2 survives
+      ccAgrees(Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)), (None, Some(3L)),
+        (Some(4L), None), (None, None)).toDF("a", "b"), Set((1L, 1L), (2L, 1L)))
 
   // --- edit-distance-1 similarity join -------------------------------
 

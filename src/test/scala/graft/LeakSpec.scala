@@ -112,20 +112,31 @@ class LeakSpec extends AnyFunSuite {
   test("connected components nest: labels live until the enclosing scope closes") {
     import spark.implicits._
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a", "b")
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L)
     val before = registered
+    // distributed rounds (cap 0): the pinned labels stay registered
+    // until the enclosing scope closes
     val held = Pins() { _ =>
-      val labels = Dedup.connectedComponents(pairs, "a", "b")
+      val labels = Dedup.connectedComponents(pairs, "a", "b", 20, None, 0L)
       spark.range(0, 1000).selectExpr("id % 7 as k").groupBy("k").count().collect()
-      assert(labels.as[(Long, Long)].collect().toMap ==
-        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
-      assert(leaves(labels).subsetOf(registered), "the labels' pin went early")
+      assert(labels.as[(Long, Long)].collect().toMap == want)
+      assert(leaves(labels).nonEmpty && leaves(labels).subsetOf(registered),
+        "the labels' pin went early")
       leaves(labels)
     }
     assert(held.intersect(registered).isEmpty, "the scope kept the labels' pin")
     assert((registered -- before).isEmpty, s"leaked ${registered -- before}")
-    // a round pin whose own job fails releases its half-made blocks
-    failsCleanly(Dedup.connectedComponents(
-      spark.range(0, 50).select(boom(col("id").cast("string")).as("a"),
-        (col("id") + 1).as("b")), "a", "b"))
+    // driver finish (default cap): a local relation, nothing registered
+    Pins() { _ =>
+      val labels = Dedup.connectedComponents(pairs, "a", "b")
+      assert(labels.as[(Long, Long)].collect().toMap == want)
+      assert(leaves(labels).isEmpty && (registered -- before).isEmpty,
+        s"the driver finish left ${registered -- before}")
+    }
+    // an edge pin whose own job fails releases its half-made blocks
+    for (cap <- Seq(Dedup.DriverFinishEdges, 0L))
+      failsCleanly(Dedup.connectedComponents(
+        spark.range(0, 50).select(boom(col("id").cast("string")).as("a"),
+          (col("id") + 1).as("b")), "a", "b", 20, None, cap))
   }
 }

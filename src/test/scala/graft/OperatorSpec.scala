@@ -1487,9 +1487,12 @@ class OperatorSpec extends AnyFunSuite {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
     try {
-      val out = Dedup.connectedComponents(pairs, "doc_a", "doc_b",
-        checkpointDir = Some(dir)).as[(Long, Long)].collect().toSet
-      assert(out == Set((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L)))
+      // the driver finish (default cap) and the distributed rounds (cap 0)
+      for (cap <- Seq(Dedup.DriverFinishEdges, 0L)) {
+        val out = Dedup.connectedComponents(pairs, "doc_a", "doc_b", 20, Some(dir), cap)
+          .as[(Long, Long)].collect().toSet
+        assert(out == Set((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L)), s"cap $cap")
+      }
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Pins
+import graft.operators.{Dedup, Pins}
 
 /** The pin/checkpoint mechanics: exact (race-free, silent) release of
   * pin blocks, and the pipeline's reliable-checkpoint durability knob.
@@ -60,15 +60,23 @@ class PinSpec extends AnyFunSuite {
       val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(java.nio.file.Files.isRegularFile(_)).count()
       assert(files > 0, "reliable mode must write checkpoint files under the pin dir")
-      // one rdd-<id> directory per reliable pin: the default chain's
-      // three stage pins (filtered, exactKept, nearKept), then the
-      // near-dup connected components' edge frame, initial labels and at
-      // least one round — so CC rounds checkpoint reliably too
-      val pinDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      // one rdd-<id> directory per reliable pin
+      def pinDirs(): Long = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(p => java.nio.file.Files.isDirectory(p) &&
           p.getFileName.toString.startsWith("rdd-")).count()
-      assert(pinDirs >= 6,
-        s"$pinDirs reliable checkpoints: the CC rounds did not land under the pin dir")
+      // the default chain's three stage pins (filtered, exactKept,
+      // nearKept) and the near-dup connected components' edge pin,
+      // whose small graph then finishes on the driver
+      val afterRun = pinDirs()
+      assert(afterRun >= 4,
+        s"$afterRun reliable checkpoints: the stage or CC edge pins did not land under the pin dir")
+      // the distributed rounds (cap 0) pin the edges, the initial labels
+      // and at least one round, all reliably
+      import spark.implicits._
+      Dedup.connectedComponents(Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b"),
+        "a", "b", 20, Some(dir), 0L).collect()
+      assert(pinDirs() - afterRun >= 3 && pinDirs() >= 6,
+        s"${pinDirs() - afterRun} reliable CC checkpoints: the rounds did not land under the pin dir")
     } finally {
       spark.conf.unset("spark.graft.pipeline.pin")
       spark.conf.unset("spark.graft.pipeline.pinDir")
