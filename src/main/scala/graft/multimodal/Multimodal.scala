@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.Pins
+import graft.operators.{IndexStore, Pins}
 
 /** Multimodal (image/audio/video) column plumbing for training-data
   * pipelines: media as opaque `binary` content plus typed metadata.
@@ -995,15 +995,11 @@ object Multimodal {
     ClipIndex(audioSubfingerprints(media, window, bands)
       .filter(col("subfp").isNotNull), window, bands)
 
-  def saveClipIndex(index: ClipIndex, path: String): Unit = {
-    val spark = index.fps.sparkSession
-    import spark.implicits._
-    index.fps.select("doc_id", "win_idx", "subfp")
-      .repartition(col("doc_id")) // size-adaptive index files (AQE coalesce)
-      .write.mode("overwrite").parquet(s"$path/fingerprints")
-    Seq((index.window, index.bands)).toDF("window", "bands")
-      .write.mode("overwrite").parquet(s"$path/meta")
-  }
+  def saveClipIndex(index: ClipIndex, path: String): Unit =
+    IndexStore.save(path,
+      Map("window" -> index.window.toString, "bands" -> index.bands.toString),
+      ("fingerprints", indexRows(index.fps, "doc_id", "win_idx", "subfp"),
+        Seq("doc_id", "win_idx")))
 
   /** Restore the index; fingerprints dedupe on (doc_id, win_idx), so a
     * crashed append retried is IDEMPOTENT — duplicate rows collapse
@@ -1011,30 +1007,22 @@ object Multimodal {
     */
   def loadClipIndex(spark: org.apache.spark.sql.SparkSession,
                     path: String): ClipIndex = {
-    val m = spark.read.parquet(s"$path/meta").head()
-    ClipIndex(
-      spark.read.parquet(s"$path/fingerprints")
-        .dropDuplicates("doc_id", "win_idx"),
-      m.getAs[Int]("window"), m.getAs[Int]("bands"))
+    val ix = IndexStore.load(spark, path)
+    ClipIndex(ix.tables("fingerprints"),
+      ix.params("window").toInt, ix.params("bands").toInt)
   }
 
   /** The daily-crawl APPEND: fingerprint `media` with the SAVED
     * parameters (a batch fingerprinted at a different window width
-    * would match nothing — the meta table exists to prevent exactly
-    * that) and parquet-append the one fingerprint table; the catalog
-    * is never rescanned and the index never rebuilds. Schema compared
-    * symmetrically before the append — mixed-schema part files that
-    * readers quietly null-fill are the failure mode.
+    * would match nothing) and append it to the one fingerprint table;
+    * the catalog is never rescanned and the index never rebuilds.
     */
   def appendClipIndex(spark: org.apache.spark.sql.SparkSession,
-                      path: String, media: DataFrame): Unit = {
-    val m = spark.read.parquet(s"$path/meta").head()
-    appendCheckedFingerprints(spark, path,
-      audioSubfingerprints(media,
-          m.getAs[Int]("window"), m.getAs[Int]("bands"))
-        .filter(col("subfp").isNotNull)
-        .select("doc_id", "win_idx", "subfp"))
-  }
+                      path: String, media: DataFrame): Unit =
+    IndexStore.append(spark, path, "fingerprints") { p =>
+      indexRows(audioSubfingerprints(media, p("window").toInt, p("bands").toInt)
+        .filter(col("subfp").isNotNull), "doc_id", "win_idx", "subfp")
+    }
 
   /** Probe the index with QUERY media (decoded + fingerprinted with
     * the index's own parameters): the [[clipAlignPairs]] vote/election
@@ -1197,15 +1185,11 @@ object Multimodal {
                           gridH: Int = 8): VideoClipIndex =
     VideoClipIndex(videoFrameHashes(media, gridW, gridH), gridW, gridH)
 
-  def saveVideoClipIndex(index: VideoClipIndex, path: String): Unit = {
-    val spark = index.fps.sparkSession
-    import spark.implicits._
-    index.fps.select("doc_id", "frame_idx", "fhash")
-      .repartition(col("doc_id")) // size-adaptive index files (AQE coalesce)
-      .write.mode("overwrite").parquet(s"$path/fingerprints")
-    Seq((index.gridW, index.gridH)).toDF("grid_w", "grid_h")
-      .write.mode("overwrite").parquet(s"$path/meta")
-  }
+  def saveVideoClipIndex(index: VideoClipIndex, path: String): Unit =
+    IndexStore.save(path,
+      Map("grid_w" -> index.gridW.toString, "grid_h" -> index.gridH.toString),
+      ("fingerprints", indexRows(index.fps, "doc_id", "frame_idx", "fhash"),
+        Seq("doc_id", "frame_idx")))
 
   /** Restore the index; hashes dedupe on (doc_id, frame_idx), so a
     * crashed append retried is IDEMPOTENT (the [[loadClipIndex]]
@@ -1213,26 +1197,21 @@ object Multimodal {
     */
   def loadVideoClipIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String): VideoClipIndex = {
-    val m = spark.read.parquet(s"$path/meta").head()
-    VideoClipIndex(
-      spark.read.parquet(s"$path/fingerprints")
-        .dropDuplicates("doc_id", "frame_idx"),
-      m.getAs[Int]("grid_w"), m.getAs[Int]("grid_h"))
+    val ix = IndexStore.load(spark, path)
+    VideoClipIndex(ix.tables("fingerprints"),
+      ix.params("grid_w").toInt, ix.params("grid_h").toInt)
   }
 
   /** The daily-crawl APPEND with the SAVED grid parameters (a batch
-    * hashed at a different grid would match nothing — the meta table
-    * exists to prevent exactly that); schema compared symmetrically
-    * before the append, the [[appendClipIndex]] contract.
+    * hashed at a different grid would match nothing), the
+    * [[appendClipIndex]] contract.
     */
   def appendVideoClipIndex(spark: org.apache.spark.sql.SparkSession,
-                           path: String, media: DataFrame): Unit = {
-    val m = spark.read.parquet(s"$path/meta").head()
-    appendCheckedFingerprints(spark, path,
-      videoFrameHashes(media,
-          m.getAs[Int]("grid_w"), m.getAs[Int]("grid_h"))
-        .select("doc_id", "frame_idx", "fhash"))
-  }
+                           path: String, media: DataFrame): Unit =
+    IndexStore.append(spark, path, "fingerprints") { p =>
+      indexRows(videoFrameHashes(media, p("grid_w").toInt, p("grid_h").toInt),
+        "doc_id", "frame_idx", "fhash")
+    }
 
   /** Probe the video index with QUERY frame streams (decoded + hashed
     * with the index's own grid): the [[probeClipIndex]] law over frame
@@ -1507,15 +1486,10 @@ object Multimodal {
     ImageSigIndex(imageSignatures(media, gridW, gridH)
       .filter(col("sig").isNotNull), gridW, gridH)
 
-  def saveImageSigIndex(index: ImageSigIndex, path: String): Unit = {
-    val spark = index.sigs.sparkSession
-    import spark.implicits._
-    index.sigs.select("doc_id", "kind", "sig")
-      .repartition(col("doc_id")) // size-adaptive index files (AQE coalesce)
-      .write.mode("overwrite").parquet(s"$path/fingerprints")
-    Seq((index.gridW, index.gridH)).toDF("grid_w", "grid_h")
-      .write.mode("overwrite").parquet(s"$path/meta")
-  }
+  def saveImageSigIndex(index: ImageSigIndex, path: String): Unit =
+    IndexStore.save(path,
+      Map("grid_w" -> index.gridW.toString, "grid_h" -> index.gridH.toString),
+      ("fingerprints", indexRows(index.sigs, "doc_id", "kind", "sig"), Seq("doc_id", "kind")))
 
   /** Restore the index; signatures dedupe on (doc_id, kind), so a
     * crashed append retried is IDEMPOTENT (the [[loadClipIndex]]
@@ -1523,25 +1497,20 @@ object Multimodal {
     */
   def loadImageSigIndex(spark: org.apache.spark.sql.SparkSession,
                         path: String): ImageSigIndex = {
-    val m = spark.read.parquet(s"$path/meta").head()
-    ImageSigIndex(
-      spark.read.parquet(s"$path/fingerprints")
-        .dropDuplicates("doc_id", "kind"),
-      m.getAs[Int]("grid_w"), m.getAs[Int]("grid_h"))
+    val ix = IndexStore.load(spark, path)
+    ImageSigIndex(ix.tables("fingerprints"),
+      ix.params("grid_w").toInt, ix.params("grid_h").toInt)
   }
 
-  /** The daily-crawl APPEND with the SAVED grid parameters (the
-    * [[appendClipIndex]] contract: parameter drift would make a batch
-    * match nothing; schemas compared symmetrically before the append).
+  /** The daily-crawl APPEND with the SAVED grid parameters, the
+    * [[appendClipIndex]] contract.
     */
   def appendImageSigIndex(spark: org.apache.spark.sql.SparkSession,
-                          path: String, media: DataFrame): Unit = {
-    val m = spark.read.parquet(s"$path/meta").head()
-    appendCheckedFingerprints(spark, path,
-      imageSignatures(media, m.getAs[Int]("grid_w"), m.getAs[Int]("grid_h"))
-        .filter(col("sig").isNotNull)
-        .select("doc_id", "kind", "sig"))
-  }
+                          path: String, media: DataFrame): Unit =
+    IndexStore.append(spark, path, "fingerprints") { p =>
+      indexRows(imageSignatures(media, p("grid_w").toInt, p("grid_h").toInt)
+        .filter(col("sig").isNotNull), "doc_id", "kind", "sig")
+    }
 
   /** Probe the index with QUERY media (decoded + signed with the
     * index's own grid): one equi-join on (kind, sig), votes = the
@@ -1567,28 +1536,11 @@ object Multimodal {
       .filter(col("support") >= minSupport)
   }
 
-  /** The symmetric schema check + parquet append shared by the three
-    * durable-index appends: mixed-schema part files that readers
-    * quietly null-fill are the failure mode.
+  /** A durable index table's rows: its columns, partitioned on doc_id so
+    * AQE coalesces them into size-adaptive files.
     */
-  private def appendCheckedFingerprints(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame): Unit = {
-    val saved = spark.read.parquet(s"$path/fingerprints").schema
-    batch.schema.fields.foreach { f =>
-      val s = saved.fields.find(_.name == f.name).getOrElse(
-        throw new IllegalArgumentException(
-          s"append column '${f.name}' absent from saved index schema $saved"))
-      require(s.dataType == f.dataType,
-        s"append column '${f.name}': ${f.dataType} != saved ${s.dataType}")
-    }
-    saved.fields.foreach { f =>
-      require(batch.schema.fields.exists(_.name == f.name),
-        s"saved column '${f.name}' absent from append batch")
-    }
-    batch.repartition(col("doc_id")) // size-adaptive part files
-      .write.mode("append").parquet(s"$path/fingerprints")
-  }
+  private def indexRows(fps: DataFrame, cols: String*): DataFrame =
+    fps.select(cols.map(col): _*).repartition(col("doc_id"))
 
   /** Frame count law of the video fixture: 2 + (id mod 4) frames. */
   def videoFrames(docId: Long): Int = (2 + docId % 4).toInt

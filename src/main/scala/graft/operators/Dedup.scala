@@ -251,10 +251,10 @@ object Dedup {
 
   /** The corpus-side artifact of INCREMENTAL near-dup detection: minhash
     * signatures plus their banded buckets, built once over the existing
-    * corpus and persisted (both frames are plain DataFrames — write them
-    * to parquet and read them back; the parameters travel in the case
-    * class so a probe can never silently run with mismatched shingle/
-    * band settings against a stored index).
+    * corpus and persisted ([[saveMinhashIndex]]; the parameters and the
+    * build-time bucket cap travel in the case class so a probe can never
+    * silently run with mismatched shingle/band settings against a stored
+    * index).
     *
     * Why signatures and not shingle sets: the index must stay FIXED-WIDTH
     * per document (numPerm longs + nBands bucket keys ≈ 300 bytes at
@@ -266,7 +266,8 @@ object Dedup {
     * re-verified with [[fuzzyDecontaminate]] over just the flagged docs.
     */
   final case class MinhashIndex(signatures: DataFrame, bands: DataFrame,
-                                k: Int, numPerm: Int, rowsPerBand: Int)
+                                k: Int, numPerm: Int, rowsPerBand: Int,
+                                maxBucket: Int = 0)
 
   /** Build the [[MinhashIndex]] for a corpus: one shingle-hash pass, one
     * signature aggregation, one band projection (the same machinery as
@@ -279,7 +280,7 @@ object Dedup {
     val sig = minhashSignaturesFromHashes(shingleHashTable(df, id, text, k),
       id, numPerm)
     MinhashIndex(sig, bandTable(sig, id, numPerm, rowsPerBand, maxBucket),
-      k, numPerm, rowsPerBand)
+      k, numPerm, rowsPerBand, math.max(maxBucket, 0))
   }
 
   /** Dedup an incoming batch against an existing corpus WITHOUT touching
@@ -294,7 +295,7 @@ object Dedup {
     * meet. Returns (new_id, corpus_id, n_agree, est_jaccard) for every
     * batch doc whose estimated Jaccard against a corpus doc meets
     * `threshold`; a pipeline drops or flags those new_ids, then appends
-    * the survivors' signatures/bands to the index (a parquet append).
+    * the survivors' signatures to the index ([[appendMinhashIndex]]).
     */
   def probeMinhashIndex(batch: DataFrame, id: String, text: String,
                         index: MinhashIndex, threshold: Double,
@@ -326,31 +327,26 @@ object Dedup {
       .select("new_id", "corpus_id", "n_agree", "est_jaccard")
   }
 
-  /** Persist a [[MinhashIndex]] as parquet — `path/{signatures,meta}`.
-    * ONE data table by design: the band table is a pure projection of
-    * the signatures, so it is re-derived at [[loadMinhashIndex]] time
-    * (lazy lineage — the probe's band join evaluates it exactly once,
-    * the same scan cost as reading a second persisted table). Two
-    * tables would make [[appendMinhashIndex]] a non-atomic two-write
-    * commit: a crash between them leaves a doc whose re-crawls silently
-    * pass every future dedup gate. Meta (a 1-row parquet — no
-    * side-channel config to drift from the data) records the minhash
-    * parameters, the BUILD-time bucket cap, and the id column name, so
-    * append can fail fast / realign instead of writing mixed-schema
-    * part files that parquet append would accept and the reader would
-    * then quietly null out.
+  /** Save a [[MinhashIndex]] through [[IndexStore]]: ONE table,
+    * `signatures`, keyed on the id. The band table is a pure projection
+    * of the signatures, so [[loadMinhashIndex]] re-derives it (lazy
+    * lineage — the probe's band join evaluates it exactly once, the
+    * same scan cost as reading a second persisted table). The manifest
+    * records the minhash parameters, the index's own BUILD-time bucket
+    * cap and the id column name; a `maxBucket` given here must equal
+    * that cap (negative: not given).
     */
   def saveMinhashIndex(index: MinhashIndex, path: String, id: String,
-                       maxBucket: Int = 0): Unit = {
-    val spark = index.signatures.sparkSession
-    import spark.implicits._
+                       maxBucket: Int = -1): Unit = {
     require(index.signatures.columns.contains(id),
       s"id column '$id' not in index signatures " +
         s"(${index.signatures.columns.mkString(", ")})")
-    index.signatures.write.mode("overwrite").parquet(s"$path/signatures")
-    Seq((index.k, index.numPerm, index.rowsPerBand, maxBucket, id))
-      .toDF("k", "num_perm", "rows_per_band", "max_bucket", "id_col")
-      .write.mode("overwrite").parquet(s"$path/meta")
+    require(maxBucket < 0 || math.max(maxBucket, 0) == index.maxBucket,
+      s"maxBucket $maxBucket disagrees with the index's build-time cap ${index.maxBucket}")
+    IndexStore.save(path, Map("k" -> index.k.toString,
+        "num_perm" -> index.numPerm.toString, "rows_per_band" -> index.rowsPerBand.toString,
+        "max_bucket" -> index.maxBucket.toString, "id_col" -> id),
+      ("signatures", index.signatures, Seq(id)))
   }
 
   /** Restore the index: signatures deduped on the id (a crashed append
@@ -360,57 +356,29 @@ object Dedup {
     */
   def loadMinhashIndex(spark: org.apache.spark.sql.SparkSession,
                        path: String): MinhashIndex = {
-    val m = spark.read.parquet(s"$path/meta").head()
-    val (k, n, rpb) = (m.getAs[Int]("k"), m.getAs[Int]("num_perm"),
-      m.getAs[Int]("rows_per_band"))
-    val idCol = m.getAs[String]("id_col")
-    val sig = spark.read.parquet(s"$path/signatures").dropDuplicates(idCol)
-    MinhashIndex(sig, bandTable(sig, idCol, n, rpb,
-      m.getAs[Int]("max_bucket")), k, n, rpb)
+    val ix = IndexStore.load(spark, path)
+    val p = ix.params
+    val (n, rpb, cap) = (p("num_perm").toInt, p("rows_per_band").toInt, p("max_bucket").toInt)
+    val sig = ix.tables("signatures")
+    MinhashIndex(sig, bandTable(sig, p("id_col"), n, rpb, cap), p("k").toInt, n, rpb, cap)
   }
 
   /** The daily-crawl APPEND: sign `docs` with the saved index's own
-    * parameters and parquet-append the ONE signatures table — the index
+    * parameters and append them to the ONE signatures table — the index
     * never rebuilds and the corpus is never rescanned. A retry after a
     * crash is safe (load dedups on id); a mismatched id column realigns
-    * to the saved name rather than corrupting the parquet schema.
-    * Callers append the batch's SURVIVORS (after [[probeMinhashIndex]]
-    * + anti-join of flagged near-dups), so appended content is novel by
-    * construction.
+    * to the saved name, and a differently-typed one fails the store's
+    * schema check. Callers append the batch's SURVIVORS (after
+    * [[probeMinhashIndex]] + anti-join of flagged near-dups), so
+    * appended content is novel by construction.
     */
   def appendMinhashIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String, docs: DataFrame, id: String,
-                         text: String): Unit = {
-    val m = spark.read.parquet(s"$path/meta").head()
-    val (k, n) = (m.getAs[Int]("k"), m.getAs[Int]("num_perm"))
-    val idCol = m.getAs[String]("id_col")
-    val batch = minhashSignaturesFromHashes(
-      shingleHashTable(docs, id, text, k), id, n)
-      .withColumnRenamed(id, idCol)
-    // the rename aligns the NAME; a differently-TYPED id (string batch
-    // onto a long index) would still parquet-append mixed-schema part
-    // files that the reader quietly nulls — the exact failure the meta
-    // table exists to prevent, so compare types and fail fast
-    // SYMMETRIC comparison: a batch column missing from the index AND a
-    // saved column missing from the batch both produce mixed-schema
-    // part files that readers null-fill — fail fast on either direction
-    val saved = spark.read.parquet(s"$path/signatures").schema
-    batch.schema.fields.foreach { f =>
-      val s = saved.fields.find(_.name == f.name).getOrElse(
-        throw new IllegalArgumentException(
-          s"append column '${f.name}' absent from saved index schema $saved"))
-      require(s.dataType == f.dataType,
-        s"append schema mismatch on '${f.name}': batch ${f.dataType} " +
-          s"vs saved ${s.dataType} — refusing mixed-schema parquet append")
+                         text: String): Unit =
+    IndexStore.append(spark, path, "signatures") { p =>
+      minhashSignaturesFromHashes(shingleHashTable(docs, id, text, p("k").toInt),
+        id, p("num_perm").toInt).withColumnRenamed(id, p("id_col"))
     }
-    saved.fields.foreach { s =>
-      require(batch.schema.fields.exists(_.name == s.name),
-        s"saved index column '${s.name}' absent from the append batch " +
-          s"(batch schema ${batch.schema}) — appended rows would " +
-          "null-fill it; refusing mixed-schema parquet append")
-    }
-    batch.write.mode("append").parquet(s"$path/signatures")
-  }
 
   /** ROW-LOCAL minhash signature as an array<long> of length `numPerm` —
     * the same Carter-Wegman values [[minhashSignaturesFromHashes]]

@@ -321,31 +321,29 @@ object Similarity {
     (cb, assigned)
   }
 
-  /** Persist an IVF index as parquet — `path/codebook` (cells × dim, a
-    * bounded artifact) and `path/assigned` (the replicated cell-
-    * assignment table; partition by cell at real scale so a probe's
-    * equi-join prunes partitions). [[loadIvfIndex]] restores both for
-    * [[probeIvf]]; new vectors append via [[assignCells]] with the
-    * loaded codebook + parquet append on `assigned` — training never
+  /** Save an IVF index through [[IndexStore]] as two tables of one
+    * commit: `codebook` (cells × dim, a bounded artifact) and `assigned`
+    * (the replicated cell-assignment table). [[loadIvfIndex]] restores
+    * both for [[probeIvf]]; new vectors are assigned with
+    * [[assignCells]] against the loaded codebook — training never
     * re-runs.
     */
   def saveIvfIndex(cb: Seq[(Long, Array[Double])], assigned: DataFrame,
                    path: String): Unit = {
     val spark = assigned.sparkSession
     import spark.implicits._
-    cb.map { case (cell, v) => (cell, v.toSeq) }
-      .toDF("cell", "centroid")
-      .write.mode("overwrite").parquet(s"$path/codebook")
-    assigned.write.mode("overwrite").parquet(s"$path/assigned")
+    IndexStore.save(path, Map.empty,
+      ("codebook", cb.map { case (cell, v) => (cell, v.toSeq) }.toDF("cell", "centroid"), Nil),
+      ("assigned", assigned, Nil))
   }
 
   def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String
                   ): (Seq[(Long, Array[Double])], DataFrame) = {
-    val cb = spark.read.parquet(s"$path/codebook").collect()
-      .map(r => r.getLong(0) ->
-        r.getSeq[Double](1).toArray)
+    val ix = IndexStore.load(spark, path)
+    val cb = ix.tables("codebook").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
       .sortBy(_._1).toSeq
-    (cb, spark.read.parquet(s"$path/assigned"))
+    (cb, ix.tables("assigned"))
   }
 
   /** Probe a prebuilt IVF index ([[buildIvfIndex]]): rank the codebook

@@ -24,20 +24,6 @@ object MultimodalQueries extends QueryModule {
   private def images(s: SparkSession, dir: String): DataFrame =
     Multimodal.fabricateImages(Tables(s, dir, "documents"))
 
-  // one saved clip index per sf dir for the whole JVM (the clipFeed
-  // discipline): a long-lived Verify+Bench session re-running the
-  // incremental lanes rebuilds against the same path instead of
-  // leaking a fresh temp dir per invocation
-  private val clipIdxDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
-  private def cachedIdxDir(dir: String, kind: String): String =
-    clipIdxDirs.computeIfAbsent((dir, kind), { _ =>
-      val p = java.nio.file.Files.createTempDirectory(s"graft-$kind-idx")
-      p.toFile.deleteOnExit()
-      p.toString
-    })
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // perceptual-hash signatures (codegen'd ahash64, row-local): the
     // image near-dup primitive; oracle replays the byte sampling via
@@ -208,7 +194,7 @@ object MultimodalQueries extends QueryModule {
     // appended ≡ fresh-union and crashed-retry idempotence).
     "clip_index_incremental" -> ((s, dir) => {
       val d = Tables(s, dir, "documents")
-      val path = cachedIdxDir(dir, "clip")
+      val path = QueryModule.tempDir(dir, "clip-idx")
       Multimodal.saveClipIndex(
         Multimodal.buildClipIndex(
           Multimodal.fabricateAudio(d.filter(col("doc_id") % 2 === 0))), path)
@@ -323,7 +309,7 @@ object MultimodalQueries extends QueryModule {
     // tail; save/append/load are transparent to it by construction.
     "video_clip_index_incremental" -> ((s, dir) => {
       val d = Tables(s, dir, "documents")
-      val path = cachedIdxDir(dir, "vclip")
+      val path = QueryModule.tempDir(dir, "vclip-idx")
       Multimodal.saveVideoClipIndex(
         Multimodal.buildVideoClipIndex(
           Multimodal.fabricateFrameStream(d.filter(col("doc_id") % 2 === 0))), path)
@@ -348,7 +334,7 @@ object MultimodalQueries extends QueryModule {
     // spec pins appended ≡ fresh-union and crashed-retry idempotence).
     "image_index_incremental" -> ((s, dir) => {
       val d = Tables(s, dir, "documents")
-      val path = cachedIdxDir(dir, "imgsig")
+      val path = QueryModule.tempDir(dir, "imgsig-idx")
       Multimodal.saveImageSigIndex(
         Multimodal.buildImageSigIndex(
           Multimodal.fabricateStillImages(d.filter(col("doc_id") % 2 === 0))), path)

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.multimodal.Multimodal
 import graft.streaming.StreamingOps
 
 /** Driver-visible STREAMING queries: each entry actually executes a
@@ -114,68 +115,47 @@ object StreamingQueries extends QueryModule {
           .withColumn("__op", lit("I")).withColumn("__seq", lit(3L))))
   }
 
-  // one CDC feed dir per sfDir for the JVM (the streamSrcDirs
-  // discipline): the three change batches land as three parquet files
+  // one CDC feed dir per sfDir for the JVM ([[QueryModule.tempDir]]):
+  // the three change batches land as three parquet files
   // with increasing modification times, so the file source replays
   // them as three ORDERED micro-batches under maxFilesPerTrigger=1
-  private val cdcFeedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
-  private def cdcFeed(s: SparkSession, dir: String): java.nio.file.Path =
-    cdcFeedDirs.computeIfAbsent(dir, { _ =>
-      val feed = java.nio.file.Files.createTempDirectory("graft-cdc-feed")
-      feed.toFile.deleteOnExit()
+  private def cdcFeed(s: SparkSession, dir: String): String =
+    QueryModule.tempDir(dir, "cdc-feed", { feed =>
       cdcBatches(s, dir).zipWithIndex.foreach { case (b, i) =>
         val stage = java.nio.file.Files.createTempDirectory("graft-cdc-stage")
         b.coalesce(1).write.mode("overwrite").parquet(stage.toString)
         val part = stage.toFile.listFiles
           .find(_.getName.endsWith(".parquet"))
           .getOrElse(sys.error(s"no parquet part written for cdc batch $i"))
-        val dst = feed.resolve(s"b$i.parquet")
+        val dst = java.nio.file.Paths.get(feed, s"b$i.parquet")
         java.nio.file.Files.move(part.toPath, dst)
         dst.toFile.setLastModified(1700000000000L + i * 60000L)
-        dst.toFile.deleteOnExit()
         org.apache.hadoop.fs.FileUtil.fullyDelete(stage.toFile)
       }
-      feed
     })
 
   // the clip-detection query feed: MID-STREAM audio extracts (every
   // 25th doc, 64 samples in) fingerprinted once per sf dir and landed
   // as the parquet files a client would upload — the Shazam serving
   // shape sends FINGERPRINTS over the wire, never audio
-  private val clipFeedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
-  private def clipFeed(s: SparkSession, dir: String): java.nio.file.Path =
-    clipFeedDirs.computeIfAbsent(dir, { _ =>
-      import graft.multimodal.Multimodal
-      val feed = java.nio.file.Files.createTempDirectory("graft-clip-feed")
-      feed.toFile.deleteOnExit()
+  private def clipFeed(s: SparkSession, dir: String): String =
+    QueryModule.tempDir(dir, "clip-feed", { feed =>
       Multimodal.audioSubfingerprints(Multimodal.fabricateAudio(
           graft.Tables(s, dir, "documents").filter(col("doc_id") % 25 === 0),
           idOffset = 1000000L, startFrame = 64))
         .filter(col("subfp").isNotNull)
-        .coalesce(1).write.mode("overwrite").parquet(feed.toString)
-      feed
+        .coalesce(1).write.mode("overwrite").parquet(feed)
     })
 
   // the VIDEO clip-detection query feed: head-clipped re-encodes
   // (every 20th-ish doc minus its head frame) frame-hashed once per
   // sf dir — clients upload frame HASHES, never video
-  private val vclipFeedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
-  private def vclipFeed(s: SparkSession, dir: String): java.nio.file.Path =
-    vclipFeedDirs.computeIfAbsent(dir, { _ =>
-      import graft.multimodal.Multimodal
-      val feed = java.nio.file.Files.createTempDirectory("graft-vclip-feed")
-      feed.toFile.deleteOnExit()
+  private def vclipFeed(s: SparkSession, dir: String): String =
+    QueryModule.tempDir(dir, "vclip-feed", { feed =>
       Multimodal.videoFrameHashes(Multimodal.fabricateFrameStream(
           graft.Tables(s, dir, "documents").filter(col("doc_id") % 20 === 5),
           idOffset = 1000000L, frameShift = 1))
-        .coalesce(1).write.mode("overwrite").parquet(feed.toString)
-      feed
+        .coalesce(1).write.mode("overwrite").parquet(feed)
     })
 
   // the ADMISSION-GATE upload feed: candidate uploads a UGC platform
@@ -184,15 +164,9 @@ object StreamingQueries extends QueryModule {
   // genuinely NOVEL recordings (every 25th+1 doc's waveform law
   // re-keyed to the unused 500000+id space — content in no corpus
   // item, to be ADMITTED). Clients upload fingerprints, never audio.
-  private val gateFeedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
-  private def gateFeed(s: SparkSession, dir: String): java.nio.file.Path =
-    gateFeedDirs.computeIfAbsent(dir, { _ =>
-      import graft.multimodal.Multimodal
+  private def gateFeed(s: SparkSession, dir: String): String =
+    QueryModule.tempDir(dir, "gate-feed", { feed =>
       val d = graft.Tables(s, dir, "documents")
-      val feed = java.nio.file.Files.createTempDirectory("graft-gate-feed")
-      feed.toFile.deleteOnExit()
       Multimodal.audioSubfingerprints(
           Multimodal.fabricateAudio(d.filter(col("doc_id") % 25 === 0),
             idOffset = 1000000L, startFrame = 64)
@@ -200,8 +174,7 @@ object StreamingQueries extends QueryModule {
             d.filter(col("doc_id") % 25 === 1)
               .withColumn("doc_id", col("doc_id") + 500000L))))
         .filter(col("subfp").isNotNull)
-        .coalesce(1).write.mode("overwrite").parquet(feed.toString)
-      feed
+        .coalesce(1).write.mode("overwrite").parquet(feed)
     })
 
   // the VIDEO admission-gate upload feed: head-clipped re-encodes of
@@ -221,15 +194,9 @@ object StreamingQueries extends QueryModule {
   // (upload, frame), replayed exactly by the oracle
   // (lpad(conv(hex,16,2))) and sharing nothing with any catalog
   // frame. Clients upload frame hashes, never video.
-  private val vgateFeedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
-  private def vgateFeed(s: SparkSession, dir: String): java.nio.file.Path =
-    vgateFeedDirs.computeIfAbsent(dir, { _ =>
-      import graft.multimodal.Multimodal
+  private def vgateFeed(s: SparkSession, dir: String): String =
+    QueryModule.tempDir(dir, "vgate-feed", { feed =>
       val d = graft.Tables(s, dir, "documents")
-      val feed = java.nio.file.Files.createTempDirectory("graft-vgate-feed")
-      feed.toFile.deleteOnExit()
       val novel = d.filter(col("doc_id") % 20 === 6)
         .select((col("doc_id") + 500000L).as("doc_id"),
           explode(sequence(lit(0),
@@ -241,8 +208,7 @@ object StreamingQueries extends QueryModule {
           Multimodal.fabricateFrameStream(d.filter(col("doc_id") % 20 === 15),
             idOffset = 1000000L, frameShift = 1))
         .unionByName(novel)
-        .coalesce(1).write.mode("overwrite").parquet(feed.toString)
-      feed
+        .coalesce(1).write.mode("overwrite").parquet(feed)
     })
 
   // the IMAGE admission-gate upload feed: lossless BMP re-encodes of
@@ -255,15 +221,9 @@ object StreamingQueries extends QueryModule {
   // md5-derived bit strings keyed by (upload, signature kind),
   // replayed exactly by the oracle and sharing nothing with any
   // catalog image. Clients upload signatures, never image bytes.
-  private val igateFeedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
-  private def igateFeed(s: SparkSession, dir: String): java.nio.file.Path =
-    igateFeedDirs.computeIfAbsent(dir, { _ =>
-      import graft.multimodal.Multimodal
+  private def igateFeed(s: SparkSession, dir: String): String =
+    QueryModule.tempDir(dir, "igate-feed", { feed =>
       val d = graft.Tables(s, dir, "documents")
-      val feed = java.nio.file.Files.createTempDirectory("graft-igate-feed")
-      feed.toFile.deleteOnExit()
       val novel = d.filter(col("doc_id") % 20 === 6)
         .select((col("doc_id") + 500000L).as("doc_id"),
           explode(array(lit("a"), lit("d"))).as("kind"))
@@ -275,21 +235,53 @@ object StreamingQueries extends QueryModule {
             idOffset = 1000000L, fmt = "bmp"))
         .filter(col("sig").isNotNull)
         .unionByName(novel)
-        .coalesce(1).write.mode("overwrite").parquet(feed.toString)
-      feed
+        .coalesce(1).write.mode("overwrite").parquet(feed)
     })
 
-  // the durable gate index artifact dirs (audio / video / image), one
-  // per sf dir for the JVM (the cachedIdxDir discipline)
-  private val gateIdxDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  /** The stream-static vote shared by the clip-detection and gate
+    * lanes: the index, pinned and capped at 1000 rows per hot key, meets
+    * the feed as a stream in one equi-join on `keys`, and votes per
+    * (up_id, m_id) — and per alignment `offset`, the index row's `idx`
+    * minus the upload row's, when `idx` is given — aggregate in complete
+    * mode at `minSupport`.
+    */
+  private def streamVotes(index: DataFrame, keys: Seq[String], idx: Option[String],
+                          feed: String, minSupport: Int): DataFrame = {
+    val s = index.sparkSession
+    val pinned = graft.operators.Pins.persist(index)
+    val ok = pinned.groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
+      .filter(col("c") <= 1000).select(keys.map(col): _*)
+    val statik = pinned.join(ok, keys).select(keys.map(col) ++
+      (col("doc_id").as("m_id") +: idx.map(c => col(c).as("m_idx")).toSeq): _*)
+    val qs = s.readStream.schema(s.read.parquet(feed).schema).parquet(feed)
+    val offset = idx.map(c => (col("m_idx") - col(c)).cast("long").as("offset")).toSeq
+    runToTable(
+      qs.join(statik, keys)
+        .groupBy(Seq(col("doc_id").as("up_id"), col("m_id")) ++ offset: _*)
+        .agg(count(lit(1)).as("support"))
+        .filter(col("support") >= minSupport),
+      "complete")
+  }
 
-  private def gateIdxDir(dir: String, kind: String = "a"): String =
-    gateIdxDirs.computeIfAbsent((dir, kind), { _ =>
-      val p = java.nio.file.Files.createTempDirectory(s"graft-gate$kind-idx")
-      p.toFile.deleteOnExit()
-      p.toString
-    })
+  /** The admission gate of the three media gate lanes: [[streamVotes]]
+    * against the loaded index, then a batch election keeping each
+    * upload's best match (support desc, offset asc, match asc); an
+    * upload without one is admitted with NULL match columns.
+    */
+  private def admissionGate(index: DataFrame, keys: Seq[String], idx: Option[String],
+                            feed: String, minSupport: Int): DataFrame = {
+    val votes = streamVotes(index, keys, idx, feed, minSupport)
+    val byOffset = idx.map(_ => col("offset")).toSeq
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("up_id")
+      .orderBy(col("support").desc +: byOffset.map(_.asc) :+ col("m_id").asc: _*)
+    val best = votes.withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1).drop("rn")
+    index.sparkSession.read.parquet(feed)
+      .select(col("doc_id").as("up_id")).distinct()
+      .join(best, Seq("up_id"), "left")
+      .select(Seq(col("up_id"), col("m_id").isNotNull.as("rejected"), col("m_id")) ++
+        byOffset :+ col("support"): _*)
+  }
 
   // one shim dir per (sfDir, table) for the whole JVM: a long-lived
   // Verify+Bench session re-running a streaming query reuses the same
@@ -582,26 +574,10 @@ object StreamingQueries extends QueryModule {
     // coincidental matches, never by the stream. Oracle = the batch
     // vote replay (stream-transparency, the streaming_ann contract).
     "streaming_clip_align" -> ((s, dir) => {
-      import graft.multimodal.Multimodal
-      val idx = Multimodal.audioSubfingerprints(Multimodal.fabricateAudio(
-          graft.Tables(s, dir, "documents")))
-        .filter(col("subfp").isNotNull)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ok = idx.groupBy("subfp").agg(count(lit(1)).as("c"))
-        .filter(col("c") <= 1000).select("subfp")
-      val statik = idx.join(ok, Seq("subfp"))
-        .select(col("subfp"), col("doc_id").as("m_id"),
-          col("win_idx").as("m_win"))
-      val feed = clipFeed(s, dir)
-      val schema = s.read.parquet(feed.toString).schema
-      val qs = s.readStream.schema(schema).parquet(feed.toString)
-      runToTable(
-        qs.join(statik, Seq("subfp"))
-          .groupBy(col("doc_id").as("aud_q"), col("m_id").as("aud_m"),
-            (col("m_win") - col("win_idx")).cast("long").as("offset"))
-          .agg(count(lit(1)).as("support"))
-          .filter(col("support") >= 2),
-        "complete")
+      streamVotes(Multimodal.audioSubfingerprints(Multimodal.fabricateAudio(
+          graft.Tables(s, dir, "documents"))).filter(col("subfp").isNotNull),
+        Seq("subfp"), Some("win_idx"), clipFeed(s, dir), minSupport = 2)
+        .toDF("aud_q", "aud_m", "offset", "support")
     }),
 
     // STREAMING VIDEO CLIP DETECTION: the streaming_clip_align shape
@@ -611,25 +587,10 @@ object StreamingQueries extends QueryModule {
     // mode, the index side carries the hot-key cap. Oracle = the batch
     // vote replay (stream-transparency).
     "streaming_video_clip" -> ((s, dir) => {
-      import graft.multimodal.Multimodal
-      val idx = Multimodal.videoFrameHashes(Multimodal.fabricateFrameStream(
-          graft.Tables(s, dir, "documents")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ok = idx.groupBy("fhash").agg(count(lit(1)).as("c"))
-        .filter(col("c") <= 1000).select("fhash")
-      val statik = idx.join(ok, Seq("fhash"))
-        .select(col("fhash"), col("doc_id").as("m_id"),
-          col("frame_idx").as("m_idx"))
-      val feed = vclipFeed(s, dir)
-      val schema = s.read.parquet(feed.toString).schema
-      val qs = s.readStream.schema(schema).parquet(feed.toString)
-      runToTable(
-        qs.join(statik, Seq("fhash"))
-          .groupBy(col("doc_id").as("vid_q"), col("m_id").as("vid_m"),
-            (col("m_idx") - col("frame_idx")).cast("long").as("offset"))
-          .agg(count(lit(1)).as("support"))
-          .filter(col("support") >= 2),
-        "complete")
+      streamVotes(Multimodal.videoFrameHashes(Multimodal.fabricateFrameStream(
+          graft.Tables(s, dir, "documents"))),
+        Seq("fhash"), Some("frame_idx"), vclipFeed(s, dir), minSupport = 2)
+        .toDF("vid_q", "vid_m", "offset", "support")
     }),
 
     // THE STREAMING MEDIA ADMISSION GATE (r12 optional item 6): the
@@ -649,37 +610,12 @@ object StreamingQueries extends QueryModule {
     // columns. Oracle = the batch vote replay + election
     // (stream-transparency).
     "streaming_media_gate" -> ((s, dir) => {
-      import graft.multimodal.Multimodal
-      val path = gateIdxDir(dir)
+      val path = QueryModule.tempDir(dir, "gatea-idx")
       Multimodal.saveClipIndex(
         Multimodal.buildClipIndex(Multimodal.fabricateAudio(
           graft.Tables(s, dir, "documents"))), path)
-      val idx = Multimodal.loadClipIndex(s, path).fps
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ok = idx.groupBy("subfp").agg(count(lit(1)).as("c"))
-        .filter(col("c") <= 1000).select("subfp")
-      val statik = idx.join(ok, Seq("subfp"))
-        .select(col("subfp"), col("doc_id").as("m_id"),
-          col("win_idx").as("m_win"))
-      val feed = gateFeed(s, dir)
-      val schema = s.read.parquet(feed.toString).schema
-      val qs = s.readStream.schema(schema).parquet(feed.toString)
-      val votes = runToTable(
-        qs.join(statik, Seq("subfp"))
-          .groupBy(col("doc_id").as("up_id"), col("m_id"),
-            (col("m_win") - col("win_idx")).cast("long").as("offset"))
-          .agg(count(lit(1)).as("support"))
-          .filter(col("support") >= 2),
-        "complete")
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("up_id")
-        .orderBy(col("support").desc, col("offset").asc, col("m_id").asc)
-      val best = votes.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1).drop("rn")
-      s.read.parquet(feed.toString)
-        .select(col("doc_id").as("up_id")).distinct()
-        .join(best, Seq("up_id"), "left")
-        .select(col("up_id"), col("m_id").isNotNull.as("rejected"),
-          col("m_id"), col("offset"), col("support"))
+      admissionGate(Multimodal.loadClipIndex(s, path).fps, Seq("subfp"),
+        Some("win_idx"), gateFeed(s, dir), minSupport = 2)
     }),
 
     // the VIDEO admission gate: streaming_media_gate's shape over the
@@ -687,42 +623,17 @@ object StreamingQueries extends QueryModule {
     // [[loadVideoClipIndex]] — a restarted gate serves from disk).
     // Uploaded frame hashes stream through one stream-static equi-join
     // on the hash, offset votes aggregate in complete mode at
-    // support >= 2, and the batch election tail emits one verdict row
+    // support >= 3, and the batch election tail emits one verdict row
     // per upload: head-clipped re-encodes reject against their
     // originals at frame offset +1, novel streams admit with NULL
     // match columns. Oracle = the batch vote replay + election.
     "streaming_video_gate" -> ((s, dir) => {
-      import graft.multimodal.Multimodal
-      val path = gateIdxDir(dir, "v")
+      val path = QueryModule.tempDir(dir, "gatev-idx")
       Multimodal.saveVideoClipIndex(
         Multimodal.buildVideoClipIndex(Multimodal.fabricateFrameStream(
           graft.Tables(s, dir, "documents"))), path)
-      val idx = Multimodal.loadVideoClipIndex(s, path).fps
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ok = idx.groupBy("fhash").agg(count(lit(1)).as("c"))
-        .filter(col("c") <= 1000).select("fhash")
-      val statik = idx.join(ok, Seq("fhash"))
-        .select(col("fhash"), col("doc_id").as("m_id"),
-          col("frame_idx").as("m_idx"))
-      val feed = vgateFeed(s, dir)
-      val schema = s.read.parquet(feed.toString).schema
-      val qs = s.readStream.schema(schema).parquet(feed.toString)
-      val votes = runToTable(
-        qs.join(statik, Seq("fhash"))
-          .groupBy(col("doc_id").as("up_id"), col("m_id"),
-            (col("m_idx") - col("frame_idx")).cast("long").as("offset"))
-          .agg(count(lit(1)).as("support"))
-          .filter(col("support") >= 3),
-        "complete")
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("up_id")
-        .orderBy(col("support").desc, col("offset").asc, col("m_id").asc)
-      val best = votes.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1).drop("rn")
-      s.read.parquet(feed.toString)
-        .select(col("doc_id").as("up_id")).distinct()
-        .join(best, Seq("up_id"), "left")
-        .select(col("up_id"), col("m_id").isNotNull.as("rejected"),
-          col("m_id"), col("offset"), col("support"))
+      admissionGate(Multimodal.loadVideoClipIndex(s, path).fps, Seq("fhash"),
+        Some("frame_idx"), vgateFeed(s, dir), minSupport = 3)
     }),
 
     // the IMAGE admission gate: the streaming_media_gate discipline
@@ -740,35 +651,12 @@ object StreamingQueries extends QueryModule {
     // novel uploads admit with NULL match columns. Oracle = the batch
     // vote replay + election (stream-transparency).
     "streaming_image_gate" -> ((s, dir) => {
-      import graft.multimodal.Multimodal
-      val path = gateIdxDir(dir, "i")
+      val path = QueryModule.tempDir(dir, "gatei-idx")
       Multimodal.saveImageSigIndex(
         Multimodal.buildImageSigIndex(Multimodal.fabricateStillImages(
           graft.Tables(s, dir, "documents"))), path)
-      val idx = Multimodal.loadImageSigIndex(s, path).sigs
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ok = idx.groupBy("kind", "sig").agg(count(lit(1)).as("c"))
-        .filter(col("c") <= 1000).select("kind", "sig")
-      val statik = idx.join(ok, Seq("kind", "sig"))
-        .select(col("kind"), col("sig"), col("doc_id").as("m_id"))
-      val feed = igateFeed(s, dir)
-      val schema = s.read.parquet(feed.toString).schema
-      val qs = s.readStream.schema(schema).parquet(feed.toString)
-      val votes = runToTable(
-        qs.join(statik, Seq("kind", "sig"))
-          .groupBy(col("doc_id").as("up_id"), col("m_id"))
-          .agg(count(lit(1)).as("support"))
-          .filter(col("support") >= 2),
-        "complete")
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("up_id")
-        .orderBy(col("support").desc, col("m_id").asc)
-      val best = votes.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1).drop("rn")
-      s.read.parquet(feed.toString)
-        .select(col("doc_id").as("up_id")).distinct()
-        .join(best, Seq("up_id"), "left")
-        .select(col("up_id"), col("m_id").isNotNull.as("rejected"),
-          col("m_id"), col("support"))
+      admissionGate(Multimodal.loadImageSigIndex(s, path).sigs, Seq("kind", "sig"),
+        None, igateFeed(s, dir), minSupport = 2)
     }),
 
     // STREAMING CDC MERGE: the daily-crawl story's missing streaming
@@ -784,10 +672,10 @@ object StreamingQueries extends QueryModule {
     // StreamingSpec.
     "streaming_cdc" -> ((s, dir) => {
       val feed = cdcFeed(s, dir)
-      val schema = s.read.parquet(feed.resolve("b0.parquet").toString).schema
+      val schema = s.read.parquet(s"$feed/b0.parquet").schema
       val changes = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(feed.toString)
+        .parquet(feed)
       graft.streaming.StreamingOps
         .runMergeStream(graft.Tables(s, dir, "orders"), changes,
           "o_orderkey", "__seq", "__op")

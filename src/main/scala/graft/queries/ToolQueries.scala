@@ -12,23 +12,15 @@ import graft.operators.{KeyFieldSpec, Pipe, TotalOrderSort}
 object ToolQueries extends QueryModule {
 
   // one SequenceFile copy of the orders key/priority pair per sf dir
-  // for the JVM (the clipFeed discipline): written ONCE through the
+  // for the JVM ([[QueryModule.tempDir]]): written ONCE through the
   // real SequenceFileOutputFormat (BLOCK-compressed), then every run
   // reads it back through the DSv2 split-at-sync reader
-  private val seqDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def seqFileDir(s: SparkSession, dir: String): String =
-    seqDirs.computeIfAbsent(dir, { _ =>
-      val p = java.nio.file.Files.createTempDirectory("graft-seqfile")
-      p.toFile.deleteOnExit()
-      val out = s"$p/orders"
+    QueryModule.tempDir(dir, "seqfile", p =>
       graft.sources.sequencefile.SequenceFileIO.write(
         Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_orderpriority")),
-        out, "BLOCK")
-      out
-    })
+        s"$p/orders", "BLOCK")) + "/orders"
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // the SequenceFile format family under the driver's hash gate (the

@@ -24,4 +24,10 @@ object GraftCoreShim {
 
   /** Block until every listener event posted so far has been handled. */
   def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** Delete `dir` and everything under it when the JVM exits (Spark's
+    * own temp-dir hook; `File.deleteOnExit` skips a non-empty dir).
+    */
+  def deleteOnExit(dir: java.io.File): Unit =
+    util.ShutdownHookManager.registerShutdownDeleteDir(dir)
 }

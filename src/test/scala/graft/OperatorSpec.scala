@@ -305,60 +305,64 @@ class OperatorSpec extends AnyFunSuite {
     // probe the restored index — the operational contract (build once,
     // probe every future batch)
     val dir = java.nio.file.Files.createTempDirectory("mhidx").toString
-    Dedup.saveMinhashIndex(idx, dir, "doc_id")
-    val restored = Dedup.loadMinhashIndex(spark, dir)
-    assert(restored.k == idx.k && restored.numPerm == idx.numPerm &&
-      restored.rowsPerBand == idx.rowsPerBand)
+    try {
+      Dedup.saveMinhashIndex(idx, dir, "doc_id")
+      val restored = Dedup.loadMinhashIndex(spark, dir)
+      assert(restored.k == idx.k && restored.numPerm == idx.numPerm &&
+        restored.rowsPerBand == idx.rowsPerBand)
 
-    for (ix <- Seq(idx, restored)) {
-      val hits = Dedup.probeMinhashIndex(batch, "doc_id", "text", ix,
-          threshold = 0.5, materialize = true)
+      for (ix <- Seq(idx, restored)) {
+        val hits = Dedup.probeMinhashIndex(batch, "doc_id", "text", ix,
+            threshold = 0.5, materialize = true)
+          .select("new_id", "corpus_id", "n_agree")
+          .as[(Long, Long, Long)].collect().toSet
+        assert(hits.contains((101L, 10L, 16L)),
+          s"exact copy should agree on all 16 slots: $hits")
+        assert(hits.exists { case (n, c, a) => n == 102L && c == 10L && a >= 8L },
+          s"near-dup should clear the 0.5 agreement threshold: $hits")
+        assert(!hits.exists(_._1 == 103L), s"novel doc must not match: $hits")
+        assert(!hits.exists(h => h._2 == 20L || h._2 == 30L),
+          s"unrelated corpus docs must not match: $hits")
+      }
+
+      // the daily-crawl APPEND: accepted batch docs join the saved index
+      // without a rebuild, and the extended index equals a fresh build
+      // over the union (signatures/banding are deterministic)
+      Dedup.appendMinhashIndex(spark, dir, batch.filter(col("doc_id") === 103L),
+        "doc_id", "text")
+      val extended = Dedup.loadMinhashIndex(spark, dir)
+      val probe2 = Seq((201L,
+        "fresh never seen content sharing nothing with the existing corpus"))
+        .toDF("doc_id", "text")
+      val hits2 = Dedup.probeMinhashIndex(probe2, "doc_id", "text", extended,
+          threshold = 0.5)
         .select("new_id", "corpus_id", "n_agree")
         .as[(Long, Long, Long)].collect().toSet
-      assert(hits.contains((101L, 10L, 16L)),
-        s"exact copy should agree on all 16 slots: $hits")
-      assert(hits.exists { case (n, c, a) => n == 102L && c == 10L && a >= 8L },
-        s"near-dup should clear the 0.5 agreement threshold: $hits")
-      assert(!hits.exists(_._1 == 103L), s"novel doc must not match: $hits")
-      assert(!hits.exists(h => h._2 == 20L || h._2 == 30L),
-        s"unrelated corpus docs must not match: $hits")
+      assert(hits2.contains((201L, 103L, 16L)),
+        s"re-crawl of an appended doc must flag against it: $hits2")
+      val fresh = Dedup.buildMinhashIndex(
+        corpus.unionByName(batch.filter(col("doc_id") === 103L)),
+        "doc_id", "text", k = 3, numPerm = 16, rowsPerBand = 4)
+      assert(extended.signatures.orderBy("doc_id").collect().toSeq ==
+        fresh.signatures.orderBy("doc_id").collect().toSeq,
+        "appended index must equal the fresh union build")
+
+      // a crashed-append RETRY re-appends the same batch: load must dedup
+      // so the probe neither duplicates hits nor changes the result
+      Dedup.appendMinhashIndex(spark, dir, batch.filter(col("doc_id") === 103L),
+        "doc_id", "text")
+      val retried = Dedup.loadMinhashIndex(spark, dir)
+      assert(retried.signatures.count() == fresh.signatures.count(),
+        "retried append must collapse to one signature row per doc")
+      val hits3 = Dedup.probeMinhashIndex(probe2, "doc_id", "text", retried,
+          threshold = 0.5)
+        .select("new_id", "corpus_id", "n_agree")
+        .as[(Long, Long, Long)].collect().toSeq
+      assert(hits3.size == hits3.distinct.size && hits3.toSet == hits2,
+        s"retry must not duplicate or change hits: $hits3")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
-
-    // the daily-crawl APPEND: accepted batch docs join the saved index
-    // without a rebuild, and the extended index equals a fresh build
-    // over the union (signatures/banding are deterministic)
-    Dedup.appendMinhashIndex(spark, dir, batch.filter(col("doc_id") === 103L),
-      "doc_id", "text")
-    val extended = Dedup.loadMinhashIndex(spark, dir)
-    val probe2 = Seq((201L,
-      "fresh never seen content sharing nothing with the existing corpus"))
-      .toDF("doc_id", "text")
-    val hits2 = Dedup.probeMinhashIndex(probe2, "doc_id", "text", extended,
-        threshold = 0.5)
-      .select("new_id", "corpus_id", "n_agree")
-      .as[(Long, Long, Long)].collect().toSet
-    assert(hits2.contains((201L, 103L, 16L)),
-      s"re-crawl of an appended doc must flag against it: $hits2")
-    val fresh = Dedup.buildMinhashIndex(
-      corpus.unionByName(batch.filter(col("doc_id") === 103L)),
-      "doc_id", "text", k = 3, numPerm = 16, rowsPerBand = 4)
-    assert(extended.signatures.orderBy("doc_id").collect().toSeq ==
-      fresh.signatures.orderBy("doc_id").collect().toSeq,
-      "appended index must equal the fresh union build")
-
-    // a crashed-append RETRY re-appends the same batch: load must dedup
-    // so the probe neither duplicates hits nor changes the result
-    Dedup.appendMinhashIndex(spark, dir, batch.filter(col("doc_id") === 103L),
-      "doc_id", "text")
-    val retried = Dedup.loadMinhashIndex(spark, dir)
-    assert(retried.signatures.count() == fresh.signatures.count(),
-      "retried append must collapse to one signature row per doc")
-    val hits3 = Dedup.probeMinhashIndex(probe2, "doc_id", "text", retried,
-        threshold = 0.5)
-      .select("new_id", "corpus_id", "n_agree")
-      .as[(Long, Long, Long)].collect().toSeq
-    assert(hits3.size == hits3.distinct.size && hits3.toSet == hits2,
-      s"retry must not duplicate or change hits: $hits3")
   }
 
   test("Similarity IVF index save/load round trip probes identically") {
@@ -372,17 +376,33 @@ class OperatorSpec extends AnyFunSuite {
     val (cb, assigned) = Similarity.buildIvfIndex(base, "vec_id", "embedding",
       nCells = 4)
     val dir = java.nio.file.Files.createTempDirectory("ivfidx").toString
-    Similarity.saveIvfIndex(cb, assigned, dir)
-    val (cb2, assigned2) = Similarity.loadIvfIndex(spark, dir)
-    assert(cb2.map { case (c, v) => (c, v.toSeq) } ==
-      cb.sortBy(_._1).map { case (c, v) => (c, v.toSeq) })
-    def run(c: Seq[(Long, Array[Double])],
-            a: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-      Similarity.probeIvf(c, a, queries, "vec_id", "embedding", k = 3)
-        .select(col("q_id"), col("n_id"))
-        .as[(Long, Long)].collect().toSet
-    assert(run(cb2, assigned2) == run(cb, assigned),
-      "restored index must probe identically")
+    try {
+      Similarity.saveIvfIndex(cb, assigned, dir)
+      val (cb2, assigned2) = Similarity.loadIvfIndex(spark, dir)
+      assert(cb2.map { case (c, v) => (c, v.toSeq) } ==
+        cb.sortBy(_._1).map { case (c, v) => (c, v.toSeq) })
+      def run(c: Seq[(Long, Array[Double])],
+              a: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+        Similarity.probeIvf(c, a, queries, "vec_id", "embedding", k = 3)
+          .select(col("q_id"), col("n_id"))
+          .as[(Long, Long)].collect().toSet
+      assert(run(cb2, assigned2) == run(cb, assigned),
+        "restored index must probe identically")
+      // a re-save at the same path with another cell count replaces the
+      // codebook and the assignment rows together
+      val (cb3, assigned3) = Similarity.buildIvfIndex(
+        base.filter(col("vec_id") < 30L), "vec_id", "embedding", nCells = 2)
+      Similarity.saveIvfIndex(cb3, assigned3, dir)
+      val (cb4, assigned4) = Similarity.loadIvfIndex(spark, dir)
+      assert(cb4.map { case (c, v) => (c, v.toSeq) } ==
+        cb3.sortBy(_._1).map { case (c, v) => (c, v.toSeq) })
+      assert(cb4.size == 2, s"re-saved codebook: ${cb4.size} cells")
+      assert(assigned4.exceptAll(assigned3).isEmpty &&
+        assigned3.exceptAll(assigned4).isEmpty,
+        "re-saved index must hold exactly the new assignment rows")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
   }
 
   test("Graphs.pageRankInt matches hand-computed rounds; deterministic; dangling mass drops") {
@@ -792,30 +812,34 @@ class OperatorSpec extends AnyFunSuite {
     val day2 = Seq((449L, "x"), (309L, "x")).toDF("doc_id", "text")
     val path = java.nio.file.Files
       .createTempDirectory("graft-clip-idx-spec").toString
-    Multimodal.saveClipIndex(
-      Multimodal.buildClipIndex(Multimodal.fabricateAudio(day1)), path)
-    Multimodal.appendClipIndex(spark, path, Multimodal.fabricateAudio(day2))
-    def fpSet(ix: Multimodal.ClipIndex) = ix.fps
-      .select("doc_id", "win_idx", "subfp").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val appended = fpSet(Multimodal.loadClipIndex(spark, path))
-    val fresh = fpSet(Multimodal.buildClipIndex(
-      Multimodal.fabricateAudio(day1.unionByName(day2))))
-    assert(appended == fresh, "appended index != fresh union build")
-    // a crashed append retried must change nothing after load
-    Multimodal.appendClipIndex(spark, path, Multimodal.fabricateAudio(day2))
-    assert(fpSet(Multimodal.loadClipIndex(spark, path)) == fresh,
-      "append retry not idempotent under load's dedup")
-    // the loaded index serves a day-2 extract at its exact offset
-    val probe = Multimodal.probeClipIndex(
-      Multimodal.loadClipIndex(spark, path),
-      Multimodal.fabricateAudio(day2.filter($"doc_id" === 449L),
-        idOffset = 1000L, startFrame = 192),
-      minSupport = 2, maxBucket = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    val nwClip = (Multimodal.audioFrames(449L) - 192) / 64
-    assert(probe.toSeq == Seq((1449L, 449L, 3L, (nwClip - 1).toLong)),
-      s"probe: ${probe.toSeq}")
+    try {
+      Multimodal.saveClipIndex(
+        Multimodal.buildClipIndex(Multimodal.fabricateAudio(day1)), path)
+      Multimodal.appendClipIndex(spark, path, Multimodal.fabricateAudio(day2))
+      def fpSet(ix: Multimodal.ClipIndex) = ix.fps
+        .select("doc_id", "win_idx", "subfp").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+      val appended = fpSet(Multimodal.loadClipIndex(spark, path))
+      val fresh = fpSet(Multimodal.buildClipIndex(
+        Multimodal.fabricateAudio(day1.unionByName(day2))))
+      assert(appended == fresh, "appended index != fresh union build")
+      // a crashed append retried must change nothing after load
+      Multimodal.appendClipIndex(spark, path, Multimodal.fabricateAudio(day2))
+      assert(fpSet(Multimodal.loadClipIndex(spark, path)) == fresh,
+        "append retry not idempotent under load's dedup")
+      // the loaded index serves a day-2 extract at its exact offset
+      val probe = Multimodal.probeClipIndex(
+        Multimodal.loadClipIndex(spark, path),
+        Multimodal.fabricateAudio(day2.filter($"doc_id" === 449L),
+          idOffset = 1000L, startFrame = 192),
+        minSupport = 2, maxBucket = 10)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      val nwClip = (Multimodal.audioFrames(449L) - 192) / 64
+      assert(probe.toSeq == Seq((1449L, 449L, 3L, (nwClip - 1).toLong)),
+        s"probe: ${probe.toSeq}")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+    }
   }
 
   test("Multimodal video clip index: append == fresh union build, retry idempotent, probe aligns head-clipped re-encodes") {
@@ -824,37 +848,41 @@ class OperatorSpec extends AnyFunSuite {
     val day2 = Seq((13L, "x"), (17L, "NOT video")).toDF("doc_id", "text")
     val path = java.nio.file.Files
       .createTempDirectory("graft-vclip-idx-spec").toString
-    Multimodal.saveVideoClipIndex(
-      Multimodal.buildVideoClipIndex(
-        Multimodal.fabricateFrameStream(day1)), path)
-    Multimodal.appendVideoClipIndex(spark, path,
-      Multimodal.fabricateFrameStream(day2))
-    def fpSet(ix: Multimodal.VideoClipIndex) = ix.fps
-      .select("doc_id", "frame_idx", "fhash").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    val appended = fpSet(Multimodal.loadVideoClipIndex(spark, path))
-    val fresh = fpSet(Multimodal.buildVideoClipIndex(
-      Multimodal.fabricateFrameStream(day1.unionByName(day2))))
-    assert(appended == fresh, "appended video index != fresh union build")
-    // the non-video doc contributes no rows (an index of undecodable
-    // bytes detects nothing)
-    assert(!appended.exists(_._1 == 17L), "non-video doc leaked rows")
-    // a crashed append retried must change nothing after load
-    Multimodal.appendVideoClipIndex(spark, path,
-      Multimodal.fabricateFrameStream(day2))
-    assert(fpSet(Multimodal.loadVideoClipIndex(spark, path)) == fresh,
-      "video append retry not idempotent under load's dedup")
-    // the loaded index aligns a day-2 head-clipped re-encode at frame
-    // offset +1 with every shared frame voting
-    val probe = Multimodal.probeVideoClipIndex(
-      Multimodal.loadVideoClipIndex(spark, path),
-      Multimodal.fabricateFrameStream(day2.filter($"doc_id" === 13L),
-        idOffset = 1000L, frameShift = 1),
-      minSupport = 2, maxBucket = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(probe.toSeq ==
-      Seq((1013L, 13L, 1L, (Multimodal.videoFrames(13L) - 1).toLong)),
-      s"video probe: ${probe.toSeq}")
+    try {
+      Multimodal.saveVideoClipIndex(
+        Multimodal.buildVideoClipIndex(
+          Multimodal.fabricateFrameStream(day1)), path)
+      Multimodal.appendVideoClipIndex(spark, path,
+        Multimodal.fabricateFrameStream(day2))
+      def fpSet(ix: Multimodal.VideoClipIndex) = ix.fps
+        .select("doc_id", "frame_idx", "fhash").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
+      val appended = fpSet(Multimodal.loadVideoClipIndex(spark, path))
+      val fresh = fpSet(Multimodal.buildVideoClipIndex(
+        Multimodal.fabricateFrameStream(day1.unionByName(day2))))
+      assert(appended == fresh, "appended video index != fresh union build")
+      // the non-video doc contributes no rows (an index of undecodable
+      // bytes detects nothing)
+      assert(!appended.exists(_._1 == 17L), "non-video doc leaked rows")
+      // a crashed append retried must change nothing after load
+      Multimodal.appendVideoClipIndex(spark, path,
+        Multimodal.fabricateFrameStream(day2))
+      assert(fpSet(Multimodal.loadVideoClipIndex(spark, path)) == fresh,
+        "video append retry not idempotent under load's dedup")
+      // the loaded index aligns a day-2 head-clipped re-encode at frame
+      // offset +1 with every shared frame voting
+      val probe = Multimodal.probeVideoClipIndex(
+        Multimodal.loadVideoClipIndex(spark, path),
+        Multimodal.fabricateFrameStream(day2.filter($"doc_id" === 13L),
+          idOffset = 1000L, frameShift = 1),
+        minSupport = 2, maxBucket = 10)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      assert(probe.toSeq ==
+        Seq((1013L, 13L, 1L, (Multimodal.videoFrames(13L) - 1).toLong)),
+        s"video probe: ${probe.toSeq}")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+    }
   }
 
   test("Multimodal audioDedup: copies and mid-stream extracts collapse to one keeper; undecodables keep themselves") {
@@ -971,30 +999,34 @@ class OperatorSpec extends AnyFunSuite {
     val day2 = Seq((3L, "x"), (17L, "NOT an image")).toDF("doc_id", "text")
     val path = java.nio.file.Files
       .createTempDirectory("graft-img-idx-spec").toString
-    Multimodal.saveImageSigIndex(
-      Multimodal.buildImageSigIndex(Multimodal.fabricateStillImages(day1)), path)
-    Multimodal.appendImageSigIndex(spark, path,
-      Multimodal.fabricateStillImages(day2))
-    def sigSet(ix: Multimodal.ImageSigIndex) = ix.sigs
-      .select("doc_id", "kind", "sig").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-    val appended = sigSet(Multimodal.loadImageSigIndex(spark, path))
-    val fresh = sigSet(Multimodal.buildImageSigIndex(
-      Multimodal.fabricateStillImages(day1.unionByName(day2))))
-    assert(appended == fresh, "appended image index != fresh union build")
-    assert(!appended.exists(_._1 == 17L), "undecodable doc leaked index rows")
-    Multimodal.appendImageSigIndex(spark, path,
-      Multimodal.fabricateStillImages(day2))
-    assert(sigSet(Multimodal.loadImageSigIndex(spark, path)) == fresh,
-      "image append retry not idempotent under load's dedup")
-    // a day-2 lossless re-encode matches on BOTH kinds (support 2)
-    val probe = Multimodal.probeImageSigIndex(
-      Multimodal.loadImageSigIndex(spark, path),
-      Multimodal.fabricateStillImages(day2.filter($"doc_id" === 3L),
-        idOffset = 1000L, fmt = "bmp"),
-      minSupport = 2, maxBucket = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(probe.toSeq == Seq((1003L, 3L, 2L)), s"image probe: ${probe.toSeq}")
+    try {
+      Multimodal.saveImageSigIndex(
+        Multimodal.buildImageSigIndex(Multimodal.fabricateStillImages(day1)), path)
+      Multimodal.appendImageSigIndex(spark, path,
+        Multimodal.fabricateStillImages(day2))
+      def sigSet(ix: Multimodal.ImageSigIndex) = ix.sigs
+        .select("doc_id", "kind", "sig").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+      val appended = sigSet(Multimodal.loadImageSigIndex(spark, path))
+      val fresh = sigSet(Multimodal.buildImageSigIndex(
+        Multimodal.fabricateStillImages(day1.unionByName(day2))))
+      assert(appended == fresh, "appended image index != fresh union build")
+      assert(!appended.exists(_._1 == 17L), "undecodable doc leaked index rows")
+      Multimodal.appendImageSigIndex(spark, path,
+        Multimodal.fabricateStillImages(day2))
+      assert(sigSet(Multimodal.loadImageSigIndex(spark, path)) == fresh,
+        "image append retry not idempotent under load's dedup")
+      // a day-2 lossless re-encode matches on BOTH kinds (support 2)
+      val probe = Multimodal.probeImageSigIndex(
+        Multimodal.loadImageSigIndex(spark, path),
+        Multimodal.fabricateStillImages(day2.filter($"doc_id" === 3L),
+          idOffset = 1000L, fmt = "bmp"),
+        minSupport = 2, maxBucket = 10)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      assert(probe.toSeq == Seq((1003L, 3L, 2L)), s"image probe: ${probe.toSeq}")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+    }
   }
 
   test("Multimodal collapseExact: a flood of exact re-uploads past maxBucket cannot evict the genuine match") {
