@@ -150,8 +150,7 @@ object Bench {
     val budgetSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "2700").toDouble
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // bench contract is local[32] (the driver may or may not export CPUS)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.defaultCores
     val iters = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt)
     val spark = GraftSession.build(cpus)
     // steady-state measurement: absorb JVM/codegen warmup outside the

@@ -15,7 +15,7 @@ object BigSfShim {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: BigSfShim <srcSfDir> <outDir> <k>")
     val (src, out, k) = (args(0), args(1), args(2).toInt)
-    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.build(GraftSession.defaultCores)
     val docs = spark.read.parquet(s"$src/documents.parquet")
     val dShift = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
     (0 until k).map(i => docs.withColumn("doc_id", col("doc_id") + lit(i * dShift)))

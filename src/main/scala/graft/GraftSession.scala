@@ -7,6 +7,11 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Core count of a main's local session: `SPARK_GRAFT_CPUS`, else
+    * every core the JVM sees (never an oversubscribed fixed count). */
+  def defaultCores: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
   /** local[n] session. At 100 TB the same settings translate to: AQE on
     * (runtime skew-join + partition coalescing), shuffle partitions sized
     * to the cluster (here: the local core count, not the 200 default).
@@ -29,20 +34,36 @@ object GraftSession {
       // Measured r14: -13..-19% on the composition-lane subset
       // (video_dedup_e2e 7.3-8.0 -> 4.8-4.9 s), OPTIMIZATION_r14.md.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // Codegen class cache sized to the engine, not Spark's default
-      // 100 entries (r15): this library runs ~200 distinct operator
-      // plans per session (Verify/Bench — and a production pipeline
-      // composes dozens of stages), each contributing several
-      // whole-stage-codegen units, so at 100 entries the cache thrashes
-      // and lanes recompile generated classes they compiled minutes
-      // earlier. A janino compile is 0.1-2 s of SINGLE-THREADED driver/
-      // executor time and every other task of the stage BLOCKS on the
-      // compile KeyLock (measured r15: 30 of 32 workers parked behind
-      // one compile; 5-lane A/B mins dropped 25-40% with the cache
-      // raised). 4096 entries bounds the held classes while covering
-      // the full suite; the same setting is right at cluster scale —
-      // each executor JVM pays the identical compile serialization.
+      // Spark's codegen cache maps generated source text to its compiled
+      // class, one entry per distinct body, per JVM. A cold
+      // TrainingPipeline pass fills about 240 entries, and the full
+      // Verify/Bench suite several times that, so Spark's default of 100
+      // would evict classes a later stage or lane needs again. A janino
+      // compile is tens of ms of single-threaded work that every other
+      // task of the stage waits on (the cache's per-key lock). 4096
+      // entries bound the held classes and cover the suite; each
+      // executor JVM of a cluster keeps its own cache, sized the same.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // Name every whole-stage class `GeneratedIterator`, not
+      // `GeneratedIteratorForCodegenStage<N>`. N is a per-query counter
+      // that AQE re-plans renumber too, and the cache keys on the source
+      // text, so with the id in the name one pipeline compiles again
+      // under every new N (a cold crawl pass: 299 whole-stage bodies,
+      // 99 distinct without the id). The name only labels the class:
+      // every compile already loads into its own class loader under the
+      // one outer name `GeneratedClass`, so equal names never collide.
+      // At cluster scale every executor JVM would otherwise pay the
+      // same recompiles.
+      .config("spark.sql.codegen.useIdInClassName", "false")
+      // Run tasks under the application class loader, not a per-session
+      // ExecutorClassLoader. Isolation exists for sessions that ship
+      // their own classes (Spark Connect `addArtifact`); graft ships
+      // none, it is a library on the application class path. With
+      // isolation on, every class-name miss of a janino compile becomes
+      // a fetch from the driver's RPC file server under the loader's
+      // monitor (mean compile 44-63 ms on, 25-28 ms off, 4 cores);
+      // on a cluster each miss is a network round trip to the driver.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // events.parquet carries TIMESTAMP(NANOS,false), which Spark 4

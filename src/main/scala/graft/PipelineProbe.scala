@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 object PipelineProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
+    val spark = GraftSession.build(GraftSession.defaultCores)
     val evalSet = Tables(spark, dir, "documents")
       .filter(col("doc_id") % 97 === 0).select(col("doc_id"), col("text"))
     val landing = java.nio.file.Files

@@ -12,7 +12,7 @@ object PlanDump {
     java.nio.file.Files.createDirectories(outDir)
     val suffix = args(1)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.build(GraftSession.defaultCores)
     args.drop(2).foreach { name =>
       val txt =
         try {

@@ -2,15 +2,18 @@ package graft
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Dev-only: run ONE named query like the Bench lane does (clearCache +
   * noop sink after an untimed warmup of the session) and attribute its
   * wall time: per-Spark-job wall ranges, total task time, stage/task
-  * counts, and the driver gap (wall − union of job windows ≈ Catalyst
-  * analysis/optimization + driver-side work). Guide §1: decide whether
-  * a lane is executor-bound, scheduling-bound, or driver-bound before
-  * touching it.
+  * counts, the driver gap (wall − union of job windows ≈ Catalyst
+  * analysis/optimization + driver-side work), and the janino compiles
+  * (count and summed seconds) of the cold warmup and of the timed run.
+  * Guide §1: decide whether a lane is executor-bound, scheduling-bound,
+  * or driver-bound before touching it.
   * Usage: runMain graft.ProfileLane <query> [sfDir]
   */
 object ProfileLane {
@@ -18,13 +21,20 @@ object ProfileLane {
     require(args.nonEmpty, "usage: ProfileLane <query> [sfDir]")
     val name = args(0)
     val dir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.build(GraftSession.defaultCores)
     spark.range(0, 1000000, 1, 8)
       .selectExpr("sum(id)", "count(distinct id % 100)").collect()
     val fn = SparkEntry.queries(name)
+    // janino compiles so far in this JVM: (count, summed nanoseconds)
+    def compiles(): (Long, Long) =
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+    def compileLine(phase: String, from: (Long, Long), to: (Long, Long)): String =
+      f"[profile] $name $phase compiles=${to._1 - from._1} compileTime=${(to._2 - from._2) / 1e9}%.3f s"
     // warmup run (codegen/JIT), untimed — the Bench protocol
     spark.catalog.clearCache()
+    val c0 = compiles()
     fn(spark, dir).write.format("noop").mode("overwrite").save()
+    val c1 = compiles()
     spark.catalog.clearCache()
 
     case class J(id: Int, t0: Long, var t1: Long = -1L, desc: String = "")
@@ -59,6 +69,7 @@ object ProfileLane {
     val w0 = System.nanoTime()
     fn(spark, dir).write.format("noop").mode("overwrite").save()
     val wallMs = (System.nanoTime() - w0) / 1e6
+    val c2 = compiles()
     spark.sparkContext.removeSparkListener(listener)
     Thread.sleep(300) // let listener drain
 
@@ -77,6 +88,8 @@ object ProfileLane {
       f"jobWindow=${covered / 1000.0}%.3f s driverGap=${(wallMs - covered) / 1000}%.3f s " +
       f"stages=${ss.size} tasks=${ss.map(_.tasks).sum} " +
       f"taskTime=${ss.map(_.taskMs).sum / 1000.0}%.3f s")
+    println(compileLine("warmup", c0, c1))
+    println(compileLine("timed", c1, c2))
     // group jobs by description (setJobDescription labels — the
     // pipeline's pinL stages): wall per label = sum of job windows
     js.filter(j => j.desc.nonEmpty && j.t1 > 0).groupBy(_.desc).toSeq

@@ -7,7 +7,7 @@ import graft.sources.TeraIO
 object TeraProbe {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(10000000L)
-    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.build(GraftSession.defaultCores)
     val base = s"/tmp/graft-teraprobe"
     val inDir = s"$base/input"; val outDir = s"$base/output"
     TeraIO.delete(spark, inDir); TeraIO.delete(spark, outDir)

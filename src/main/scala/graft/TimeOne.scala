@@ -11,7 +11,7 @@ object TimeOne {
     require(names.nonEmpty, "usage: TimeOne <query> [<query>...] [sfDir]")
     require(dirArg.length <= 1, s"more than one sf dir given: ${dirArg.mkString(", ")}")
     val dir = dirArg.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.build(GraftSession.defaultCores)
     spark.range(0, 1000000, 1, 8)
       .selectExpr("sum(id)", "count(distinct id % 100)").collect()
     def f3(d: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))

@@ -3,15 +3,23 @@
 #
 #   tools/graftbench_ab.sh <parent-rev> <workload> <seed>...
 #
-# Checks out <parent-rev> and a snapshot of the working tree (tracked and
-# untracked files, .gitignore respected) as two detached git worktrees in
-# a fresh directory under ${TMPDIR:-/tmp}, then runs
+# Exports <parent-rev> and a snapshot of the working tree (tracked and
+# untracked files, .gitignore respected) with `git archive` into two plain
+# directories under a fresh directory in ${TMPDIR:-/tmp}, then runs
 # `graftbench/run.py --workload <workload> --seed <seed> --seconds 1
 # --trace 0` once per side per seed, alternating which side goes first.
 # Each side builds before its first run, outside the measured JVM. Per
-# end-to-end metric it prints each side's median and quartiles and how
-# many of the pairs the change won. The worktrees are removed on exit; the raw JSON
-# lines stay in the printed results directory.
+# end-to-end metric it prints each side's median and quartiles, how many
+# of the pairs the change won, and a verdict against BENCHMARK.json:
+#   gain        over at least 10 pairs, the change wins at least 9/10 of
+#               them and its median is better than the parent's by more
+#               than the parent's IQR
+#   worse       the change's median is worse than the parent's by more
+#               than the metric's bound (a fraction of the parent median)
+#   unresolved  the parent's own IQR exceeds the bound
+#   no worse    otherwise
+# The two source trees are removed on exit; the raw JSON lines and logs
+# stay in the printed results directory.
 set -euo pipefail
 
 if [ "$#" -lt 3 ]; then
@@ -24,20 +32,15 @@ cd "$ROOT"
 
 parent_rev="$(git rev-parse --verify "$PARENT^{commit}")"
 OUT="$(mktemp -d "${TMPDIR:-/tmp}/graftbench-ab.XXXXXX")"
-cleanup() {
-  for side in parent change; do
-    if [ -d "$OUT/$side" ]; then git worktree remove --force "$OUT/$side" || true; fi
-  done
-  git worktree prune
-}
-trap cleanup EXIT
+trap 'rm -rf "$OUT/parent" "$OUT/change"' EXIT
 # the working tree as a commit, without touching the index or HEAD
 cp "$(git rev-parse --git-path index)" "$OUT/index"
 GIT_INDEX_FILE="$OUT/index" git add -A
 change_rev="$(git -c user.name=graftbench -c user.email=graftbench@localhost \
   commit-tree "$(GIT_INDEX_FILE="$OUT/index" git write-tree)" -p HEAD -m "graftbench A/B snapshot")"
-git worktree add --detach -q "$OUT/parent" "$parent_rev"
-git worktree add --detach -q "$OUT/change" "$change_rev"
+mkdir "$OUT/parent" "$OUT/change"
+git archive "$parent_rev" | tar -x -C "$OUT/parent"
+git archive "$change_rev" | tar -x -C "$OUT/change"
 echo "parent $parent_rev, change $change_rev (working tree), results in $OUT" >&2
 
 run() {  # <side> <seed>: append the run's JSON line to $OUT/<side>.jsonl
@@ -71,7 +74,7 @@ def quart(v):
 
 for side, rs in rows.items():
     print(f"{side}: {sum(r['failed'] for r in rs)} failed of {sum(r['attempted'] for r in rs)} passes")
-print(f"{'metric':<14} {'parent median (q1-q3)':>28} {'change median (q1-q3)':>28} {'change wins':>12}")
+print(f"{'metric':<14} {'parent median (q1-q3)':>28} {'change median (q1-q3)':>28} {'change wins':>12}  verdict")
 for m in bench["end_to_end"]:
     name, lower = m["name"], m["better"] == "lower"
     pairs = [(p["metrics"][name]["value"], c["metrics"][name]["value"])
@@ -80,6 +83,18 @@ for m in bench["end_to_end"]:
     p, c = [a for a, _ in pairs], [b for _, b in pairs]
     wins = sum((b < a) if lower else (b > a) for a, b in pairs)
     pq, cq = quart(p), quart(c)
+    gap = (pq[1] - cq[1]) if lower else (cq[1] - pq[1])  # > 0: change better
+    allowed = m["bound"] * abs(pq[1])
+    if not pairs:
+        verdict = "no runs"
+    elif len(pairs) >= 10 and 10 * wins >= 9 * len(pairs) and gap > pq[2] - pq[0]:
+        verdict = "gain"
+    elif -gap > allowed:
+        verdict = "worse"
+    elif pq[2] - pq[0] > allowed:
+        verdict = "unresolved"
+    else:
+        verdict = "no worse"
     print(f"{name:<14} {pq[1]:>12.4g} ({pq[0]:.4g}-{pq[2]:.4g}) "
-          f"{cq[1]:>12.4g} ({cq[0]:.4g}-{cq[2]:.4g}) {wins:>6}/{len(pairs)}")
+          f"{cq[1]:>12.4g} ({cq[0]:.4g}-{cq[2]:.4g}) {wins:>6}/{len(pairs)}  {verdict}")
 EOF
