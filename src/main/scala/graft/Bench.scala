@@ -754,17 +754,16 @@ object Bench {
     // candidate work is constant across the two runs.
     "semantic" -> (() => scaleProbe("semantic", embPair3) { df =>
       val n = df.count()
-      val pairs = operators.Similarity.cosinePairsLsh(df, "vec_id", "embedding",
-        threshold = 0.3, nCells = math.max(32L, n / 64).toInt,
-        rep = 2, tables = 6)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      operators.Pins() { pins =>
+        val pairs = pins.persist(operators.Similarity.cosinePairsLsh(df, "vec_id",
+          "embedding", threshold = 0.3, nCells = math.max(32L, n / 64).toInt,
+          rep = 2, tables = 6))
         val cc = operators.Dedup.connectedComponents(pairs, "vec_a", "vec_b")
           .withColumnRenamed("vec_a", "vec_id")
         noop(df.select(col("vec_id")).join(cc, Seq("vec_id"), "left")
           .filter(coalesce(col("cluster_id"), col("vec_id")) === col("vec_id"))
           .select(col("vec_id")))
-      } finally pairs.unpersist(false)
+      }
     }),
 
     // streaming funnel: stream-stream interval join state growth. The

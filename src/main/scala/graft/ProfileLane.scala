@@ -2,6 +2,7 @@ package graft
 
 import scala.collection.mutable
 
+import org.apache.spark.GraftCoreShim
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
@@ -10,8 +11,11 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * noop sink after an untimed warmup of the session) and attribute its
   * wall time: per-Spark-job wall ranges, total task time, stage/task
   * counts, the driver gap (wall − union of job windows ≈ Catalyst
-  * analysis/optimization + driver-side work), and the janino compiles
-  * (count and summed seconds) of the cold warmup and of the timed run.
+  * analysis/optimization + driver-side work), and, for the cold warmup
+  * and the timed run, the janino compiles (count and summed seconds)
+  * and the cache builds: jobs whose final RDD is an in-memory cache
+  * (storage level set, named by its SQL plan rather than an RDD class),
+  * with the number of distinct caches they built.
   * Guide §1: decide whether a lane is executor-bound, scheduling-bound,
   * or driver-bound before touching it.
   * Usage: runMain graft.ProfileLane <query> [sfDir]
@@ -25,16 +29,33 @@ object ProfileLane {
     spark.range(0, 1000000, 1, 8)
       .selectExpr("sum(id)", "count(distinct id % 100)").collect()
     val fn = SparkEntry.queries(name)
-    // janino compiles so far in this JVM: (count, summed nanoseconds)
-    def compiles(): (Long, Long) =
-      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
-    def compileLine(phase: String, from: (Long, Long), to: (Long, Long)): String =
-      f"[profile] $name $phase compiles=${to._1 - from._1} compileTime=${(to._2 - from._2) / 1e9}%.3f s"
+    // the final RDD id of every cache-build job so far
+    val builds = mutable.ArrayBuffer[Int]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        for {
+          s <- e.stageInfos.maxByOption(_.stageId)
+          r <- s.rddInfos.headOption
+          if r.storageLevel.isValid && !r.name.matches("\\w*RDD")
+        } builds.synchronized(builds += r.id)
+    })
+    // janino compiles (count, summed nanoseconds) and cache-build jobs
+    // so far in this JVM
+    def counters(): (Long, Long, Int) = {
+      GraftCoreShim.drainListenerBus(spark.sparkContext)
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime,
+        builds.synchronized(builds.size))
+    }
+    def phaseLine(phase: String, from: (Long, Long, Int), to: (Long, Long, Int)): String = {
+      val ids = builds.synchronized(builds.slice(from._3, to._3).toVector)
+      f"[profile] $name $phase compiles=${to._1 - from._1} compileTime=${(to._2 - from._2) / 1e9}%.3f s" +
+        s" cacheBuilds=${ids.size} caches=${ids.distinct.size}"
+    }
     // warmup run (codegen/JIT), untimed — the Bench protocol
     spark.catalog.clearCache()
-    val c0 = compiles()
+    val c0 = counters()
     fn(spark, dir).write.format("noop").mode("overwrite").save()
-    val c1 = compiles()
+    val c1 = counters()
     spark.catalog.clearCache()
 
     case class J(id: Int, t0: Long, var t1: Long = -1L, desc: String = "")
@@ -69,7 +90,7 @@ object ProfileLane {
     val w0 = System.nanoTime()
     fn(spark, dir).write.format("noop").mode("overwrite").save()
     val wallMs = (System.nanoTime() - w0) / 1e6
-    val c2 = compiles()
+    val c2 = counters()
     spark.sparkContext.removeSparkListener(listener)
     Thread.sleep(300) // let listener drain
 
@@ -88,8 +109,8 @@ object ProfileLane {
       f"jobWindow=${covered / 1000.0}%.3f s driverGap=${(wallMs - covered) / 1000}%.3f s " +
       f"stages=${ss.size} tasks=${ss.map(_.tasks).sum} " +
       f"taskTime=${ss.map(_.taskMs).sum / 1000.0}%.3f s")
-    println(compileLine("warmup", c0, c1))
-    println(compileLine("timed", c1, c2))
+    println(phaseLine("warmup", c0, c1))
+    println(phaseLine("timed", c1, c2))
     // group jobs by description (setJobDescription labels — the
     // pipeline's pinL stages): wall per label = sum of job windows
     js.filter(j => j.desc.nonEmpty && j.t1 > 0).groupBy(_.desc).toSeq

@@ -9,7 +9,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.{GraftCoreShim, SparkContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftCacheShim}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
@@ -21,6 +21,14 @@ import org.apache.spark.storage.StorageLevel
   * [[close]] releases what is still registered, newest first, whether
   * the body returned or threw; [[release]] frees one early. Checkpoint
   * blocks go through the ContextCleaner's silent unpersist path.
+  *
+  * A persist builds its cache at once, in one job labelled
+  * `persist build`, and a failed build releases it before rethrowing.
+  * Left lazy, the cache would be built by AQE, which plans one
+  * `TableCacheQueryStage` job per *reference* to an unbuilt cache and
+  * submits them together: a frame read five times in one plan would be
+  * built five times. Once built, every plan reading it sees a loaded
+  * cache, with exact size and row-count statistics.
   *
   * Mode: without a `checkpointDir` a pin is a `localCheckpoint` — fast,
   * but its blocks die with their executor and the truncated lineage
@@ -50,10 +58,10 @@ final class Pins private (private val dir: Option[String], parent: Option[Pins])
   private val dirScope: Pins =
     if (dir.isDefined) this else parent.map(_.dirScope).getOrElse(this)
 
-  /** Persist `df` (memory and disk) for the scope's lifetime. */
+  /** Persist `df` (memory and disk) for the scope's lifetime, built now. */
   def persist(df: DataFrame): DataFrame = {
     register(new Held(df.persist(StorageLevel.MEMORY_AND_DISK), None))
-    df
+    Pins.build(df)(release(df))
   }
 
   /** Eagerly checkpoint `df` in the scope's mode (`local` forces a
@@ -133,6 +141,7 @@ object Pins {
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[Pins])
   private final class Held(val frame: DataFrame, val rdd: Option[Int])
   private val current = new ThreadLocal[Pins]
+  private val JobDescription = "spark.job.description"
 
   /** Run `body` in a new scope nested in the thread's current one, and
     * close it when `body` returns or throws. `checkpointDir` None takes
@@ -144,10 +153,25 @@ object Pins {
   }
 
   /** Persist `df` into the thread's current scope, or plainly (released
-    * by the session's `clearCache`) when none is open.
+    * by the session's `clearCache`) when none is open; built now either
+    * way.
     */
   def persist(df: DataFrame): DataFrame =
-    Option(current.get).fold(df.persist(StorageLevel.MEMORY_AND_DISK))(_.persist(df))
+    Option(current.get).fold(
+      build(df.persist(StorageLevel.MEMORY_AND_DISK))(df.unpersist(false)))(_.persist(df))
+
+  /** Build persisted `df`'s cache in one job labelled `persist build`;
+    * when that job fails, run `undo` and rethrow.
+    */
+  private def build(df: DataFrame)(undo: => Unit): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    val outer = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription("persist build")
+    try GraftCacheShim.build(df)
+    catch { case NonFatal(e) => undo; throw e }
+    finally sc.setJobDescription(outer)
+    df
+  }
 
   /** Release the blocks of a pinned frame no scope holds — one a scope
     * [[Pins.keep]]s with no enclosing scope.

@@ -705,10 +705,11 @@ object Dedup {
     * one representative per cluster). Pairs with a null endpoint are
     * ignored; a node exists only through a pair with both ends set.
     *
-    * The pair graph is pinned once as directed edges, and the pin's
-    * job counts them (an `observe` metric, no extra job). Then:
+    * The narrowed pair frame is pinned once, and the pin's job counts
+    * its rows (an `observe` metric, no extra job); the directed edges
+    * are the pin unioned with its flip, two rows per pair. Then:
     *  - Driver finish, below [[DriverFinishEdges]] edge rows: one job
-    *    collects one direction of each edge into primitive arrays, and
+    *    collects the pinned pairs into primitive arrays, and
     *    union-find over sorted ids labels every node. The labels return
     *    as a local relation with exact stats (downstream joins
     *    broadcast it) holding no pin. Two jobs per call.
@@ -724,7 +725,7 @@ object Dedup {
     * per call says which path ran, the edge count, the rounds and
     * whether they converged.
     *
-    * Pins: the edge pin and each round are eager [[Pins]] pins in the
+    * Pins: the pair pin and each round are eager [[Pins]] pins in the
     * enclosing scope's checkpoint mode — `localCheckpoint` outside any
     * scope, which stores blocks on executors: fast, but an executor
     * loss mid-iteration loses blocks AND the truncated lineage, killing
@@ -751,19 +752,16 @@ object Dedup {
                                          driverFinishEdges: Long): DataFrame =
     Pins(checkpointDir) { pins =>
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
-    // the union references the pair table TWICE (forward + flipped), so
-    // an expensive candidate generator upstream (an LSH join) would
-    // execute twice inside this one edge job — exchange reuse dedupes
-    // the shuffles, not the join probe. Persist the narrowed pair frame
-    // for the duration of the (eager) checkpoint, then release.
-    val pIn = pins.persist(pairs
-      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull))
+    // pin the narrowed pair frame once, so an expensive candidate
+    // generator upstream (an LSH join) runs once; the directed edges are
+    // the lazy union of the pin and its flip, two directed rows per pair
     val obsE = Observation()
-    val edges = pins.pin(pIn.union(pIn.select(col("dst").as("src"), col("src").as("dst")))
+    val pIn = pins.pin(pairs
+      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
+      .where(col("src").isNotNull && col("dst").isNotNull)
       .observe(obsE, count(lit(1)).as("n")))
-    pins.release(pIn)
-    val nEdges = obsE.get("n").asInstanceOf[Long]
+    val nEdges = 2 * obsE.get("n").asInstanceOf[Long]
+    val edges = pIn.union(pIn.select(col("dst").as("src"), col("src").as("dst")))
     // init = round one for free: the node inventory needs one agg over
     // the edges anyway, and min(id, min neighbor) on that same shuffle
     // is the first propagation round — one fewer join+checkpoint cycle
@@ -795,8 +793,8 @@ object Dedup {
     val found = if (nEdges < driverFinishEdges) {
       // the rounds' output schema (nullability included), analysed only
       val schema = (if (maxIter > 0) double(propagate(init)) else init).schema
-      val out = unionFindLabels(edges, schema)
-      pins.release(edges)
+      val out = unionFindLabels(pIn, schema)
+      pins.release(pIn)
       log.info(s"connectedComponents: driver finish, $nEdges edge rows, 0 rounds, converged")
       out
     } else {
@@ -843,17 +841,17 @@ object Dedup {
     found.select(col("id").as(aCol), col("label").as("cluster_id"))
   }
 
-  /** Min-id labels of the pinned directed `edges` by union-find on the
-    * driver, as a local (id, label) relation of `schema`. One job
-    * collects one direction of each edge (self-loops kept) packed into
-    * a `long[]` per partition; ids are sorted and deduplicated into a
+  /** Min-id labels of the pinned (src, dst) `pairs` by union-find on
+    * the driver, as a local (id, label) relation of `schema`. One job
+    * collects the pairs (self-loops kept) packed into a `long[]` per
+    * partition; ids are sorted and deduplicated into a
     * `long[]`, and an `int[]` parent links each index to a smaller one,
     * so a root is its set's least index, i.e. its least id.
     */
-  private def unionFindLabels(edges: DataFrame, schema: StructType): DataFrame = {
-    val spark = edges.sparkSession
+  private def unionFindLabels(pairs: DataFrame, schema: StructType): DataFrame = {
+    val spark = pairs.sparkSession
     import spark.implicits._
-    val ends = edges.where(col("src") <= col("dst")).as[(Long, Long)]
+    val ends = pairs.as[(Long, Long)]
       .mapPartitions { it =>
         val b = Array.newBuilder[Long]
         it.foreach { case (s, d) => b += s; b += d }

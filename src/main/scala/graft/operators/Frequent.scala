@@ -175,9 +175,8 @@ object Frequent {
     val mg = org.apache.spark.sql.functions.udaf(MisraGriesRows(k))
     // bounded at #groups x (k+1) rows, but derived twice below (tallies
     // + candidates): persist so the token-stream aggregation runs once
-    val summaries = tokens.groupBy(col(groupCol))
-      .agg(mg(col(tokCol)).as("s"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val summaries = Pins.persist(tokens.groupBy(col(groupCol))
+      .agg(mg(col(tokCol)).as("s")))
     // slot 0 of the summary carries the group tally; the rest are
     // candidate (token, lower-bound) counters
     val nPerGroup = summaries.select(col(groupCol),

@@ -117,9 +117,9 @@ object Kmeans {
     * then one [[LongVecSum]]-aggregated per-cluster vector sum (k·dim
     * longs per partition cross the shuffle), then the truncating
     * integer mean on the driver (a k·dim bounded artifact). The
-    * quantized corpus is persisted across rounds — without it every
-    * iteration re-scans the source (linear-in-iters I/O, the
-    * pageRankInt lesson). */
+    * quantized corpus is persisted across rounds in a [[Pins]] scope —
+    * without it every iteration re-scans the source (linear-in-iters
+    * I/O, the pageRankInt lesson). */
   def fit(df: DataFrame, idCol: String, vecCol: String, k: Int, iters: Int,
           scale: Long = DefaultScale): Seq[Array[Long]] = {
     require(k >= 1 && iters >= 0, "need k >= 1 and iters >= 0")
@@ -131,9 +131,8 @@ object Kmeans {
     // null cluster/dist, the null-safe expression contract.
     val q = df.select(quantize(col(vecCol), scale).as("q"))
       .filter(col("q").isNotNull)
-    val qp = if (iters > 1)
-      q.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else q
-    try {
+    Pins() { pins =>
+      val qp = if (iters > 1) pins.persist(q) else q
       for (_ <- 1 to iters) {
         val sums = updateSums(assignQ(qp, col("q"), cents), dim).collect()
         val next = cents.map(_.clone).toArray
@@ -152,7 +151,7 @@ object Kmeans {
         cents = next.toSeq
       }
       cents
-    } finally if (iters > 1) qp.unpersist(false)
+    }
   }
 
   /** fit + final assignment: (id, cluster, dist) for every row — the
@@ -210,12 +209,11 @@ object Kmeans {
     // persisted: the assignment feeds BOTH pair-join sides and the
     // final keep join — unpinned lineage would scan the source and
     // re-run the centroid projection three times per action (released
-    // by the session's cache discipline, as with the dedup queries'
-    // shared intermediates)
-    val a = assign(df, vecCol, cents, scale)
+    // by the enclosing Pins scope, or by the session's clearCache
+    // outside one, as with the dedup queries' shared intermediates)
+    val a = Pins.persist(assign(df, vecCol, cents, scale)
       .select(col(idCol).cast("long").as("kmid"), col(vecCol).as("kv"),
-        col("cluster"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("cluster")))
     val dup = a.select(col("kmid").as("ka"), col("kv").as("xa"), col("cluster"))
       .join(a.select(col("kmid").as("kb"), col("kv").as("xb"), col("cluster")),
         Seq("cluster"))

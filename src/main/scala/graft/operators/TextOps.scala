@@ -292,8 +292,7 @@ object TextOps {
   def collocations(df: org.apache.spark.sql.DataFrame, text: String,
                    minCount: Long, lift: Long = 8L
                   ): org.apache.spark.sql.DataFrame = {
-    val c12 = bigramCounts(df, text)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val c12 = Pins.persist(bigramCounts(df, text))
     val heads = c12.groupBy("w1").agg(sum(col("c12")).as("c1"))
     val tails = c12.groupBy("w2").agg(sum(col("c12")).as("c2"))
     val total = c12.agg(sum(col("c12")).as("n"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.Similarity
+import graft.operators.{Pins, Similarity}
 
 /** ANN over the `embeddings` table. Query set = every 50th vector; the
   * oracle replays the identical double-precision sequential dot product
@@ -145,9 +145,8 @@ object SimilarityQueries extends QueryModule {
     // session running both computes the LSH join once (cache-manager
     // plan matching, the jaccard/minhash shingle-table pattern)
     "dedup_embedding_blocked" -> ((s, dir) =>
-      Similarity.cosinePairsLsh(emb(s, dir), "vec_id", "embedding",
-        threshold = 0.3, nCells = 32, rep = 2, tables = 6)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)),
+      Pins.persist(Similarity.cosinePairsLsh(emb(s, dir),
+        "vec_id", "embedding", threshold = 0.3, nCells = 32, rep = 2, tables = 6))),
 
     // k-NN SELF-join, oracle-checked end-to-end: every vector's top-5
     // cosine neighbors among its multi-table-LSH candidates (same
@@ -179,9 +178,8 @@ object SimilarityQueries extends QueryModule {
       // shuffles, not the probe) — and the plan is byte-identical to
       // dedup_embedding_blocked's, so one session running both pays
       // for the LSH join once (cache-manager plan matching)
-      val pairs = Similarity.cosinePairsLsh(base, "vec_id", "embedding",
-        threshold = 0.3, nCells = 32, rep = 2, tables = 6)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val pairs = Pins.persist(Similarity.cosinePairsLsh(base,
+        "vec_id", "embedding", threshold = 0.3, nCells = 32, rep = 2, tables = 6))
       val cc = graft.operators.Dedup.connectedComponents(pairs, "vec_a", "vec_b")
         .withColumnRenamed("vec_a", "vec_id")
       base.select(col("vec_id")).join(cc, Seq("vec_id"), "left")

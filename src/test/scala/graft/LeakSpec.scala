@@ -52,6 +52,14 @@ class LeakSpec extends AnyFunSuite {
     assert((registered -- before).isEmpty, s"leaked after a failure: ${registered -- before}")
   }
 
+  test("a persist whose build job fails leaves nothing cached or registered") {
+    def failing = spark.range(0, 50).select(boom(col("id").cast("string")).as("s"))
+    failsCleanly(Pins() { pins => pins.persist(failing) })
+    assert(!failing.storageLevel.isValid, "a scope kept the failed persist cached")
+    failsCleanly(Pins.persist(failing))
+    assert(!failing.storageLevel.isValid, "the failed persist stayed cached")
+  }
+
   test("pipeline_full releases every pin but its output, on success and on failure") {
     val before = registered
     val out = SparkEntry.queries("pipeline_full")(spark, dir)

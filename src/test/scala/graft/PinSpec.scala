@@ -1,13 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.GraftCoreShim
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, Pins}
 
 /** The pin/checkpoint mechanics: exact (race-free, silent) release of
-  * pin blocks, and the pipeline's reliable-checkpoint durability knob.
+  * pin blocks, persists built once when they return, and the pipeline's
+  * reliable-checkpoint durability knob.
   */
 class PinSpec extends AnyFunSuite {
 
@@ -39,6 +42,46 @@ class PinSpec extends AnyFunSuite {
       "closing the scope must release what is still registered")
     assert(bystander.storageLevel.useMemory, "close must never touch a bystander")
     bystander.unpersist(true)
+  }
+
+  test("persist builds its cache in one job before it returns, in a scope and outside one") {
+    val sc = spark.sparkContext
+    // the final RDD of every job: a cache-build job's is the cache RDD
+    val finals = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.stageInfos.maxByOption(_.stageId).flatMap(_.rddInfos.headOption)
+          .foreach(r => finals.add(r.id))
+    }
+    def jobsBuilding(rdd: Int): Int = {
+      GraftCoreShim.drainListenerBus(sc)
+      finals.toArray.count(_ == rdd)
+    }
+    /** Persist a fresh frame with `persist` and check its one cache RDD
+      * is fully built when that returns, by exactly one job, and that an
+      * action reading it five times in one plan builds nothing more.
+      */
+    def buildsOnce(seed: Int)(persist: DataFrame => DataFrame): DataFrame = {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val p = persist(spark.range(0, 400, 1, 4).select((col("id") * seed).as("x")))
+      val added = sc.getPersistentRDDs.keySet.toSet -- before
+      assert(added.size == 1, s"persist registered $added, not one built cache RDD")
+      val cache = added.head
+      val info = sc.getRDDStorageInfo.find(_.id == cache)
+      assert(info.exists(i => i.numCachedPartitions == i.numPartitions),
+        s"the cache is not loaded when persist returns: $info")
+      assert(jobsBuilding(cache) == 1, s"${jobsBuilding(cache)} jobs built the cache")
+      assert(p.union(p).union(p).union(p).union(p).count() == 2000)
+      assert(p.join(p.withColumnRenamed("x", "y"), col("x") === col("y")).count() == 400)
+      assert(jobsBuilding(cache) == 1,
+        s"${jobsBuilding(cache) - 1} more jobs built the cache for plans reading it")
+      p
+    }
+    sc.addSparkListener(listener)
+    try {
+      Pins() { pins => buildsOnce(7)(pins.persist) }
+      buildsOnce(11)(Pins.persist).unpersist(true)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("SPARK_GRAFT_PIPELINE_PIN=reliable (conf form) lands stage pins in the checkpoint dir and preserves output") {
