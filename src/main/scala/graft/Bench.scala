@@ -25,6 +25,14 @@ package graft
   *    `failed` — a crash can't masquerade as a fast pass.
   *  - noop sink computes every declared column (count() would let
   *    Catalyst prune map-shaped work to nothing).
+  *  - Every timed sample runs under [[LaneMetrics]]: its jobs, stages,
+  *    tasks, task/CPU/GC time, driver gap, codegen compiles, cache
+  *    builds and top job descriptions / stage names go in the lane's
+  *    `layers` array (`retry_layers` for retry samples), one entry per
+  *    sample in `samples` order. They stay out of the stdout line.
+  *  - `SPARK_GRAFT_LANES=a,b` times only the named lanes (pass 1 is the
+  *    cold sample, later passes the warm ones) and skips the probes,
+  *    the harness metrics and terasort_sf1.
   *
   * BUDGET CONTRACT (the r12 lead item — the driver's own re-run hit
   * its wall-clock limit, rc 124, and by this repo's standard a record
@@ -43,8 +51,8 @@ package graft
   * fit the tail, and the full per-lane record lives in the file copy.
   *
   * RECORD FORMAT NOTE (the emitted JSON contract): per-lane `samples`
-  * / `loads` arrays are RAGGED relative to the `iterations` field — a
-  * lane the adaptive third pass skipped carries 2 entries at
+  * / `loads` / `layers` arrays are RAGGED relative to the `iterations`
+  * field — a lane the adaptive third pass skipped carries 2 entries at
   * iterations 3, and a budget-truncated run carries fewer. Consumers
   * must size per-pass work by ARRAY LENGTH, never by zipping against
   * `iterations`; retry samples live under their own `retry_samples` /
@@ -220,16 +228,15 @@ object Bench {
         }.sum finally src.close()
       } catch { case _: Throwable => -1L }
 
-    // dev-only isolation knobs (adjudicating contention vs regression):
-    // SPARK_GRAFT_SKIP_LANES=1 skips the per-lane timing loops;
-    // SPARK_GRAFT_PROBES=knn_ivf,bitext_ivf runs only the named scale
-    // probes. The driver's round run sets neither.
+    // isolation knobs: SPARK_GRAFT_SKIP_LANES=1 skips the per-lane
+    // timing loops and SPARK_GRAFT_PROBES=knn_ivf,bitext_ivf runs only
+    // the named scale probes (together they start the forked probe
+    // child); SPARK_GRAFT_LANES=a,b is lane mode (see the header)
     val skipLanes = sys.env.get("SPARK_GRAFT_SKIP_LANES").contains("1")
     val probeOnly = sys.env.get("SPARK_GRAFT_PROBES").map(_.split(",").toSet)
-    // dev-only lane filter (A/B config experiments): run only the named
-    // lanes under the full bench protocol (suite warmup pass + N-pass
-    // round-robin medians). The driver's round run sets nothing here.
     val laneOnly = sys.env.get("SPARK_GRAFT_LANES").map(_.split(",").toSet)
+    // the full run: every lane, then probes, harness and terasort_sf1
+    val fullRun = !skipLanes && probeOnly.isEmpty && laneOnly.isEmpty
 
     val names =
       if (skipLanes) Seq.empty
@@ -245,26 +252,31 @@ object Bench {
     // iteration count parse retried lanes too, and a throwing retry
     // sample (run precisely because the box was loaded) can never
     // poison a lane whose original samples all succeeded
+    val layers = scala.collection.mutable.LinkedHashMap(
+      names.map { case (n, _) => n -> Vector.empty[String] }: _*)
     val retrySamples = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
     val retryLoads = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
+    val retryLayers = scala.collection.mutable.LinkedHashMap[String, Vector[String]]()
     val skippedStages = scala.collection.mutable.ArrayBuffer[String]()
     def timeLane(name: String, fn: (org.apache.spark.sql.SparkSession, String)
                  => org.apache.spark.sql.DataFrame,
                  retry: Boolean = false): Unit = {
       spark.catalog.clearCache()
       val la = loadavg()
-      val t0 = System.nanoTime()
-      val t =
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
+      val metrics = LaneMetrics.start(spark.sparkContext)
+      val ok =
+        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        catch { case _: Throwable => false }
+      val l = metrics.stop()
+      val t = if (ok) l.wallS else -1.0
       if (retry) {
         retrySamples(name) = retrySamples.getOrElse(name, Vector.empty) :+ t
         retryLoads(name) = retryLoads.getOrElse(name, Vector.empty) :+ la
+        retryLayers(name) = retryLayers.getOrElse(name, Vector.empty) :+ l.json
       } else {
         samples(name) = samples(name) :+ t
         loads(name) = loads(name) :+ la
+        layers(name) = layers(name) :+ l.json
       }
     }
 
@@ -312,18 +324,22 @@ object Bench {
       val loadJson = jm(loads.map { case (k, ls) =>
         k -> ls.map(l => fmt(l, 2)).mkString("[", ",", "]")
       })
+      def arrays(m: Iterable[(String, Vector[String])]) =
+        jm(m.map { case (k, xs) => k -> xs.mkString("[", ",", "]") })
       val retryJson =
         if (retrySamples.isEmpty) ""
         else s""","retry_samples":${jm(retrySamples.map { case (k, ts) =>
           k -> ts.map(t => fmt(t, 3)).mkString("[", ",", "]") })}""" +
           s""","retry_loads":${jm(retryLoads.map { case (k, ls) =>
-          k -> ls.map(l => fmt(l, 2)).mkString("[", ",", "]") })}"""
+          k -> ls.map(l => fmt(l, 2)).mkString("[", ",", "]") })}""" +
+          s""","retry_layers":${arrays(retryLayers)}"""
       val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
       val retriedJson = retrySamples.keys.map("\"" + _ + "\"").mkString("[", ",", "]")
       s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","queries":$qs,"sf":"$sfDir","iterations":$iters,"failed":$failedJson,"retried":$retriedJson""" +
         (if (partial) ""","partial":true""" else "") +
         s""","skipped":$skippedJson,"elapsed_sec":${fmt(elapsedSec, 1)}""" +
-        s""","samples":$spread,"loads":$loadJson""" + retryJson + smallJsonStr +
+        s""","samples":$spread,"loads":$loadJson,"layers":${arrays(layers)}""" +
+        retryJson + smallJsonStr +
         scaleJsonStr + harnessJson + "}"
     }
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultBenchOut(cpus))
@@ -389,11 +405,8 @@ object Bench {
     // so a query's fixed overhead (~0.2-0.3s planning/JVM floor) is
     // separable from its data-dependent cost — the sandbox has no sf>0.1
     // data, so the scaling signal comes from the sf0.01 -> sf0.1 step
-    val smallDir = sys.env.get("SPARK_GRAFT_SF_SMALL_DIR").orElse {
-      val guess = sfDir.replace("sf0.1", "sf0.01")
-      if (guess != sfDir && new java.io.File(guess).isDirectory) Some(guess)
-      else None
-    }
+    val smallDir = Some(sfDir.replace("sf0.1", "sf0.01"))
+      .filter(d => d != sfDir && new java.io.File(d).isDirectory)
     smallDir.foreach { sd =>
       if (elapsedSec > 0.65 * budgetSec) skippedStages += "sf_small"
       else {
@@ -448,10 +461,8 @@ object Bench {
     // sides re-sample (bounded extra pairs); if every sample on a side
     // stays polluted, the entry says so ("load_polluted":true) instead
     // of standing silently authoritative.
-    val probeMaxOther =
-      sys.env.getOrElse("SPARK_GRAFT_PROBE_MAX_OTHER_CORES", "4.0").toDouble
-    val probeRetries =
-      math.max(0, sys.env.getOrElse("SPARK_GRAFT_PROBE_RETRIES", "2").toInt)
+    val probeMaxOther = 4.0
+    val probeRetries = 2
     // hard wall-clock ceiling on the OPTIONAL re-sampling the load gate
     // can add across the whole probe pass (r12 verdict item 5:
     // measurement hygiene must never again be the thing that blows the
@@ -549,11 +560,11 @@ object Bench {
     // 0.69 on identical code). Components derive from xxhash64(id, dim) —
     // seeded, no RNG — so the fixture is a pure function of n: identical
     // across rounds and machines, written once under /tmp and reused.
-    // SPARK_GRAFT_PROBE_VECS sizes the 1x set (default 150k — sized so
-    // the cheapest embedding probe's t1x clears ~3s, above floor noise;
-    // the 3x pass reads the 3n fixture — a superset with the same
-    // distribution, so probes scale REAL rows, not replicas).
-    val probeN = sys.env.getOrElse("SPARK_GRAFT_PROBE_VECS", "150000").toLong
+    // The 1x set is 150k vectors, sized so the cheapest embedding
+    // probe's t1x clears ~3s, above floor noise; the 3x pass reads the
+    // 3n fixture — a superset with the same distribution, so probes
+    // scale REAL rows, not replicas.
+    val probeN = 150000L
     def probeVectors(n: Long): org.apache.spark.sql.DataFrame = {
       val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft-probe-vecs-v1-$n"
       if (!new java.io.File(s"$path/_SUCCESS").isFile)
@@ -600,6 +611,103 @@ object Bench {
     }
     def embPair3(): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
       (embReplicate(1), embReplicate(3))
+
+    // pipeline_full: the ALL-OPTIONAL-STAGES composition (HTML ingest →
+    // template strip → repetition gate → default chain → semantic
+    // dedup → DSIR → token budgets). Docs replicate with identical text
+    // (ids shifted) so exact dedup bounds the pair stages, same as the
+    // default-chain probe; embeddings replicate with the DOCS' id
+    // shift so per-replica embedding coverage is constant, and the
+    // semantic LSH cell count scales ∝ n so per-cell candidate work
+    // stays constant (the semanticScale sizing). The DSIR target stays
+    // fixed at 1× (the production shape). What grows 3× is the HTML
+    // strip, template mining, gates, digest shuffle, and the semantic
+    // index — all linear paths. The page fixture's <title> carries no
+    // " - source" suffix (unlike the lane's), so exponents stay
+    // comparable across rounds.
+    // `media` adds stage 3c — the full production shape's own cost
+    // curve, with the pipeline_full LANE's media fixture scaled with
+    // the corpus: audio for the %10=0 ids (+%40 byte copies, +%30
+    // mid-stream extracts), stills for the %10=1 ids (+%40 byte copies,
+    // +%30 BMP re-encodes). Replica ids are distinct, so each replica's
+    // media is novel content (the audio law keys on the id) — decode,
+    // fingerprint, and collapse all grow linearly, which is the claim
+    // under probe.
+    def pipelineFullProbe(label: String, samplePairs: Int,
+                          media: Boolean): Option[ProbeResult] = {
+      // read inside the probe's try, like every fixture
+      def docs() = {
+        val base = spark.read.parquet(s"$sfDir/documents.parquet")
+          .select(col("doc_id"), col("text"), col("source"), col("lang"))
+        (base, base.agg(max(col("doc_id"))).head().getLong(0) + 1L)
+      }
+      scaleProbe(label, () => {
+        val (base, s) = docs()
+        def rep(df: org.apache.spark.sql.DataFrame, k: Int) =
+          (0 until k).map(i =>
+            df.withColumn("doc_id", col("doc_id") + lit(i * s)))
+            .reduce(_.unionByName(_))
+        def page(df: org.apache.spark.sql.DataFrame) = {
+          val ids = col("doc_id").cast("string")
+          val esc = regexp_replace(regexp_replace(regexp_replace(col("text"),
+            "&", "&amp;"), "<", "&lt;"), ">", "&gt;")
+          df.select(col("doc_id"), col("source"),
+            concat(lit("<html><head><title>Doc "), ids,
+              lit("</title><style>p{margin:0}</style></head><body><script>var d="),
+              ids, lit(";</script><h1>Doc "), ids, lit("</h1><p>"), esc,
+              lit("</p><div class=\"nav\"><a href=\"/s/1\">more</a></div>" +
+                "<!-- footer --></body></html>")).as("text"))
+        }
+        (page(rep(base, 1)), page(rep(base, 3)))
+      }, samplePairs = samplePairs) { df =>
+        import graft.multimodal.Multimodal
+        val (base, s) = docs()
+        // the lane recovers k from max(doc_id) to size embeddings/cells
+        val k = ((df.agg(max(col("doc_id"))).head().getLong(0) + 1L
+          + s - 1L) / s).toInt
+        val e1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
+          .select(col("vec_id").as("doc_id"), col("embedding"))
+        val emb = (0 until k).map(i =>
+            e1.withColumn("doc_id", col("doc_id") + lit(i * s)))
+          .reduce(_.unionByName(_))
+        val nEmb = e1.count() * k
+        // media carriers keyed to the REPLICATED ids: laws key on the
+        // id, so every replica's recordings/stills are novel content
+        val ids = df.select(col("doc_id"), lit("media carrier").as("text"))
+        def wavs = Multimodal.fabricateAudio(ids.filter(col("doc_id") % 10 === 0))
+          .unionByName(Multimodal.fabricateAudio(
+            ids.filter(col("doc_id") % 40 === 0), idOffset = 3))
+          .unionByName(Multimodal.fabricateAudio(
+            ids.filter(col("doc_id") % 30 === 0), idOffset = 5, startFrame = 64))
+        def stills = Multimodal.fabricateStillImages(
+            ids.filter(col("doc_id") % 10 === 1))
+          .unionByName(Multimodal.fabricateStillImages(
+            ids.filter(col("doc_id") % 40 === 1), idOffset = 7))
+          .unionByName(Multimodal.fabricateStillImages(
+            ids.filter(col("doc_id") % 30 === 1), idOffset = 9, fmt = "bmp"))
+        val (packed, _) = jobs.TrainingPipeline.run(spark, sfDir,
+          input = Some(df),
+          ingestHtml = true,
+          templateMinDf = Some(5L),
+          maxRepetition = Some(0.08),
+          semanticThreshold = 0.38,
+          embeddings = Some(emb),
+          semanticCells = math.max(32L, nEmb / 64).toInt,
+          audioMedia = if (media) Some(wavs) else None,
+          imageMedia = if (media) Some(stills) else None,
+          // both decon modes, the r11 lane shape: the %97 suite is NOT
+          // replicated — a fixed-size benchmark suite against a growing
+          // corpus is exactly the production shape
+          evalDocs = Some(base.filter(col("doc_id") % 97 === 0)
+            .select(col("doc_id"), col("text"))),
+          decontamSubstringW = Some(10),
+          dsirTarget = Some(base.filter(col("lang") === "en").select(col("text"))),
+          tokenBudgets = Map("src0" -> 400L, "src1" -> 200L),
+          budgetShards = 2,
+          normalize = true, report = false)
+        noop(packed)
+      }
+    }
 
     // the probe pass, callable in-process (probe-only child / fallback
     // mode) — the full run forks it into a fresh JVM instead (below).
@@ -871,158 +979,18 @@ object Bench {
     // 1x/3x samples leave enough heap/page-cache pressure to inflate
     // the serving-shape probes that followed it (knn_ivf read 0.74
     // in-suite vs 0.20 isolated on the same quiet box; bitext 1.10 vs
-    // 0.63) — heavy probes after sensitive ones.
-    // pipeline_full: the ALL-OPTIONAL-STAGES composition (HTML ingest →
-    // template strip → repetition gate → default chain → semantic
-    // dedup → DSIR → token budgets), previously the one composition
-    // with no measured exponent. Docs replicate with identical text
-    // (ids shifted) so exact dedup bounds the pair stages, same as the
-    // default-chain probe; embeddings replicate with the DOCS' id
-    // shift so per-replica embedding coverage is constant, and the
-    // semantic LSH cell count scales ∝ n so per-cell candidate work
-    // stays constant (the semanticScale sizing). The DSIR target stays
-    // fixed at 1× (the production shape). What grows 3× is the HTML
-    // strip, template mining, gates, digest shuffle, and the semantic
-    // index — all linear paths. samplePairs = 2 as of r13 (budget
-    // prong: its ~100 s samples were the second-biggest line in the
-    // r12 timeout; the min-of-2 still rides the load gate's re-sample
-    // guarantee).
-    "pipeline_full" -> (() => scaleProbe("pipeline_full", () => {
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text"), col("source"), col("lang"))
-      val shift = base.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      def rep(df: org.apache.spark.sql.DataFrame, k: Int) =
-        (0 until k).map(i =>
-          df.withColumn("doc_id", col("doc_id") + lit(i * shift)))
-          .reduce(_.unionByName(_))
-      def page(df: org.apache.spark.sql.DataFrame) = {
-        val ids = col("doc_id").cast("string")
-        val esc = regexp_replace(regexp_replace(regexp_replace(col("text"),
-          "&", "&amp;"), "<", "&lt;"), ">", "&gt;")
-        df.select(col("doc_id"), col("source"),
-          concat(lit("<html><head><title>Doc "), ids,
-            lit("</title><style>p{margin:0}</style></head><body><script>var d="),
-            ids, lit(";</script><h1>Doc "), ids, lit("</h1><p>"), esc,
-            lit("</p><div class=\"nav\"><a href=\"/s/1\">more</a></div>" +
-              "<!-- footer --></body></html>")).as("text"))
-      }
-      // the lane recovers k from max(doc_id) to size embeddings/cells
-      (page(rep(base, 1)), page(rep(base, 3)))
-    }, samplePairs = 2) { df =>
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      val shift = base.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      val k = ((df.agg(max(col("doc_id"))).head().getLong(0) + 1L
-        + shift - 1L) / shift).toInt
-      val e1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .select(col("vec_id").as("doc_id"), col("embedding"))
-      val emb = (0 until k).map(i =>
-          e1.withColumn("doc_id", col("doc_id") + lit(i * shift)))
-        .reduce(_.unionByName(_))
-      val nEmb = e1.count() * k
-      val target = base.filter(col("lang") === "en").select(col("text"))
-      val (packed, _) = jobs.TrainingPipeline.run(spark, sfDir,
-        input = Some(df),
-        ingestHtml = true,
-        templateMinDf = Some(5L),
-        maxRepetition = Some(0.08),
-        semanticThreshold = 0.38,
-        embeddings = Some(emb),
-        semanticCells = math.max(32L, nEmb / 64).toInt,
-        // both decon modes, the r11 lane shape: the %97 suite is NOT
-        // replicated — a fixed-size benchmark suite against a growing
-        // corpus is exactly the production shape
-        evalDocs = Some(base.filter(col("doc_id") % 97 === 0)
-          .select(col("doc_id"), col("text"))),
-        decontamSubstringW = Some(10),
-        dsirTarget = Some(target),
-        tokenBudgets = Map("src0" -> 400L, "src1" -> 200L),
-        budgetShards = 2,
-        normalize = true, report = false)
-      noop(packed)
-    }),
-
-    // pipeline_full WITH stage 3c media enabled — the full production
-    // shape's own cost curve (r13 verdict item 4: the exponent series
-    // deliberately excludes the media stage for cross-round
-    // comparability, so the media-enabled composition had components
-    // probed but never the whole). Same page fixture and stage stack
-    // as pipeline_full, plus the pipeline_full LANE's media fixture
-    // scaled with the corpus: audio for the %10=0 ids (+%40 byte
-    // copies, +%30 mid-stream extracts), stills for the %10=1 ids
-    // (+%40 byte copies, +%30 BMP re-encodes). Replica ids are
-    // distinct, so each replica's media is novel content (the audio
-    // law keys on the id) — decode, fingerprint, and collapse all
-    // grow linearly, which is the claim under probe. samplePairs = 1
-    // (budget prong: this probe exists to evidence the curve once per
-    // round; it runs LAST so a budget-killed child loses only it, and
-    // the load gate's retry pairs still guarantee a clean sample when
-    // the first is polluted).
-    "pipeline_full_media" -> (() => scaleProbe("pipeline_full_media", () => {
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text"), col("source"), col("lang"))
-      val shift = base.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      def rep(df: org.apache.spark.sql.DataFrame, k: Int) =
-        (0 until k).map(i =>
-          df.withColumn("doc_id", col("doc_id") + lit(i * shift)))
-          .reduce(_.unionByName(_))
-      def page(df: org.apache.spark.sql.DataFrame) = {
-        val ids = col("doc_id").cast("string")
-        val esc = regexp_replace(regexp_replace(regexp_replace(col("text"),
-          "&", "&amp;"), "<", "&lt;"), ">", "&gt;")
-        df.select(col("doc_id"), col("source"),
-          concat(lit("<html><head><title>Doc "), ids,
-            lit("</title><style>p{margin:0}</style></head><body><script>var d="),
-            ids, lit(";</script><h1>Doc "), ids, lit("</h1><p>"), esc,
-            lit("</p><div class=\"nav\"><a href=\"/s/1\">more</a></div>" +
-              "<!-- footer --></body></html>")).as("text"))
-      }
-      (page(rep(base, 1)), page(rep(base, 3)))
-    }, samplePairs = 1) { df =>
-      import graft.multimodal.Multimodal
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      val shift = base.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      val k = ((df.agg(max(col("doc_id"))).head().getLong(0) + 1L
-        + shift - 1L) / shift).toInt
-      val e1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .select(col("vec_id").as("doc_id"), col("embedding"))
-      val emb = (0 until k).map(i =>
-          e1.withColumn("doc_id", col("doc_id") + lit(i * shift)))
-        .reduce(_.unionByName(_))
-      val nEmb = e1.count() * k
-      val target = base.filter(col("lang") === "en").select(col("text"))
-      // media carriers keyed to the REPLICATED ids: laws key on the
-      // id, so every replica's recordings/stills are novel content
-      val ids = df.select(col("doc_id"), lit("media carrier").as("text"))
-      val wavs = Multimodal.fabricateAudio(ids.filter(col("doc_id") % 10 === 0))
-        .unionByName(Multimodal.fabricateAudio(
-          ids.filter(col("doc_id") % 40 === 0), idOffset = 3))
-        .unionByName(Multimodal.fabricateAudio(
-          ids.filter(col("doc_id") % 30 === 0), idOffset = 5, startFrame = 64))
-      val stills = Multimodal.fabricateStillImages(
-          ids.filter(col("doc_id") % 10 === 1))
-        .unionByName(Multimodal.fabricateStillImages(
-          ids.filter(col("doc_id") % 40 === 1), idOffset = 7))
-        .unionByName(Multimodal.fabricateStillImages(
-          ids.filter(col("doc_id") % 30 === 1), idOffset = 9, fmt = "bmp"))
-      val (packed, _) = jobs.TrainingPipeline.run(spark, sfDir,
-        input = Some(df),
-        ingestHtml = true,
-        templateMinDf = Some(5L),
-        maxRepetition = Some(0.08),
-        semanticThreshold = 0.38,
-        embeddings = Some(emb),
-        semanticCells = math.max(32L, nEmb / 64).toInt,
-        audioMedia = Some(wavs),
-        imageMedia = Some(stills),
-        evalDocs = Some(base.filter(col("doc_id") % 97 === 0)
-          .select(col("doc_id"), col("text"))),
-        decontamSubstringW = Some(10),
-        dsirTarget = Some(target),
-        tokenBudgets = Map("src0" -> 400L, "src1" -> 200L),
-        budgetShards = 2,
-        normalize = true, report = false)
-      noop(packed)
-    }))
+    // 0.63) — heavy probes after sensitive ones. samplePairs = 2 as of
+    // r13 (budget prong: its ~100 s samples were the second-biggest
+    // line in the r12 timeout; the min-of-2 still rides the load
+    // gate's re-sample guarantee).
+    "pipeline_full" -> (() => pipelineFullProbe("pipeline_full",
+      samplePairs = 2, media = false)),
+    // samplePairs = 1 (budget prong: this probe exists to evidence the
+    // curve once per round; it runs LAST so a budget-killed child loses
+    // only it, and the load gate's retry pairs still guarantee a clean
+    // sample when the first is polluted)
+    "pipeline_full_media" -> (() => pipelineFullProbe("pipeline_full_media",
+      samplePairs = 1, media = true)))
     // end probeThunks
 
     // per-sample loadavg + other-process cores ride the entry (flat
@@ -1051,10 +1019,10 @@ object Bench {
     // dominate the round but large enough to exceed fixed overhead.
     // Each harness fails (or is budget-skipped) ALONE — an nnbench
     // error must not discard the measurements before it.
-    if (!skipLanes && probeOnly.isEmpty && elapsedSec < 0.8 * budgetSec) {
+    if (fullRun && elapsedSec < 0.8 * budgetSec) {
       try {
         val mrRuns = jobs.LoadGen.mrbench(spark, s"$benchDir/mrbench", inputLines = 1000, runs = 4)
-        val dfsioMb = sys.env.getOrElse("SPARK_GRAFT_DFSIO_MB", "256").toInt
+        val dfsioMb = 256
         val dfsioFiles = 8
         val (_, w) = jobs.LoadGen.dfsioWrite(spark, s"$benchDir/dfsio", dfsioFiles, dfsioMb / dfsioFiles)
         val (_, r) = jobs.LoadGen.dfsioRead(spark, s"$benchDir/dfsio")
@@ -1088,7 +1056,7 @@ object Bench {
         catch { case _: Throwable => () }
       }
       checkpoint()
-    } else if (!skipLanes && probeOnly.isEmpty) skippedStages += "harness"
+    } else if (fullRun) skippedStages += "harness"
 
     // ---- probe isolation (fresh JVM) ---------------------------------
     // r10 adjudication: probe exponents from the committed quiet-box
@@ -1106,9 +1074,8 @@ object Bench {
     // child checkpoints its record after every probe, a timed-out
     // child still contributes every completed probe's entry — a
     // partial splice beats both nothing and a 20-minute in-process
-    // re-run. SPARK_GRAFT_NO_FORK_PROBES=1 restores the in-process
-    // pass; a fork failure with NO salvageable entries falls back to
-    // it too (a bench line is never lost).
+    // re-run. A fork failure with NO salvageable entries falls back to
+    // the in-process pass (a bench line is never lost).
     val probeLabels = Bench.allProbeLabels
     def spliceFromChildFile(outFile: java.io.File): Option[String] =
       try {
@@ -1172,10 +1139,8 @@ object Bench {
       } catch { case e: Throwable =>
         System.err.println(s"[bench] probe fork failed: $e"); None }
 
-    if (probeOnly.isDefined || skipLanes ||
-        sys.env.get("SPARK_GRAFT_NO_FORK_PROBES").contains("1"))
-      runLocalProbes()
-    else {
+    if (probeOnly.isDefined || skipLanes) runLocalProbes()
+    else if (fullRun) {
       val remain = math.max(120L, (budgetSec - elapsedSec).toLong - 150L)
       forkedScaleJson(remain) match {
         case Some(s) => scaleJsonStr = s; checkpoint()
@@ -1217,7 +1182,7 @@ object Bench {
         new java.io.File(f).delete()
         (w, r)
       } catch { case _: Throwable => (-1.0, -1.0) }
-    if (probeOnly.isEmpty && !skipLanes) {
+    if (fullRun) {
       val (dw, dr) = devDirectMbps()
       devWMbps = dw; devRMbps = dr
       checkpoint()
@@ -1227,17 +1192,12 @@ object Bench {
     // round: TeraGen 100M rows -> TeraSort -> TeraValidate + checksum
     // over the RE-READ output, all inside the timing — the suite's
     // terasort lane is 1 GB, so the BASELINE.md Yahoo-2009 GB/node/min
-    // comparison was previously a 10× extrapolation. Defaults ON in
-    // the driver-shape run (sf0.1 dir, lanes on); SPARK_GRAFT_TERA_SF1=0
-    // skips it, =1 forces it elsewhere. Runs LAST so its ~20 GB of
-    // disk traffic perturbs nothing (probes already done), and is the
-    // final budget casualty before the record itself.
+    // comparison was previously a 10× extrapolation. Runs in the full
+    // run at an sf0.1 dir only. Runs LAST so its ~20 GB of disk traffic
+    // perturbs nothing (probes already done), and is the final budget
+    // casualty before the record itself.
     teraSf1Sec = {
-      val want = sys.env.get("SPARK_GRAFT_TERA_SF1") match {
-        case Some("0") => false
-        case Some(_)   => true
-        case None      => !skipLanes && probeOnly.isEmpty && sfDir.contains("sf0.1")
-      }
+      val want = fullRun && sfDir.contains("sf0.1")
       if (want && budgetSec - elapsedSec < 120) {
         skippedStages += "terasort_sf1"; -1.0
       } else if (!want) -1.0

@@ -76,9 +76,9 @@ object GraftSession {
       // as TIMESTAMP is value-identity; keep the engine on one ts type.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     extra.foreach { case (k, v) => b.config(k, v) }
-    // dev-only A/B knob: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" overlays
-    // session confs for config experiments (TimeOne/ProfileLane runs).
-    // The driver's bench sets nothing here — graded defaults live above.
+    // SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" overlays session confs at
+    // deploy time and for config A/Bs (`tools/ab.sh`); the defaults
+    // above are what every unset run gets.
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
       val i = kv.indexOf('=')
       if (i > 0) b.config(kv.take(i).trim, kv.drop(i + 1).trim)

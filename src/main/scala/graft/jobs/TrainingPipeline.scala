@@ -647,18 +647,14 @@ object TrainingPipeline {
     * one box, an unrecoverable failure on a cluster. `reliable` makes
     * every pin of the run durable, CC rounds included, at one extra
     * write+read per pinned frame (see [[Pins]] for file cleanup).
-    * Conf `spark.graft.pipeline.pin` / `.pinDir` first (testable
-    * in-session), env SPARK_GRAFT_PIPELINE_PIN / _PIN_DIR (deploy-time)
-    * second; the dir defaults to the session checkpoint dir, else
-    * java.io.tmpdir/graft-pins-<pid>.
+    * Set by conf `spark.graft.pipeline.pin` / `.pinDir` (`--conf` or
+    * SPARK_GRAFT_EXTRA_CONF at deploy time); the dir defaults to the
+    * session checkpoint dir, else java.io.tmpdir/graft-pins-<pid>.
     */
-  private def pinDir(spark: SparkSession): Option[String] = {
-    def setting(conf: String, env: String) =
-      spark.conf.getOption(conf).orElse(sys.env.get(env))
-    if (!setting("spark.graft.pipeline.pin", "SPARK_GRAFT_PIPELINE_PIN").contains("reliable")) None
-    else Some(setting("spark.graft.pipeline.pinDir", "SPARK_GRAFT_PIPELINE_PIN_DIR")
+  private def pinDir(spark: SparkSession): Option[String] =
+    if (!spark.conf.getOption("spark.graft.pipeline.pin").contains("reliable")) None
+    else Some(spark.conf.getOption("spark.graft.pipeline.pinDir")
       .orElse(spark.sparkContext.getCheckpointDir)
       .getOrElse(s"${System.getProperty("java.io.tmpdir", "/tmp")}" +
         s"/graft-pins-${ProcessHandle.current().pid()}"))
-  }
 }

@@ -69,6 +69,30 @@ class BenchContractSpec extends AnyFunSuite {
     }
   }
 
+  test("a lane's layers entry parses as JSON and stays out of the summary line") {
+    val awkward = "quote \" backslash \\ newline \n tab \t unicode \u0001 é"
+    val l = LaneMetrics.Layers(wallS = 31.9, jobs = 153, stages = 160,
+      tasks = 300, taskS = 33.7, cpuS = 14.7, gcS = 1.2, jobWindowS = 21.5,
+      driverGapS = 10.4, compiles = 12, compileS = 0.45, cacheBuilds = 10,
+      caches = 10, unlabelledS = 3.25,
+      topJobs = (1 to LaneMetrics.Top).map(i =>
+        LaneMetrics.JobGroup(s"pipeline pin: stage$i $awkward", i, i * 0.5)),
+      topStages = (1 to LaneMetrics.Top).map(i =>
+        LaneMetrics.StageGroup(s"save at Bench.scala:$i $awkward", i, i * 4, i * 0.25)))
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(l.json)
+    Seq("wall_s", "jobs", "stages", "tasks", "task_s", "cpu_s", "gc_s",
+      "job_window_s", "driver_gap_s", "compiles", "compile_s",
+      "cache_builds", "caches", "unlabelled_s").foreach { k =>
+      assert(root.has(k), s"layers field '$k' missing")
+    }
+    assert(root.get("jobs").asInt() == 153)
+    assert(root.get("driver_gap_s").asDouble() == 10.4)
+    assert(root.get("top_jobs").size() == LaneMetrics.Top)
+    assert(root.get("top_jobs").get(0).get("desc").asText() == s"pipeline pin: stage1 $awkward")
+    assert(root.get("top_stages").get(2).get("tasks").asInt() == 12)
+    assert(!worstCaseLine.contains("layers"), "the summary line must not carry layers")
+  }
+
   test("default full-record name is cpu-suffixed so the scaling pass can't overwrite the main record") {
     // the driver benches at 32 cores and again at 8; a shared default
     // name let the 8-core pass destroy the 32-core full per-lane record

@@ -84,7 +84,7 @@ class PinSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("SPARK_GRAFT_PIPELINE_PIN=reliable (conf form) lands stage pins in the checkpoint dir and preserves output") {
+  test("spark.graft.pipeline.pin=reliable lands stage pins in pinDir and preserves output") {
     val dir = java.nio.file.Files.createTempDirectory("graft-pin-spec").toString
     val in = Tables(spark, "/root/testdata/sf0.001", "documents")
       .limit(120).select(col("doc_id"), col("source"), col("text"))
