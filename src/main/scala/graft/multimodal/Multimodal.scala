@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.{IndexStore, Pins}
+import graft.operators.{Buckets, IndexStore, Pins}
 
 /** Multimodal (image/audio/video) column plumbing for training-data
   * pipelines: media as opaque `binary` content plus typed metadata.
@@ -753,12 +753,6 @@ object Multimodal {
       "aud_a", "aud_b", "n_matched", collapseExact)
   }
 
-  /** Pairs of items sharing >= `minShared` distinct fingerprint keys —
-    * the shared match tail of [[audioNearDupPairs]] and
-    * [[videoNearDupPairs]]: distinct (id, key) rows, hot keys past
-    * `maxBucket` dropped (they identify nothing and would square the
-    * candidate volume), one self-equi-join, one bounded pair count.
-    */
   /** Group items whose ENTIRE distinct fingerprint set over `keyCols`
     * is identical — exact re-uploads of the same content — into
     * (doc_id, rep_id) rows, rep_id = the group's lowest doc_id. The
@@ -806,6 +800,13 @@ object Multimodal {
       tbl.join(reps, Seq("doc_id"))
     }
 
+  /** Pairs of items sharing >= `minShared` distinct fingerprint keys —
+    * the shared match tail of [[audioNearDupPairs]] and
+    * [[videoNearDupPairs]]: distinct (id, key) rows, hot keys past
+    * `maxBucket` dropped ([[graft.operators.Buckets.pairs]]: they
+    * identify nothing and would square the candidate volume), one
+    * self-equi-join, one bounded pair count.
+    */
   private def sharedKeyPairs(fp: DataFrame, keys: Seq[String],
                              minShared: Int, maxBucket: Int,
                              aName: String, bName: String,
@@ -826,7 +827,7 @@ object Multimodal {
     // caller collapse on POSITIONED rows: videoNearDupPairs matches on
     // the frame hash alone, but collapsing on the distinct hash SET
     // would fold reordered/looped/truncated streams that merely share
-    // their distinct frames — not exact re-uploads (r12 advice). With
+    // their distinct frames, which are not exact re-uploads. With
     // positioned collapse keys the digest hashes (frame_idx, fhash)
     // rows, so only byte-identical frame sequences group; the pinned
     // table is then the positioned one (decode still runs once) and
@@ -847,16 +848,8 @@ object Multimodal {
         if (ck == keys) collapsed
         else Pins.persist(collapsed.select((col("doc_id") +: kc): _*).distinct())
       }
-    val ok = tbl.groupBy(kc: _*).agg(count(lit(1)).as("c"))
-      .filter(col("c") <= maxBucket).select(kc: _*)
-    // the USING join reorders columns (keys first) — re-select before
-    // the positional rename of the self-join's right side
-    val kept = tbl.join(ok, keys).select(("doc_id" +: keys).map(col): _*)
-    kept
-      .join(kept.toDF(("doc_id" +: keys).map("y_" + _): _*),
-        keys.map(k => col(k) === col("y_" + k))
-          .reduce(_ && _) && col("doc_id") < col("y_doc_id"))
-      .groupBy(col("doc_id").as(aName), col("y_doc_id").as(bName))
+    Buckets.pairs(tbl, "doc_id", keys, maxBucket)
+      .groupBy(col("doc_id_a").as(aName), col("doc_id_b").as(bName))
       .agg(count(lit(1)).as(nName))
       .filter(col(nName) >= minShared)
   }
@@ -876,8 +869,8 @@ object Multimodal {
     * matching is set-shaped, so only byte-identical frame sequences
     * fold to a representative — reordered, looped, or truncated
     * streams that merely share their distinct frame hashes stay
-    * separate items and still PAIR through the set match (r12 advice:
-    * the set-digest collapse silently vanished them as "re-uploads").
+    * separate items and still PAIR through the set match (a set-digest
+    * collapse would vanish them as "re-uploads").
     */
   def videoNearDupPairs(media: DataFrame, minShared: Int = 2,
                         maxBucket: Int = 1000,
@@ -897,7 +890,7 @@ object Multimodal {
     * scattered coincidental matches at inconsistent offsets never
     * reach the support bar, which is what makes key-only matching
     * safe. Scale shape: hot keys past `maxBucket` are dropped before
-    * the join (the [[sharedKeyPairs]] contract), the vote aggregation
+    * the join ([[graft.operators.Buckets.pairs]]), the vote aggregation
     * is one narrow groupBy over match rows, and the best-offset
     * election is a window over the (already pair-bounded) vote rows.
     */
@@ -914,8 +907,8 @@ object Multimodal {
     clipAlignOnTable(tbl, minSupport, maxBucket, aName, bName)
   }
 
-  /** The census + vote + election tail of [[clipAlignPairs]] over an
-    * already-prepared (doc_id, idx, key) table (distinct rows, any
+  /** The capped pairs + vote + election tail of [[clipAlignPairs]] over
+    * an already-prepared (doc_id, idx, key) table (distinct rows, any
     * exact-dup collapse already applied) — split out so [[audioDedup]]/
     * [[videoDedup]] can feed it the SAME collapsed table their
     * exact-group digest already produced instead of digesting the
@@ -923,16 +916,22 @@ object Multimodal {
     */
   private def clipAlignOnTable(tbl: DataFrame, minSupport: Int,
                                maxBucket: Int,
-                               aName: String, bName: String): DataFrame = {
+                               aName: String, bName: String): DataFrame =
+    bestOffset(
+      Buckets.pairs(tbl, "doc_id", Seq("key"), maxBucket)
+        .select(col("doc_id_a").as(aName), col("doc_id_b").as(bName),
+          (col("idx_a") - col("idx_b")).cast("long").as("offset")),
+      aName, bName, minSupport)
+
+  /** The offset election over match rows (a, b, offset): each match
+    * votes for its offset, and each (a, b) pair keeps its best-supported
+    * offset (support desc, offset asc) when it has >= `minSupport`
+    * votes. One (a, b, offset, support) row per elected pair.
+    */
+  private def bestOffset(matches: DataFrame, aName: String, bName: String,
+                         minSupport: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ok = tbl.groupBy(col("key")).agg(count(lit(1)).as("c"))
-      .filter(col("c") <= maxBucket).select("key")
-    val kept = tbl.join(ok, Seq("key")).select("doc_id", "idx", "key")
-    val votes = kept
-      .join(kept.toDF("y_doc_id", "y_idx", "key"), Seq("key"))
-      .filter(col("doc_id") < col("y_doc_id"))
-      .groupBy(col("doc_id").as(aName), col("y_doc_id").as(bName),
-        (col("idx") - col("y_idx")).cast("long").as("offset"))
+    val votes = matches.groupBy(aName, bName, "offset")
       .agg(count(lit(1)).as("support"))
     val best = Window.partitionBy(col(aName), col(bName))
       .orderBy(col("support").desc, col("offset").asc)
@@ -1053,23 +1052,14 @@ object Multimodal {
     */
   private def probeIndexPairs(idxFps: DataFrame, qFps: DataFrame,
                               qName: String, mName: String,
-                              minSupport: Int, maxBucket: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val idx = Pins.persist(idxFps)
-    val ok = idx.groupBy("key").agg(count(lit(1)).as("c"))
-      .filter(col("c") <= maxBucket).select("key")
-    val statik = idx.join(ok, Seq("key"))
-      .select(col("key"), col("doc_id").as(mName), col("idx").as("m_idx"))
-    val votes = qFps.join(statik, Seq("key"))
-      .groupBy(col("doc_id").as(qName), col(mName),
-        (col("m_idx") - col("idx")).cast("long").as("offset"))
-      .agg(count(lit(1)).as("support"))
-    val best = Window.partitionBy(col(qName), col(mName))
-      .orderBy(col("support").desc, col("offset").asc)
-    votes.withColumn("rn", row_number().over(best))
-      .filter(col("rn") === 1 && col("support") >= minSupport)
-      .drop("rn")
-  }
+                              minSupport: Int, maxBucket: Int): DataFrame =
+    bestOffset(
+      Buckets.probe(
+          idxFps.select(col("key"), col("doc_id").as(mName), col("idx").as("m_idx")),
+          qFps, Seq("key"), maxBucket)
+        .select(col("doc_id").as(qName), col(mName),
+          (col("m_idx") - col("idx")).cast("long").as("offset")),
+      qName, mName, minSupport)
 
   /** End-to-end media dedup — the semantic_dedup composition over
     * audio fingerprints, the pipeline a dup-heavy media corpus
@@ -1109,9 +1099,9 @@ object Multimodal {
     * the universe needs no second decode pass; positioned rows unique
     * per (doc, idx) by the fingerprint contracts). The exact-group
     * digest runs ONCE and feeds both the collapse (representatives
-    * into the align join) and the member→rep edges — the pre-r14 shape
-    * digested the identical positioned rows a second time inside
-    * [[clipAlignPairs]]' collapse.
+    * into the align join) and the member→rep edges, so the positioned
+    * rows are never digested a second time by [[clipAlignPairs]]'
+    * collapse.
     */
   private def mediaDedupOn(fp: DataFrame, idxCol: String, keyCol: String,
                            minSupport: Int, maxBucket: Int): DataFrame = {
@@ -1523,14 +1513,10 @@ object Multimodal {
     */
   def probeImageSigIndex(index: ImageSigIndex, queries: DataFrame,
                          minSupport: Int = 2, maxBucket: Int = 1000): DataFrame = {
-    val idx = Pins.persist(index.sigs)
-    val ok = idx.groupBy("kind", "sig").agg(count(lit(1)).as("c"))
-      .filter(col("c") <= maxBucket).select("kind", "sig")
-    val statik = idx.join(ok, Seq("kind", "sig"))
-      .select(col("kind"), col("sig"), col("doc_id").as("img_m"))
-    imageSignatures(queries, index.gridW, index.gridH)
-      .filter(col("sig").isNotNull)
-      .join(statik, Seq("kind", "sig"))
+    Buckets.probe(
+        index.sigs.select(col("kind"), col("sig"), col("doc_id").as("img_m")),
+        imageSignatures(queries, index.gridW, index.gridH).filter(col("sig").isNotNull),
+        Seq("kind", "sig"), maxBucket)
       .groupBy(col("doc_id").as("img_q"), col("img_m"))
       .agg(count(lit(1)).as("support"))
       .filter(col("support") >= minSupport)

@@ -120,32 +120,20 @@ object Dedup {
 
   /** Exact Jaccard-similar pairs >= threshold, candidate generation by
     * shared shingle. `maxDf` > 0 drops stop-shingles (document frequency
-    * above the cap) BEFORE the self-join: one hot shingle otherwise
-    * yields O(df²) candidate rows — "the quick brown" in 1M docs is
-    * 10¹² candidates — while contributing nothing to near-dup evidence.
+    * above the cap, [[Buckets.cap]]) BEFORE the self-join: "the quick
+    * brown" in 1M docs is 10¹² candidates and no near-dup evidence.
     * Jaccard is then computed over the capped shingle universe on both
-    * sides of the ratio (standard stop-shingle practice). The hot list
-    * is tiny by construction (few shingles exceed a real cap), so the
-    * filter is a broadcast anti-join — no extra shuffle of the table.
+    * sides of the ratio (standard stop-shingle practice).
     */
   def jaccardPairs(shingles: DataFrame, id: String, threshold: Double,
                    maxDf: Int = 0): DataFrame = {
-    val kept =
-      if (maxDf <= 0) shingles
-      else {
-        val hot = shingles.groupBy(col("sh"))
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df") > maxDf)
-          .select("sh")
-        shingles.join(broadcast(hot), Seq("sh"), "left_anti")
-      }
+    val kept = Buckets.cap(shingles, Seq("sh"), maxDf)
     val sizes = kept.groupBy(col(id)).agg(count(lit(1)).as("n"))
-    // EXPLICIT partition count on the self-join key (r14): the join's
-    // input bytes are small but its output EXPLODES (pairs per shared
-    // shingle), and AQE's bytes-based coalescing — which only sees the
-    // input — would run the expansion plus the pair count on 1-2
-    // partitions (measured: 2 tasks × 1.2 s of serialized hash-join
-    // compute). An explicit count is exempt from AQE coalescing; the
+    // EXPLICIT partition count on the self-join key: the join's input
+    // bytes are small but its output EXPLODES (pairs per shared
+    // shingle), and AQE's bytes-based coalescing, which only sees the
+    // input, would run the expansion plus the pair count on 1-2
+    // partitions. An explicit count is exempt from AQE coalescing; the
     // configured shuffle parallelism is exactly the cluster-sized
     // value at scale. The downstream pair aggregation re-sizes from
     // the REAL post-explosion bytes, so only this exchange is pinned.
@@ -185,32 +173,11 @@ object Dedup {
     hashes.groupBy(col(id)).agg(mins.head, mins.tail: _*)
   }
 
-  /** Band-bucket df cap: drops (band, bucket) groups whose membership
-    * exceeds `maxBucket` BEFORE the banding self-join. An exact-dup-heavy
-    * corpus (boilerplate repeated 100k× is the norm in web training data)
-    * puts identical signatures in one bucket, and the self-join emits
-    * O(dups²) candidate rows — the one quadratic escape hatch left in the
-    * LSH plan. Same shape as the `maxDf` stop-shingle guard: the hot list
-    * is tiny by construction, so it broadcasts; the join stays an
-    * equi-join. Docs dropped this way should be routed through [[exact]]
-    * first (identical docs don't need LSH evidence — their pairs are
-    * already known), which is the documented scale pipeline: exact-dedup
-    * → band only the representatives.
-    */
-  private def capBuckets(bands: DataFrame, keys: Seq[String], maxBucket: Int): DataFrame =
-    if (maxBucket <= 0) bands
-    else {
-      val hot = bands.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("df"))
-        .filter(col("df") > maxBucket)
-        .select(keys.map(col): _*)
-      bands.join(broadcast(hot), keys, "left_anti")
-    }
-
   /** LSH banding: hash each run of `rowsPerBand` signature slots; docs
     * colliding in any band become candidate pairs (equi-join, no
     * quadratic blowup). `maxBucket` > 0 caps per-(band, hash) bucket
-    * membership (see [[capBuckets]]).
+    * membership ([[Buckets.cap]]): an exact-dup-heavy corpus puts
+    * identical signatures in one bucket.
     */
   def minhashCandidates(shingles: DataFrame, id: String,
                         numPerm: Int, rowsPerBand: Int,
@@ -220,8 +187,8 @@ object Dedup {
 
   /** (id, band, bh) band table over a signature table s0..sN-1, with the
     * per-(band, hash) bucket cap applied. Shared by the self-join
-    * candidates ([[minhashCandidatesFromHashes]]) and the cross-corpus
-    * join ([[fuzzyDecontaminate]]).
+    * candidates ([[minhashCandidatesFromHashes]]), the incremental index
+    * and the cross-corpus join ([[fuzzyDecontaminate]]).
     */
   private def bandTable(sig: DataFrame, id: String,
                         numPerm: Int, rowsPerBand: Int,
@@ -232,7 +199,7 @@ object Dedup {
         .map(i => col(s"s$i").cast("string"))
       struct(lit(b).as("band"), md5(concat_ws(",", slots: _*)).as("bh"))
     }
-    capBuckets(
+    Buckets.cap(
       sig.select(col(id), explode(array(bandStructs: _*)).as("bb"))
         .select(col(id), col("bb.band").as("band"), col("bb.bh").as("bh")),
       Seq("band", "bh"), maxBucket)
@@ -241,13 +208,11 @@ object Dedup {
   /** LSH banding over a precomputed signature table s0..sN-1. */
   def minhashCandidatesFromHashes(sig: DataFrame, id: String,
                                   numPerm: Int, rowsPerBand: Int,
-                                  maxBucket: Int = 0): DataFrame = {
-    val bands = bandTable(sig, id, numPerm, rowsPerBand, maxBucket)
-    val l = bands.select(col(id).as("doc_a"), col("band"), col("bh"))
-    val r = bands.select(col(id).as("doc_b"), col("band"), col("bh"))
-    l.join(r, Seq("band", "bh")).filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-  }
+                                  maxBucket: Int = 0): DataFrame =
+    // uncapped bands: pairs applies the cap
+    Buckets.pairs(bandTable(sig, id, numPerm, rowsPerBand, maxBucket = 0), id,
+        Seq("band", "bh"), maxBucket)
+      .select(col(s"${id}_a").as("doc_a"), col(s"${id}_b").as("doc_b")).distinct()
 
   /** The corpus-side artifact of INCREMENTAL near-dup detection: minhash
     * signatures plus their banded buckets, built once over the existing
@@ -628,7 +593,7 @@ object Dedup {
     score(transform(textShingles(text, k), s => h1(s)))
   }
 
-  /** The lossless form of the [[capBuckets]] guard for exact-dup-heavy
+  /** The lossless form of the [[Buckets.cap]] guard for exact-dup-heavy
     * corpora: collapse exact duplicates to their representative FIRST
     * ([[exact]] — identical text means identical shingles, signatures
     * and LSH evidence), then run near-dup detection over representatives
@@ -895,12 +860,11 @@ object Dedup {
     * vocabulary-sized times mean word length — vocabulary scale, never
     * corpus scale; the verify is a row-local codegen'd filter. Empty
     * strings are excluded (a zero-length word has no deletions and
-    * `sequence(1, 0)` would flip direction). `maxBucket` > 0 applies
-    * the LSH hot-bucket discipline: a block key shared by more than
-    * that many words (the "" key over every 1-char word, hot deletions
-    * of short frequent words) is dropped whole, trading recall on
-    * degenerate keys for a bounded join fan-out — same cap law as the
-    * minhash/simhash band buckets.
+    * `sequence(1, 0)` would flip direction). `maxBucket` > 0 drops
+    * block keys shared by more than that many words ([[Buckets.cap]]:
+    * the "" key over every 1-char word, hot deletions of short
+    * frequent words), trading recall on degenerate keys for a bounded
+    * join fan-out.
     */
   def editDistance1Pairs(vocab: DataFrame, w: String,
                          maxBucket: Int = 0): DataFrame = {
@@ -912,14 +876,11 @@ object Dedup {
     // withColumn, not a same-select alias: explode(variants) references
     // the input column `w`, and aliasing `w` in the same select list
     // trips Catalyst's lateral-column-alias resolution
-    val vs = capBuckets(
-      vocab.filter(length(c) >= 1)
-        .withColumn("v", explode(variants))
-        .select(c.as("w"), col("v")),
-      Seq("v"), maxBucket)
-    vs.as("a").join(vs.as("b"),
-        col("a.v") === col("b.v") && col("a.w") < col("b.w"))
-      .select(col("a.w").as("w_a"), col("b.w").as("w_b"))
+    val vs = vocab.filter(length(c) >= 1)
+      .withColumn("v", explode(variants))
+      .select(c.as("w"), col("v"))
+    Buckets.pairs(vs, "w", Seq("v"), maxBucket)
+      .select("w_a", "w_b")
       .distinct()
       .filter(levenshtein(col("w_a"), col("w_b")) <= 1)
   }
@@ -944,21 +905,15 @@ object Dedup {
       struct(lit(b).as("band"), col(s"c$b").as("bits"))
     }
     val chunks = (0 until nBands).map(c => col(s"c$c"))
-    val banded = capBuckets(
-      chunked.select(col(id) +: chunks :+ explode(array(bandStructs: _*)).as("bb"): _*)
-        .select(col(id) +: chunks :+ col("bb.band").as("band") :+ col("bb.bits").as("bits"): _*),
-      Seq("band", "bits"), maxBucket)
-    val l = banded.select(col(id).as("doc_a") +:
-      (0 until nBands).map(c => col(s"c$c").as(s"a$c")) :+ col("band") :+ col("bits"): _*)
-    val r = banded.select(col(id).as("doc_b") +:
-      (0 until nBands).map(c => col(s"c$c").as(s"b$c")) :+ col("band") :+ col("bits"): _*)
+    val banded = chunked
+      .select(col(id) +: chunks :+ explode(array(bandStructs: _*)).as("bb"): _*)
+      .select(col(id) +: chunks :+ col("bb.band").as("band") :+ col("bb.bits").as("bits"): _*)
     val hamming = (0 until nBands).map { c =>
-      bit_count(col(s"a$c").bitwiseXOR(col(s"b$c")))
+      bit_count(col(s"c${c}_a").bitwiseXOR(col(s"c${c}_b")))
     }.reduce(_ + _)
-    l.join(r, Seq("band", "bits"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a") +: col("doc_b") +:
-        (0 until nBands).flatMap(c => Seq(col(s"a$c"), col(s"b$c"))): _*)
+    Buckets.pairs(banded, id, Seq("band", "bits"), maxBucket)
+      .select(col(s"${id}_a").as("doc_a") +: col(s"${id}_b").as("doc_b") +:
+        (0 until nBands).flatMap(c => Seq(col(s"c${c}_a"), col(s"c${c}_b"))): _*)
       .distinct()
       .withColumn("hamming", hamming.cast("long"))
       .filter(col("hamming") <= maxDist)

@@ -200,7 +200,7 @@ object Kmeans {
     * all-pairs join the LSH lane in [[Similarity.cosinePairsLsh]] also
     * avoids). Size k ~ n/targetClusterSize so clusters stay bounded; for
     * skew-prone corpora cap candidates per cluster the way
-    * Dedup.capBuckets does.
+    * [[Buckets.cap]] does.
     */
   def semDedup(df: DataFrame, idCol: String, vecCol: String, k: Int,
                iters: Int, threshold: Double,

@@ -713,7 +713,7 @@ object Similarity {
   /** [[cosinePairsLsh]] with sign-hyperplane blocking — the beyond-10⁵
     * variant: same deterministic SQL replayability (md5-parity planes,
     * fixed-order sums), same (t, cell) equi-join + one-dot exact-cosine
-    * verify + threshold + [[capCells]] hot-bucket contract, but
+    * verify + threshold + [[Buckets.cap]] hot-bucket contract, but
     * assignment is the O(n·bits·dim) [[signLshCells]] projection with
     * an O(log n) plane artifact instead of the codebook scan whose
     * n·cells cost and O(n) driver artifact cap the codebook variant at
@@ -765,8 +765,7 @@ object Similarity {
     *   - driver artifact: the tables·bits·dim ±1 plane literal — KBs.
     * This is what the flat-codebook [[bitextMineIvf]] cannot do past
     * ~131k rows/side (its n·cells assign term is Θ(n²/32) when cells
-    * grow ∝ n — the r10-adjudicated scale-killer this operator
-    * replaces).
+    * grow ∝ n).
     *
     * Recall: a true pair lands in the same bucket of ≥ 1 table with
     * probability 1 − (1 − p^bits)^tables, p = 1 − θ/π — raise
@@ -774,17 +773,12 @@ object Similarity {
     * tables = 1 makes every cross pair a candidate and the result
     * equals [[bitextMine]] exactly (spec-pinned).
     *
-    * `maxBucket` > 0 drops (t, cell) buckets larger than the cap on
-    * either side BEFORE the join — the [[cosinePairsLsh]] hot-bucket
-    * contract (a degenerate embedding repeated 100k× would otherwise
-    * emit O(dups²) candidate pairs); dropped buckets lose their pairs,
-    * so collapse exact-duplicate vectors first when dup-heavy. Pass
-    * `srcCount`/`tgtCount` when the caller already knows the sizes to
-    * skip the two sizing count passes.
+    * Pass `srcCount`/`tgtCount` when the caller already knows the sizes
+    * to skip the two sizing count passes.
     */
   def bitextMineLsh(src: DataFrame, tgt: DataFrame, idCol: String,
                     vecCol: String, k: Int = 4, threshold: Double = 1.05,
-                    bits: Int = -1, tables: Int = 4, maxBucket: Int = 0,
+                    bits: Int = -1, tables: Int = 4,
                     srcCount: Long = -1L, tgtCount: Long = -1L): DataFrame = {
     val dim = src.select(size(col(vecCol))).head().getInt(0)
     val b =
@@ -792,15 +786,9 @@ object Similarity {
       else miningBits(math.max(
         if (srcCount >= 0L) srcCount else src.select(col(idCol)).count(),
         if (tgtCount >= 0L) tgtCount else tgt.select(col(idCol)).count()))
-    def side(half: DataFrame, idAs: String): DataFrame = {
-      val asg = signLshAssignments(half, idCol, vecCol, dim, b, tables)
+    def side(half: DataFrame, idAs: String): DataFrame =
+      signLshAssignments(half, idCol, vecCol, dim, b, tables)
         .select(col("t"), col("cell"), col("id").as(idAs))
-      if (maxBucket <= 0) asg
-      else asg.join(
-        asg.groupBy("t", "cell").agg(count(lit(1)).as("n"))
-          .filter(col("n") <= maxBucket).select("t", "cell"),
-        Seq("t", "cell"), "left_semi")
-    }
     val cands = side(src, "src_id").join(side(tgt, "tgt_id"), Seq("t", "cell"))
       .select("src_id", "tgt_id")
     bitextMineFromCandidates(src, tgt, idCol, vecCol, cands, k, threshold)
@@ -1053,23 +1041,9 @@ object Similarity {
       .distinct()
   }
 
-  /** Drop (t, cell) buckets larger than `maxBucket` BEFORE a cell
-    * self-join — the embedding-space twin of the dedup family's LSH
-    * band-bucket cap (Dedup.capBuckets): a table with one vector
-    * repeated 100k× (boilerplate pages share boilerplate embeddings)
-    * puts all copies in the same cells and the self-join emits
-    * O(dups²) candidates. Dropped buckets lose their pairs — for
-    * dup-heavy tables the contract is the dedup family's: collapse
-    * exact-duplicate vectors to one representative first, block the
-    * representatives, and expand cluster membership afterwards.
-    */
-  private def capCells(assigned: DataFrame, maxBucket: Int): DataFrame =
-    assigned.join(
-      assigned.groupBy("t", "cell").agg(count(lit(1)).as("n"))
-        .filter(col("n") <= maxBucket).select("t", "cell"),
-      Seq("t", "cell"), "left_semi")
-
-  /** Run `consume` over the (possibly capped) assignment table. The cap
+  /** Run `consume` over the assignment table with (t, cell) buckets
+    * larger than `maxBucket` dropped ([[Buckets.cap]]: one vector
+    * repeated 100k× puts every copy in the same cells). The cap
     * persists the assignments — its bucket-count aggregation AND both
     * sides of the downstream self-join read them, so unpersisted the
     * base scan + codebook aggregation + cell-scoring projection would
@@ -1082,7 +1056,8 @@ object Similarity {
                                (consume: DataFrame => DataFrame): DataFrame =
     if (maxBucket <= 0) consume(assigned)
     else Pins() { pins =>
-      pins.keep(pins.pin(consume(capCells(pins.persist(assigned), maxBucket))))
+      pins.keep(pins.pin(consume(
+        Buckets.cap(pins.persist(assigned), Seq("t", "cell"), maxBucket))))
     }
 
   /** The deterministic multi-table LSH assignment shared by

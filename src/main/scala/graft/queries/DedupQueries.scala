@@ -18,7 +18,7 @@ object DedupQueries extends QueryModule {
     Tables(s, dir, "documents")
 
   /** Band-bucket membership cap for the LSH queries (see
-    * Dedup.capBuckets): high enough that no honest corpus bucket reaches
+    * graft.operators.Buckets.cap): high enough that no honest corpus bucket reaches
     * it (max observed at sf0.1 is 291 for simhash, 7 for minhash), low
     * enough that a boilerplate page duplicated 100k× can't turn the band
     * self-join quadratic. Replayed identically in every oracle query.

@@ -239,24 +239,21 @@ object StreamingQueries extends QueryModule {
     })
 
   /** The stream-static vote shared by the clip-detection and gate
-    * lanes: the index, pinned and capped at 1000 rows per hot key, meets
-    * the feed as a stream in one equi-join on `keys`, and votes per
-    * (up_id, m_id) — and per alignment `offset`, the index row's `idx`
-    * minus the upload row's, when `idx` is given — aggregate in complete
-    * mode at `minSupport`.
+    * lanes: the index, capped at 1000 rows per hot key
+    * ([[graft.operators.Buckets.probe]]), meets the feed as a stream in
+    * one equi-join on `keys`, and votes per (up_id, m_id) — and per
+    * alignment `offset`, the index row's `idx` minus the upload row's,
+    * when `idx` is given — aggregate in complete mode at `minSupport`.
     */
   private def streamVotes(index: DataFrame, keys: Seq[String], idx: Option[String],
                           feed: String, minSupport: Int): DataFrame = {
     val s = index.sparkSession
-    val pinned = graft.operators.Pins.persist(index)
-    val ok = pinned.groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
-      .filter(col("c") <= 1000).select(keys.map(col): _*)
-    val statik = pinned.join(ok, keys).select(keys.map(col) ++
+    val statik = index.select(keys.map(col) ++
       (col("doc_id").as("m_id") +: idx.map(c => col(c).as("m_idx")).toSeq): _*)
     val qs = s.readStream.schema(s.read.parquet(feed).schema).parquet(feed)
     val offset = idx.map(c => (col("m_idx") - col(c)).cast("long").as("offset")).toSeq
     runToTable(
-      qs.join(statik, keys)
+      graft.operators.Buckets.probe(statik, qs, keys, 1000)
         .groupBy(Seq(col("doc_id").as("up_id"), col("m_id")) ++ offset: _*)
         .agg(count(lit(1)).as("support"))
         .filter(col("support") >= minSupport),

@@ -965,4 +965,60 @@ object LawsSpec extends Properties("graft.laws") {
         yield (x + y + base) % 256).sum
       feats(0L) == ((w, h, lawSum)) && feats(1L) == ((w, h, lawSum))
     }
+
+  // --- hot-bucket cap -------------------------------------------------
+
+  // skewed groups over a small key domain, with null keys: key 0 takes
+  // about half the rows, so every table has one large group
+  private val genKey: Gen[Option[Int]] = Gen.frequency(
+    5 -> Gen.const(Some(0)), 4 -> Gen.chooseNum(1, 3).map(Some(_)), 1 -> Gen.const(None))
+  private val genKeyed: Gen[List[(Long, Option[Int], Option[Int])]] =
+    Gen.chooseNum(0, 30).flatMap(n => Gen.listOfN(n, Gen.zip(genKey, genKey)))
+      .map(_.zipWithIndex.map { case ((k1, k2), i) => (i.toLong, k1, k2) })
+
+  // 20 tables, each capped on one key and on two: every case pays a
+  // census and a join per key set
+  property("Buckets.cap keeps the rows of key groups with <= cap rows, every row at cap <= 0") = {
+    val r = Test.check(Test.Parameters.default.withMinSuccessfulTests(20),
+      forAll(genKeyed, Gen.oneOf(Gen.const(0), Gen.const(1), Gen.chooseNum(-1, 8))) {
+        (rows, cap) =>
+          val df = rows.toDF("id", "k1", "k2")
+          Seq(Seq("k1"), Seq("k1", "k2")).forall { keys =>
+            def key(r: (Long, Option[Int], Option[Int])) =
+              if (keys.size == 1) (r._2, None) else (r._2, r._3)
+            val sizes = rows.groupBy(key).map { case (k, g) => k -> g.size }
+            val expect = rows.filter(r => cap <= 0 || sizes(key(r)) <= cap)
+            val out = graft.operators.Buckets.cap(df, keys, cap)
+            out.columns.toSeq == df.columns.toSeq &&
+              out.as[(Long, Option[Int], Option[Int])].collect().sortBy(_._1).toList == expect
+          }
+      })
+    Prop(r.passed) :| r.status.toString
+  }
+
+  property("media operators at maxBucket = 0 return their uncapped result") = {
+    import graft.multimodal.Multimodal
+    val docs = Seq((1L, "x"), (2L, "x"), (200L, "x")).toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    // doc 200's recording and a mid-stream extract of it
+    val wavs = Multimodal.fabricateAudio(docs).unionByName(
+      Multimodal.fabricateAudio(docs.filter(col("doc_id") === 200L),
+        idOffset = 1000L, startFrame = 128))
+    // doc 1's frame stream and a head-clipped copy of it
+    val streams = Multimodal.fabricateFrameStream(docs).unionByName(
+      Multimodal.fabricateFrameStream(docs.filter(col("doc_id") === 1L),
+        idOffset = 1000L, frameShift = 1))
+    // the still catalog, probed by a lossless re-encode of doc 2
+    val index = Multimodal.buildImageSigIndex(Multimodal.fabricateStillImages(docs))
+    val query = Multimodal.fabricateStillImages(docs.filter(col("doc_id") === 2L),
+      idOffset = 1000L, fmt = "bmp")
+    Seq[Int => org.apache.spark.sql.DataFrame](
+      c => Multimodal.audioClipAlign(wavs, minSupport = 2, maxBucket = c),
+      c => Multimodal.videoNearDupPairs(streams, minShared = 2, maxBucket = c),
+      c => Multimodal.probeImageSigIndex(index, query, minSupport = 2, maxBucket = c)
+    ).forall { op =>
+      val uncapped = rows(op(0))
+      uncapped.nonEmpty && uncapped == rows(op(Int.MaxValue))
+    }
+  }
 }

@@ -1,6 +1,16 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.aggregate.Count
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti}
+import org.apache.spark.sql.execution.{FilterExec, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.joins._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan shape assertions: the properties that make these
@@ -829,5 +839,116 @@ class PlanSpec extends AnyFunSuite {
     assert(cacheHits >= 4, s"only $cacheHits branches read the bigram cache:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"count tables not broadcast:\n$p")
     assert(!p.contains("SortMergeJoin"), s"vocab-sized join shuffled:\n$p")
+  }
+
+  /** The final executed plans of every SQL action `body` runs, eager
+    * pins included, flattened through AQE stages and reused exchanges.
+    */
+  private def actionPlans(body: => Unit): Seq[Seq[SparkPlan]] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try { body; org.apache.spark.GraftCoreShim.drainListenerBus(spark.sparkContext) }
+    finally spark.listenerManager.unregister(l)
+    def flat(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => flat(a.executedPlan)
+      case q: QueryStageExec        => flat(q.plan)
+      case r: ReusedExchangeExec    => flat(r.child)
+      case _                        => p +: p.children.flatMap(flat)
+    }
+    plans.asScala.toSeq.map(flat)
+  }
+
+  /** The key census under a join side: a count-only aggregate, reached
+    * through unary nodes with a filter on its count on the way.
+    */
+  private def census(side: SparkPlan, filtered: Boolean = false): Option[SparkPlan] =
+    side match {
+      case a: AdaptiveSparkPlanExec => census(a.executedPlan, filtered)
+      case q: QueryStageExec        => census(q.plan, filtered)
+      case r: ReusedExchangeExec    => census(r.child, filtered)
+      case f: FilterExec            => census(f.child, filtered = true)
+      case a: BaseAggregateExec =>
+        Some(a).filter(_ => filtered && a.aggregateExpressions.nonEmpty &&
+          a.aggregateExpressions.forall(_.aggregateFunction.isInstanceOf[Count]))
+      case u: UnaryExecNode => census(u.child, filtered)
+      case _                => None
+    }
+
+  test("hot-bucket caps: one broadcast anti-join against the hot list per capped table; equi-join candidates") {
+    import graft.multimodal.Multimodal
+    import spark.implicits._
+    // every fixture plants a group past the cap beside groups under it,
+    // so the hot list and the capped table are both non-empty and AQE
+    // keeps the anti-join and the candidate join in the final plan
+    val docs = ((1 to 3).map(i =>
+        (100L + i, "the same boilerplate navigation footer page body repeated across mirrors")) ++
+      Seq((1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+        (2L, "alpha beta gamma delta epsilon zeta eta theta iota lambda"),
+        (3L, "completely different text about another subject entirely unrelated here")))
+      .toDF("doc_id", "text")
+    val media = Seq((200L, "x"), (9L, "x"), (309L, "x")).toDF("doc_id", "text")
+    // three byte-identical uploads of doc 200 and an extract of doc 309
+    val audio = (1 to 3).map(i => Multimodal.fabricateAudio(
+        media.filter($"doc_id" === 200L), idOffset = i * 1000L))
+      .foldLeft(Multimodal.fabricateAudio(media))(_ unionByName _)
+      .unionByName(Multimodal.fabricateAudio(media.filter($"doc_id" === 309L),
+        idOffset = 10000L, startFrame = 128))
+    // a still catalog holding three byte-identical uploads of doc 1
+    val catalog = Seq((1L, "x"), (2L, "x"), (3L, "x")).toDF("doc_id", "text")
+    val stills = Multimodal.buildImageSigIndex((1 to 3).map(i =>
+        Multimodal.fabricateStillImages(catalog.filter($"doc_id" === 1L), idOffset = i * 1000L))
+      .foldLeft(Multimodal.fabricateStillImages(catalog))(_ unionByName _))
+    val query = Multimodal.fabricateStillImages(
+      Seq((2L, "x")).toDF("doc_id", "text"), idOffset = 10000L, fmt = "bmp")
+    val vecs = ((0 until 20).map(i => (i.toLong, Seq.fill(8)(1.0f))) ++
+      (0 until 40).map(i => (100L + i, (0 until 8).map(d => math.sin(i * 8 + d).toFloat))))
+      .toDF("vec_id", "embedding")
+    val families = Seq[(String, () => Unit)](
+      "minhashCandidates" -> (() => operators.Dedup.minhashCandidates(
+        operators.Dedup.shingleTable(docs, "doc_id", "text", 3), "doc_id", 16, 4,
+        maxBucket = 2).collect()),
+      "simhashPairs" -> (() => operators.Dedup.simhashPairs(
+        operators.Dedup.simhash(docs, "doc_id", "text"), "doc_id", maxBucket = 2).collect()),
+      "audioClipAlign" -> (() =>
+        Multimodal.audioClipAlign(audio, minSupport = 2, maxBucket = 2).collect()),
+      "probeImageSigIndex" -> (() =>
+        Multimodal.probeImageSigIndex(stills, query, maxBucket = 2).collect()),
+      "cosinePairsLsh" -> (() => operators.Similarity.cosinePairsLsh(vecs, "vec_id",
+        "embedding", threshold = 0.99, nCells = 16, rep = 2, tables = 3,
+        maxBucket = 10).collect()))
+    for ((name, run) <- families) {
+      val plans = actionPlans(run())
+      spark.catalog.clearCache()
+      val joins = plans.flatten.collect { case j: BaseJoinExec => j }
+      val shown = plans.map(_.head.treeString).mkString("\n")
+      val fed = joins.filter(j => census(j.left).isDefined || census(j.right).isDefined)
+      assert(fed.nonEmpty, s"$name: no hot-list anti-join:\n$shown")
+      fed.foreach { j =>
+        assert(j.joinType == LeftAnti && census(j.left).isEmpty, s"$name: " +
+          s"a ${j.joinType} join takes a key census as a side:\n$shown")
+        assert(j.isInstanceOf[BroadcastHashJoinExec] &&
+            j.asInstanceOf[BroadcastHashJoinExec].buildSide == BuildRight,
+          s"$name: the hot list is not broadcast:\n$shown")
+      }
+      // both sides of a self-join may compute one table's census; AQE
+      // wraps each reference to a cached table in its own stage, so
+      // compare the censuses with the stages unwrapped
+      val censuses = fed.flatMap(j => census(j.right)).map(_.transformDown {
+        case q: QueryStageExec     => q.plan
+        case r: ReusedExchangeExec => r.child
+      }.canonicalized).distinct
+      assert(censuses.size == 1, s"$name: ${censuses.size} hot-key censuses:\n$shown")
+      assert(joins.exists(j => j.joinType == Inner &&
+          (j.isInstanceOf[HashJoin] || j.isInstanceOf[SortMergeJoinExec])),
+        s"$name: no equi-join candidates:\n$shown")
+      assert(!joins.exists(j => j.isInstanceOf[BroadcastNestedLoopJoinExec] ||
+        j.isInstanceOf[CartesianProductExec]), s"$name: a non-equi join:\n$shown")
+    }
   }
 }
