@@ -704,7 +704,7 @@ object Bench {
           dsirTarget = Some(base.filter(col("lang") === "en").select(col("text"))),
           tokenBudgets = Map("src0" -> 400L, "src1" -> 200L),
           budgetShards = 2,
-          normalize = true, report = false)
+          normalize = true)
         noop(packed)
       }
     }
@@ -928,7 +928,7 @@ object Bench {
       (src(d1), src(d3))
     }) { df =>
       val (packed, _) = jobs.TrainingPipeline.run(spark, sfDir,
-        input = Some(df), normalize = true, report = false)
+        input = Some(df), normalize = true)
       noop(packed)
     }),
 

@@ -1,6 +1,7 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.GraftCoreShim
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -33,7 +34,16 @@ import graft.operators.{Dedup, Html, Pins, Redact, Sampling, Similarity, TextOps
   * exceeds the broadcast threshold.
   *
   * Returns the packed output and a per-stage row accounting Report —
-  * the numbers a pipeline dashboard would publish.
+  * the numbers a pipeline dashboard would publish. Each count is an
+  * `observe` metric on its stage frame, filled by the job that
+  * materializes the frame anyway, so the Report costs no job:
+  *  - `afterFilter`, `afterExact`, `afterNearDup`, `afterSemantic`,
+  *    `afterMedia` and `afterSubstring` by their stage pins;
+  *  - `packs` by the pin of the packed output;
+  *  - `input`, `afterDecontam`, `afterDsir`, `mixtureRows` (the sum of
+  *    `n_copies`) and `chunks` by the next pin, persist or landing
+  *    write that runs their frame in full.
+  * A skipped stage repeats the previous stage's count.
   */
 object TrainingPipeline {
 
@@ -181,16 +191,16 @@ object TrainingPipeline {
           scrubPii: Boolean = false,
           shardsOut: Option[String] = None,
           outShards: Int = 8,
+          @deprecated("the Report is always filled from observed counts; " +
+            "the flag is ignored", "0.1.0")
           report: Boolean = true): (DataFrame, Report) =
     Pins(pinDir(spark)) { pins =>
-    // report = false is the hot-path mode: skip the per-stage count
-    // jobs (each is a full scheduler barrier over a cached frame) and
-    // return -1 counts — the packed output is identical; the persists
-    // stay, since they serve the multi-consumer frames, not the
-    // dashboard. A daily production run that only lands shards wants
-    // this; a monitored run keeps the default.
-    def tally(df: => DataFrame): Long = if (report) df.count() else -1L
-    // Stage-boundary pin = EAGER checkpoint, not bare persist (r14): a
+    // the frame with its row count (or `n`) observed as metric "n"
+    def counted(df: DataFrame, n: Column = count(lit(1))): (DataFrame, Observation) = {
+      val o = Observation()
+      (df.observe(o, n.as("n")), o)
+    }
+    // Stage-boundary pin = EAGER checkpoint, not bare persist: a
     // persist memoizes EXECUTION but not ANALYSIS — every downstream
     // action re-analyzes the whole stacked logical plan before cache
     // substitution, and by the packing stage that plan carries every
@@ -204,17 +214,31 @@ object TrainingPipeline {
     // explicit defaultParallelism pin was measured WORSE across all four
     // pipeline lanes (pipeline_full 23.2 -> 35.1 s), and at 100 TB the
     // producing SortMergeJoins are ALREADY hash-partitioned on doc_id, so
-    // EnsureRequirements drops the stacked REPARTITION_BY_COL (verified
-    // r15 — plans/r15/repartition_on_join_key.txt). The stage name is the
+    // EnsureRequirements drops the stacked REPARTITION_BY_COL
+    // (plans/r15/repartition_on_join_key.txt). The stage name is the
     // job description, so per-stage pin cost is attributable (guide §1.5).
+    // The pin's job also counts the stage's rows.
     val sc = spark.sparkContext
-    def pinL(label: String)(df: DataFrame): DataFrame = {
+    def pinL(label: String)(df: DataFrame): (DataFrame, Observation) = {
+      val (c, n) = counted(df)
       sc.setJobDescription(s"pipeline pin: $label")
-      try pins.pin(df.repartition(col("doc_id"))) finally sc.setJobDescription(null)
+      try (pins.pin(c.repartition(col("doc_id"))), n) finally sc.setJobDescription(null)
     }
+    // the corpus canonicalization; the eval suite and the DSIR target
+    // get the same, so every comparison sees the same bytes
+    def canon(d: DataFrame): DataFrame = {
+      val n = if (normalize) d.withColumn("text", TextOps.normalizeText(col("text"))) else d
+      if (scrubPii) n.withColumn("text", Redact.scrubPii(col("text"))) else n
+    }
+    // keep each cluster's representative (the doc whose id labels it);
+    // docs in no cluster are kept
+    def keepReps(kept: DataFrame, labels: DataFrame, id: String): DataFrame =
+      kept.join(labels.withColumnRenamed(id, "doc_id"), Seq("doc_id"), "left")
+        .filter(col("cluster_id").isNull || col("cluster_id") === col("doc_id"))
+        .drop("cluster_id")
 
     // Stage 3c's media-duplicate elections launch HERE, before the text
-    // chain runs (r14): each election is an independent eager job chain
+    // chain runs: each election is an independent eager job chain
     // (fingerprint → digest → align → connected components) over its
     // own caller-supplied media frame, touching no pipeline frame —
     // running them on pool threads overlaps their driver/scheduling
@@ -253,7 +277,7 @@ object TrainingPipeline {
     // 0. optional crawl ingestion: HTML -> line-structured prose, then
     // the C4 line gate — both pure projections riding the first scan
     val raw = {
-      // minimum-parallelism guard (r15): the whole ingestion + gate
+      // minimum-parallelism guard: the whole ingestion + gate
       // chain (HTML strip, mojibake, template detect, tokenize, langID)
       // is row-local and runs at the SCAN's parallelism — a sub-128 MB
       // single-row-group parquet corpus is ONE split, serializing the
@@ -315,12 +339,7 @@ object TrainingPipeline {
       if (dedupParagraphs)
         TextOps.dedupParagraphsIn(r1c, "doc_id", "text") else r1c
     }
-    val docs = {
-      val n = if (normalize)
-        raw.withColumn("text", TextOps.normalizeText(col("text"))) else raw
-      if (scrubPii) n.withColumn("text", Redact.scrubPii(col("text"))) else n
-    }
-    val inputRows = tally(docs)
+    val (docs, nInput) = counted(canon(raw))
 
     // 1. language + length (+ optional quality) gate (map-only) — the
     // DETECTED language, not the table's label column: the pipeline
@@ -369,36 +388,29 @@ object TrainingPipeline {
     // discipline)
     val ruleGated =
       if (classifierWeights.isDefined) pins.persist(ruleGated0) else ruleGated0
-    // eager pin BEFORE the gate-input unpersists below: in no-report
-    // mode nothing else materializes `filtered` this early, and
-    // unpinning the gate frames first would hand the checkpoint an
-    // unpersisted lineage (the exact re-run the stage-1b pins exist to
-    // avoid)
-    val filtered = pinL("filtered")(classifierWeights.map { w =>
+    // eager pin BEFORE the gate-input unpersists below: unpinning the
+    // gate frames first would hand the checkpoint an unpersisted
+    // lineage (the exact re-run the stage-1b pins exist to avoid)
+    val (filtered, nFilter) = pinL("filtered")(classifierWeights.map { w =>
       val keep = graft.operators.Classify
         .scoreDocs(ruleGated, "doc_id", "text", w)
         .filter(col("pred") === 1).select("doc_id")
       ruleGated.join(keep, Seq("doc_id"), "left_semi")
     }.getOrElse(ruleGated))
-    val afterFilter = tally(filtered)
     pins.release(gateInput) // no-op for a gate that is off
     pins.release(ruleGated)
 
     // 2. exact dedup to representatives (16-byte digests shuffle)
     val reps = Dedup.exact(filtered, "doc_id", "text").select(col("keep_id").as("doc_id"))
-    val exactKept = pinL("exactKept")(filtered.join(reps, Seq("doc_id"), "left_semi"))
-    val afterExact = tally(exactKept)
+    val (exactKept, nExact) =
+      pinL("exactKept")(filtered.join(reps, Seq("doc_id"), "left_semi"))
 
     // 3. near-dup clusters over the survivors; keep cluster representatives
     val pairs = Dedup.simhashPairs(
       Dedup.simhash(exactKept, "doc_id", "text"), "doc_id",
       maxDist = 3, maxBucket = 1000)
     val cc = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
-      .withColumnRenamed("doc_a", "doc_id")
-    val nearKept = pinL("nearKept")(exactKept.join(cc, Seq("doc_id"), "left")
-      .filter(col("cluster_id").isNull || col("cluster_id") === col("doc_id"))
-      .drop("cluster_id"))
-    val afterNearDup = tally(nearKept)
+    val (nearKept, nNearDup) = pinL("nearKept")(keepReps(exactKept, cc, "doc_a"))
 
     // 3b. optional SEMANTIC dedup (SemDeDup): embedding-space near-dup
     // clustering over the survivors — catches paraphrases/translations
@@ -407,7 +419,7 @@ object TrainingPipeline {
     // keep each semantic cluster's min-id representative. Docs WITHOUT
     // an embedding row never pair, so they are always kept — the stage
     // only ever removes evidenced near-dups.
-    val semKept = embeddings match {
+    val (semKept, nSemantic) = embeddings match {
       case Some(embRaw) =>
         require(embRaw.columns.contains("doc_id") && embRaw.columns.contains("embedding"),
           "embeddings needs (doc_id, embedding) columns")
@@ -423,18 +435,14 @@ object TrainingPipeline {
         val pairsE = Similarity.cosinePairsLsh(emb, "doc_id", "embedding",
           threshold = semanticThreshold, nCells = cells, maxBucket = 1000)
         val ccE = Dedup.connectedComponents(pairsE, "vec_a", "vec_b")
-          .withColumnRenamed("vec_a", "doc_id")
-        pinL("semKept")(nearKept.join(ccE, Seq("doc_id"), "left")
-          .filter(col("cluster_id").isNull || col("cluster_id") === col("doc_id"))
-          .drop("cluster_id"))
-      case None => nearKept
+        pinL("semKept")(keepReps(nearKept, ccE, "vec_a"))
+      case None => (nearKept, nNearDup)
     }
-    val afterSemantic = tally(semKept)
 
-    // 3c. optional MEDIA dedup — the r12 end-to-end media-dedup
-    // composition wired into the one-call pipeline, so a multimodal
-    // corpus gets the same treatment text does: run the keeper
-    // election (fingerprint once → exact-dup collapse → offset-voting
+    // 3c. optional MEDIA dedup — the media_dedup_e2e composition wired
+    // into the one-call pipeline, so a multimodal corpus gets the same
+    // treatment text does: run the keeper election (fingerprint once
+    // → exact-dup collapse → offset-voting
     // clip pairs among representatives → exact-group edges →
     // connected components → min-id keeper; [[graft.multimodal
     // .Multimodal.audioDedup]] / [[graft.multimodal.Multimodal
@@ -450,7 +458,7 @@ object TrainingPipeline {
     // doc_id anti-join; media bytes never ride a shuffle here.
     val mediaOn =
       audioMedia.isDefined || videoMedia.isDefined || imageMedia.isDefined
-    val mediaKept = if (!mediaOn) semKept else {
+    val (mediaKept, nMedia) = if (!mediaOn) (semKept, nSemantic) else {
       // the modality elections are INDEPENDENT jobs (each eager —
       // fingerprint, digest, align, connected components — over its own
       // media frame, touching no pipeline frame), so they run
@@ -463,7 +471,6 @@ object TrainingPipeline {
         scala.concurrent.duration.Duration.Inf).reduce(_.unionByName(_))
       pinL("mediaKept")(semKept.join(drops.distinct(), Seq("doc_id"), "left_anti"))
     }
-    val afterMedia = if (mediaOn) tally(mediaKept) else afterSemantic
 
     // 4. eval-set decontamination (eval hashes broadcast; the corpus
     // hash table is computed once and feeds both count branches);
@@ -482,22 +489,19 @@ object TrainingPipeline {
     val evCanon = evalDocs.map { evRaw =>
       require(evRaw.columns.contains("doc_id") && evRaw.columns.contains("text"),
         "evalDocs needs (doc_id, text) columns")
-      val n = if (normalize)
-        evRaw.withColumn("text", TextOps.normalizeText(col("text"))) else evRaw
-      if (scrubPii) n.withColumn("text", Redact.scrubPii(col("text"))) else n
+      canon(evRaw)
     }
-    val clean = evCanon match {
+    val (clean, nDecontam) = evCanon match {
       case Some(ev) =>
         val h = pins.persist(Dedup.shingleHashTable(mediaKept, "doc_id", "text", 3))
         val overlap = Dedup.evalOverlapFromHashes(h,
           Dedup.shingleHashTable(ev, "doc_id", "text", 3).select(col("h1")),
           "doc_id", contamThreshold)
-        mediaKept.join(
+        counted(mediaKept.join(
           overlap.filter(col("contaminated")).select(col("doc_id")),
-          Seq("doc_id"), "left_anti")
-      case None => mediaKept
+          Seq("doc_id"), "left_anti"))
+      case None => (mediaKept, nMedia)
     }
-    val afterDecontam = tally(clean)
 
     // 4c. optional exact-substring decontamination: strip every >= w
     // token span the SURVIVORS share with the eval suite (stage 4
@@ -515,7 +519,7 @@ object TrainingPipeline {
     // post-strip count so the token-budget stage sees real lengths.
     val substringOn = evCanon.isDefined && decontamSubstringW.isDefined
     val cleanP = if (substringOn) pins.persist(clean) else clean
-    val stripped = (evCanon, decontamSubstringW) match {
+    val (stripped, nSubstring) = (evCanon, decontamSubstringW) match {
       case (Some(ev), Some(w)) =>
         val appl = Dedup.substringDecontamApply(
           cleanP, "doc_id", "text", ev, "text", w)
@@ -538,14 +542,14 @@ object TrainingPipeline {
         // runs single-task: pipeline_full 18.8 → 24.2 s, taskTime
         // 48 → 81 s), while the checkpoint of the join output at its
         // own partitioning keeps the tail parallel.
-        val out = pins.pin(cleanP.drop("text", "n_toks").join(
+        val (out, n) = counted(cleanP.drop("text", "n_toks").join(
           appl.select(col("doc_id"), col("clean_text").as("text"),
             col("n_kept").as("n_toks")), Seq("doc_id")))
+        val pinned = pins.pin(out)
         pins.release(cleanP)
-        out
-      case _ => cleanP
+        (pinned, n)
+      case _ => (cleanP, nDecontam)
     }
-    val afterSubstring = if (substringOn) tally(stripped) else afterDecontam
 
     // 4b. optional DSIR target-affinity selection (operators/Dsir):
     // train the hashed-unigram log-ratio model with the CLEANED corpus
@@ -554,20 +558,15 @@ object TrainingPipeline {
     // bounded (bucket, count) aggregations + one broadcast λ array;
     // scoring is row-local — nothing here shuffles text (the keep-set
     // semi-join is narrow doc_ids).
-    val selected = dsirTarget match {
+    val (selected, nDsir) = dsirTarget match {
       case Some(tgtRaw) =>
         require(tgtRaw.columns.contains("text"), "dsirTarget needs a text column")
-        val tgt = {
-          val n = if (normalize)
-            tgtRaw.withColumn("text", TextOps.normalizeText(col("text"))) else tgtRaw
-          if (scrubPii) n.withColumn("text", Redact.scrubPii(col("text"))) else n
-        }
-        val lam = graft.operators.Dsir.logRatios(stripped, tgt, "text", dsirBuckets)
+        val lam = graft.operators.Dsir.logRatios(stripped, canon(tgtRaw), "text", dsirBuckets)
         // the scored frame persists as NARROW (id, n_toks, logw) rows:
         // selectAboveMean consumes it TWICE (the global-mean aggregate
         // and the crossJoin side), so an unpersisted plan tokenizes the
         // cleaned corpus twice — one full extra tokenize pass at any
-        // scale (r15)
+        // scale
         val scored = pins.persist(graft.operators.Dsir.importanceWeights(
           stripped, "doc_id", "text", lam, dsirBuckets))
         // the keep set pins as a NARROW doc_id frame: without it every
@@ -575,10 +574,9 @@ object TrainingPipeline {
         // importanceWeights plus the global-mean aggregate
         val keep = pins.persist(graft.operators.Dsir.selectAboveMean(scored)
           .filter(col("keep") === 1L).select(col("doc_id")))
-        stripped.join(keep, Seq("doc_id"), "left_semi")
-      case None => stripped
+        counted(stripped.join(keep, Seq("doc_id"), "left_semi"))
+      case None => (stripped, nSubstring)
     }
-    val afterDsir = tally(selected)
 
     // 5. dataset shaping. 5a: optional per-source TOKEN budgets (the
     // unit mixtures are really specified in) — hash-prefix sampling
@@ -587,8 +585,8 @@ object TrainingPipeline {
     // semi-join back is the budget stage's text-shuffle exception
     // (like the repetition gate's): beyond the broadcast threshold
     // the surviving text rides a doc_id shuffle once. The budgeted
-    // frame feeds three actions (mixture agg, chunk count, packing),
-    // so it is pinned when budgets apply. 5b: rate-based mixture
+    // frame feeds the packing and the optional landing, so it is
+    // persisted when budgets apply. 5b: rate-based mixture
     // weighting (map-only, deterministic) — copy COUNTS only; the
     // replica explosion is deferred until after chunking, so each
     // unique doc chunks once and the replication happens on the
@@ -601,27 +599,24 @@ object TrainingPipeline {
           "source", "doc_id", col("n_toks"), tokenBudgets, budgetShards)
           .select(col("doc_id")),
         Seq("doc_id"), "left_semi"))
-    val weighted =
+    val (weighted, nMixture) = counted(
       if (rates.isEmpty) budgeted.withColumn("n_copies", lit(1L))
-      else Sampling.mixtureWeights(budgeted, "source", "doc_id", rates)
-    val mixtureRows = if (report)
-      weighted.agg(coalesce(sum(col("n_copies")), lit(0L))).head().getLong(0)
-    else -1L
+      else Sampling.mixtureWeights(budgeted, "source", "doc_id", rates),
+      coalesce(sum(col("n_copies")), lit(0L)))
 
     // 6. context-window chunking (map-only; doc_ids are unique in
     // `clean` by construction), carrying (source, n_copies) through to
     // emit copy_id per chunk row
-    val chunked = Sampling.chunkDocs(
+    val (chunked, nChunks) = counted(Sampling.chunkDocs(
         weighted, "doc_id", "text", 64, 16, carry = Seq("source", "n_copies"))
       .withColumn("copy_id", explode(sequence(lit(0L), col("n_copies") - 1)))
-      .drop("n_copies")
-    val chunks = tally(chunked)
+      .drop("n_copies"))
 
     // 7. sequence packing per (source, shard) into 256-token packs
     val chunkedU = chunked.withColumn("unit",
       concat_ws("#", col("doc_id"), col("copy_id"), col("chunk_id")))
-    val packed = Sampling.packBySize(
-      chunkedU, "source", "unit", col("n_tokens"), budget = 256, shards = 2)
+    val (packed, nPacks) = counted(Sampling.packBySize(
+      chunkedU, "source", "unit", col("n_tokens"), budget = 256, shards = 2))
 
     // 7b. optional sharded landing: the chunk rows, in deterministic
     // global shuffle order, as in-order shard files — the dataloader
@@ -633,12 +628,22 @@ object TrainingPipeline {
     // caller; closing `pins` then releases the corpus-sized
     // intermediates (repeated runs in one session would otherwise pin
     // four full-corpus frames each, forever)
-    val packedOut = pins.keep(pins.pin(packed, local = true))
-    val packs = packedOut.count()
+    val packedOut = pins.pin(packed, local = true)
 
-    (packedOut, Report(inputRows, afterFilter, afterExact, afterNearDup,
-      afterSemantic, afterMedia, afterDecontam, afterSubstring, afterDsir,
-      mixtureRows, chunks, packs))
+    // Every observed frame lies under this pin or an earlier
+    // materialization, and observations complete on the listener bus:
+    // once it drains, an unfilled count is a bug, not a wait.
+    GraftCoreShim.drainListenerBus(sc)
+    // (an empty row: no task ran over the frame, so it had no rows)
+    def rows(o: Observation): Long = o.future.value match {
+      case Some(scala.util.Success(r)) => if (r.length == 0) 0L else r.getLong(0)
+      case _ => throw new IllegalStateException(
+        "a pipeline stage count was not observed by the jobs that ran its frame")
+    }
+    val counts = Report(rows(nInput), rows(nFilter), rows(nExact),
+      rows(nNearDup), rows(nSemantic), rows(nMedia), rows(nDecontam),
+      rows(nSubstring), rows(nDsir), rows(nMixture), rows(nChunks), rows(nPacks))
+    (pins.keep(packedOut), counts)
   }
 
   /** The run's reliable checkpoint directory, or None to pin locally

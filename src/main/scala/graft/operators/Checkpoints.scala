@@ -24,6 +24,9 @@ import org.apache.spark.storage.StorageLevel
   *
   * A persist builds its cache at once, in one job labelled
   * `persist build`, and a failed build releases it before rethrowing.
+  * The build runs as an SQL action, so the `observe` metrics in the
+  * frame's plan are filled when persist returns, even when no later
+  * plan scans the cache (AQE drops a join over an empty one).
   * Left lazy, the cache would be built by AQE, which plans one
   * `TableCacheQueryStage` job per *reference* to an unbuilt cache and
   * submits them together: a frame read five times in one plan would be

@@ -17,6 +17,120 @@ object PipelineQueries extends QueryModule {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents")
 
+  /** THE END-TO-END COMPOSITION, oracle-checked as one row set: the
+    * default TrainingPipeline chain — normalize → language/length gate
+    * → exact dedup → simhash near-dup apply → eval decontamination
+    * (the doc_id % 97 mock suite) → rate mixture → 64/16 chunking →
+    * 256-token packing — run through jobs/TrainingPipeline.run itself
+    * (the same code a production pipeline calls, persists and all).
+    * Every stage is individually green elsewhere; this row proves the
+    * COMPOSITION: the oracle replays the whole chain as one stack of
+    * the stage oracles' CTEs, so any inter-stage contract drift
+    * (wrong frame feeding a stage, a gate applied out of order)
+    * hash-mismatches here even though each part passes alone.
+    */
+  private[graft] def pipelineE2e(s: SparkSession, dir: String)
+      : (DataFrame, graft.jobs.TrainingPipeline.Report) = {
+    graft.jobs.TrainingPipeline.run(s, dir,
+      evalDocs = Some(docs(s, dir).filter(col("doc_id") % 97 === 0)
+        .select(col("doc_id"), col("text"))),
+      rates = Map("src0" -> 2.5, "src1" -> 0.5, "src2" -> 0.0),
+      normalize = true)
+  }
+
+  /** THE FULL-OPTIONS COMPOSITION: every optional stage the default
+    * chain skips, enabled at once and oracle-checked as one row set —
+    * HTML ingestion (docs wrapped in the html_extract fixture page,
+    * stripped back by Html.extractLines), corpus-wide template-line
+    * strip (minDf 5), the Gopher 2-gram repetition gate (> 0.08),
+    * SemDeDup semantic dedup over the embeddings table (LSH cells
+    * pinned to 32 so the index replays), DSIR target-affinity
+    * selection against the en slice, and per-source token budgets —
+    * stacked on the default normalize → gate → exact → simhash chain
+    * and run through TrainingPipeline.run itself. The stack also
+    * includes BOTH decontamination modes against the %97 mock
+    * suite: the doc-level overlap gate (stage 4, threshold 0.8) and
+    * the exact-substring span strip (stage 4c, w = 10 — the
+    * decontaminate_substring_apply law applied INSIDE the chain, with
+    * the stripped token counts feeding DSIR and the token budgets).
+    * It also includes stage 3c, end-to-end MEDIA
+    * dedup (the media_dedup_e2e composition wired into the one-call
+    * pipeline): every %10 doc carries a genuine WAV of its waveform
+    * law, every %40 doc's recording is re-uploaded byte-identically
+    * under doc_id+3, and every %30 doc's recording reappears as a
+    * mid-stream extract (64 samples in) under doc_id+5 — so docs
+    * id+3 / id+5 (when they exist in the corpus) lose the cluster
+    * election to the lower-id holder of the content and are dropped;
+    * docs without media are untouched. Stage 3c also runs the IMAGE
+    * modality (image_dedup_e2e wired in): every %10=1 doc
+    * carries a genuine still of the quadratic pixel law, every %40=1
+    * doc's image is re-uploaded byte-identically under doc_id+7, and
+    * every %30=1 doc's image reappears as a lossless BMP re-encode
+    * (byte-distinct, pixel-identical) under doc_id+9 — docs id+7 /
+    * id+9 lose the image cluster election and are dropped too.
+    * pipeline_e2e proves the default chain composes; THIS row proves
+    * the optional stages compose with it and each other (stage order,
+    * frame handoffs, carried n_toks) — any drift hash-mismatches here
+    * even though every stage is green standalone.
+    */
+  private[graft] def pipelineFull(s: SparkSession, dir: String)
+      : (DataFrame, graft.jobs.TrainingPipeline.Report) = {
+    import graft.multimodal.Multimodal
+    val d = docs(s, dir)
+    val wavs = Multimodal.fabricateAudio(d.filter(col("doc_id") % 10 === 0))
+      .unionByName(Multimodal.fabricateAudio(
+        d.filter(col("doc_id") % 40 === 0), idOffset = 3))
+      .unionByName(Multimodal.fabricateAudio(
+        d.filter(col("doc_id") % 30 === 0), idOffset = 5, startFrame = 64))
+    val stills = Multimodal.fabricateStillImages(d.filter(col("doc_id") % 10 === 1))
+      .unionByName(Multimodal.fabricateStillImages(
+        d.filter(col("doc_id") % 40 === 1), idOffset = 7))
+      .unionByName(Multimodal.fabricateStillImages(
+        d.filter(col("doc_id") % 30 === 1), idOffset = 9, fmt = "bmp"))
+    val ids = col("doc_id").cast("string")
+    val esc = regexp_replace(regexp_replace(regexp_replace(col("text"),
+      "&", "&amp;"), "<", "&lt;"), ">", "&gt;")
+    val page = concat(
+      lit("<html><head><title>Doc "), ids, lit(" - "), col("source"),
+      lit("</title><style>p{margin:0}</style></head><body><script>var d="),
+      ids, lit(";</script><h1>Doc "), ids, lit("</h1><p>"), esc,
+      lit("</p><div class=\"nav\"><a href=\"/s/1\">more from "),
+      col("source"),
+      lit("</a>&nbsp;&amp; <a href=\"/a\">archive</a></div>" +
+        "<!-- footer --></body></html>"))
+    graft.jobs.TrainingPipeline.run(s, dir,
+      input = Some(d.select(col("doc_id"), col("source"), page.as("text"))),
+      ingestHtml = true,
+      templateMinDf = Some(5L),
+      maxRepetition = Some(0.08),
+      // 0.38, not the standalone lane's 0.3: on this fixture 0.3
+      // collapses nearly everything into one giant semantic
+      // component (semantic_dedup keeps 20 of 500 — its documented
+      // behavior), which would starve every later stage; 0.38 keeps
+      // a real population so the DSIR mean and the token budgets
+      // both actually bind
+      semanticThreshold = 0.38,
+      embeddings = Some(Tables(s, dir, "embeddings")
+        .select(col("vec_id").as("doc_id"), col("embedding"))),
+      semanticCells = 32,
+      audioMedia = Some(wavs),
+      imageMedia = Some(stills),
+      evalDocs = Some(d.filter(col("doc_id") % 97 === 0)
+        .select(col("doc_id"), col("text"))),
+      decontamSubstringW = Some(10),
+      dsirTarget = Some(d.filter(col("lang") === "en").select(col("text"))),
+      tokenBudgets = Map("src0" -> 400L, "src1" -> 200L),
+      budgetShards = 2,
+      normalize = true)
+  }
+
+  /** A pipeline's packs as the composition lanes' row set. */
+  private def packRows(packed: DataFrame): DataFrame =
+    packed.select(col("source"), col("shard").cast("long").as("shard"),
+      col("pack_id").cast("long").as("pack_id"),
+      col("n_docs").cast("long").as("n_units"),
+      col("tok_sum").cast("long").as("tok_sum"))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // k lowest-hash docs per source: fixed-size per-stratum sample,
     // reproducible on any cluster. Plan: bounded top-k aggregator, NO
@@ -24,116 +138,11 @@ object PipelineQueries extends QueryModule {
     "stratified_sample" -> ((s, dir) =>
       Sampling.stratifiedSample(docs(s, dir), "source", "doc_id", k = 5)),
 
-    // THE END-TO-END COMPOSITION, oracle-checked as one row set: the
-    // default TrainingPipeline chain — normalize → language/length gate
-    // → exact dedup → simhash near-dup apply → eval decontamination
-    // (the doc_id % 97 mock suite) → rate mixture → 64/16 chunking →
-    // 256-token packing — run through jobs/TrainingPipeline.run itself
-    // (the same code a production pipeline calls, persists and all).
-    // Every stage is individually green elsewhere; this row proves the
-    // COMPOSITION: the oracle replays the whole chain as one stack of
-    // the stage oracles' CTEs, so any inter-stage contract drift
-    // (wrong frame feeding a stage, a gate applied out of order)
-    // hash-mismatches here even though each part passes alone.
-    "pipeline_e2e" -> ((s, dir) => {
-      val (packed, _) = graft.jobs.TrainingPipeline.run(s, dir,
-        evalDocs = Some(docs(s, dir).filter(col("doc_id") % 97 === 0)
-          .select(col("doc_id"), col("text"))),
-        rates = Map("src0" -> 2.5, "src1" -> 0.5, "src2" -> 0.0),
-        normalize = true, report = false)
-      packed.select(col("source"), col("shard").cast("long").as("shard"),
-        col("pack_id").cast("long").as("pack_id"),
-        col("n_docs").cast("long").as("n_units"),
-        col("tok_sum").cast("long").as("tok_sum"))
-    }),
+    // the default chain, end to end ([[pipelineE2e]])
+    "pipeline_e2e" -> ((s, dir) => packRows(pipelineE2e(s, dir)._1)),
 
-    // THE FULL-OPTIONS COMPOSITION: every optional stage the default
-    // chain skips, enabled at once and oracle-checked as one row set —
-    // HTML ingestion (docs wrapped in the html_extract fixture page,
-    // stripped back by Html.extractLines), corpus-wide template-line
-    // strip (minDf 5), the Gopher 2-gram repetition gate (> 0.08),
-    // SemDeDup semantic dedup over the embeddings table (LSH cells
-    // pinned to 32 so the index replays), DSIR target-affinity
-    // selection against the en slice, and per-source token budgets —
-    // stacked on the default normalize → gate → exact → simhash chain
-    // and run through TrainingPipeline.run itself. Since r11 the stack
-    // also includes BOTH decontamination modes against the %97 mock
-    // suite: the doc-level overlap gate (stage 4, threshold 0.8) and
-    // the exact-substring span strip (stage 4c, w = 10 — the
-    // decontaminate_substring_apply law applied INSIDE the chain, with
-    // the stripped token counts feeding DSIR and the token budgets).
-    // Since r13 the stack also includes stage 3c, end-to-end MEDIA
-    // dedup (the media_dedup_e2e composition wired into the one-call
-    // pipeline): every %10 doc carries a genuine WAV of its waveform
-    // law, every %40 doc's recording is re-uploaded byte-identically
-    // under doc_id+3, and every %30 doc's recording reappears as a
-    // mid-stream extract (64 samples in) under doc_id+5 — so docs
-    // id+3 / id+5 (when they exist in the corpus) lose the cluster
-    // election to the lower-id holder of the content and are dropped;
-    // docs without media are untouched. Since r14 stage 3c also runs
-    // the IMAGE modality (image_dedup_e2e wired in): every %10=1 doc
-    // carries a genuine still of the quadratic pixel law, every %40=1
-    // doc's image is re-uploaded byte-identically under doc_id+7, and
-    // every %30=1 doc's image reappears as a lossless BMP re-encode
-    // (byte-distinct, pixel-identical) under doc_id+9 — docs id+7 /
-    // id+9 lose the image cluster election and are dropped too.
-    // pipeline_e2e proves the default chain composes; THIS row proves
-    // the optional stages compose with it and each other (stage order,
-    // frame handoffs, carried n_toks) — any drift hash-mismatches here
-    // even though every stage is green standalone.
-    "pipeline_full" -> ((s, dir) => {
-      import graft.multimodal.Multimodal
-      val d = docs(s, dir)
-      val wavs = Multimodal.fabricateAudio(d.filter(col("doc_id") % 10 === 0))
-        .unionByName(Multimodal.fabricateAudio(
-          d.filter(col("doc_id") % 40 === 0), idOffset = 3))
-        .unionByName(Multimodal.fabricateAudio(
-          d.filter(col("doc_id") % 30 === 0), idOffset = 5, startFrame = 64))
-      val stills = Multimodal.fabricateStillImages(d.filter(col("doc_id") % 10 === 1))
-        .unionByName(Multimodal.fabricateStillImages(
-          d.filter(col("doc_id") % 40 === 1), idOffset = 7))
-        .unionByName(Multimodal.fabricateStillImages(
-          d.filter(col("doc_id") % 30 === 1), idOffset = 9, fmt = "bmp"))
-      val ids = col("doc_id").cast("string")
-      val esc = regexp_replace(regexp_replace(regexp_replace(col("text"),
-        "&", "&amp;"), "<", "&lt;"), ">", "&gt;")
-      val page = concat(
-        lit("<html><head><title>Doc "), ids, lit(" - "), col("source"),
-        lit("</title><style>p{margin:0}</style></head><body><script>var d="),
-        ids, lit(";</script><h1>Doc "), ids, lit("</h1><p>"), esc,
-        lit("</p><div class=\"nav\"><a href=\"/s/1\">more from "),
-        col("source"),
-        lit("</a>&nbsp;&amp; <a href=\"/a\">archive</a></div>" +
-          "<!-- footer --></body></html>"))
-      val (packed, _) = graft.jobs.TrainingPipeline.run(s, dir,
-        input = Some(d.select(col("doc_id"), col("source"), page.as("text"))),
-        ingestHtml = true,
-        templateMinDf = Some(5L),
-        maxRepetition = Some(0.08),
-        // 0.38, not the standalone lane's 0.3: on this fixture 0.3
-        // collapses nearly everything into one giant semantic
-        // component (semantic_dedup keeps 20 of 500 — its documented
-        // behavior), which would starve every later stage; 0.38 keeps
-        // a real population so the DSIR mean and the token budgets
-        // both actually bind
-        semanticThreshold = 0.38,
-        embeddings = Some(Tables(s, dir, "embeddings")
-          .select(col("vec_id").as("doc_id"), col("embedding"))),
-        semanticCells = 32,
-        audioMedia = Some(wavs),
-        imageMedia = Some(stills),
-        evalDocs = Some(d.filter(col("doc_id") % 97 === 0)
-          .select(col("doc_id"), col("text"))),
-        decontamSubstringW = Some(10),
-        dsirTarget = Some(d.filter(col("lang") === "en").select(col("text"))),
-        tokenBudgets = Map("src0" -> 400L, "src1" -> 200L),
-        budgetShards = 2,
-        normalize = true, report = false)
-      packed.select(col("source"), col("shard").cast("long").as("shard"),
-        col("pack_id").cast("long").as("pack_id"),
-        col("n_docs").cast("long").as("n_units"),
-        col("tok_sum").cast("long").as("tok_sum"))
-    }),
+    // every optional stage at once ([[pipelineFull]])
+    "pipeline_full" -> ((s, dir) => packRows(pipelineFull(s, dir)._1)),
 
     // THE DAILY-CRAWL composition: yesterday's corpus + a CDC change
     // stream → Cdc.applyChanges (the MERGE INTO) builds today's corpus,
@@ -167,14 +176,10 @@ object PipelineQueries extends QueryModule {
       val today = graft.operators.Cdc.applyChanges(yesterday,
         inserts.unionByName(updates).unionByName(deletes),
         "doc_id", "seq", "op")
-      val (packed, _) = graft.jobs.TrainingPipeline.run(s, dir,
+      packRows(graft.jobs.TrainingPipeline.run(s, dir,
         input = Some(today),
         previousSnapshot = Some(yesterday.select(col("doc_id"), col("text"))),
-        normalize = true, report = false)
-      packed.select(col("source"), col("shard").cast("long").as("shard"),
-        col("pack_id").cast("long").as("pack_id"),
-        col("n_docs").cast("long").as("n_units"),
-        col("tok_sum").cast("long").as("tok_sum"))
+        normalize = true)._1)
     }),
 
     // scrub-and-count: redact entity-ish terms, report per-doc

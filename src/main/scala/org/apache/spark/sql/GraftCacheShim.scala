@@ -14,18 +14,21 @@ import org.apache.spark.sql.execution.SQLExecution
   * only, hence this shim.
   */
 object GraftCacheShim {
-  /** Build `df`'s cache in one job, with the session's SQL confs
-    * propagated to the executors; a no-op when `df` is not persisted
+  /** Build `df`'s cache in one job, run as an SQL action over the
+    * cached frame: the session's SQL confs reach the executors, and
+    * the `observe` metrics in `df`'s plan are complete when the build
+    * returns, as after any action. A no-op when `df` is not persisted
     * or its cache is already loaded.
     */
   def build(df: DataFrame): Unit = {
-    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    val session = ds.sparkSession
     for {
-      cached <- session.sharedState.cacheManager
-        .lookupCachedData(df.asInstanceOf[classic.Dataset[_]])
+      cached <- session.sharedState.cacheManager.lookupCachedData(ds)
       builder = cached.cachedRepresentation.cacheBuilder
       if !builder.isCachedColumnBuffersLoaded
-    } SQLExecution.withSQLConfPropagated(session) {
+    } SQLExecution.withNewExecutionId(
+        session.sessionState.executePlan(ds.logicalPlan), Some("persist build")) {
       session.sparkContext.runJob(builder.cachedColumnBuffers, (_: Iterator[CachedBatch]) => ())
     }
   }

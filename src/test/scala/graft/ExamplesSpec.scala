@@ -739,6 +739,35 @@ class ExamplesSpec extends AnyFunSuite {
     assert(rNorm == r3, s"normalize/scrub perturbed a clean corpus: $rNorm vs $r3")
   }
 
+  test("TrainingPipeline Report: the composition lanes' observed counts equal the count-job values") {
+    import graft.jobs.TrainingPipeline.Report
+    import graft.queries.PipelineQueries
+    val dir = s"${sys.props("user.home")}/testdata/sf0.001" // TESTDATA.md
+    val e2e = PipelineQueries.pipelineE2e(spark, dir)._2
+    val full = PipelineQueries.pipelineFull(spark, dir)._2
+    for (r <- Seq(e2e, full)) {
+      assert(r.productIterator.forall(_.asInstanceOf[Long] >= 0), s"unfilled count: $r")
+      // the document stages only ever drop docs
+      val docs = Seq(r.input, r.afterFilter, r.afterExact, r.afterNearDup,
+        r.afterSemantic, r.afterMedia, r.afterDecontam, r.afterSubstring, r.afterDsir)
+      assert(docs.zip(docs.tail).forall { case (a, b) => a >= b },
+        s"a stage count grew along the chain: $r")
+    }
+    // Taken with the one-count-job-per-stage Report this replaced
+    // (commit 82ff00a, `report = true`): the same two compositions at
+    // sf0.001 on local[4], each Report printed as run returned it.
+    assert(e2e == Report(500, 500, 500, 480, 480, 480, 474, 474, 474, 472, 660, 130),
+      s"pipeline_e2e: $e2e")
+    assert(full == Report(500, 485, 485, 471, 373, 328, 321, 321, 167, 157, 289, 70),
+      s"pipeline_full: $full")
+    // a gate that empties the corpus behind the repetition gate's
+    // persisted frame: the input count comes from the persist build,
+    // since no later job scans the empty cache
+    val (_, gone) = graft.jobs.TrainingPipeline.run(spark, dir, lang = "en",
+      minTokens = 5, minQuality = Some(100.0), maxRepetition = Some(0.05))
+    assert(gone == Report(500, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0), s"emptied run: $gone")
+  }
+
   test("DistSum partitions, computes distributed, and resumes from gaps") {
     import graft.jobs.DistSum
     import graft.jobs.DistSum.{Progression, Summation}

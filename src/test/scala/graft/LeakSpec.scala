@@ -90,7 +90,7 @@ class LeakSpec extends AnyFunSuite {
       decontamSubstringW = Some(10),
       dsirTarget = Some(d.select(boom(col("text")).as("text"))),
       tokenBudgets = Map("src0" -> 400L), budgetShards = 2,
-      normalize = true, report = false))
+      normalize = true))
   }
 
   test("media_dedup_e2e in a scope releases everything, on success and on failure") {

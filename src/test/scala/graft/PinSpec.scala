@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.GraftCoreShim
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -84,14 +84,53 @@ class PinSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("an observe on a pinned or persisted frame is filled by the next SQL action over it") {
+    import scala.concurrent.Await
+    import scala.concurrent.duration._
+    // bounded: an observation nothing fills fails here instead of hanging
+    def rows(o: Observation): Long = Await.result(o.future, 60.seconds).getLong(0)
+    def counted(df: DataFrame): (DataFrame, Observation) = {
+      val o = Observation()
+      (df.observe(o, count(lit(1)).as("n")), o)
+    }
+    val base = spark.range(0, 100, 1, 4).select(col("id").as("doc_id"))
+    Pins() { pins =>
+      // the pin's own job
+      val (a, oa) = counted(base)
+      pins.pin(a.repartition(col("doc_id")))
+      assert(rows(oa) == 100)
+      // a frame the pin's self-join reads twice counts once
+      val (b, ob) = counted(base)
+      pins.pin(b.join(b.withColumnRenamed("doc_id", "x"), col("doc_id") === col("x")))
+      assert(rows(ob) == 100)
+      // the persist build, with the observed node below the persisted root
+      val (c, oc) = counted(base)
+      val kept = pins.persist(c.filter(col("doc_id") % 2 === 0).withColumn("y", col("doc_id") * 2))
+      assert(rows(oc) == 100)
+      // a persisted frame that comes out empty: a later pin over it
+      // never scans the cache (AQE drops the join), so only the build
+      // can count it
+      val (d, od) = counted(base)
+      val none = pins.persist(d.filter(col("doc_id") < 0))
+      pins.pin(none.join(kept, Seq("doc_id"), "left_anti"))
+      assert(rows(od) == 100)
+    }
+    // a persist outside any scope, read by a later pin
+    val (e, oe) = counted(base)
+    val p = Pins.persist(e.withColumn("z", col("doc_id") + 1))
+    Pins() { pins => pins.pin(p.filter(col("z") > 10)) }
+    assert(rows(oe) == 100)
+    p.unpersist(true)
+  }
+
   test("spark.graft.pipeline.pin=reliable lands stage pins in pinDir and preserves output") {
     val dir = java.nio.file.Files.createTempDirectory("graft-pin-spec").toString
     val in = Tables(spark, "/root/testdata/sf0.001", "documents")
       .limit(120).select(col("doc_id"), col("source"), col("text"))
-    def packs(): Long = {
-      val (packed, _) = jobs.TrainingPipeline.run(spark, "/root/testdata/sf0.001",
-        input = Some(in), normalize = true, report = false)
-      packed.count()
+    def packs(): (Long, jobs.TrainingPipeline.Report) = {
+      val (packed, report) = jobs.TrainingPipeline.run(spark,
+        s"${sys.props("user.home")}/testdata/sf0.001", input = Some(in), normalize = true)
+      (packed.count(), report)
     }
     val localPacks = packs()
     spark.conf.set("spark.graft.pipeline.pin", "reliable")
@@ -99,7 +138,7 @@ class PinSpec extends AnyFunSuite {
     try {
       val reliablePacks = packs()
       assert(reliablePacks == localPacks,
-        s"reliable pins changed the output: $reliablePacks vs $localPacks packs")
+        s"reliable pins changed the output or its counts: $reliablePacks vs $localPacks")
       val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(java.nio.file.Files.isRegularFile(_)).count()
       assert(files > 0, "reliable mode must write checkpoint files under the pin dir")
