@@ -35,9 +35,10 @@ object GraftSession {
       // (video_dedup_e2e 7.3-8.0 -> 4.8-4.9 s), OPTIMIZATION_r14.md.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       // Spark's codegen cache maps generated source text to its compiled
-      // class, one entry per distinct body, per JVM. A cold
-      // TrainingPipeline pass fills about 240 entries, and the full
-      // Verify/Bench suite several times that, so Spark's default of 100
+      // class, one entry per distinct body, per JVM. A cold 1,000-doc
+      // TrainingPipeline pass with every optional stage fills about 200
+      // entries (its small pins run interpreted and add none), and the
+      // full Verify/Bench suite several times that, so Spark's default of 100
       // would evict classes a later stage or lane needs again. A janino
       // compile is tens of ms of single-threaded work that every other
       // task of the stage waits on (the cache's per-key lock). 4096

@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.{GraftCoreShim, SparkContext}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.GraftCodegenShim
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Layer attribution of one lane sample: `LaneMetrics.start(sc)` before
@@ -30,12 +31,15 @@ final class LaneMetrics private (sc: SparkContext) {
   // ends in an in-memory cache (storage level set, named by its SQL
   // plan rather than an RDD class)
   private val builds = mutable.ArrayBuffer[Int]()
+  // jobs submitted with generated code off (a pin below Pins.InterpretBytes)
+  private var interpreted = 0
 
   private val listener = new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       jobs(e.jobId) = Job(e.time, Option(e.properties)
         .flatMap(p => Option(p.getProperty("spark.job.description")))
         .getOrElse(""))
+      if (GraftCodegenShim.interpretedJob(e.properties)) interpreted += 1
       for {
         s <- e.stageInfos.maxByOption(_.stageId)
         r <- s.rddInfos.headOption
@@ -70,8 +74,8 @@ final class LaneMetrics private (sc: SparkContext) {
     sc.removeSparkListener(listener)
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
     val compileS = (CodeGenerator.compileTime - compileNs0) / 1e9
-    val (js, ss, bs) = listener.synchronized(
-      (jobs.values.toVector, stages.toVector, builds.toVector))
+    val (js, ss, bs, nInterpreted) = listener.synchronized(
+      (jobs.values.toVector, stages.toVector, builds.toVector, interpreted))
     val ended = js.filter(_.t1 > 0)
     // union of [t0, t1] job windows = time with at least one job running
     var covered = 0L
@@ -86,7 +90,7 @@ final class LaneMetrics private (sc: SparkContext) {
       tasks = ss.map(_.tasks).sum, taskS = ss.map(_.taskMs).sum / 1000.0,
       cpuS = ss.map(_.cpuMs).sum / 1000.0, gcS = ss.map(_.gcMs).sum / 1000.0,
       jobWindowS = covered / 1000.0, driverGapS = (wallMs - covered) / 1000,
-      compiles = compiles, compileS = compileS,
+      compiles = compiles, compileS = compileS, interpretedJobs = nInterpreted,
       cacheBuilds = bs.size, caches = bs.distinct.size,
       unlabelledS = ended.filter(_.desc.isEmpty).map(j => j.t1 - j.t0).sum / 1000.0,
       // wall per description = sum of its job windows
@@ -112,12 +116,13 @@ object LaneMetrics {
   final case class StageGroup(name: String, n: Int, tasks: Int, taskS: Double)
 
   /** One sample's record. `unlabelledS` is the summed window of jobs
-    * that ran with no job description.
+    * that ran with no job description; `interpretedJobs` counts the jobs
+    * submitted with `spark.sql.codegen.factoryMode=NO_CODEGEN`.
     */
   final case class Layers(wallS: Double, jobs: Int, stages: Int, tasks: Int,
       taskS: Double, cpuS: Double, gcS: Double, jobWindowS: Double,
-      driverGapS: Double, compiles: Long, compileS: Double, cacheBuilds: Int,
-      caches: Int, unlabelledS: Double, topJobs: Seq[JobGroup],
+      driverGapS: Double, compiles: Long, compileS: Double, interpretedJobs: Int,
+      cacheBuilds: Int, caches: Int, unlabelledS: Double, topJobs: Seq[JobGroup],
       topStages: Seq[StageGroup]) {
     /** One JSON object, as it goes in the bench record's `layers`. */
     def json: String = {
@@ -128,7 +133,7 @@ object LaneMetrics {
       s"""{"wall_s":${f3(wallS)},"jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
         s""""task_s":${f3(taskS)},"cpu_s":${f3(cpuS)},"gc_s":${f3(gcS)},""" +
         s""""job_window_s":${f3(jobWindowS)},"driver_gap_s":${f3(driverGapS)},""" +
-        s""""compiles":$compiles,"compile_s":${f3(compileS)},""" +
+        s""""compiles":$compiles,"compile_s":${f3(compileS)},"interpreted_jobs":$interpretedJobs,""" +
         s""""cache_builds":$cacheBuilds,"caches":$caches,"unlabelled_s":${f3(unlabelledS)},""" +
         s""""top_jobs":${topJobs.map(g =>
           s"""{"desc":${str(g.desc)},"n":${g.n},"wall_s":${f3(g.wallS)}}""")

@@ -1,6 +1,7 @@
 package org.apache.spark
 
 import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
+import org.apache.spark.storage.RDDBlockId
 
 /** End-of-life release of persisted RDD blocks through the
   * ContextCleaner's own path (`sc.unpersistRDD`, `private[spark]`).
@@ -30,4 +31,14 @@ object GraftCoreShim {
     */
   def deleteOnExit(dir: java.io.File): Unit =
     util.ShutdownHookManager.registerShutdownDeleteDir(dir)
+
+  /** Bytes each RDD holds in the block managers (memory plus disk),
+    * keyed by RDD id; an RDD with no stored block is absent. One ask of
+    * the block manager master, which copies its block table, so it is
+    * exact as of the call, unlike the status store, which lags.
+    */
+  def storedRddBytes(sc: SparkContext): Map[Int, Long] =
+    sc.env.blockManager.master.getStorageStatus.iterator.flatMap(_.rddBlocks)
+      .collect { case (RDDBlockId(id, _), b) => (id, b.memSize + b.diskSize) }
+      .toSeq.groupMapReduce(_._1)(_._2)(_ + _)
 }

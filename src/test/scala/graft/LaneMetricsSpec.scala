@@ -52,4 +52,19 @@ class LaneMetricsSpec extends AnyFunSuite {
       s"the same work counted differently: A ${(a.jobs, a.stages, a.tasks)}, B ${(b.jobs, b.stages, b.tasks)}")
     assert(b.topJobs.find(_.desc == "persist build").map(_.n).contains(1))
   }
+
+  test("a sample counts the jobs of an interpreted pin, not those of a compiled action") {
+    val s = spark
+    import s.implicits._
+    val small = (0 until 100).map(i => (i.toLong, i % 3)).toDF("id", "k")
+    val m = LaneMetrics.start(spark.sparkContext)
+    Pins() { pins =>
+      pins.pin(small.groupBy("k").count())
+      pins.pin(small.groupBy("k").count(), local = false, interpretBytes = 0L)
+    }
+    val l = m.stop()
+    // a pin over a shuffle runs its map stage and its count as two jobs
+    assert(l.interpretedJobs > 0 && l.interpretedJobs * 2 == l.jobs,
+      s"${l.interpretedJobs} of ${l.jobs} jobs counted as interpreted")
+  }
 }

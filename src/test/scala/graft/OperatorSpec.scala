@@ -2517,4 +2517,43 @@ class OperatorSpec extends AnyFunSuite {
       assert(ham <= 16, s"hamming($a,$b)=$ham for jaccard>=0.8 pair")
     }
   }
+
+  test("every injected function returns the same rows interpreted as compiled, nulls included") {
+    import org.apache.spark.sql.{GraftCodegenShim, Row}
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("a", ArrayType(DoubleType)),
+      StructField("f", ArrayType(FloatType)), StructField("l", ArrayType(LongType)),
+      StructField("s", StringType), StructField("bin", BinaryType),
+      StructField("x", DoubleType)))
+    val rows = Seq(
+      Row(1L, Seq(0.5, -1.0, 2.0), Seq(1.5f, 0f, -2f), Seq(3L, 4L),
+        "The cat sat on the mat, the cat.", Array.tabulate[Byte](64)(i => (i * 37).toByte), 2.5),
+      Row(2L, Seq(1.0, 1.0), Seq(0.25f, 4f), Seq(-7L, 9L),
+        "Ã©tÃ© cafÃ© na\u0301ive", Array[Byte](1, 2, 3), 0.0),
+      Row(3L, null, null, null, null, null, null),
+      Row(4L, Seq(2.0, 2.0), Seq(2f, 2f), Seq(5L, 5L), "", Array.emptyByteArray, -1.0))
+    // an RDD-backed frame: the optimizer cannot fold the projection into
+    // a local relation, so both runs evaluate it in tasks
+    val in = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    def q: DataFrame = in.selectExpr("id",
+      "dot_product(a, a)", "dot_product(f, a)",
+      "nearest_cells(a, array(array(0d, 1d), array(1d, 0d), array(2d, 2d)), 2)",
+      "nearest_cell_ids(f, array(array(0d, 1d), array(1d, 0d)), array(10L, 20L), 1)",
+      "nearest_centroid_l2(l, array(array(0L, 0L), array(5L, 5L)))",
+      "nfc_normalize(s)", "word_tokens(s)", "word_shingles(s, 2)",
+      "fix_mojibake(s)", "deflated_size(s)", "ahash64(bin)", "byte_hist(bin)",
+      "multi_match_counts(s, array('the', 'cat'))", "ieee_ln(x)")
+    def fused(df: DataFrame): Boolean =
+      PlanSpec.flat(df.queryExecution.executedPlan).exists(_.isInstanceOf[WholeStageCodegenExec])
+    val compiled = q
+    val want = compiled.collect().sortBy(_.getLong(0))
+    val interpreted = q
+    val got = GraftCodegenShim.interpreted(interpreted)(interpreted.collect()).sortBy(_.getLong(0))
+    assert(want.length == rows.size)
+    assert(got.toSeq == want.toSeq, s"interpreted ${got.mkString("; ")}\ncompiled ${want.mkString("; ")}")
+    assert(fused(compiled) && !fused(interpreted),
+      "the two runs did not take the compiled and interpreted paths")
+  }
 }

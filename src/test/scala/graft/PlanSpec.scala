@@ -841,29 +841,6 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("SortMergeJoin"), s"vocab-sized join shuffled:\n$p")
   }
 
-  /** The final executed plans of every SQL action `body` runs, eager
-    * pins included, flattened through AQE stages and reused exchanges.
-    */
-  private def actionPlans(body: => Unit): Seq[Seq[SparkPlan]] = {
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val l = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(l)
-    try { body; org.apache.spark.GraftCoreShim.drainListenerBus(spark.sparkContext) }
-    finally spark.listenerManager.unregister(l)
-    def flat(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => flat(a.executedPlan)
-      case q: QueryStageExec        => flat(q.plan)
-      case r: ReusedExchangeExec    => flat(r.child)
-      case _                        => p +: p.children.flatMap(flat)
-    }
-    plans.asScala.toSeq.map(flat)
-  }
-
   /** The key census under a join side: a count-only aggregate, reached
     * through unary nodes with a filter on its count on the way.
     */
@@ -923,7 +900,7 @@ class PlanSpec extends AnyFunSuite {
         "embedding", threshold = 0.99, nCells = 16, rep = 2, tables = 3,
         maxBucket = 10).collect()))
     for ((name, run) <- families) {
-      val plans = actionPlans(run())
+      val plans = PlanSpec.actionPlans(spark)(run()).map(_._2)
       spark.catalog.clearCache()
       val joins = plans.flatten.collect { case j: BaseJoinExec => j }
       val shown = plans.map(_.head.treeString).mkString("\n")
@@ -950,5 +927,32 @@ class PlanSpec extends AnyFunSuite {
       assert(!joins.exists(j => j.isInstanceOf[BroadcastNestedLoopJoinExec] ||
         j.isInstanceOf[CartesianProductExec]), s"$name: a non-equi join:\n$shown")
     }
+  }
+}
+
+object PlanSpec {
+  /** Every SQL action `body` runs, eager pins included, as (action
+    * name, final executed plan flattened through AQE stages and reused
+    * exchanges).
+    */
+  def actionPlans(spark: SparkSession)(body: => Unit): Seq[(String, Seq[SparkPlan])] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add((f, qe.executedPlan))
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try { body; org.apache.spark.GraftCoreShim.drainListenerBus(spark.sparkContext) }
+    finally spark.listenerManager.unregister(l)
+    plans.asScala.toSeq.map { case (f, p) => (f, flat(p)) }
+  }
+
+  def flat(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => flat(a.executedPlan)
+    case q: QueryStageExec        => flat(q.plan)
+    case r: ReusedExchangeExec    => flat(r.child)
+    case _                        => p +: p.children.flatMap(flat)
   }
 }

@@ -2,7 +2,8 @@
 # A/B config experiment and layer attribution: run the Bench protocol
 # over a lane subset with an optional SPARK_GRAFT_EXTRA_CONF overlay and
 # print, per lane, the median next to that median sample's jobs, driver
-# gap, codegen compiles and cache builds (from the record's `layers`).
+# gap, codegen compiles, interpreted jobs and cache builds (from the
+# record's `layers`).
 # Usage: tools/ab.sh <tag> "<lanes,csv>" ["k=v;k2=v2"]
 # SPARK_GRAFT_SF_DIR and SPARK_GRAFT_CPUS pass through (defaults: Bench's
 # sf0.1 fixture dir, and every core via tools/run.sh). The full record is
@@ -31,7 +32,8 @@ for k, v in sorted(qs.items()):
     i = min(range(len(ts)), key=lambda j: abs(ts[j] - v))
     l = d.get("layers", {}).get(k, [])
     attr = (f" jobs={l[i]['jobs']} driver_gap={l[i]['driver_gap_s']:.2f}s"
-            f" compiles={l[i]['compiles']} cache_builds={l[i]['cache_builds']}"
+            f" compiles={l[i]['compiles']} interpreted_jobs={l[i]['interpreted_jobs']}"
+            f" cache_builds={l[i]['cache_builds']}"
             if i < len(l) else "")
     print(f"[ab {tag}] {k}={v:.2f}s{attr}")
 EOF
