@@ -1,69 +1,46 @@
 package graft
 
-/** Per-round benchmark harness. One SHORT JSON line to stdout; the
-  * FULL record goes to `SPARK_GRAFT_BENCH_OUT` (default
-  * `bench_out.json`), checkpointed incrementally after every lane and
-  * probe so a wall-clock kill still leaves a parsed partial record.
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+
+/** The lane timing and attribution harness: one run in one JVM. One
+  * short JSON line goes to stdout; the full record goes to
+  * `SPARK_GRAFT_BENCH_OUT` (default `bench_out_c<N>.json`, N the core
+  * count), rewritten atomically after every probe and lane so a killed
+  * run still leaves a parsed partial record.
   *
-  * Methodology (the round-2 verdict's top item — single-shot timings
-  * moved 3-10× between identical runs):
-  *  - N passes over the whole suite round-robin (default 3,
-  *    SPARK_GRAFT_BENCH_ITERS): a query's N samples are separated in
-  *    time, so a disk-contention spike hits one sample, not all of them;
-  *    the reported per-query number is the MEDIAN, with min/max spread
-  *    alongside. The THIRD pass is adaptive (the r12 driver-budget
-  *    timeout's first prong): a lane whose first two samples are both
-  *    sub-second AND within 30% of each other is floor-dominated and
-  *    stable — its third sample buys nothing, so it is skipped (the
-  *    two-sample median is their mean). Slow or noisy lanes keep all
-  *    N samples.
-  *  - `spark.catalog.clearCache()` before every measurement: no query's
-  *    persisted intermediates (dedup's shared shingle table) perturb a
-  *    later query's sample.
-  *  - An untimed warmup pass (JIT + codegen) precedes the loop.
-  *  - A query that throws reports -1 (NOT its elapsed time) and lands in
-  *    `failed` — a crash can't masquerade as a fast pass.
-  *  - noop sink computes every declared column (count() would let
-  *    Catalyst prune map-shaped work to nothing).
-  *  - Every timed sample runs under [[LaneMetrics]]: its jobs, stages,
-  *    tasks, task/CPU/GC time, driver gap, codegen compiles, cache
-  *    builds and top job descriptions / stage names go in the lane's
-  *    `layers` array (`retry_layers` for retry samples), one entry per
-  *    sample in `samples` order. They stay out of the stdout line.
-  *  - `SPARK_GRAFT_LANES=a,b` times only the named lanes (pass 1 is the
-  *    cold sample, later passes the warm ones) and skips the probes,
-  *    the harness metrics and terasort_sf1.
+  * The run, in order:
+  *  - An untimed warm-up (JIT and codegen).
+  *  - The scale probes (see `scaleProbe` in main), on the freshest
+  *    heap the run has.
+  *  - N round-robin passes over the lanes (default 3,
+  *    SPARK_GRAFT_BENCH_ITERS): a lane's samples are separated in time,
+  *    so a disk or co-tenant spike hits one of them, not all. A lane
+  *    reports the MEDIAN of its samples. The third pass skips a lane
+  *    whose first two samples are both sub-second and within 30% of
+  *    each other: it is floor-bound and stable, so a third sample adds
+  *    nothing, and its median is the mean of the two.
+  *  - One pass at the sf0.01 sibling of an sf0.1 dir (`queries_small`),
+  *    which separates a lane's fixed overhead from its data cost.
+  *  - On the full run only: the reference's harness metrics, a
+  *    direct-I/O device probe and, at an sf0.1 dir, terasort_sf1.
   *
-  * BUDGET CONTRACT (the r12 lead item — the driver's own re-run hit
-  * its wall-clock limit, rc 124, and by this repo's standard a record
-  * the driver cannot finish does not exist): the whole run fits inside
-  * SPARK_GRAFT_BENCH_BUDGET_SEC (default 2700 s — see the budgetSec
-  * comment in main for the sizing). Optional stages
-  * degrade in priority order as the budget drains — third-pass
-  * samples, quiet-window retries, the sf-small pass, then terasort_sf1
-  * — each skip recorded under "skipped" in the emitted record, and the
-  * forked probe child gets exactly the remaining budget as its
-  * timeout, with its incrementally-checkpointed partial entries
-  * spliced in even when it is killed. The stdout line is SHORT
-  * (< ~1.8 KB): the driver's capture keeps only a ~2000-char tail, so
-  * r03–r12's full compact line never parsed (`"parsed": null` even at
-  * rc 0); headline lanes + every scale exponent + the harness metrics
-  * fit the tail, and the full per-lane record lives in the file copy.
+  * Every lane sample starts after `spark.catalog.clearCache()`, so no
+  * lane's persisted intermediates perturb a later sample, and writes to
+  * a noop sink that computes every declared column (count() would let
+  * Catalyst prune map-shaped work to nothing). A lane that throws
+  * reports -1, not its elapsed time, and lands in `failed`. Every timed
+  * sample runs under [[LaneMetrics]]: its jobs, stages, tasks,
+  * task/CPU/GC time, driver gap, codegen compiles, cache builds and top
+  * job descriptions / stage names go in the lane's `layers` array, one
+  * entry per sample in `samples` order, and stay out of the stdout line.
   *
-  * RECORD FORMAT NOTE (the emitted JSON contract): per-lane `samples`
-  * / `loads` / `layers` arrays are RAGGED relative to the `iterations`
-  * field — a lane the adaptive third pass skipped carries 2 entries at
-  * iterations 3, and a budget-truncated run carries fewer. Consumers
-  * must size per-pass work by ARRAY LENGTH, never by zipping against
-  * `iterations`; retry samples live under their own `retry_samples` /
-  * `retry_loads` keys so the main arrays stay one-entry-per-pass-run.
+  * `SPARK_GRAFT_LANES` selects what runs ([[select]]); unset, the run is
+  * the full run.
   *
-  * Alongside the query suite, the reference's benchmark harnesses
-  * (BASELINE.md metrics): MRBench small-job latency and TestDFSIO
-  * sequential write/read MB/s (graft.jobs.LoadGen), plus a once-per-run
-  * direct-I/O device probe (`device_mbps_write`/`device_mbps_read`) so
-  * disk-window swings in terasort_sf1 are mechanically adjudicable
-  * against the device's delivered bandwidth that day.
+  * The per-lane `samples` / `loads` / `layers` arrays are RAGGED
+  * relative to the `iterations` field: a lane the adaptive third pass
+  * skipped carries 2 entries at iterations 3. Consumers size per-pass
+  * work by array length, never by `iterations`.
   */
 object Bench {
 
@@ -78,27 +55,53 @@ object Bench {
   private def fmt(d: Double, places: Int): String =
     String.format(java.util.Locale.ROOT, s"%.${places}f", Double.box(d))
 
-  /** Every scale-probe label, in run order (heavy compositions LAST —
-    * a budget-killed probe child loses the tail, and the graded
-    * serving-shape probes must run on the coldest heap). Shared by the
-    * probe pass, the fork-splice regex, the summary line's exponent
-    * extraction, and the BenchContractSpec tail-budget test.
+  /** Every scale-probe label, in run order: the two serving-shape
+    * probes first, the text family next, the heavy compositions last.
+    * A probe's record key is `<label>_scale`.
     */
-  private[graft] val allProbeLabels = Seq("dedup", "kmeans", "dsir",
-    "paragraph", "substring", "semantic", "streaming_funnel", "pipeline",
-    "pca", "knn_ivf", "bitext_ivf", "media_dedup", "pipeline_full",
+  private[graft] val allProbeLabels = Seq("knn_ivf", "bitext_ivf", "dedup",
+    "kmeans", "dsir", "paragraph", "substring", "semantic",
+    "streaming_funnel", "pipeline", "pca", "media_dedup", "pipeline_full",
     "pipeline_full_media")
 
   /** The headline lanes of the stdout summary line — one per flagship
     * shape, NOT the full suite (the full per-lane record lives in the
-    * checkpointed file). Adding a lane here costs ~20 bytes of the
-    * driver's ~2000-char tail; BenchContractSpec pins the total.
+    * file). Each costs about 20 bytes of the line's 1.8 KB bound.
     */
   private[graft] val headlineLanes = Seq("wordcount", "join_inner",
     "window_agg", "topk", "total_sort", "terasort", "dedup_minhash",
     "substring_dedup", "semantic_dedup", "knn_join", "ann_ivf_topk",
     "media_dedup_e2e", "video_dedup_e2e", "image_dedup_e2e",
     "pipeline_e2e", "pipeline_full", "streaming_sessionize")
+
+  /** What one run times: lane names and probe labels, each in run
+    * order. `full` adds the harness metrics, the device probe and
+    * terasort_sf1.
+    */
+  private[graft] final case class Selection(lanes: Seq[String],
+      probes: Seq[String], full: Boolean)
+
+  /** Parse a `SPARK_GRAFT_LANES` value. Unset selects every lane and
+    * probe: the full run. Set, it is a comma list in which
+    * `<label>_scale` (a probe's record key) names a probe and any other
+    * entry a lane; no lane name ends in `_scale`. An entry that names
+    * neither throws, so a mistyped name fails before a session is built
+    * instead of timing nothing.
+    */
+  private[graft] def select(spec: Option[String], lanes: Seq[String],
+      probes: Seq[String]): Selection = spec match {
+    case None => Selection(lanes, probes, full = true)
+    case Some(s) =>
+      val want = s.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val keys = probes.map(_ + "_scale")
+      val unknown = want -- lanes -- keys
+      if (want.isEmpty || unknown.nonEmpty)
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_LANES: unknown entries [${unknown.toSeq.sorted.mkString(",")}]" +
+            s" in '$s'; lanes: ${lanes.mkString(",")}; probes: ${keys.mkString(",")}")
+      Selection(lanes.filter(want), probes.filter(p => want(p + "_scale")),
+        full = false)
+  }
 
   /** The harness-metric fields shared by the file record and the
     * stdout summary line (object-level so BenchContractSpec sizes the
@@ -110,37 +113,29 @@ object Bench {
       teraSf1: Double): String =
     s""","mrbench_avg_latency_sec":${fmt(mrAvg, 3)},"dfsio_write_mbps":${fmt(wMbps, 1)},"dfsio_read_mbps":${fmt(rMbps, 1)},"nnbench_create_ops_sec":${fmt(nnOps, 1)},"filebench_seq_read_mbps":${fmt(fbSeqRead, 1)},"slive_ops_sec":${fmt(sliveOps, 1)},"bigmap_shuffle_mbps":${fmt(bmoMbps, 1)},"threadedmap_sort_mbps":${fmt(tmbMbps, 1)},"device_mbps_write":${fmt(devW, 1)},"device_mbps_read":${fmt(devR, 1)},"terasort_sf1_sec":${fmt(teraSf1, 1)}"""
 
-  /** Render the one-line stdout summary. TAIL CONTRACT: the driver
-    * captures only ~2000 trailing characters of output, so this line
-    * must stay under ~1.8 KB FULLY POPULATED (every headline lane
-    * timed, every probe exponent present, all harness metrics) or the
-    * round's record silently stops parsing — which is exactly what
-    * happened for rounds 3–12 with the old full-suite compact line.
-    * BenchContractSpec renders the worst-case line and asserts the
-    * budget plus the presence of every exponent key.
+  /** Render the one-line stdout summary: the headline lanes, every
+    * probe exponent and the harness metrics, with the full record's
+    * path under `full_record`. It stays under 1.8 KB FULLY POPULATED so
+    * a log tail keeps it whole; BenchContractSpec renders the worst case
+    * and pins the bound plus the presence of every exponent key.
     */
   private[graft] def summaryLine(total: Double, sf: String, iters: Int,
-      lanes: Int, failed: Seq[String], skippedJson: String,
-      elapsedSec: Double, headlineVals: Seq[(String, String)],
-      exponents: Seq[(String, String)], pollutedJson: String,
+      lanes: Int, failed: Seq[String], elapsedSec: Double,
+      headlineVals: Seq[(String, String)], exponents: Seq[(String, String)],
       harnessJson: String, fullRecord: String): String = {
     def jm(m: Iterable[(String, String)]): String =
       m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","sf":"$sf","iterations":$iters,"lanes":$lanes,""" +
       s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-      s""""skipped":$skippedJson,"elapsed_sec":${fmt(elapsedSec, 1)},""" +
+      s""""elapsed_sec":${fmt(elapsedSec, 1)},""" +
       s""""queries":${jm(headlineVals)},""" +
-      s""""exponents":${jm(exponents)},"load_polluted":$pollutedJson""" +
+      s""""exponents":${jm(exponents)}""" +
       harnessJson + s""","full_record":"$fullRecord"}"""
   }
 
-  /** Default full-record file, CPU-SUFFIXED (r14 verdict note): the
-    * driver runs the bench at 32 cores and then again at 8 for the
-    * scaling block, and a shared default name meant the 8-core pass
-    * OVERWROTE the 32-core full per-lane record — only the 17 headline
-    * lanes survived in the stdout line, destroying full-suite
-    * round-over-round comparison. With the core count in the name both
-    * records coexist; SPARK_GRAFT_BENCH_OUT still overrides.
+  /** Default full-record file, suffixed with the core count so runs at
+    * two core counts keep separate records; SPARK_GRAFT_BENCH_OUT
+    * overrides.
     */
   private[graft] def defaultBenchOut(cpus: String): String =
     s"bench_out_c$cpus.json"
@@ -148,119 +143,36 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val t0All = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - t0All) / 1e9
-    // 2700 s ≈ the r11 driver run that FIT its window (2871 s incl.
-    // sbt) — conservative against the observed driver budget while
-    // leaving the probe child enough room for the two heavy
-    // composition probes; a 2400 s rehearsal run truncated the child
-    // mid-pipeline_full (every other stage + 12 of 13 exponents
-    // landed, proving the degradation path, but the graded
-    // pipeline_full exponent deserves to fit by default)
-    val budgetSec =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "2700").toDouble
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.defaultCores
     val iters = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt)
+    val sel = select(sys.env.get("SPARK_GRAFT_LANES"),
+      SparkEntry.queries.keys.toSeq.sorted, allProbeLabels)
+    val names = sel.lanes.map(n => n -> SparkEntry.queries(n))
     val spark = GraftSession.build(cpus)
     // steady-state measurement: absorb JVM/codegen warmup outside the
-    // timed loop (the first query otherwise pays ~4s of JIT)
+    // timed samples (the first query otherwise pays ~4s of JIT)
     spark.range(0, 1000000, 1, 8)
       .selectExpr("sum(id)", "count(distinct id % 100)").collect()
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
 
-    // co-tenant load per sample: the 1-minute /proc/loadavg read as the
-    // sample STARTS — the judge's contention-vs-regression separator
-    // (three close-out rounds spent canary-reading terasort to tell a
-    // loaded box from a plan change; this records the signal instead)
+    // the 1-minute /proc/loadavg as a sample starts: recorded beside
+    // the sample so a slow one on a loaded box reads as contention,
+    // not as a plan change
     def loadavg(): Double =
       try {
         val src = scala.io.Source.fromFile("/proc/loadavg")
         try src.mkString.split(" ")(0).toDouble finally src.close()
       } catch { case _: Throwable => -1.0 }
 
-    // co-tenant CPU DURING a sample, in cores: (Δ all-cpu busy jiffies
-    // − Δ this-process jiffies) / HZ / elapsed. Unlike the 1-minute
-    // loadavg — which the bench's own 32-thread bursts keep elevated
-    // for a minute after every sample — this subtracts self, so it
-    // separates a genuinely contended box from our own work. HZ is
-    // USER_HZ = 100 on every Linux the bench targets (/proc jiffy
-    // fields are defined against USER_HZ, not the kernel tick).
-    def statBusyJiffies(): Long =
-      try {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        try {
-          // cpu user nice system idle iowait irq softirq steal guest
-          // guest_nice — busy = fields 0-7 minus idle (3) and iowait
-          // (4); guest and guest_nice (8, 9) are EXCLUDED because the
-          // kernel already folds guest time into user/nice — summing
-          // them double-counts VM time and flags a quiet box as loaded
-          val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
-          f.zipWithIndex.collect {
-            case (v, i) if i < 8 && i != 3 && i != 4 => v
-          }.sum
-        } finally src.close()
-      } catch { case _: Throwable => -1L }
-    def selfJiffies(): Long =
-      try {
-        val src = scala.io.Source.fromFile("/proc/self/stat")
-        try {
-          val s = src.mkString
-          // fields after the ')' closing comm (comm may embed spaces)
-          val rest = s.substring(s.lastIndexOf(')') + 2).split(" ")
-          rest(11).toLong + rest(12).toLong // utime + stime
-        } finally src.close()
-      } catch { case _: Throwable => -1L }
-
-    // total device io_ticks (ms with I/O in flight) across physical
-    // disks — the DISK complement of the other_cores signal: a
-    // CPU-quiet neighbor can still saturate the device (observed: a
-    // run whose every probe read other_cores <= 0.5 printed knn 1.22
-    // while dfsio_write collapsed 268 -> 29 MB/s). Self and co-tenant
-    // I/O are indistinguishable at this counter, so the per-sample
-    // utilization is recorded EVIDENCE in the scale entries, never a
-    // re-sample gate.
-    def diskIoTicksMs(): Long =
-      try {
-        val src = scala.io.Source.fromFile("/proc/diskstats")
-        try src.getLines().map(_.trim.split("\\s+")).collect {
-          case f if f.length > 12 &&
-            f(2).matches("(sd[a-z]+|nvme\\d+n\\d+|vd[a-z]+|xvd[a-z]+)") =>
-            f(12).toLong
-        }.sum finally src.close()
-      } catch { case _: Throwable => -1L }
-
-    // isolation knobs: SPARK_GRAFT_SKIP_LANES=1 skips the per-lane
-    // timing loops and SPARK_GRAFT_PROBES=knn_ivf,bitext_ivf runs only
-    // the named scale probes (together they start the forked probe
-    // child); SPARK_GRAFT_LANES=a,b is lane mode (see the header)
-    val skipLanes = sys.env.get("SPARK_GRAFT_SKIP_LANES").contains("1")
-    val probeOnly = sys.env.get("SPARK_GRAFT_PROBES").map(_.split(",").toSet)
-    val laneOnly = sys.env.get("SPARK_GRAFT_LANES").map(_.split(",").toSet)
-    // the full run: every lane, then probes, harness and terasort_sf1
-    val fullRun = !skipLanes && probeOnly.isEmpty && laneOnly.isEmpty
-
-    val names =
-      if (skipLanes) Seq.empty
-      else SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (n, _) => laneOnly.forall(_.contains(n)) }
     val samples = scala.collection.mutable.LinkedHashMap(
       names.map { case (n, _) => n -> Vector.empty[Double] }: _*)
     val loads = scala.collection.mutable.LinkedHashMap(
       names.map { case (n, _) => n -> Vector.empty[Double] }: _*)
-    // retry samples live in their OWN maps (never appended to
-    // `samples`): the emitted samples/loads arrays stay exactly
-    // len == iterations-run, so consumers that zip arrays against the
-    // iteration count parse retried lanes too, and a throwing retry
-    // sample (run precisely because the box was loaded) can never
-    // poison a lane whose original samples all succeeded
     val layers = scala.collection.mutable.LinkedHashMap(
       names.map { case (n, _) => n -> Vector.empty[String] }: _*)
-    val retrySamples = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
-    val retryLoads = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
-    val retryLayers = scala.collection.mutable.LinkedHashMap[String, Vector[String]]()
-    val skippedStages = scala.collection.mutable.ArrayBuffer[String]()
-    def timeLane(name: String, fn: (org.apache.spark.sql.SparkSession, String)
-                 => org.apache.spark.sql.DataFrame,
-                 retry: Boolean = false): Unit = {
+    def timeLane(name: String,
+                 fn: (SparkSession, String) => DataFrame): Unit = {
       spark.catalog.clearCache()
       val la = loadavg()
       val metrics = LaneMetrics.start(spark.sparkContext)
@@ -268,38 +180,33 @@ object Bench {
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
         catch { case _: Throwable => false }
       val l = metrics.stop()
-      val t = if (ok) l.wallS else -1.0
-      if (retry) {
-        retrySamples(name) = retrySamples.getOrElse(name, Vector.empty) :+ t
-        retryLoads(name) = retryLoads.getOrElse(name, Vector.empty) :+ la
-        retryLayers(name) = retryLayers.getOrElse(name, Vector.empty) :+ l.json
-      } else {
-        samples(name) = samples(name) :+ t
-        loads(name) = loads(name) :+ la
-        layers(name) = layers(name) :+ l.json
-      }
+      samples(name) :+= (if (ok) l.wallS else -1.0)
+      loads(name) :+= la
+      layers(name) :+= l.json
     }
-
-    // per-lane median: a lane FAILS only on a negative ORIGINAL sample
-    // (a crash can't masquerade as a fast pass); retry samples merge in
-    // non-negative only, and the median is over the best `iters` of the
-    // merged set — a quiet retry replaces an inflated sample, a
-    // still-loaded or throwing retry changes nothing
+    // a lane FAILS on any negative sample: a crash can't masquerade as
+    // a fast pass
     def medOf(n: String): Double = {
       val ts = samples(n)
-      if (ts.isEmpty || ts.exists(_ < 0)) -1.0
-      else median((ts ++ retrySamples.getOrElse(n, Vector.empty)
-        .filter(_ >= 0)).sorted.take(iters))
+      if (ts.exists(_ < 0)) -1.0 else median(ts)
     }
 
+    // one probe's result: each side's minimum seconds, and the loadavg
+    // of every sample on each side
+    final case class ProbeResult(t1: Double, tr: Double, ratio: Int,
+                                 loads1: Seq[Double], loadsR: Seq[Double]) {
+      def exponent: Double = math.log(tr / t1) / math.log(ratio.toDouble)
+    }
+    val probeResults = scala.collection.mutable.LinkedHashMap[String, ProbeResult]()
+
     // ---- incremental record checkpointing ----------------------------
-    // the full JSON record is REWRITTEN after every lane and probe
+    // the full JSON record is REWRITTEN after every probe and lane
     // (complete fields last, "partial" dropped only at the end), so a
-    // driver wall-clock kill at any point still leaves a parsed partial
-    // record in the file instead of nothing (the r12 lead item)
+    // run killed at any point still leaves a parsed partial record
     def jm(m: Iterable[(String, String)]): String =
       m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    var scaleJsonStr = ""
+    def arr(xs: Seq[Double], places: Int): String =
+      xs.map(fmt(_, places)).mkString("[", ",", "]")
     var smallJsonStr = ""
     var mrAvg = -1.0; var wMbps = -1.0; var rMbps = -1.0; var nnOps = -1.0
     var fbSeqRead = -1.0; var sliveOps = -1.0; var bmoMbps = -1.0
@@ -307,46 +214,32 @@ object Bench {
     var devWMbps = -1.0; var devRMbps = -1.0
     def harnessJson: String = harnessJsonStr(mrAvg, wMbps, rMbps, nnOps,
       fbSeqRead, sliveOps, bmoMbps, tmbMbps, devWMbps, devRMbps, teraSf1Sec)
-    def skippedJson: String =
-      skippedStages.distinct.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def scaleJson: String = probeResults.map { case (label, p) =>
+      s""","${label}_scale":{"t1x":${fmt(p.t1, 3)},"t${p.ratio}x":${fmt(p.tr, 3)},""" +
+        s""""exponent":${fmt(p.exponent, 3)},""" +
+        s""""loads_1x":${arr(p.loads1, 1)},"loads_${p.ratio}x":${arr(p.loadsR, 1)}}"""
+    }.mkString
     def fullJson(partial: Boolean): String = {
-      // lanes with no sample yet (a partial record mid-suite, or a
-      // budget-truncated run) are OMITTED, not reported -1: "failed"
-      // means a query threw, never that the wall clock ran out first
+      // lanes with no sample yet (a partial record mid-suite) are
+      // OMITTED, not reported -1: "failed" means a lane threw
       val med = names.collect {
         case (n, _) if samples(n).nonEmpty => n -> medOf(n) }
       val failed = med.collect { case (n, v) if v < 0 => n }
       val total = med.collect { case (_, v) if v >= 0 => v }.sum
       val qs = jm(med.map { case (k, v) => k -> fmt(v, 3) })
-      val spread = jm(samples.map { case (k, ts) =>
-        k -> ts.map(t => fmt(t, 3)).mkString("[", ",", "]")
-      })
-      val loadJson = jm(loads.map { case (k, ls) =>
-        k -> ls.map(l => fmt(l, 2)).mkString("[", ",", "]")
-      })
-      def arrays(m: Iterable[(String, Vector[String])]) =
-        jm(m.map { case (k, xs) => k -> xs.mkString("[", ",", "]") })
-      val retryJson =
-        if (retrySamples.isEmpty) ""
-        else s""","retry_samples":${jm(retrySamples.map { case (k, ts) =>
-          k -> ts.map(t => fmt(t, 3)).mkString("[", ",", "]") })}""" +
-          s""","retry_loads":${jm(retryLoads.map { case (k, ls) =>
-          k -> ls.map(l => fmt(l, 2)).mkString("[", ",", "]") })}""" +
-          s""","retry_layers":${arrays(retryLayers)}"""
       val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val retriedJson = retrySamples.keys.map("\"" + _ + "\"").mkString("[", ",", "]")
-      s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","queries":$qs,"sf":"$sfDir","iterations":$iters,"failed":$failedJson,"retried":$retriedJson""" +
+      s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","queries":$qs,"sf":"$sfDir","iterations":$iters,"failed":$failedJson""" +
         (if (partial) ""","partial":true""" else "") +
-        s""","skipped":$skippedJson,"elapsed_sec":${fmt(elapsedSec, 1)}""" +
-        s""","samples":$spread,"loads":$loadJson,"layers":${arrays(layers)}""" +
-        retryJson + smallJsonStr +
-        scaleJsonStr + harnessJson + "}"
+        s""","elapsed_sec":${fmt(elapsedSec, 1)}""" +
+        s""","samples":${jm(samples.map { case (k, ts) => k -> arr(ts, 3) })}""" +
+        s""","loads":${jm(loads.map { case (k, ls) => k -> arr(ls, 2) })}""" +
+        s""","layers":${jm(layers.map { case (k, xs) => k -> xs.mkString("[", ",", "]") })}""" +
+        smallJsonStr + scaleJson + harnessJson + "}"
     }
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultBenchOut(cpus))
-    // atomic replace (temp file + ATOMIC_MOVE in the same directory):
-    // a driver kill landing mid-write must leave the PREVIOUS complete
-    // checkpoint, never an empty/torn file — a torn record is exactly
-    // the failure the per-lane checkpointing exists to prevent
+    // atomic replace (temp file + ATOMIC_MOVE in the same directory): a
+    // kill landing mid-write leaves the PREVIOUS complete checkpoint,
+    // never an empty or torn file
     def checkpoint(partial: Boolean = true): Unit =
       try {
         val dst = java.nio.file.Paths.get(out).toAbsolutePath
@@ -358,194 +251,50 @@ object Bench {
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       } catch { case _: Throwable => () }
 
-    // passes 1..iters round-robin; the third-and-later passes skip a
-    // lane that is already stable-and-floor-dominated (both samples
-    // sub-second and within 30%) and stop entirely past 55% of the
-    // budget — the budget's first casualty is the least informative
-    // sample in the suite
-    for (pass <- 1 to iters; (name, fn) <- names) {
-      val ts = samples(name)
-      val stableFast = pass > 2 && ts.length >= 2 && ts.forall(_ >= 0) &&
-        ts.max < 1.0 && (ts.max - ts.min) / math.max(ts.min, 1e-9) < 0.3
-      val overBudget = pass > 2 && elapsedSec > 0.55 * budgetSec
-      if (overBudget) { if (!skippedStages.contains("pass3_tail")) skippedStages += "pass3_tail" }
-      else if (!stableFast) { timeLane(name, fn); checkpoint() }
-    }
-    spark.catalog.clearCache()
-
-    // quiet-window retry (r11 optional item 7): co-tenant load is
-    // outside the builder's control, and one loaded sample per side is
-    // enough to drag a 3-sample median. The N lanes whose median most
-    // exceeds their own min (the min ≪ median spread IS the load
-    // signature — a plan change moves min and median together) get ONE
-    // extra sample at end-of-run; the median is then taken over the
-    // best `iters` samples, so a still-loaded retry changes nothing
-    // and a quiet one replaces the inflated sample. All samples and
-    // their loadavgs stay in the record (retry samples under their own
-    // keys, so the per-pass arrays stay zip-safe) and the retried
-    // lanes are listed under "retried". SPARK_GRAFT_RETRY_WORST
-    // sets N (default 3; 0 disables). Skipped wholesale past 60% of
-    // the budget — a retry exists to polish evidence, not to blow the
-    // driver's wall clock.
-    val retryWorst =
-      math.max(0, sys.env.getOrElse("SPARK_GRAFT_RETRY_WORST", "3").toInt)
-    if (iters >= 2 && retryWorst > 0) {
-      if (elapsedSec > 0.6 * budgetSec) skippedStages += "retry"
-      else names.filter { case (n, _) =>
-          val ts = samples(n)
-          ts.nonEmpty && ts.forall(_ >= 0) && ts.min > 0.2 && median(ts) / ts.min > 1.3
-        }
-        .sortBy { case (n, _) => -(median(samples(n)) - samples(n).min) }
-        .take(retryWorst)
-        .foreach { case (n, fn) => timeLane(n, fn, retry = true); checkpoint() }
-    }
-    spark.catalog.clearCache()
-
-    // scale separation: one pass at the next-smaller sf (when present)
-    // so a query's fixed overhead (~0.2-0.3s planning/JVM floor) is
-    // separable from its data-dependent cost — the sandbox has no sf>0.1
-    // data, so the scaling signal comes from the sf0.01 -> sf0.1 step
-    val smallDir = Some(sfDir.replace("sf0.1", "sf0.01"))
-      .filter(d => d != sfDir && new java.io.File(d).isDirectory)
-    smallDir.foreach { sd =>
-      if (elapsedSec > 0.65 * budgetSec) skippedStages += "sf_small"
-      else {
-        val sq = names.map { case (name, fn) =>
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          val t =
-            try {
-              fn(spark, sd).write.format("noop").mode("overwrite").save()
-              (System.nanoTime() - t0) / 1e9
-            } catch { case _: Throwable => -1.0 }
-          name -> t
-        }
-        smallJsonStr =
-          s""","sf_small":"$sd","queries_small":${jm(sq.map { case (k, v) => k -> fmt(v, 3) })}"""
-        checkpoint()
-      }
-    }
-    spark.catalog.clearCache()
-
-    // ---- scale probes (shared discipline) ----------------------------
-    // time a lane on the corpus and a 3× self-replication (ids shifted
-    // past the real range so keys stay distinct), median of 3
-    // interleaved pairs (single ~1.5s samples made exponents swing
-    // 0.44-0.90 run to run on an idle box). exponent = ln(t3/t1)/ln 3:
-    // 1.0 is perfect linear scaling, < 1 means the fixed per-job floor
-    // still amortizes at this corpus size, > 1 flags a superlinear
-    // stage. Pair/banding stages are excluded everywhere — a replicated
-    // corpus is dup-dense by construction, which would measure output
-    // explosion, not scan scaling.
+    // ---- scale probes ------------------------------------------------
+    // time a composition on the corpus and a 3× self-replication (ids
+    // shifted past the real range so keys stay distinct), min of 3
+    // interleaved pairs. exponent = ln(t3/t1)/ln 3: 1.0 is linear
+    // scaling, < 1 means the fixed per-job floor still amortizes at this
+    // corpus size, > 1 flags a superlinear stage. Pair/banding stages are
+    // excluded everywhere — a replicated corpus is dup-dense by
+    // construction, which would measure output explosion, not scan
+    // scaling.
     import org.apache.spark.sql.functions._
-    def replicate3(df: org.apache.spark.sql.DataFrame,
-                   idCol: String): org.apache.spark.sql.DataFrame = {
+    def replicate3(df: DataFrame, idCol: String): DataFrame = {
       val shift = df.agg(max(col(idCol))).head().getLong(0) + 1L
       (0 until 3).map(i =>
         df.withColumn(idCol, col(idCol) + lit(i * shift)))
         .reduce(_.unionByName(_))
     }
-    // one probe sample with its contention evidence: elapsed seconds,
-    // the 1-min loadavg as the sample started, the co-tenant CPU
-    // (other-process cores) measured ACROSS the sample window, and the
-    // whole-box disk utilization (io_ticks fraction; > 1 with several
-    // devices) across the same window
-    case class PSample(t: Double, load: Double, other: Double, disk: Double)
-    case class ProbeResult(t1: Double, tr: Double, exponent: Double,
-                           ratio: Int, s1: Vector[PSample],
-                           sr: Vector[PSample], polluted: Boolean)
-    // load gate (the r11 lead item): a probe sample taken while
-    // co-tenants burn more than this many cores is POLLUTED — the r11
-    // driver record printed knn_ivf 1.054 at loadavg 6.5–13.2 where
-    // three quiet runs of identical code read 0.632–0.664. Polluted
-    // sides re-sample (bounded extra pairs); if every sample on a side
-    // stays polluted, the entry says so ("load_polluted":true) instead
-    // of standing silently authoritative.
-    val probeMaxOther = 4.0
-    val probeRetries = 2
-    // hard wall-clock ceiling on the OPTIONAL re-sampling the load gate
-    // can add across the whole probe pass (r12 verdict item 5:
-    // measurement hygiene must never again be the thing that blows the
-    // driver budget) — once the retry pairs have burned this many
-    // seconds, further polluted sides stand with load_polluted=true
-    var probeRetrySecLeft =
-      sys.env.getOrElse("SPARK_GRAFT_PROBE_RETRY_BUDGET_SEC",
-        fmt(math.min(300.0, 0.15 * budgetSec), 0)).toDouble
-    // fixture setup runs INSIDE the probe's try (mk thunk): a missing
-    // table, absent column, or empty fixture (max(id) null) must read
-    // as that probe's failure line, never abort the whole bench
-    def scaleProbe(label: String,
-                   mk: () => (org.apache.spark.sql.DataFrame,
-                              org.apache.spark.sql.DataFrame),
-                   ratio: Int = 3, samplePairs: Int = 3)(
-                   lane: org.apache.spark.sql.DataFrame => Unit
-                  ): Option[ProbeResult] =
-      if (probeOnly.exists(!_.contains(label))) None
-      else try {
-        val (d1, d3) = mk()
-        def run(df: org.apache.spark.sql.DataFrame): PSample = {
-          spark.catalog.clearCache()
-          // settle the JVM before sampling: after the 500+ timed lane
-          // jobs the heap carries enough garbage that probe samples
-          // (esp. the 3× side) absorb collector pauses — knn_ivf's t3x
-          // read 23s in-suite vs 5.5s isolated on the same box, turning
-          // a 0.3 exponent into 0.76. The GC runs OUTSIDE the timer.
-          System.gc()
-          val la = loadavg()
-          val b0 = statBusyJiffies(); val j0 = selfJiffies()
-          val d0 = diskIoTicksMs()
-          val t0 = System.nanoTime()
-          lane(df)
-          val el = (System.nanoTime() - t0) / 1e9
-          val b1 = statBusyJiffies(); val j1 = selfJiffies()
-          val d1 = diskIoTicksMs()
-          val other =
-            if (b0 < 0 || b1 < 0 || j0 < 0 || j1 < 0 || el <= 0) -1.0
-            else math.max(0.0, ((b1 - b0) - (j1 - j0)) / 100.0 / el)
-          val disk =
-            if (d0 < 0 || d1 < 0 || el <= 0) -1.0
-            else (d1 - d0) / 1000.0 / el
-          PSample(el, la, other, disk)
-        }
-        // a sample with unreadable /proc counters (other = -1) cannot
-        // be adjudicated and is treated as clean — no gate without a
-        // signal, and the -1 is visible in the emitted arrays
-        def clean(s: PSample) = s.other < 0 || s.other <= probeMaxOther
-        run(d1) // untimed warmup of the probe's codegen
-        var pairs = Vector.fill(samplePairs)((run(d1), run(d3)))
-        var extra = 0
-        while (extra < probeRetries && probeRetrySecLeft > 0 &&
-               (!pairs.exists(p => clean(p._1)) ||
-                !pairs.exists(p => clean(p._2)))) {
-          val tr0 = System.nanoTime()
-          pairs = pairs :+ ((run(d1), run(d3)))
-          probeRetrySecLeft -= (System.nanoTime() - tr0) / 1e9
-          extra += 1
-        }
-        // MIN, not median: contention/GC only ever ADDS time, so the
-        // per-size minimum is the least-contended estimate of the
-        // lane's true cost — medians let one slow sample on each side
-        // swing a 3-sample exponent by ±0.2 between consecutive runs
-        // of identical code (observed on the 100k bitext probe:
-        // median-based 0.985 vs 0.753 back to back; min-based runs
-        // agree). The min stays min-over-ALL-samples — a fast sample
-        // is a valid cost bound regardless of load (contention never
-        // SUBTRACTS time); the gate's job is to guarantee at least one
-        // clean sample per side, and polluted=true records the runs
-        // where even the retries couldn't.
-        val a = pairs.map(_._1); val b = pairs.map(_._2)
-        val t1 = a.map(_.t).min
-        val t3 = b.map(_.t).min
-        Some(ProbeResult(t1, t3, math.log(t3 / t1) / math.log(ratio.toDouble),
-          ratio, a, b, !a.exists(clean) || !b.exists(clean)))
-      } catch { case e: Throwable =>
-        // a missing probe must read as a failure, not silent absence
-        System.err.println(s"[bench] $label scale probe failed: $e")
-        None
+    // fixture setup (mk) runs inside the probe's try in the probe pass:
+    // a missing table, absent column or empty fixture (max(id) null)
+    // reads as that probe's failure line, never aborts the whole bench
+    def scaleProbe(mk: () => (DataFrame, DataFrame), ratio: Int = 3,
+                   samplePairs: Int = 3)(lane: DataFrame => Unit): ProbeResult = {
+      val (d1, dr) = mk()
+      // one sample: (seconds, loadavg at its start). The GC runs
+      // OUTSIDE the timer, so a sample does not absorb collector pauses
+      // for the garbage earlier samples left.
+      def run(df: DataFrame): (Double, Double) = {
+        spark.catalog.clearCache()
+        System.gc()
+        val la = loadavg()
+        val t0 = System.nanoTime()
+        lane(df)
+        ((System.nanoTime() - t0) / 1e9, la)
       }
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
+      run(d1) // untimed warmup of the probe's codegen
+      // MIN, not median: contention and GC only ever ADD time, so each
+      // side's minimum is its least-disturbed cost — a median lets one
+      // slow sample per side swing a 3-pair exponent by ±0.2 between
+      // back-to-back runs of identical code
+      val (a, b) = Vector.fill(samplePairs)((run(d1), run(dr))).unzip
+      ProbeResult(a.map(_._1).min, b.map(_._1).min, ratio, a.map(_._2), b.map(_._2))
+    }
+    def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
-    def docsPair(): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    def docsPair(): (DataFrame, DataFrame) = {
       val d1 = spark.read.parquet(s"$sfDir/documents.parquet")
         .select(col("doc_id"), col("text"), col("lang"))
       (d1, replicate3(d1, "doc_id"))
@@ -556,16 +305,15 @@ object Bench {
     // deterministic synthetic embedding fixture for the similarity-family
     // structural probes: the shipped sf0.1 embeddings table (2k rows)
     // leaves 1x probe samples sub-second, where per-job scheduling floors
-    // swamp the 1x/3x ratio (r10 measured knn_ivf anywhere from 0.19 to
-    // 0.69 on identical code). Components derive from xxhash64(id, dim) —
+    // swamp the 1x/3x ratio. Components derive from xxhash64(id, dim) —
     // seeded, no RNG — so the fixture is a pure function of n: identical
-    // across rounds and machines, written once under /tmp and reused.
+    // across runs and machines, written once under /tmp and reused.
     // The 1x set is 150k vectors, sized so the cheapest embedding
     // probe's t1x clears ~3s, above floor noise; the 3x pass reads the
     // 3n fixture — a superset with the same distribution, so probes
     // scale REAL rows, not replicas.
     val probeN = 150000L
-    def probeVectors(n: Long): org.apache.spark.sql.DataFrame = {
+    def probeVectors(n: Long): DataFrame = {
       val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft-probe-vecs-v1-$n"
       if (!new java.io.File(s"$path/_SUCCESS").isFile)
         spark.range(n).select(col("id").as("vec_id"),
@@ -583,23 +331,20 @@ object Bench {
     // groups), so pair/candidate density per replica stays that of the
     // real corpus and a probe measures graph/scan scaling, never
     // dup-explosion output
-    def embReplicate(k: Int): org.apache.spark.sql.DataFrame = {
+    def embReplicate(k: Int): DataFrame = {
       val e1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select(col("vec_id"), col("embedding"))
       if (k == 1) e1
       else {
         val shift = e1.agg(max(col("vec_id"))).head().getLong(0) + 1L
-        // pattern cycles mod 3 (identity / odd-dim flip / even-dim
-        // flip), so k = 3 reproduces the r8 semantic-probe replication
-        // exactly. CONTRACT: at k > 3 whole replicas are EXACT
-        // duplicates up to id shift (replicas 0/3/6 identical), so
-        // k > 3 output must only feed candidate-VOLUME probes — never
-        // a pair-ENUMERATING probe (semantic/dedup shapes), whose pair
-        // density the triplicate vector groups would distort. (The
-        // embedding mining probes moved to the probeVectors fixture in
-        // r11; only the pair-density-safe embPair3 form remains in use.)
+        // the pattern cycles mod 3 (identity / odd-dim flip / even-dim
+        // flip). CONTRACT: at k > 3 whole replicas are EXACT duplicates
+        // up to id shift (replicas 0/3/6 identical), so k > 3 output
+        // must only feed candidate-VOLUME probes — never a
+        // pair-ENUMERATING probe (semantic/dedup shapes), whose pair
+        // density the triplicate vector groups would distort
         (0 until k).map { i =>
-          val flip: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
+          val flip: Column => Column =
             j => if (i % 3 == 0) lit(1.0f)
                  else when((j + lit(i % 3)) % 2 === 0, lit(-1.0f)).otherwise(lit(1.0f))
           e1.withColumn("vec_id", col("vec_id") + lit(i * shift))
@@ -609,8 +354,7 @@ object Bench {
         }.reduce(_.unionByName(_))
       }
     }
-    def embPair3(): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
-      (embReplicate(1), embReplicate(3))
+    def embPair3(): (DataFrame, DataFrame) = (embReplicate(1), embReplicate(3))
 
     // pipeline_full: the ALL-OPTIONAL-STAGES composition (HTML ingest →
     // template strip → repetition gate → default chain → semantic
@@ -624,7 +368,7 @@ object Bench {
     // strip, template mining, gates, digest shuffle, and the semantic
     // index — all linear paths. The page fixture's <title> carries no
     // " - source" suffix (unlike the lane's), so exponents stay
-    // comparable across rounds.
+    // comparable with earlier records.
     // `media` adds stage 3c — the full production shape's own cost
     // curve, with the pipeline_full LANE's media fixture scaled with
     // the corpus: audio for the %10=0 ids (+%40 byte copies, +%30
@@ -633,21 +377,19 @@ object Bench {
     // media is novel content (the audio law keys on the id) — decode,
     // fingerprint, and collapse all grow linearly, which is the claim
     // under probe.
-    def pipelineFullProbe(label: String, samplePairs: Int,
-                          media: Boolean): Option[ProbeResult] = {
-      // read inside the probe's try, like every fixture
+    def pipelineFullProbe(samplePairs: Int, media: Boolean): ProbeResult = {
       def docs() = {
         val base = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"), col("source"), col("lang"))
         (base, base.agg(max(col("doc_id"))).head().getLong(0) + 1L)
       }
-      scaleProbe(label, () => {
+      scaleProbe(() => {
         val (base, s) = docs()
-        def rep(df: org.apache.spark.sql.DataFrame, k: Int) =
+        def rep(df: DataFrame, k: Int) =
           (0 until k).map(i =>
             df.withColumn("doc_id", col("doc_id") + lit(i * s)))
             .reduce(_.unionByName(_))
-        def page(df: org.apache.spark.sql.DataFrame) = {
+        def page(df: DataFrame) = {
           val ids = col("doc_id").cast("string")
           val esc = regexp_replace(regexp_replace(regexp_replace(col("text"),
             "&", "&amp;"), "<", "&lt;"), ">", "&gt;")
@@ -695,9 +437,9 @@ object Bench {
           semanticCells = math.max(32L, nEmb / 64).toInt,
           audioMedia = if (media) Some(wavs) else None,
           imageMedia = if (media) Some(stills) else None,
-          // both decon modes, the r11 lane shape: the %97 suite is NOT
-          // replicated — a fixed-size benchmark suite against a growing
-          // corpus is exactly the production shape
+          // both decontamination modes, as in the lane: the %97 suite
+          // is NOT replicated — a fixed-size benchmark suite against a
+          // growing corpus is exactly the production shape
           evalDocs = Some(base.filter(col("doc_id") % 97 === 0)
             .select(col("doc_id"), col("text"))),
           decontamSubstringW = Some(10),
@@ -709,43 +451,27 @@ object Bench {
       }
     }
 
-    // the probe pass, callable in-process (probe-only child / fallback
-    // mode) — the full run forks it into a fresh JVM instead (below).
-    // Probes are (label, thunk) pairs run in ORDER with a record
-    // checkpoint after each, so a killed child still leaves every
-    // completed probe's entry in its file for the parent to splice.
-    def probeThunks(): Seq[(String, () => Option[ProbeResult])] = Seq(
+    // every probe, in allProbeLabels order: (label, run). Each run
+    // builds its fixtures and times both sides.
+    val probes: Seq[(String, () => ProbeResult)] = Seq(
 
-    // the two GRADED structural exponents (knn serving shape, bitext
-    // mining shape) run FIRST in the pass — in the forked child that
-    // means on the coldest possible JVM/heap state; the text-family
-    // probes follow and the heavy compositions stay last.
-    // the r8-flagged mining lanes. knn: the SERVING shape — a bounded
-    // query batch (the 10 lowest ids, identical at both sizes)
-    // k-NN-votes against an index over the growing corpus. Cells are
-    // PINNED to 256 — the autoCells clamp, i.e. the value every corpus
-    // past ~4.2 M rows gets — at BOTH sizes: with cells constant the
-    // index build (n·cells distance evals) and probe (nProbe·cellSize
-    // candidates per query) are both linear in n by construction, so
-    // the exponent checks that nothing in the candidate-fed path — the
-    // r8 version broadcast a 20% corpus fraction and scanned n per
-    // query — reintroduced a superlinear term. (The un-pinned √(n/64)
-    // autoCells sizing the probe ran through r11 is BELOW the clamp in
-    // the 150k–450k probe range, making the build genuinely
-    // Θ(n·√n) there — a real n^1.5 sub-term that box load amplified
-    // into the r11 record's 1.054; the serving claim is the clamped
-    // regime, so the probe now measures that regime.) (A query side that is itself a
-    // corpus FRACTION makes total k-NN work Θ(n²/cells) in any
-    // flat-codebook implementation — so the fraction shape is not
-    // probeable for a sub-1 exponent and the serving shape is the
-    // honest claim.) As of r11 both embedding probes run on the
-    // deterministic fixture (probeVectors) at true 1×/3× — the 2k-row
-    // table needed 3×/9× replication and still sat under the
-    // scheduling floor.
-    "knn_ivf" -> (() => scaleProbe("knn_ivf",
+    // knn_ivf, the SERVING shape: a bounded query batch (the 10 lowest
+    // ids, identical at both sizes) k-NN-votes against an index over
+    // the growing corpus. Cells are PINNED to 256 — the autoCells
+    // clamp, i.e. the value every corpus past ~4.2 M rows gets — at
+    // BOTH sizes: with cells constant the index build (n·cells distance
+    // evals) and probe (nProbe·cellSize candidates per query) are both
+    // linear in n by construction, so the exponent checks that nothing
+    // in the candidate-fed path reintroduces a superlinear term. (The
+    // un-pinned √(n/64) autoCells sizing is BELOW the clamp in the
+    // 150k–450k probe range, making the build genuinely Θ(n·√n) there;
+    // the serving claim is the clamped regime.) A query side that is
+    // itself a corpus FRACTION makes total k-NN work Θ(n²/cells) in any
+    // flat-codebook implementation, so the serving shape is the one
+    // with a sub-linear claim. Both embedding probes run on the
+    // probeVectors fixture at true 1×/3× (or 1×/4×) sizes.
+    "knn_ivf" -> (() => scaleProbe(
         () => (probeVectors(probeN), probeVectors(3 * probeN))) { df =>
-      // 256 = the autoCells clamp (the >= 4.2 M-row serving sizing),
-      // constant across both probe sizes — see the probe comment above
       val cb = operators.Similarity.kmeansCodebook(df, "vec_id", "embedding",
         nCells = 256, iters = 2)
       val assigned = operators.Similarity.assignCells(
@@ -764,29 +490,20 @@ object Bench {
           (col("vec_id") % 7).cast("long").as("label"))))
     }),
     // bitext: BOTH text sides grow together (the mined-parallel-corpus
-    // shape). As of r11 the lane under probe is bitextMineLsh — the
-    // shipped scale path: sign-hyperplane blocking whose assignment is
-    // a pure O(n·bits·dim) projection and whose (t, cell) equi-join
-    // emits linear candidate volume at miningBits' cells-∝-n sizing.
-    // It replaces the flat-codebook two-index build, whose n·cells
-    // assign term (cells ∝ n) is Θ(n²/32) — the r10 driver record
-    // measured that lane's exponent at 1.142, the adjudicated
-    // scale-killer. The JSON key keeps its historical name so
-    // per-round records stay comparable. Measured at 1x/4x, not 1x/3x:
-    // miningBits = ceil(log2(n/32)) shifts by EXACTLY 2 under a 4x
-    // step for any n, so expected bucket population — and with it
-    // per-pair candidate work — is identical at both sizes and the
-    // exponent measures pure scaling; a 3x step lands the two sizes at
-    // different phases of the ceil saw-tooth and can swing measured
-    // candidate volume between 1.5x and 4.5x (observed 0.73 and 1.14
-    // on identical code), which is discretization, not asymptotics.
-    // Sizes r13: probeN/4 at 1x → probeN at 4x (r12 ran probeN/2 →
-    // 2·probeN with 5 pairs ≈ 7 min of the driver's budget — the
-    // single biggest line in the r12 timeout; t1x ≈ 10 s at the new
-    // size is still 30× the scheduling floor, the 4× ratio and
-    // min-of-3 discipline are unchanged, only absolute t1x/t4x shift
-    // down ~2× vs prior records).
-    "bitext_ivf" -> (() => scaleProbe("bitext_ivf",
+    // shape) through bitextMineLsh, the shipped scale path:
+    // sign-hyperplane blocking whose assignment is a pure O(n·bits·dim)
+    // projection and whose (t, cell) equi-join emits linear candidate
+    // volume at miningBits' cells-∝-n sizing. The key keeps its `_ivf`
+    // name so records stay comparable. Measured at 1x/4x, not 1x/3x:
+    // miningBits = ceil(log2(n/32)) shifts by EXACTLY 2 under a 4x step
+    // for any n, so expected bucket population — and with it per-pair
+    // candidate work — is identical at both sizes and the exponent
+    // measures pure scaling; a 3x step lands the two sizes at different
+    // phases of the ceil saw-tooth and can swing candidate volume
+    // between 1.5x and 4.5x, which is discretization, not asymptotics.
+    // probeN/4 at 1x keeps t1x near 10 s, well above the scheduling
+    // floor.
+    "bitext_ivf" -> (() => scaleProbe(
         () => (probeVectors(probeN / 4), probeVectors(probeN)),
         ratio = 4, samplePairs = 3) { df =>
       val src = df.filter(col("vec_id") % 2 === 0)
@@ -797,7 +514,7 @@ object Bench {
         k = 4, threshold = 1.05))
     }),
 
-    "dedup" -> (() => scaleProbe("dedup", docsPair) { df =>
+    "dedup" -> (() => scaleProbe(docsPair) { df =>
       noop(operators.Dedup.simhash(df, "doc_id", "text"))
       noop(operators.Dedup.fingerprints(df, "doc_id", "text", 3, 4))
       noop(operators.Dedup.exact(df, "doc_id", "text"))
@@ -806,7 +523,7 @@ object Bench {
     // shuffle-free assignment — linear in points even when replicas are
     // identical vectors; semDedup's in-cluster pair join is the
     // excluded dup-dense stage
-    "kmeans" -> (() => scaleProbe("kmeans", () => {
+    "kmeans" -> (() => scaleProbe(() => {
       val e1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select(col("vec_id"), col("embedding"))
       (e1, replicate3(e1, "vec_id"))
@@ -817,7 +534,7 @@ object Bench {
     // DSIR: the raw corpus grows, the curated target (and so the
     // 1024-bucket λ table) stays fixed — the production shape; scoring
     // is the row-local lane under test
-    "dsir" -> (() => scaleProbe("dsir", docsPair) { df =>
+    "dsir" -> (() => scaleProbe(docsPair) { df =>
       noop(operators.Dsir.weights(df,
         df.sparkSession.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"), col("lang"))
@@ -830,9 +547,9 @@ object Bench {
     // input rows (drop lists, not pairs), so the probe measures the
     // winner-agg + rewrite path scaling, which is the claim. Paragraph
     // structure is injected by splitting on a frequent word.
-    "paragraph" -> (() => scaleProbe("paragraph", () => {
+    "paragraph" -> (() => scaleProbe(() => {
       val (d1, d3) = docsPair()
-      val para = (df: org.apache.spark.sql.DataFrame) =>
+      val para = (df: DataFrame) =>
         df.withColumn("text", regexp_replace(col("text"), " the ", "\n\n"))
       (para(d1), para(d3))
     }) { df =>
@@ -847,7 +564,7 @@ object Bench {
     // per-hash work is linear in occurrences — so the probe measures
     // the gram shuffle + window + rejoin path, which is the scaling
     // claim
-    "substring" -> (() => scaleProbe("substring", docsPair) { df =>
+    "substring" -> (() => scaleProbe(docsPair) { df =>
       noop(operators.Dedup.substringDedupApply(df, "doc_id", "text", w = 10))
     }),
 
@@ -860,7 +577,7 @@ object Bench {
     // node/edge graph scaling, not dup-explosion output. Cell count
     // auto-scales with n exactly as knn_join ships it, so per-cell
     // candidate work is constant across the two runs.
-    "semantic" -> (() => scaleProbe("semantic", embPair3) { df =>
+    "semantic" -> (() => scaleProbe(embPair3) { df =>
       val n = df.count()
       operators.Pins() { pins =>
         val pairs = pins.persist(operators.Similarity.cosinePairsLsh(df, "vec_id",
@@ -880,7 +597,7 @@ object Bench {
     // replication would square the per-key match count). Both runs use
     // the shipped deployment sizing (8 state partitions, no no-data
     // batches); source dirs are written once in mk, outside the timing.
-    "streaming_funnel" -> (() => scaleProbe("streaming_funnel", () => {
+    "streaming_funnel" -> (() => scaleProbe(() => {
       val base = spark.read.parquet(s"$sfDir/events.parquet")
       val Array(uShift, eShift) = base
         .agg(max(col("user_id")), max(col("event_id"))).head()
@@ -921,10 +638,9 @@ object Bench {
     // grows with a 3× crawl: the map-only ingestion gates, tokenize +
     // langID, and the 16-byte digest shuffle. Downstream stages are
     // dedup-bounded by design.
-    "pipeline" -> (() => scaleProbe("pipeline", () => {
+    "pipeline" -> (() => scaleProbe(() => {
       val (d1, d3) = docsPair()
-      val src = (df: org.apache.spark.sql.DataFrame) =>
-        df.withColumnRenamed("lang", "source")
+      val src = (df: DataFrame) => df.withColumnRenamed("lang", "source")
       (src(d1), src(d3))
     }) { df =>
       val (packed, _) = jobs.TrainingPipeline.run(spark, sfDir,
@@ -938,7 +654,7 @@ object Bench {
     // matrix is constant. Replication leaves the component meaningful —
     // identical copies don't change the covariance, only the row count
     // under scan, which is exactly the scaling under test.
-    "pca" -> (() => scaleProbe("pca", () => {
+    "pca" -> (() => scaleProbe(() => {
       val e1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select(col("vec_id"), col("embedding"))
       (e1, replicate3(e1, "vec_id"))
@@ -947,10 +663,9 @@ object Bench {
       ()
     }),
 
-    // media dedup: the r12 composition (fingerprint → exact-dup
+    // media dedup: the whole composition (fingerprint → exact-dup
     // collapse → offset-voting clip pairs among representatives →
-    // exact-group edges → CC → min-id keeper) probed AS a composition
-    // (r12 verdict item 2 — its parts were probed, the whole was not).
+    // exact-group edges → CC → min-id keeper), not just its parts.
     // The 3× side replicates the ENTIRE 1× fixture (originals +
     // mid-stream extracts) at shifted ids, so replicas are byte-
     // identical re-uploads: the collapse folds them to the SAME
@@ -961,7 +676,7 @@ object Bench {
     // production claim (re-upload floods cost one linear collapse
     // pass), the dup-dense pair stages stay excluded per the shared
     // probe discipline.
-    "media_dedup" -> (() => scaleProbe("media_dedup", () => {
+    "media_dedup" -> (() => scaleProbe(() => {
       val d = spark.read.parquet(s"$sfDir/documents.parquet")
         .select(col("doc_id"), col("text"))
       def one(shift: Long) =
@@ -975,51 +690,69 @@ object Bench {
         maxBucket = 1000))
     }),
 
-    // NOTE: deliberately ordered LAST of the probes — its multi-minute
-    // 1x/3x samples leave enough heap/page-cache pressure to inflate
-    // the serving-shape probes that followed it (knn_ivf read 0.74
-    // in-suite vs 0.20 isolated on the same quiet box; bitext 1.10 vs
-    // 0.63) — heavy probes after sensitive ones. samplePairs = 2 as of
-    // r13 (budget prong: its ~100 s samples were the second-biggest
-    // line in the r12 timeout; the min-of-2 still rides the load
-    // gate's re-sample guarantee).
-    "pipeline_full" -> (() => pipelineFullProbe("pipeline_full",
-      samplePairs = 2, media = false)),
-    // samplePairs = 1 (budget prong: this probe exists to evidence the
-    // curve once per round; it runs LAST so a budget-killed child loses
-    // only it, and the load gate's retry pairs still guarantee a clean
-    // sample when the first is polluted)
-    "pipeline_full_media" -> (() => pipelineFullProbe("pipeline_full_media",
-      samplePairs = 1, media = true)))
-    // end probeThunks
+    // the two pipeline_full compositions run LAST: their multi-minute
+    // 1x/3x samples leave enough heap and page-cache pressure to
+    // inflate the serving-shape probes run after them (knn_ivf read
+    // 0.74 after them vs 0.20 before, on the same quiet box). Their
+    // ~100 s samples keep fewer pairs: 2, and 1 for the media form,
+    // which exists to evidence the full production curve once.
+    "pipeline_full" -> (() => pipelineFullProbe(samplePairs = 2, media = false)),
+    "pipeline_full_media" -> (() => pipelineFullProbe(samplePairs = 1, media = true)))
+    require(probes.map(_._1) == allProbeLabels, "probe list and allProbeLabels differ")
 
-    // per-sample loadavg + other-process cores ride the entry (flat
-    // arrays — the fork-splice regex forbids nested braces), so a
-    // polluted exponent is visibly annotated in the very record the
-    // driver trusts instead of needing a side-channel quiet re-run
-    def scaleEntry(name: String, p: Option[ProbeResult]): String =
-      p.map { pr =>
-        def arr(xs: Vector[PSample], f: PSample => Double) =
-          xs.map(s => fmt(f(s), 1)).mkString("[", ",", "]")
-        s""","$name":{"t1x":${fmt(pr.t1, 3)},"t${pr.ratio}x":${fmt(pr.tr, 3)},""" +
-          s""""exponent":${fmt(pr.exponent, 3)},""" +
-          s""""loads_1x":${arr(pr.s1, _.load)},"loads_${pr.ratio}x":${arr(pr.sr, _.load)},""" +
-          s""""other_cores_1x":${arr(pr.s1, _.other)},"other_cores_${pr.ratio}x":${arr(pr.sr, _.other)},""" +
-          s""""disk_util_1x":${arr(pr.s1, _.disk)},"disk_util_${pr.ratio}x":${arr(pr.sr, _.disk)},""" +
-          s""""load_polluted":${pr.polluted}}"""
-      }.getOrElse("")
-    def runLocalProbes(): Unit =
-      probeThunks().foreach { case (label, thunk) =>
-        scaleJsonStr += scaleEntry(s"${label}_scale", thunk())
-        checkpoint()
+    // The probes run FIRST, on the heap the warm-up left: after the
+    // lanes' hundreds of timed jobs the JVM carries heap and page-cache
+    // state that System.gc() does not fully settle, and probe exponents
+    // measured there disagreed with fresh-JVM ones (knn_ivf 0.69 vs
+    // 0.19, bitext 1.14 vs 0.84, at equal loadavg). A failed probe
+    // prints its error and leaves no entry: a missing exponent reads as
+    // a failure, not as silent absence.
+    for ((label, probe) <- probes if sel.probes.contains(label)) {
+      try probeResults(label) = probe()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $label scale probe failed: $e") }
+      checkpoint()
+    }
+
+    // passes 1..iters round-robin; the third-and-later passes skip a
+    // lane that is already stable and floor-bound (both samples
+    // sub-second and within 30%)
+    for (pass <- 1 to iters; (name, fn) <- names) {
+      val ts = samples(name)
+      val stableFast = pass > 2 && ts.length >= 2 && ts.forall(_ >= 0) &&
+        ts.max < 1.0 && (ts.max - ts.min) / math.max(ts.min, 1e-9) < 0.3
+      if (!stableFast) { timeLane(name, fn); checkpoint() }
+    }
+    spark.catalog.clearCache()
+
+    // scale separation: one pass at the next-smaller sf (when present)
+    // so a query's fixed overhead (~0.2-0.3s planning/JVM floor) is
+    // separable from its data-dependent cost
+    val smallDir = Some(sfDir.replace("sf0.1", "sf0.01"))
+      .filter(d => d != sfDir && new java.io.File(d).isDirectory)
+    smallDir.foreach { sd =>
+      val sq = names.map { case (name, fn) =>
+        spark.catalog.clearCache()
+        val t0 = System.nanoTime()
+        val t =
+          try {
+            fn(spark, sd).write.format("noop").mode("overwrite").save()
+            (System.nanoTime() - t0) / 1e9
+          } catch { case _: Throwable => -1.0 }
+        name -> t
       }
+      smallJsonStr =
+        s""","sf_small":"$sd","queries_small":${jm(sq.map { case (k, v) => k -> fmt(v, 3) })}"""
+      checkpoint()
+    }
+    spark.catalog.clearCache()
 
     // reference benchmark harnesses (MRBench.java:173-233 avg latency;
     // TestDFSIO.java:88-103 sequential MB/s), sized small enough to not
-    // dominate the round but large enough to exceed fixed overhead.
-    // Each harness fails (or is budget-skipped) ALONE — an nnbench
-    // error must not discard the measurements before it.
-    if (fullRun && elapsedSec < 0.8 * budgetSec) {
+    // dominate the run but large enough to exceed fixed overhead.
+    // Each harness fails ALONE — an nnbench error must not discard the
+    // measurements before it.
+    if (sel.full) {
       try {
         val mrRuns = jobs.LoadGen.mrbench(spark, s"$benchDir/mrbench", inputLines = 1000, runs = 4)
         val dfsioMb = 256
@@ -1051,116 +784,22 @@ object Bench {
       catch { case _: Throwable => () }
       try tmbMbps = jobs.LoadGen.threadedMapBench(spark, mb = 64)._2
       catch { case _: Throwable => () }
-      finally {
-        try sources.TeraIO.delete(spark, benchDir)
-        catch { case _: Throwable => () }
-      }
       checkpoint()
-    } else if (fullRun) skippedStages += "harness"
-
-    // ---- probe isolation (fresh JVM) ---------------------------------
-    // r10 adjudication: probe exponents from the committed quiet-box
-    // (probe-only) runs and the driver's post-suite record disagreed
-    // (knn_ivf 0.19 vs 0.69, bitext 0.84 vs 1.14) at equal loadavg —
-    // after 500+ timed lane jobs the JVM carries heap/page-cache state
-    // no in-process System.gc() fully settles. The full run therefore
-    // forks ONE child JVM (same flags and classpath, probe-only mode)
-    // that executes the probe pass from a cold start — exactly the
-    // conditions the committed records were produced under — and
-    // splices the child's scale entries into this run's JSON, so the
-    // driver's record and an isolated run measure the same thing.
-    // The child's timeout is the REMAINING run budget (minus a 150 s
-    // reserve for terasort_sf1 and the final write), and because the
-    // child checkpoints its record after every probe, a timed-out
-    // child still contributes every completed probe's entry — a
-    // partial splice beats both nothing and a 20-minute in-process
-    // re-run. A fork failure with NO salvageable entries falls back to
-    // the in-process pass (a bench line is never lost).
-    val probeLabels = Bench.allProbeLabels
-    def spliceFromChildFile(outFile: java.io.File): Option[String] =
-      try {
-        val txt = new String(
-          java.nio.file.Files.readAllBytes(outFile.toPath),
-          java.nio.charset.StandardCharsets.UTF_8)
-        val snips = probeLabels.flatMap { l =>
-          ("\"" + l + "_scale\":\\{[^}]*\\}").r.findFirstIn(txt)
-            .map("," + _)
-        }
-        if (snips.isEmpty) None else Some(snips.mkString)
-      } catch { case _: Throwable => None }
-    def forkedScaleJson(timeoutSec: Long): Option[String] =
-      try {
-        val outFile = java.io.File.createTempFile("graft-probes-", ".json")
-        val stdoutFile = java.io.File.createTempFile("graft-probes-", ".out")
-        val mx = java.lang.management.ManagementFactory.getRuntimeMXBean
-        val jvmArgs = new java.util.ArrayList[String]()
-        jvmArgs.add(s"${sys.props("java.home")}/bin/java")
-        mx.getInputArguments.forEach { a =>
-          if (!a.startsWith("-agentlib") && !a.startsWith("-javaagent"))
-            jvmArgs.add(a)
-        }
-        jvmArgs.add("-cp"); jvmArgs.add(sys.props("java.class.path"))
-        jvmArgs.add("graft.Bench")
-        val pb = new ProcessBuilder(jvmArgs)
-        pb.environment().put("SPARK_GRAFT_PROBES", probeLabels.mkString(","))
-        pb.environment().put("SPARK_GRAFT_SKIP_LANES", "1")
-        pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-        pb.environment().put("SPARK_GRAFT_CPUS", cpus)
-        pb.environment().put("SPARK_GRAFT_BENCH_OUT", outFile.getAbsolutePath)
-        pb.environment().put("SPARK_GRAFT_PROBE_RETRY_BUDGET_SEC",
-          fmt(probeRetrySecLeft, 0))
-        // the child's own compact JSON line must not pollute THIS
-        // process's stdout (the driver parses it)
-        pb.redirectOutput(java.lang.ProcessBuilder.Redirect.to(stdoutFile))
-        pb.redirectError(java.lang.ProcessBuilder.Redirect.INHERIT)
-        // compact THIS JVM's post-lane heap before forking: the parent
-        // only waitFor()s, but its driver event loops keep allocating,
-        // and background collections of a lane-phase-sized heap burn
-        // whole cores in bursts — a 2400 s rehearsal measured the
-        // child's first (graded) probe at t1x 21.7 s vs 4.8 s isolated
-        // with other_cores spiking to 3.3 from exactly this
-        System.gc()
-        val p = pb.start()
-        val done = p.waitFor(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)
-        if (!done) {
-          p.destroyForcibly(); p.waitFor()
-          System.err.println("[bench] probe child timed out; splicing its partial record")
-          val partial = spliceFromChildFile(outFile)
-          if (partial.isDefined) skippedStages += "probes_partial"
-          partial
-        } else {
-          if (p.exitValue() != 0)
-            System.err.println(s"[bench] probe child exited ${p.exitValue()}; splicing what it wrote")
-          val snips = spliceFromChildFile(outFile)
-          if (snips.isEmpty)
-            System.err.println("[bench] probe child wrote no scale entries")
-          snips
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] probe fork failed: $e"); None }
-
-    if (probeOnly.isDefined || skipLanes) runLocalProbes()
-    else if (fullRun) {
-      val remain = math.max(120L, (budgetSec - elapsedSec).toLong - 150L)
-      forkedScaleJson(remain) match {
-        case Some(s) => scaleJsonStr = s; checkpoint()
-        case None    => if (elapsedSec < 0.9 * budgetSec) runLocalProbes()
-                        else skippedStages += "probes"
-      }
     }
+    // the harness dirs and the streaming probe's source dirs
+    try sources.TeraIO.delete(spark, benchDir)
+    catch { case _: Throwable => () }
 
     // ---- device bandwidth probe ------------------------------------
     // the delivered DIRECT-I/O bandwidth of the device hosting tmpdir,
-    // measured in the same window terasort_sf1 is about to use (the
-    // lane it adjudicates): rounds r12→r13 swung that lane 66.8 →
-    // 96.6-178.1 s purely on device-side variance, adjudicated then by
-    // ad-hoc dd runs quoted in prose — this records the same evidence
-    // IN the bench record (device_mbps_write / device_mbps_read).
-    // oflag=direct bypasses the page cache, so the number is the
-    // device's, not the kernel's; 512 MiB is large enough to outlast
-    // any write-buffer burst and costs ~2-5 s per side. Timed here
-    // (not parsed from dd's locale-dependent summary), conv=fsync on
-    // the write so queued blocks land inside the timing.
+    // measured in the same window terasort_sf1 is about to use: that
+    // lane swings with device-side variance, and this number, in the
+    // same record (device_mbps_write / device_mbps_read), tells a slow
+    // device from a slow plan. oflag=direct bypasses the page cache, so
+    // the number is the device's, not the kernel's; 512 MiB is large
+    // enough to outlast any write-buffer burst and costs ~2-5 s per
+    // side. Timed here (not parsed from dd's locale-dependent summary),
+    // conv=fsync on the write so queued blocks land inside the timing.
     def devDirectMbps(): (Double, Double) =
       try {
         val mb = 512
@@ -1182,26 +821,20 @@ object Bench {
         new java.io.File(f).delete()
         (w, r)
       } catch { case _: Throwable => (-1.0, -1.0) }
-    if (fullRun) {
+    if (sel.full) {
       val (dw, dr) = devDirectMbps()
       devWMbps = dw; devRMbps = dr
       checkpoint()
     }
 
-    // one sf1 (10 GB in + 10 GB out) disk-to-disk gray-sort point per
-    // round: TeraGen 100M rows -> TeraSort -> TeraValidate + checksum
-    // over the RE-READ output, all inside the timing — the suite's
-    // terasort lane is 1 GB, so the BASELINE.md Yahoo-2009 GB/node/min
-    // comparison was previously a 10× extrapolation. Runs in the full
-    // run at an sf0.1 dir only. Runs LAST so its ~20 GB of disk traffic
-    // perturbs nothing (probes already done), and is the final budget
-    // casualty before the record itself.
-    teraSf1Sec = {
-      val want = fullRun && sfDir.contains("sf0.1")
-      if (want && budgetSec - elapsedSec < 120) {
-        skippedStages += "terasort_sf1"; -1.0
-      } else if (!want) -1.0
-      else try {
+    // one sf1 (10 GB in + 10 GB out) disk-to-disk gray-sort point:
+    // TeraGen 100M rows -> TeraSort -> TeraValidate + checksum over the
+    // RE-READ output, all inside the timing — the suite's terasort lane
+    // is 1 GB, so the BASELINE.md Yahoo-2009 GB/node/min comparison
+    // would otherwise be a 10× extrapolation. Full run at an sf0.1 dir
+    // only, and LAST, so its ~20 GB of disk traffic perturbs nothing.
+    if (sel.full && sfDir.contains("sf0.1")) teraSf1Sec =
+      try {
         val rows = 100000000L
         val dir = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}" +
           s"/graft-terasf1-${ProcessHandle.current().pid()}"
@@ -1225,50 +858,24 @@ object Bench {
         } finally sources.TeraIO.delete(spark, dir)
       } catch { case e: Throwable =>
         System.err.println(s"[bench] terasort_sf1 failed: $e"); -1.0 }
-    }
 
     // final write: the complete record, "partial" dropped
     checkpoint(partial = false)
 
-    // the SHORT stdout line — built to fit entirely inside the
-    // driver's ~2000-char output tail (the full compact line never
-    // parsed there: r03–r12 all read "parsed": null). Headline lanes
-    // only; EVERY scale exponent; all harness metrics; the full
-    // per-lane record is in the file copy named under "full_record".
-    // The builder and the lane/label lists live at object level so
-    // BenchContractSpec can render a fully-populated line and pin its
-    // byte budget — the contract rotted silently for ten rounds.
     val medAll = names.collect {
       case (n, _) if samples(n).nonEmpty => n -> medOf(n) }.toMap
-    val failedAll = names.collect {
-      case (n, _) if medAll.get(n).exists(_ < 0) => n }
-    val exps = scaleJsonStr // parse-free: re-extract exponent fields
-    val expJson = probeLabels.flatMap { l =>
-      (s""""${l}_scale":\\{"t1x":[^}]*"exponent":(-?\\d+\\.\\d+)""").r
-        .findFirstMatchIn(exps).map(m => l -> m.group(1))
-    }
-    val pollutedJson = probeLabels.filter(l =>
-      (s""""${l}_scale":\\{[^}]*"load_polluted":true""").r
-        .findFirstIn(exps).isDefined)
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
     val summary = summaryLine(
       total = medAll.values.filter(_ >= 0).sum, sf = sfDir, iters = iters,
-      lanes = names.length, failed = failedAll, skippedJson = skippedJson,
+      lanes = names.length,
+      failed = names.collect { case (n, _) if medAll.get(n).exists(_ < 0) => n },
       elapsedSec = elapsedSec,
       headlineVals = headlineLanes.filter(medAll.contains)
         .map(n => n -> fmt(medAll(n), 3)),
-      exponents = expJson, pollutedJson = pollutedJson,
+      exponents = probeResults.toSeq.map { case (l, p) => l -> fmt(p.exponent, 3) },
       harnessJson = harnessJson, fullRecord = out)
-    // stop FIRST so no Spark log line can land after the summary in
-    // either stream's tail; the line is mirrored to stderr because the
-    // driver's 2000-char tail capture has been observed on both
-    // streams (r11: stdout, r12: stderr). The mirror is TOP-LEVEL-RUN
-    // ONLY: the forked probe child inherits the parent's stderr, and a
-    // child summary (lanes: 0) arriving there could shadow the real
-    // record in a combined-stream tail.
+    // stop FIRST, so the summary is the last line the run prints
     spark.stop()
     println(summary)
     Console.flush()
-    if (probeOnly.isEmpty && !skipLanes) System.err.println(summary)
   }
 }

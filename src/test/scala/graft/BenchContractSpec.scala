@@ -2,23 +2,19 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the bench stdout summary line's TAIL CONTRACT (r13 verdict
-  * item 2): the driver captures only ~2000 trailing characters of the
-  * bench process's output, so the one-line summary must stay under
-  * 1800 bytes even FULLY POPULATED — every headline lane timed, every
-  * registered scale exponent present, every probe flagged polluted,
-  * all harness metrics real, a worst-case skip list. Rounds 3–12
-  * shipped a compact line that silently outgrew the tail ("parsed":
-  * null at rc 0 every round); this spec makes the regression a test
-  * failure instead of a post-round forensic finding. No SparkSession
-  * needed — the builder is a pure string function.
+/** Pins Bench's output contract with no SparkSession: the stdout
+  * summary line stays under 1800 bytes even FULLY POPULATED (every
+  * headline lane timed, every registered scale exponent present, all
+  * harness metrics real), so a log tail of about 2000 characters keeps
+  * it whole; the per-lane `layers` entries parse as JSON; and the
+  * `SPARK_GRAFT_LANES` selector picks lanes and `_scale` probes and
+  * refuses names it does not know.
   */
 class BenchContractSpec extends AnyFunSuite {
 
   private def worstCaseLine: String = {
     // worst realistic widths: 5-digit totals, 4-digit lane seconds,
-    // negative exponents, every probe polluted, every optional stage
-    // skipped, a deep record path
+    // negative exponents, a deep record path
     val harness = Bench.harnessJsonStr(99999.999, 99999.9, 99999.9,
       99999.9, 99999.9, 99999.9, 99999.9, 99999.9, 99999.9, 99999.9,
       99999.9)
@@ -28,14 +24,9 @@ class BenchContractSpec extends AnyFunSuite {
       iters = 3,
       lanes = 999,
       failed = Seq("a_reasonably_long_lane_name", "another_failed_lane"),
-      skippedJson = Seq("pass3_tail", "retry", "sf_small", "harness",
-        "probes_partial", "terasort_sf1")
-        .map("\"" + _ + "\"").mkString("[", ",", "]"),
       elapsedSec = 99999.9,
       headlineVals = Bench.headlineLanes.map(_ -> "9999.999"),
       exponents = Bench.allProbeLabels.map(_ -> "-0.999"),
-      pollutedJson = Bench.allProbeLabels
-        .map("\"" + _ + "\"").mkString("[", ",", "]"),
       harnessJson = harness,
       fullRecord = "/tmp/graft-bench-record/bench_out.json")
   }
@@ -62,9 +53,8 @@ class BenchContractSpec extends AnyFunSuite {
     Bench.headlineLanes.foreach { l =>
       assert(qs.has(l), s"headline lane '$l' missing from summary line")
     }
-    Seq("lanes", "failed", "skipped", "elapsed_sec", "load_polluted",
-      "terasort_sf1_sec", "device_mbps_write", "device_mbps_read",
-      "full_record").foreach { k =>
+    Seq("lanes", "failed", "elapsed_sec", "terasort_sf1_sec",
+      "device_mbps_write", "device_mbps_read", "full_record").foreach { k =>
       assert(root.has(k), s"summary field '$k' missing")
     }
   }
@@ -95,8 +85,7 @@ class BenchContractSpec extends AnyFunSuite {
   }
 
   test("default full-record name is cpu-suffixed so the scaling pass can't overwrite the main record") {
-    // the driver benches at 32 cores and again at 8; a shared default
-    // name let the 8-core pass destroy the 32-core full per-lane record
+    // runs at two core counts must keep two full per-lane records
     assert(Bench.defaultBenchOut("32") == "bench_out_c32.json")
     assert(Bench.defaultBenchOut("8") == "bench_out_c8.json")
     assert(Bench.defaultBenchOut("32") != Bench.defaultBenchOut("8"))
@@ -109,5 +98,51 @@ class BenchContractSpec extends AnyFunSuite {
     Bench.headlineLanes.foreach { l =>
       assert(qnames.contains(l), s"headline lane '$l' is not a registered query")
     }
+    // every probe label is a selectable probe: its `_scale` key selects
+    // exactly it
+    assert(Bench.allProbeLabels.distinct == Bench.allProbeLabels)
+    Bench.allProbeLabels.foreach { p =>
+      val s = select(Some(s"${p}_scale"))
+      assert(s.probes == Seq(p) && s.lanes.isEmpty, s"probe '$p' does not select")
+    }
+  }
+
+  private val lanes = SparkEntry.queries.keys.toSeq.sorted
+  private def select(spec: Option[String]) =
+    Bench.select(spec, lanes, Bench.allProbeLabels)
+
+  test("an unset selector selects the full run") {
+    val s = select(None)
+    assert(s.full && s.lanes == lanes && s.probes == Bench.allProbeLabels)
+  }
+
+  test("a lane name selects that lane and no probe") {
+    val s = select(Some("pipeline_full"))
+    assert(!s.full && s.lanes == Seq("pipeline_full") && s.probes.isEmpty)
+  }
+
+  test("a _scale name selects that probe and no lane") {
+    val s = select(Some("pipeline_full_scale"))
+    assert(!s.full && s.lanes.isEmpty && s.probes == Seq("pipeline_full"))
+  }
+
+  test("a mixed list selects its lanes and probes in run order") {
+    val s = select(Some("wordcount, kmeans_scale,dedup_scale,pipeline_e2e"))
+    assert(!s.full && s.lanes == Seq("pipeline_e2e", "wordcount") &&
+      s.probes == Seq("dedup", "kmeans"))
+  }
+
+  test("an unknown name throws and names it with the valid names") {
+    val e = intercept[IllegalArgumentException](
+      select(Some("wordcount,pipline_full,dedupe_scale")))
+    assert(e.getMessage.contains("[dedupe_scale,pipline_full]"), e.getMessage)
+    assert(e.getMessage.contains("pipeline_full,") &&
+      e.getMessage.contains("dedup_scale"), e.getMessage)
+    intercept[IllegalArgumentException](select(Some(" , ")))
+  }
+
+  test("no registered lane name ends in _scale") {
+    assert(!lanes.exists(_.endsWith("_scale")),
+      lanes.filter(_.endsWith("_scale")).mkString(","))
   }
 }

@@ -15,10 +15,7 @@ class SettingsSpec extends AnyFunSuite {
 
   private val listed = Set(
     "SPARK_GRAFT_CPUS", "SPARK_GRAFT_EXTRA_CONF", "SPARK_GRAFT_SF_DIR",
-    "SPARK_GRAFT_LANES", "SPARK_GRAFT_SKIP_LANES", "SPARK_GRAFT_PROBES",
-    "SPARK_GRAFT_BENCH_OUT", "SPARK_GRAFT_BENCH_ITERS",
-    "SPARK_GRAFT_BENCH_BUDGET_SEC", "SPARK_GRAFT_PROBE_RETRY_BUDGET_SEC",
-    "SPARK_GRAFT_RETRY_WORST",
+    "SPARK_GRAFT_LANES", "SPARK_GRAFT_BENCH_OUT", "SPARK_GRAFT_BENCH_ITERS",
     "spark.graft.pipeline.pin", "spark.graft.pipeline.pinDir",
     "spark.graft.bruteForce.maxRows")
 
@@ -29,7 +26,7 @@ class SettingsSpec extends AnyFunSuite {
     finally files.close()
   }
 
-  test("src/main reads exactly the 14 settings README lists") {
+  test("src/main reads exactly the settings README lists") {
     val text = sources(Paths.get("src/main"))
     val env = "SPARK_GRAFT_[A-Z0-9_]+".r
     val conf = "\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"".r
