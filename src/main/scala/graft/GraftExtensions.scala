@@ -20,6 +20,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectFunction(TextExpressions.nfcNormalizeFunction)
     e.injectFunction(TextExpressions.wordTokensFunction)
     e.injectFunction(TextExpressions.wordShinglesFunction)
+    e.injectFunction(TextExpressions.minhashSignatureFunction)
     e.injectFunction(TextExpressions.fixMojibakeFunction)
     e.injectFunction(CompressExpressions.deflatedSizeFunction)
     e.injectFunction(MediaExpressions.aHash64Function)

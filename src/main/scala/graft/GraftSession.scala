@@ -31,8 +31,8 @@ object GraftSession {
       // the same bytes-proportional partitioning every other exchange
       // gets — size-adaptive at any scale (a 100 TB cached frame keeps
       // its parallelism; a 2 MB one stops costing 32 tasks per scan).
-      // Measured r14: -13..-19% on the composition-lane subset
-      // (video_dedup_e2e 7.3-8.0 -> 4.8-4.9 s), OPTIMIZATION_r14.md.
+      // The composition lanes run 13-19% faster with it
+      // (video_dedup_e2e 7.3-8.0 -> 4.8-4.9 s, OPTIMIZATION_r14.md).
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       // Spark's codegen cache maps generated source text to its compiled
       // class, one entry per distinct body, per JVM. A cold 1,000-doc

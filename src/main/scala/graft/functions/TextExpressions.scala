@@ -2,11 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionDescription, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionDescription, TernaryExpression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode NFC normalization as a codegen'd Catalyst expression — the
@@ -316,6 +316,140 @@ case class WordShingles(left: Expression, right: Expression) extends BinaryExpre
     copy(left = l, right = r)
 }
 
+/** The MinHash signature of one document, computed inside its row.
+  *
+  * Tokens are [[WordTokens]]' split: Java's `\\s+` matches exactly the
+  * ASCII whitespace bytes 9–13 and 32, which never occur inside a
+  * multi-byte UTF-8 sequence, so the tokens are cut straight from the
+  * UTF-8 bytes of the decoded text. Each word k-gram's bytes (tokens
+  * joined by one space, as [[WordShingles]] joins them) stream into one
+  * reused MD5; h1 and h2 are the top 60 bits of the digest's first and
+  * second 8 bytes, i.e. `conv(substring(md5(sh), 1|17, 15), 16, 10)`.
+  * Slot i is the min over the doc's shingles of
+  * `((h1 % p) + i * (h2 % p)) % p`, p = [[Prime]]: min over the multiset
+  * equals min over the distinct set, so repeated shingles need no dedup.
+  * Returns null when the text has fewer than k tokens.
+  */
+object MinhashKernel {
+  val Prime = 1000000007L
+
+  private final class State {
+    val md: java.security.MessageDigest = java.security.MessageDigest.getInstance("MD5")
+    val digest = new Array[Byte](16)
+    var starts = new Array[Int](256)
+    var ends = new Array[Int](256)
+  }
+  private val state = ThreadLocal.withInitial[State](() => new State)
+
+  private def isSpace(b: Byte): Boolean = b == ' ' || (b >= 9 && b <= 13)
+
+  private def top60(d: Array[Byte], at: Int): Long = {
+    var v = 0L
+    var i = 0
+    while (i < 8) { v = (v << 8) | (d(at + i) & 0xffL); i += 1 }
+    v >>> 4
+  }
+
+  def sign(text: UTF8String, k: Int, numPerm: Int): ArrayData = {
+    val st = state.get()
+    val bytes = text.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    var n = 0
+    var i = 0
+    while (i < bytes.length) {
+      while (i < bytes.length && isSpace(bytes(i))) i += 1
+      if (i < bytes.length) {
+        if (n == st.starts.length) {
+          st.starts = java.util.Arrays.copyOf(st.starts, 2 * n)
+          st.ends = java.util.Arrays.copyOf(st.ends, 2 * n)
+        }
+        st.starts(n) = i
+        while (i < bytes.length && !isSpace(bytes(i))) i += 1
+        st.ends(n) = i
+        n += 1
+      }
+    }
+    if (n < k) return null
+    val mins = Array.fill(numPerm)(Prime)
+    var s = 0
+    while (s <= n - k) {
+      var c = 0
+      while (c < k) {
+        if (c > 0) st.md.update(' '.toByte)
+        st.md.update(bytes, st.starts(s + c), st.ends(s + c) - st.starts(s + c))
+        c += 1
+      }
+      st.md.digest(st.digest, 0, 16)
+      val b = top60(st.digest, 8) % Prime
+      var v = top60(st.digest, 0) % Prime
+      var j = 0
+      while (j < numPerm) {
+        if (v < mins(j)) mins(j) = v
+        v += b
+        if (v >= Prime) v -= Prime
+        j += 1
+      }
+      s += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(mins)
+  }
+}
+
+/** `minhash_signature(text, k, numPerm)`: [[MinhashKernel.sign]] as a
+  * codegen'd row-local projection, `array<bigint>` of length numPerm,
+  * NULL for null text or fewer than k tokens.
+  */
+@ExpressionDescription(
+  usage = "_FUNC_(text, k, numPerm) - minhash signature of text's word k-grams (null below k tokens)")
+case class MinhashSignature(text: Expression, k: Expression, numPerm: Expression)
+    extends TernaryExpression {
+
+  override def first: Expression = text
+  override def second: Expression = k
+  override def third: Expression = numPerm
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    (text.dataType, k.dataType, numPerm.dataType, k.foldable && numPerm.foldable) match {
+      case (StringType, IntegerType, IntegerType, true) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"minhash_signature needs (string, foldable int k, foldable int numPerm), got $other")
+    }
+
+  @transient private lazy val kv: Int = {
+    val v = k.eval().asInstanceOf[Int]
+    require(v >= 1, s"minhash_signature: k must be >= 1, got $v")
+    v
+  }
+  @transient private lazy val nv: Int = {
+    val v = numPerm.eval().asInstanceOf[Int]
+    require(v >= 1, s"minhash_signature: numPerm must be >= 1, got $v")
+    v
+  }
+
+  override def eval(input: InternalRow): Any = {
+    val t = text.eval(input)
+    if (t == null) null else MinhashKernel.sign(t.asInstanceOf[UTF8String], kv, nv)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = text.genCode(ctx)
+    val sign = s"graft.functions.MinhashKernel$$.MODULE$$.sign"
+    ev.copy(code = code"""
+      ${c.code}
+      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = ${c.isNull} ? null :
+        $sign(${c.value}, $kv, $nv);
+      boolean ${ev.isNull} = ${ev.value} == null;
+    """)
+  }
+
+  override protected def withNewChildrenInternal(
+      f: Expression, s: Expression, t: Expression): Expression =
+    copy(text = f, k = s, numPerm = t)
+}
+
 object TextExpressions {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
@@ -346,6 +480,15 @@ object TextExpressions {
   def word_shingles(text: Column, k: Int): Column =
     org.apache.spark.sql.functions.call_function("word_shingles", text,
       org.apache.spark.sql.functions.lit(k))
+
+  val minhashSignatureFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+    FunctionIdentifier("minhash_signature"),
+    new ExpressionInfo(classOf[MinhashSignature].getName, "minhash_signature"),
+    (children: Seq[Expression]) => MinhashSignature(children(0), children(1), children(2)))
+
+  def minhash_signature(text: Column, k: Int, numPerm: Int): Column =
+    org.apache.spark.sql.functions.call_function("minhash_signature", text,
+      org.apache.spark.sql.functions.lit(k), org.apache.spark.sql.functions.lit(numPerm))
 
   val fixMojibakeFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("fix_mojibake"),

@@ -178,12 +178,12 @@ object Pins {
     * interpreted 0.42 s against compiled 0.54 s at 12.8 MB of input,
     * 0.90 against 0.96 s at 51 MB, 3.07 against 2.28 s at 205 MB. The
     * cap sits well below that break-even, because heavier per-row
-    * work breaks even far sooner: a persist build of 66 KB of batch
-    * shingles that computes minhash signatures made the
-    * `dedup_incremental` probe 1.7 s slower interpreted, so persist
-    * builds stay compiled. Every pin of a 1,000-doc `crawl_pipeline`
-    * pass reads at most 5.5 MB, and interpreting them cuts its janino
-    * compiles 337 → 202.
+    * work breaks even far sooner: a persist build that grouped 66 KB
+    * of batch shingles into minhash signatures ran 1.7 s slower
+    * interpreted. Input bytes alone do not price per-row work, so
+    * persist builds stay compiled. Every pin of a 1,000-doc
+    * `crawl_pipeline` pass reads at most 5.5 MB, and interpreting them
+    * cuts its janino compiles 337 → 202.
     */
   val InterpretBytes: Long = 8L << 20
 

@@ -11,10 +11,12 @@ import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
   * Portability-by-construction: every hash is md5-as-hex-string so the
   * DuckDB oracle can replay the exact pipeline; every similarity is an
   * integer ratio. Scale design: shingling is one narrow projection
-  * (no shuffle); signatures are ONE hash aggregation with 16 codegen'd
-  * `min` columns (map-side partial agg, state O(1) per doc — never an
-  * exploded doc×perm shuffle); LSH banding turns the quadratic all-pairs
-  * problem into an equi-join on (band, bandHash).
+  * (no shuffle); the minhash index signs each document inside its row
+  * (the `minhash_signature` kernel, no shuffle), and the self-join paths,
+  * which keep a shingle-hash table for exact Jaccard anyway, aggregate
+  * it with `numPerm` codegen'd `min` columns (map-side partial agg, state
+  * O(1) per doc — never an exploded doc×perm shuffle); LSH banding turns
+  * the quadratic all-pairs problem into an equi-join on (band, bandHash).
   */
 object Dedup {
 
@@ -94,7 +96,7 @@ object Dedup {
     * partition-by-doc) buys parallel, codegen'd shingling — at 100 TB
     * prefer this when CPU-bound (measured ~2× here); [[shingleTable]]
     * remains the zero-shuffle form (itself codegen'd via the fused
-    * [[textShingles]] kernel since r5).
+    * [[textShingles]] kernel).
     */
   def shingleHashTable(df: DataFrame, id: String, text: String, k: Int): DataFrame =
     shingleHashes(leadShingles(df, id, text, k).select(col(id), col("sh")), id)
@@ -164,7 +166,12 @@ object Dedup {
   def minhashSignatures(shingles: DataFrame, id: String, numPerm: Int): DataFrame =
     minhashSignaturesFromHashes(shingleHashes(shingles, id), id, numPerm)
 
-  /** Signature aggregation over a pre-hashed shingle table (h1, h2). */
+  /** Signature aggregation over a pre-hashed shingle table (h1, h2):
+    * for [[nearDuplicates]] and [[fuzzyDecontaminate]], which keep that
+    * table to verify exact Jaccard. A path that needs only signatures
+    * signs each row with [[minhashSignatureArray]] instead, with equal
+    * values and no shuffle.
+    */
   def minhashSignaturesFromHashes(hashes: DataFrame, id: String, numPerm: Int): DataFrame = {
     val p = 1000000007L
     val mins = (0 until numPerm).map { i =>
@@ -234,16 +241,39 @@ object Dedup {
                                 k: Int, numPerm: Int, rowsPerBand: Int,
                                 maxBucket: Int = 0)
 
-  /** Build the [[MinhashIndex]] for a corpus: one shingle-hash pass, one
-    * signature aggregation, one band projection (the same machinery as
+  /** `df` with its minhash signature ([[minhashSignatureArray]]) as a
+    * last column `sig`, rows with fewer than k tokens dropped. The kernel
+    * runs inside a one-element explode, so it signs each row once: a
+    * null filter over a projected signature would be pushed below the
+    * projection and sign every row twice.
+    */
+  def withSignature(df: DataFrame, text: String, k: Int, numPerm: Int): DataFrame =
+    df.select(col("*"), explode(array(minhashSignatureArray(col(text), k, numPerm))).as("sig"))
+      .filter(col("sig").isNotNull)
+
+  /** (id, s0..sN-1): the minhash signature of every document with at
+    * least k tokens, computed inside its row ([[withSignature]]) and
+    * spread into slot columns — map-only, no token shuffle, sort or
+    * window. Equal to `minhashSignaturesFromHashes(shingleHashTable(df,
+    * id, text, k), id, numPerm)` when ids are unique per input row; each
+    * row yields its own signature row, so a repeated id yields one row
+    * per copy.
+    */
+  private def signatureTable(df: DataFrame, id: String, text: String,
+                             k: Int, numPerm: Int): DataFrame =
+    withSignature(df.select(col(id), col(text)), text, k, numPerm)
+      .select(col(id) +: (0 until numPerm).map(i => col("sig")(i).as(s"s$i")): _*)
+
+  /** Build the [[MinhashIndex]] for a corpus: one row-local signature
+    * projection ([[signatureTable]]), one band projection (the banding of
     * [[nearDuplicates]] — `maxBucket` caps degenerate buckets at build
-    * time so they never reach any probe's join).
+    * time so they never reach any probe's join). Ids must be unique per
+    * input row.
     */
   def buildMinhashIndex(df: DataFrame, id: String, text: String, k: Int,
                         numPerm: Int, rowsPerBand: Int,
                         maxBucket: Int = 0): MinhashIndex = {
-    val sig = minhashSignaturesFromHashes(shingleHashTable(df, id, text, k),
-      id, numPerm)
+    val sig = signatureTable(df, id, text, k, numPerm)
     MinhashIndex(sig, bandTable(sig, id, numPerm, rowsPerBand, maxBucket),
       k, numPerm, rowsPerBand, math.max(maxBucket, 0))
   }
@@ -253,11 +283,13 @@ object Dedup {
     * shape that matters operationally: a crawl lands daily, the corpus
     * is petabytes, and re-running the self-join over corpus∪batch would
     * re-pay the full corpus cost per batch. Here the batch (small side)
-    * is shingled/signed/banded fresh; candidates come from the band
-    * equi-join against the PRE-BUILT index buckets (AQE broadcasts the
-    * batch side); verification is the signature-agreement estimate
-    * n_agree/numPerm — row-local once the two fixed-width signature rows
-    * meet. Returns (new_id, corpus_id, n_agree, est_jaccard) for every
+    * is signed row-locally ([[signatureTable]]) and banded fresh;
+    * candidates come from the band equi-join against the PRE-BUILT
+    * index buckets (AQE broadcasts the batch side); verification is the
+    * signature-agreement estimate n_agree/numPerm — row-local once the
+    * two fixed-width signature rows meet. Batch ids must be unique per
+    * row.
+    * Returns (new_id, corpus_id, n_agree, est_jaccard) for every
     * batch doc whose estimated Jaccard against a corpus doc meets
     * `threshold`; a pipeline drops or flags those new_ids, then appends
     * the survivors' signatures to the index ([[appendMinhashIndex]]).
@@ -267,11 +299,9 @@ object Dedup {
                         maxBucket: Int = 0,
                         materialize: Boolean = false): DataFrame = {
     val n = index.numPerm
-    val bsig0 = minhashSignaturesFromHashes(
-      shingleHashTable(batch, id, text, index.k), id, n)
+    val bsig0 = signatureTable(batch, id, text, index.k, n)
     // the batch signature table feeds two branches (banding + the
-    // verify join's a-side); materialize avoids shingling the batch
-    // twice — same contract as nearDuplicates' flag
+    // verify join's a-side); materialize signs the batch once
     val bsig = if (materialize) Pins.persist(bsig0) else bsig0
     val bands = bandTable(bsig, id, n, index.rowsPerBand, maxBucket)
     val cand = bands.select(col(id).as("new_id"), col("band"), col("bh"))
@@ -341,40 +371,27 @@ object Dedup {
                          path: String, docs: DataFrame, id: String,
                          text: String): Unit =
     IndexStore.append(spark, path, "signatures") { p =>
-      minhashSignaturesFromHashes(shingleHashTable(docs, id, text, p("k").toInt),
-        id, p("num_perm").toInt).withColumnRenamed(id, p("id_col"))
+      signatureTable(docs, id, text, p("k").toInt, p("num_perm").toInt)
+        .withColumnRenamed(id, p("id_col"))
     }
 
   /** ROW-LOCAL minhash signature as an array<long> of length `numPerm` —
     * the same Carter-Wegman values [[minhashSignaturesFromHashes]]
-    * aggregates, computed entirely inside one row (shingle → md5 halves
-    * → per-permutation min, via higher-order functions). NULL when the
-    * document has no shingles (fewer than k tokens); min over the
+    * aggregates over [[shingleHashTable]], computed inside one row by the
+    * codegen'd `minhash_signature` kernel
+    * ([[graft.functions.MinhashKernel]]: one MD5 per shingle, fed the
+    * tokens' UTF-8 bytes, and one pass over the numPerm running mins).
+    * NULL when the document has fewer than k tokens; min over the
     * multiset equals min over the distinct set, so no per-doc dedup is
-    * needed and parity with the batch lane is exact.
+    * needed and parity with the grouped form is exact.
     *
-    * This exists for STREAMING: the batch signature is a groupBy
-    * aggregation, which an append-mode stream can't run without
-    * watermark state — a row-local projection drops straight into
-    * `readStream` pipelines (see StreamingOps.streamDedupGate). The
-    * price of the HOF form: interpreted evaluation and two md5 calls
-    * per shingle (no codegen CSE inside lambdas) — for batch corpora
-    * prefer the aggregated lane, which shares one hash pass across the
-    * whole plan.
+    * Every signature path that needs no shingle table runs on it: the
+    * index build, probe and append ([[signatureTable]]) and the streaming
+    * gate (StreamingOps.streamDedupGate), where an append-mode stream
+    * could not run the grouped form without watermark state.
     */
-  def minhashSignatureArray(text: Column, k: Int, numPerm: Int): Column = {
-    val p = 1000000007L
-    val hh = transform(textShingles(text, k),
-      sh => struct((h1(sh) % p).as("h1"), (h2(sh) % p).as("h2")))
-    // fold the shingle array ONCE, carrying all numPerm running mins;
-    // p is a safe +infinity (every value is mod p, strictly below it)
-    val idx = array((0 until numPerm).map(i => lit(i.toLong)): _*)
-    val init = array((0 until numPerm).map(_ => lit(p)): _*)
-    val folded = aggregate(hh, init,
-      (acc, x) => zip_with(acc, idx,
-        (a, i) => least(a, (x("h1") + i * x("h2")) % p)))
-    when(size(textShingles(text, k)) > 0, folded)
-  }
+  def minhashSignatureArray(text: Column, k: Int, numPerm: Int): Column =
+    graft.functions.TextExpressions.minhash_signature(text, k, numPerm)
 
   /** The band-b bucket hash of a signature ARRAY — byte-identical to
     * [[bandTable]]'s md5(concat_ws(",", slots)) over signature columns,
@@ -625,10 +642,10 @@ object Dedup {
     // nibble-indexed oracle, but a tight primitive pipeline instead of
     // an interpreted per-nibble transform() lambda (16 interpreted
     // conv+substring calls per token, ~3× the query's cost).
-    // A Par.fanOut of the input was A/B'd r15 and REVERTED: the
-    // signature pass is map-side-parallel only up to the scan's split
-    // count, but at sf0.1 the md5+sum work is too small for the extra
-    // round-robin text shuffle to pay (dedup_clusters min 2.81 → 3.01).
+    // The input is not fanned out with Par.fanOut: the signature pass
+    // is map-side-parallel only up to the scan's split count, but at
+    // sf0.1 the md5+sum work is too small for the extra round-robin
+    // text shuffle to pay (dedup_clusters min 2.81 → 3.01 with it).
     val tok = df.select(col(id), explode(tokens(col(text))).as("w"))
       .withColumn("hhi", expr("cast(conv(substring(md5(w), 1, 8), 16, 10) as bigint)"))
       .withColumn("hlo", expr("cast(conv(substring(md5(w), 9, 8), 16, 10) as bigint)"))

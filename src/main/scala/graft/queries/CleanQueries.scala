@@ -155,7 +155,7 @@ object CleanQueries extends QueryModule {
     // sequence (all rows must be 1; spec'd on this query), and
     // `merges_md5` = checksum of the trained merge list (constant per
     // corpus; retrain determinism spec'd against an independent train).
-    // FULLY oracle-checked since r9: the DuckDB oracle retrains the
+    // FULLY oracle-checked: the DuckDB oracle retrains the
     // merge list and re-encodes every word via two recursive CTEs (see
     // the oracle's comment), so the checksum and every per-doc subword
     // count hash-match an independent SQL replay.
@@ -540,9 +540,8 @@ object CleanQueries extends QueryModule {
         |)""".stripMargin
 
   def oracleSql: Map[String, String] = Map(
-    // FULL replay of the BPE trainer + tokenizer (graduated from
-    // rows-only in r9 — the last plausibly-SQL-expressible no-oracle
-    // lane). Two recursions: (1) the merge LOOP — per-word symbol rows
+    // FULL replay of the BPE trainer + tokenizer. Two recursions:
+    // (1) the merge LOOP — per-word symbol rows
     // carry the vocabulary state; each step aggregates adjacent-pair
     // frequencies ACROSS the working table (DuckDB allows aggregation
     // over the recursive reference), picks max-count/lex-smallest, and

@@ -20,12 +20,21 @@ import graft.sources.Jdbc
   */
 object DbQueries extends QueryModule {
 
-  // per-process DB dir: Derby holds an exclusive lock per database while
-  // a JVM has it open, so concurrent Verify/Bench JVMs must not share one
-  private def dbDir(sfDir: String): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft-derby-${ProcessHandle.current().pid()}/$tag"
+  // per-process DB root: Derby holds an exclusive lock per database while
+  // a JVM has it open, so concurrent Verify/Bench JVMs must not share one.
+  // At JVM exit Derby shuts down, closing its databases, and the root goes.
+  private lazy val dbRoot: java.io.File = {
+    val root = new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
+      s"graft-derby-${ProcessHandle.current().pid()}")
+    sys.addShutdownHook {
+      try Jdbc.shutdownDerby()
+      finally org.apache.commons.io.FileUtils.deleteQuietly(root)
+    }
+    root
   }
+
+  private def dbDir(sfDir: String): String =
+    new java.io.File(dbRoot, sfDir.replaceAll("[^A-Za-z0-9.]", "_")).toString
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "db_count_pageview" -> ((s, dir) => {

@@ -330,7 +330,7 @@ object DedupQueries extends QueryModule {
     // the sketch lane of decontamination: same corpus/eval derivation
     // through a Bloom filter instead of an exact broadcast set.
     // Deterministic (fixed-hash sketch, order-independent bit-array
-    // merge) and APPROXIMATE — and since r9 FULLY oracle-checked
+    // merge) and APPROXIMATE — and FULLY oracle-checked
     // anyway, false positives included: Spark's BloomFilter over longs
     // is Murmur3_x86_32.hashLong double hashing (h1 + i·h2, i=1..k)
     // into a 64-bit-word-rounded bit array, every step 32-bit integer
@@ -884,8 +884,8 @@ object DedupQueries extends QueryModule {
         |JOIN sizes sa ON sa.doc_id = i.doc_id
         |JOIN sizes sb ON sb.doc_id = i.eval_id
         |WHERE CAST(ni AS DOUBLE) / (sa.n + sb.n - ni) >= 0.5""".stripMargin),
-    // FULL replay of the Bloom-gated lane, false positives included
-    // (graduated from rows-only in r9): bp replays
+    // FULL replay of the Bloom-gated lane, false positives included:
+    // bp replays
     // BloomFilter.create(100000, 0.01)'s parameter derivation
     // (optimalNumOfBits truncation, optimalNumOfHashFunctions
     // rounding, the bit array's 64-bit-word size rounding); mm replays

@@ -26,21 +26,24 @@ object JobQueries extends QueryModule {
         s"/graft-tera-${ProcessHandle.current().pid()}"
       val inDir = s"$base/input"; val outDir = s"$base/output"
       TeraIO.delete(s, inDir); TeraIO.delete(s, outDir)
-
-      TeraIO.write(TeraSort.teraGen(s, rows, 32), inDir)          // TeraGen
-      // TeraChecksum(in) over the WRITTEN file (what the reference's
-      // checksum job reads); equality with the output checksum below
-      // proves the data survived disk->sort->disk losslessly.
-      val genChecksum = TeraSort.teraChecksum(TeraIO.read(s, inDir))
-      TeraIO.write(TeraSort.teraSort(TeraIO.read(s, inDir), 32), outDir) // TeraSort
-      // TeraValidate + TeraChecksum fused over the RE-READ output
-      val (ok, count, outputChecksum) =
-        TeraSort.teraValidateChecksum(TeraIO.read(s, outDir))
-      val bytesOk = TeraIO.dataBytes(s, outDir) == rows * TeraIO.RecordLength
-      require(ok && count == rows && outputChecksum == genChecksum && bytesOk,
-        s"terasort validation failed: ok=$ok count=$count " +
-          s"checksum=$genChecksum/$outputChecksum bytesOk=$bytesOk")
-      TeraIO.delete(s, inDir); TeraIO.delete(s, outDir)
+      // the result is a local row, so the files go whether or not the
+      // validation passes
+      val (ok, count) = try {
+        TeraIO.write(TeraSort.teraGen(s, rows, 32), inDir)          // TeraGen
+        // TeraChecksum(in) over the WRITTEN file (what the reference's
+        // checksum job reads); equality with the output checksum below
+        // proves the data survived disk->sort->disk losslessly.
+        val genChecksum = TeraSort.teraChecksum(TeraIO.read(s, inDir))
+        TeraIO.write(TeraSort.teraSort(TeraIO.read(s, inDir), 32), outDir) // TeraSort
+        // TeraValidate + TeraChecksum fused over the RE-READ output
+        val (ok, count, outputChecksum) =
+          TeraSort.teraValidateChecksum(TeraIO.read(s, outDir))
+        val bytesOk = TeraIO.dataBytes(s, outDir) == rows * TeraIO.RecordLength
+        require(ok && count == rows && outputChecksum == genChecksum && bytesOk,
+          s"terasort validation failed: ok=$ok count=$count " +
+            s"checksum=$genChecksum/$outputChecksum bytesOk=$bytesOk")
+        (ok, count)
+      } finally TeraIO.delete(s, base)
       import s.implicits._
       Seq((rows, ok, count)).toDF("rows", "sorted_ok", "row_count")
     })

@@ -299,7 +299,7 @@ object MultimodalQueries extends QueryModule {
           idOffset = 1000000L, fmt = "bmp"))
       Multimodal.imageDedup(imgs, maxDist = 3, maxBucket = 1000)
     }),
-    // the VIDEO-side durable index (r11 residual #2): the same
+    // the VIDEO-side durable index: the same
     // save/append/load/probe discipline over the frame-ahash table —
     // day 1 (even ids) hashed + saved, day 2 (odd ids) APPENDED with
     // the saved grid, then the loaded index serves head-clipped
@@ -356,7 +356,7 @@ object MultimodalQueries extends QueryModule {
         Multimodal.fabricateFrameStream(Tables(s, dir, "documents")))),
     "multimodal_frames" -> ((s, dir) => Multimodal.frameSample(media(s, dir), 4)),
     // byte-entropy screen over binary content — a REAL feature (no
-    // codec), FULL-ORACLE since r10 via the relational twin
+    // codec), FULL-ORACLE via the relational twin
     // (byteEntropyRelational — the uniq_hll_portable discipline): the
     // histogram core (n_distinct, max_count) is exact integers, and
     // entropy_bits is the fixed-order log2 expression both engines

@@ -511,7 +511,7 @@ object PipelineQueries extends QueryModule {
     // stripped token lists feed everything downstream),
     // dsir_weights' λ/selection law with the normalized en target, and
     // token_budget_sample's per-(source, shard) prefix law — then the
-    // shared chunk/pack tail at n_copies = 1. Since r13 the stack also
+    // shared chunk/pack tail at n_copies = 1. The stack also
     // carries the media_dedup_e2e replay between the semantic and
     // decontamination stages: the audio-law fingerprint chain over the
     // %10 originals + %40 byte-copies (id+3) + %30 mid-stream extracts
@@ -519,7 +519,7 @@ object PipelineQueries extends QueryModule {
     // offset-vote pairs among representatives, exact-group edges,
     // recursive closure, and the min-reachable election — docs that
     // lose it (mdrops) leave the chain exactly where stage 3c drops
-    // them in TrainingPipeline.run. Since r14 the same slot also
+    // them in TrainingPipeline.run. The same slot also
     // carries the image_dedup_e2e replay (idrops): the still-image
     // phash chain over the %10=1 originals + %40=1 byte-copies (id+7)
     // + %30=1 BMP re-encodes (id+9), exact groups by the

@@ -109,9 +109,9 @@ object SimilarityQueries extends QueryModule {
     // accept at >= 1.05). BOTH sides are web-scale in the real
     // workload, so candidates come from bitextMineLsh's deterministic
     // sign-hyperplane blocking — assignment is a pure O(n·bits·dim)
-    // projection (no codebook to train, collect, or scan: the r10
-    // flat-codebook index cost n·cells = Θ(n²/32) to assign when cells
-    // grew ∝ n) and the (t, cell) equi-join emits linear candidate
+    // projection (no codebook to train, collect, or scan: a
+    // flat-codebook index costs n·cells = Θ(n²/32) to assign when cells
+    // grow ∝ n) and the (t, cell) equi-join emits linear candidate
     // volume. bits/tables are PINNED (3/4) rather than count-derived
     // so the static oracle SQL replays the identical plane grid at
     // every sf; a production caller omits `bits` and gets the

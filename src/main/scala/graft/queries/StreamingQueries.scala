@@ -590,7 +590,7 @@ object StreamingQueries extends QueryModule {
         .toDF("vid_q", "vid_m", "offset", "support")
     }),
 
-    // THE STREAMING MEDIA ADMISSION GATE (r12 optional item 6): the
+    // THE STREAMING MEDIA ADMISSION GATE: the
     // streaming_dedup_gate discipline applied to the DURABLE clip
     // index — uploads are checked against the persisted corpus
     // fingerprint ARTIFACT before admission, the UGC-platform shape.

@@ -23,8 +23,8 @@ object ToolQueries extends QueryModule {
         s"$p/orders", "BLOCK")) + "/orders"
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // the SequenceFile format family under the driver's hash gate (the
-    // r11 optional item): orders (key = orderkey, value = priority)
+    // the SequenceFile format family under the driver's hash gate:
+    // orders (key = orderkey, value = priority)
     // round-trips through the REAL Hadoop SequenceFile container —
     // BLOCK-compressed SequenceFileOutputFormat write, read back via
     // the DSv2 source (header-inferred schema, sync-split byte

@@ -51,6 +51,13 @@ object Jdbc {
 
   val DerbyDriver = "org.apache.derby.iapi.jdbc.AutoloadedDriver"
 
+  /** Shut the embedded Derby engine down, closing every database this
+    * JVM holds open; Derby reports success as SQLState XJ015.
+    */
+  def shutdownDerby(): Unit =
+    try DriverManager.getConnection("jdbc:derby:;shutdown=true").close()
+    catch { case e: java.sql.SQLException if e.getSQLState == "XJ015" => () }
+
   def connect(url: String): Connection = DriverManager.getConnection(url)
 
   /** IntegerSplitter.split (IntegerSplitter.java:86-131): boundaries one

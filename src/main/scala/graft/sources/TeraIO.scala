@@ -31,7 +31,7 @@ class TeraRecordOutputFormat extends FileOutputFormat[BytesWritable, NullWritabl
     // write .crc either). No-op on filesystems without client checksums.
     fs.setWriteChecksum(false)
     fs.setVerifyChecksum(false)
-    // 1 MiB write buffer (r15): the record writer emits 100-byte
+    // 1 MiB write buffer: the record writer emits 100-byte
     // appends, and the default io.file.buffer.size (4 KB) turns that
     // into a syscall every ~40 records — measured as committer-path
     // task time well below the device's delivered bandwidth. 256×

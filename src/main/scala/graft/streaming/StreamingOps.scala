@@ -152,10 +152,12 @@ object StreamingOps {
     * .MinhashIndex]] — built once in batch, read from parquet). This is
     * the streaming face of `Dedup.probeMinhashIndex`: signatures and
     * band-bucket hashes are computed ROW-LOCALLY
-    * (`Dedup.minhashSignatureArray` / `bandHashOfArray` — byte-identical
-    * to the batch banding, so stream rows collide with index buckets
-    * built by the batch lane), candidates come from the stream-static
-    * equi-join on (band, bh), and verification — the signature-agreement
+    * (`Dedup.withSignature`, the `minhash_signature` kernel that the
+    * batch index build, probe and append also run, and
+    * `bandHashOfArray` — byte-identical to the batch banding, so stream
+    * rows collide with index buckets built by the batch lane),
+    * candidates come from the stream-static equi-join on (band, bh),
+    * and verification — the signature-agreement
     * Jaccard estimate — is a row-local zip of the two fixed-width
     * signature arrays. No stateful aggregation anywhere, so the gate
     * runs in append mode; the one piece of state is the final
@@ -174,9 +176,7 @@ object StreamingOps {
     import graft.operators.Dedup
     val n = index.numPerm
     val nBands = n / index.rowsPerBand
-    val withSig = stream
-      .withColumn("sig", Dedup.minhashSignatureArray(col(text), index.k, n))
-      .filter(col("sig").isNotNull)
+    val withSig = Dedup.withSignature(stream, text, index.k, n)
     val bandStructs = (0 until nBands).map { b =>
       struct(lit(b).as("band"),
         Dedup.bandHashOfArray(col("sig"), b, index.rowsPerBand).as("bh"))

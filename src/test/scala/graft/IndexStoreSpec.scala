@@ -83,6 +83,29 @@ class IndexStoreSpec extends AnyFunSuite {
   private def ivfLoaded(dir: String) =
     (ivfState _).tupled(Similarity.loadIvfIndex(spark, dir))
 
+  test("a minhash index saved through the grouped signature path loads, probes and appends as one built row-locally") {
+    val near = Seq(
+      (101L, "alpha beta gamma delta epsilon zeta eta theta iota lambda"),
+      (102L, "short")
+    ).toDF("doc_id", "text")
+    withDir { grouped =>
+      withDir { local =>
+        val idx = minhash(corpus)
+        Dedup.saveMinhashIndex(idx.copy(signatures = Dedup.minhashSignaturesFromHashes(
+          Dedup.shingleHashTable(corpus, "doc_id", "text", 3), "doc_id", 16)), grouped, "doc_id")
+        Dedup.saveMinhashIndex(idx, local, "doc_id")
+        assert(mhLoaded(grouped) == mhLoaded(local))
+        def probe(dir: String) = rows(Dedup.probeMinhashIndex(near.unionByName(batch), "doc_id",
+          "text", Dedup.loadMinhashIndex(spark, dir), threshold = 0.5))
+        assert(probe(grouped).map(_.getLong(0)) == Seq(101L))
+        assert(probe(grouped) == probe(local))
+        Seq(grouped, local).foreach(Dedup.appendMinhashIndex(spark, _, batch, "doc_id", "text"))
+        assert(mhLoaded(grouped) == mhLoaded(local))
+        assert(mhLoaded(grouped)._5.map(_.getLong(0)).sorted == Seq(10L, 20L, 30L, 103L))
+      }
+    }
+  }
+
   test("a save or append whose row write fails leaves the previous index and no staged dir") {
     withDir { dir =>
       val idx = minhash(corpus)

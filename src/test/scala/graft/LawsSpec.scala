@@ -200,6 +200,40 @@ object LawsSpec extends Properties("graft.laws") {
       got == want
     }
 
+  // --- row-local minhash signatures ----------------------------------------
+
+  // tokens with repeats, non-ASCII letters, an emoji (a surrogate pair), a
+  // lone surrogate and the non-breaking and em spaces (not `\s` in Java,
+  // so they stay inside tokens); separators mix every ASCII whitespace
+  private val genSigText: Gen[Option[String]] = Gen.frequency(
+    1 -> Gen.const(None),
+    1 -> Gen.const(Some("")),
+    8 -> (for {
+      n <- Gen.chooseNum(0, 12)
+      toks <- Gen.listOfN(n, Gen.oneOf("a", "b", "a", "dd", "é", "日本", "\uD83D\uDE00",
+        "\uD800", "x\u00A0y", "z\u2003", "naïve"))
+      seps <- Gen.listOfN(n + 1, Gen.oneOf(" ", " ", "  ", "\t", "\n", "\r\n", "\u000B", "\f", ""))
+    } yield Some(seps.zipAll(toks, "", "").map { case (s, t) => s + t }.mkString)))
+
+  // 20 corpora, each signed at numPerm 16 and 128: every case runs both
+  // paths' jobs twice
+  property("minhash_signature rows equal the grouped shingle-hash signatures") = {
+    import graft.operators.Dedup
+    val r = Test.check(Test.Parameters.default.withMinSuccessfulTests(20),
+      forAll(Gen.listOf(genSigText).map(_.take(10)), Gen.chooseNum(1, 5)) { (texts, k) =>
+        val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+        Seq(16, 128).forall { n =>
+          def rows(df: org.apache.spark.sql.DataFrame) =
+            df.collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long])
+          val kernel = Dedup.buildMinhashIndex(docs, "doc_id", "text", k, n, n).signatures
+          val grouped = Dedup.minhashSignaturesFromHashes(
+            Dedup.shingleHashTable(docs, "doc_id", "text", k), "doc_id", n)
+          kernel.columns.toSeq == grouped.columns.toSeq && rows(kernel) == rows(grouped)
+        }
+      })
+    Prop(r.passed) :| r.status.toString
+  }
+
   // --- as-of join ---------------------------------------------------------
 
   property("asof matches the naive latest-at-or-before oracle") =

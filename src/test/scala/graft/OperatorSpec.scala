@@ -2543,6 +2543,7 @@ class OperatorSpec extends AnyFunSuite {
       "nearest_cell_ids(f, array(array(0d, 1d), array(1d, 0d)), array(10L, 20L), 1)",
       "nearest_centroid_l2(l, array(array(0L, 0L), array(5L, 5L)))",
       "nfc_normalize(s)", "word_tokens(s)", "word_shingles(s, 2)",
+      "minhash_signature(s, 2, 16)",
       "fix_mojibake(s)", "deflated_size(s)", "ahash64(bin)", "byte_hist(bin)",
       "multi_match_counts(s, array('the', 'cat'))", "ieee_ln(x)")
     def fused(df: DataFrame): Boolean =

@@ -841,6 +841,47 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("SortMergeJoin"), s"vocab-sized join shuffled:\n$p")
   }
 
+  test("minhash index build, append and probe sign each row once: no Window, Sort or Exchange under the kernel") {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.functions.MinhashSignature
+    import graft.operators.Dedup
+    import spark.implicits._
+    // parquet inputs, as in a real build: a local relation would let the
+    // optimizer fold the kernel away before any plan runs it
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-minhash").toString
+    try {
+      Seq((1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+        (2L, "completely different text about another subject entirely unrelated here"),
+        (3L, "one more unrelated corpus document body with its own words inside")
+      ).toDF("doc_id", "text").write.parquet(s"$dir/corpus")
+      Seq((10L, "alpha beta gamma delta epsilon zeta eta theta iota lambda"),
+        (11L, "fresh never seen content sharing nothing with the existing corpus")
+      ).toDF("doc_id", "text").write.parquet(s"$dir/batch")
+      val (corpus, batch, index) =
+        (spark.read.parquet(s"$dir/corpus"), spark.read.parquet(s"$dir/batch"), s"$dir/index")
+      val actions = Seq[(String, () => Unit)](
+        "build and save" -> (() => Dedup.saveMinhashIndex(
+          Dedup.buildMinhashIndex(corpus, "doc_id", "text", 3, 16, 4), index, "doc_id")),
+        "probe" -> (() => Dedup.probeMinhashIndex(batch, "doc_id", "text",
+          Dedup.loadMinhashIndex(spark, index), threshold = 0.5).collect()),
+        "append" -> (() => Dedup.appendMinhashIndex(spark, index, batch, "doc_id", "text")))
+      for ((name, run) <- actions) {
+        val plans = PlanSpec.actionPlans(spark)(run()).map(_._2)
+        val shown = plans.map(_.head.treeString).mkString("\n")
+        val signing = plans.flatten.filter(_.expressions.exists(_.exists(_.isInstanceOf[MinhashSignature])))
+        assert(signing.nonEmpty, s"$name: no minhash_signature projection:\n$shown")
+        assert(!signing.exists(_.isInstanceOf[FilterExec]), s"$name: a filter signs rows twice:\n$shown")
+        signing.foreach { p =>
+          val below = p.children.flatMap(PlanSpec.flat)
+          assert(!below.exists(n => n.isInstanceOf[WindowExec] || n.isInstanceOf[SortExec] ||
+            n.isInstanceOf[Exchange]), s"$name: a window, sort or exchange under the kernel:\n$shown")
+        }
+      }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
   /** The key census under a join side: a count-only aggregate, reached
     * through unary nodes with a filter on its count on the way.
     */
