@@ -236,10 +236,10 @@ case class FixMojibake(child: Expression) extends UnaryExpression {
 }
 
 /** Word k-gram shingles straight from text: tokenize (as [[WordTokens]])
-  * then join each k consecutive tokens with a single space — the fused,
-  * codegen'd form of `wordShingles(tokens(text), k)`. NULL text yields
-  * an EMPTY array (not null), matching the `when(size(toks) >= k, ...)
-  * .otherwise(array())` contract of the declarative original.
+  * then join each k consecutive tokens with a single space, one element
+  * per starting token in token order, so element i is the gram at token
+  * position i. Fewer than k tokens, or NULL text, yields an EMPTY array
+  * (never null).
   */
 @ExpressionDescription(
   usage = "_FUNC_(text, k) - word k-gram shingles of text (empty when fewer than k tokens)")

@@ -26,12 +26,9 @@ import graft.operators.{Dedup, Html, Pins, Redact, Sampling, Similarity, TextOps
   * within (source, shard) over (unit, token-count) rows only. In the
   * default pipeline document text never rides a shuffle: mixture
   * weighting computes copy counts map-side and replicas explode only
-  * after chunking. Two OPTIONAL stages are the exceptions: the
-  * repetition gate's gram window shuffles the tokenized stream once
-  * (and its doc_id anti-join shuffles the gated rows unless the
-  * flagged set broadcasts), and the token-budget stage's kept-id
-  * semi-join shuffles the surviving text on doc_id when the kept set
-  * exceeds the broadcast threshold.
+  * after chunking. One OPTIONAL stage is the exception: the
+  * token-budget stage's kept-id semi-join shuffles the surviving text
+  * on doc_id when the kept set exceeds the broadcast threshold.
   *
   * Returns the packed output and a per-stage row accounting Report —
   * the numbers a pipeline dashboard would publish. Each count is an
@@ -356,49 +353,37 @@ object TrainingPipeline {
       val r = TextOps.compressionRatio(col("text"))
       r.isNotNull && r >= lo && r <= hi
     }.getOrElse(lit(true))
+    // optional Gopher repetition gate: drop degenerate/looping text
+    // (2-gram dup_gram_frac above the cap) before any dedup work, in the
+    // same map-only filter; docs too short to emit a gram pass
+    val repGate = maxRepetition
+      .map(r => Dedup.repetitionGate(col("text"), 2, r)).getOrElse(lit(true))
     // n_toks rides the surviving frames as one long column so the
     // token-budget stage never re-tokenizes the corpus
-    val gated = docs
+    val ruleGated0 = docs
       .withColumn("t", Dedup.tokens(col("text")))
       .filter(TextOps.langPred(col("t")) === lang &&
-        size(col("t")) >= minTokens && qualGate && compGate)
+        size(col("t")) >= minTokens && qualGate && compGate && repGate)
       .withColumn("n_toks", size(col("t")).cast("long"))
       .drop("t")
-    // 1b. optional Gopher repetition gate: drop degenerate/looping text
-    // before any dedup work. Not map-only: the gram window shuffles the
-    // TOKENIZED stream once (per-doc gram counts need doc-clustered
-    // positions) and the per-doc counts aggregate in 16-32-byte rows;
-    // the gate itself anti-joins doc_ids. `gated` feeds both the stats
-    // and the anti-join's left side, so it is pinned for the gate's
-    // lifetime — unpinned lineage would re-run the corpus scan +
-    // tokenize + langID twice. Docs too short to emit a gram pass.
-    val gateInput = if (maxRepetition.isDefined) pins.persist(gated) else gated
-    val ruleGated0 = maxRepetition.map { r =>
-      gateInput.join(
-        Dedup.repetitionStats(gateInput, "doc_id", "text", n = 2)
-          .filter(col("dup_gram_frac") > r).select(col("doc_id")),
-        Seq("doc_id"), "left_anti")
-    }.getOrElse(gateInput)
     // 1c. optional model-based quality gate: broadcast the trained
     // weight table, score row-locally, keep positive-class docs — the
     // fastText-filter stage between the rule gates and dedup.
     // ruleGated feeds BOTH the scorer and the semi-join's left side, so
     // it is pinned for the gate's lifetime — unpinned lineage would
-    // re-run the corpus scan + tokenize + langID twice (the stage-1b
-    // discipline)
+    // re-run the corpus scan + tokenize + langID twice
     val ruleGated =
       if (classifierWeights.isDefined) pins.persist(ruleGated0) else ruleGated0
-    // eager pin BEFORE the gate-input unpersists below: unpinning the
-    // gate frames first would hand the checkpoint an unpersisted
-    // lineage (the exact re-run the stage-1b pins exist to avoid)
+    // eager pin BEFORE the release below: releasing the gate pin first
+    // would hand the checkpoint an unpersisted lineage (the exact
+    // re-run the gate pin exists to avoid)
     val (filtered, nFilter) = pinL("filtered")(classifierWeights.map { w =>
       val keep = graft.operators.Classify
         .scoreDocs(ruleGated, "doc_id", "text", w)
         .filter(col("pred") === 1).select("doc_id")
       ruleGated.join(keep, Seq("doc_id"), "left_semi")
     }.getOrElse(ruleGated))
-    pins.release(gateInput) // no-op for a gate that is off
-    pins.release(ruleGated)
+    pins.release(ruleGated) // no-op for a gate that is off
 
     // 2. exact dedup to representatives (16-byte digests shuffle)
     val reps = Dedup.exact(filtered, "doc_id", "text").select(col("keep_id").as("doc_id"))
@@ -514,7 +499,7 @@ object TrainingPipeline {
     // side in one doc_id join (the stage's text-shuffle exception,
     // like the budget stage's). `clean` feeds both the apply and the
     // rejoin's left side, so it is pinned for the stage's lifetime
-    // (the stage-1b discipline). Wholly-covered docs vanish (the
+    // (the stage-1c discipline). Wholly-covered docs vanish (the
     // substringDecontamApply contract); n_toks is refreshed to the
     // post-strip count so the token-budget stage sees real lengths.
     val substringOn = evCanon.isDefined && decontamSubstringW.isDefined
@@ -582,9 +567,9 @@ object TrainingPipeline {
     // unit mixtures are really specified in) — hash-prefix sampling
     // over narrow (id, source, n_toks) rows (carried from stage 1, no
     // re-tokenization), one bounded window shuffle. The kept-id
-    // semi-join back is the budget stage's text-shuffle exception
-    // (like the repetition gate's): beyond the broadcast threshold
-    // the surviving text rides a doc_id shuffle once. The budgeted
+    // semi-join back is the budget stage's text-shuffle exception:
+    // beyond the broadcast threshold the surviving text rides a doc_id
+    // shuffle once. The budgeted
     // frame feeds the packing and the optional landing, so it is
     // persisted when budgets apply. 5b: rate-based mixture
     // weighting (map-only, deterministic) — copy COUNTS only; the

@@ -64,16 +64,4 @@ object CompositeJoin {
     joined.select(col(key),
       emit(dfs.indices.map(i => col(s"__t$i"))).as("value"))
   }
-
-  /** The reference's reduce-side join (hadoop-datajoin): tag rows by
-    * source, group by key, cross-product the tag groups
-    * (DataJoinReducerBase.java:129-214). That IS a shuffle join; exposed
-    * here only for parity of surface — delegates to [[inner]]/[[outer]].
-    */
-  def reduceSide(key: String, joinType: String, dfs: Seq[DataFrame]): DataFrame =
-    joinType match {
-      case "inner" => inner(key, dfs)
-      case "outer" => outer(key, dfs)
-      case other   => dfs.reduce((a, b) => a.join(b, Seq(key), other))
-    }
 }

@@ -25,9 +25,4 @@ object Counters {
     val obs = Observation(name)
     (df.observe(obs, metrics.head, metrics.tail: _*), obs)
   }
-
-  /** The reference's standard input-side counters. */
-  def inputCounters(df: DataFrame): (DataFrame, Observation) =
-    observe(df, "task_counters",
-      count(lit(1)).as("input_records"))
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Document deduplication for training-data pipelines: exact, word-shingle
   * Jaccard, and MinHash-LSH near-dup detection (scale extensions; SURVEY
@@ -33,13 +33,6 @@ object Dedup {
   def tokensLocal(s: String): Seq[String] =
     s.split("\\s+").toIndexedSeq.filter(_.nonEmpty)
 
-  /** Word k-gram shingles of a token array (empty when fewer than k). */
-  def wordShingles(toks: Column, k: Int): Column =
-    when(size(toks) >= k,
-      transform(sequence(lit(1), size(toks) - (k - 1)),
-        i => array_join(slice(toks, i, lit(k)), " ")))
-      .otherwise(array().cast(ArrayType(StringType)))
-
   /** Exact dedup: group by content hash, keep the smallest id
     * (the distinct/identity-reducer pattern, mapred/lib/IdentityReducer.java,
     * upgraded with a content digest so only the 16-byte hash shuffles,
@@ -49,9 +42,10 @@ object Dedup {
     df.groupBy(md5(col(text)).as("h"))
       .agg(min(col(id)).as("keep_id"), count(lit(1)).as("n_dups"))
 
-  /** Word k-gram shingles straight from a text column — the fused,
-    * codegen'd form of `wordShingles(tokens(text), k)` (see
-    * [[graft.functions.WordShingles]]). */
+  /** Word k-gram shingles straight from a text column: [[tokens]]
+    * joined k at a time with single spaces, in token order, inside the
+    * row (the codegen'd [[graft.functions.WordShingles]] kernel). Empty
+    * when the text has fewer than k tokens or is null. */
   def textShingles(text: Column, k: Int): Column =
     graft.functions.TextExpressions.word_shingles(text, k)
 
@@ -60,13 +54,6 @@ object Dedup {
     df.select(col(id), explode(textShingles(col(text), k)).as("sh"))
       .distinct()
 
-  /** Shingles reduced to their Carter-Wegman hash halves: ONE md5 per
-    * (doc, shingle) yields h1/h2 (60-bit hex halves). Downstream
-    * self-joins and frequency counts key on `h1` — a long, not the
-    * shingle string — so the shuffle carries 8 bytes per shingle instead
-    * of the text. h2 feeds the minhash permutations. Identical-by-
-    * construction in the DuckDB oracle ('0x'||substr(md5(sh),...)).
-    */
   /** The 60-bit hash halves of a shingle — THE hash recipe every
     * consumer (shingleHashes, contamRatio, the DuckDB oracles) must
     * share; a divergent copy would silently empty every intersection.
@@ -76,48 +63,41 @@ object Dedup {
   def h2(sh: Column): Column =
     conv(substring(md5(sh), 17, 15), 16, 10).cast("long")
 
+  /** Shingles reduced to their Carter-Wegman hash halves: ONE md5 per
+    * (doc, shingle) yields h1/h2 (60-bit hex halves). Downstream
+    * self-joins and frequency counts key on `h1` — a long, not the
+    * shingle string — so the shuffle carries 8 bytes per shingle instead
+    * of the text. h2 feeds the minhash permutations. Identical-by-
+    * construction in the DuckDB oracle ('0x'||substr(md5(sh),...)).
+    */
   def shingleHashes(shingles: DataFrame, id: String): DataFrame =
     shingles.select(col(id), h1(col("sh")).as("h1"), h2(col("sh")).as("h2"))
 
-  /** [[shingleTable]]∘[[shingleHashes]] optimized for the hot path the
-    * dedup/decontamination queries share. Two changes, same multiset:
-    *
-    *  - shingles come from `lead()` over (id, pos) — the [[fingerprints]]
-    *    pattern — so construction is codegen'd concat_ws, and the
-    *    window's partition-by-doc shuffle spreads shingle+md5 work
-    *    across the cluster even when the upstream scan has few splits
-    *    (a zero-shuffle map pipeline is only as parallel as its input);
-    *  - the distinct dedups AFTER hashing, so its shuffle carries
-    *    24-byte (id, h1, h2) rows, never shingle strings.
-    *
-    * distinct-on-string == distinct-on-(h1,h2) up to 120-bit md5
-    * collisions; downstream joins key on the hash either way. Cost
-    * shape: ONE extra shuffle of the token stream (the window's
-    * partition-by-doc) buys parallel, codegen'd shingling — at 100 TB
-    * prefer this when CPU-bound (measured ~2× here); [[shingleTable]]
-    * remains the zero-shuffle form (itself codegen'd via the fused
-    * [[textShingles]] kernel).
+  /** [[shingleTable]]∘[[shingleHashes]] for the hot path the
+    * dedup/decontamination queries share: the grams come from
+    * [[gramRows]] (shingling and md5 run inside each row), and the
+    * distinct dedups AFTER hashing, so its one shuffle carries 24-byte
+    * (id, h1, h2) rows, never shingle strings. That shuffle clusters on
+    * the id alone, so the consumers' per-doc aggregations and id joins
+    * (signatures, sizes, n_grams) reuse its partitioning instead of
+    * shuffling again. distinct-on-string == distinct-on-(h1,h2) up to
+    * 120-bit md5 collisions; downstream joins key on the hash either way.
     */
   def shingleHashTable(df: DataFrame, id: String, text: String, k: Int): DataFrame =
-    shingleHashes(leadShingles(df, id, text, k).select(col(id), col("sh")), id)
-      .distinct()
+    shingleHashes(gramRows(df, id, text, k).select(col(id), col("sh")), id)
+      .repartition(col(id)).distinct()
 
-  /** (id, pos, sh): the word k-gram at each token position, built with
-    * `lead()` over the (id, pos) window so construction is codegen'd
-    * concat_ws — shared by [[shingleHashTable]] and [[fingerprints]].
+  /** (id, pos, sh): the word k-gram starting at each token position of
+    * each row — [[textShingles]] exploded with its positions, so `pos`
+    * is the gram's first token index. One row-local projection, no
+    * token shuffle, sort or window, and a row yields its own grams even
+    * when ids repeat. Every per-gram consumer reads it:
+    * [[shingleHashTable]], [[repetitionStats]], the span and substring
+    * passes, and [[fingerprints]].
     */
-  private def leadShingles(df: DataFrame, id: String, text: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  private[graft] def gramRows(df: DataFrame, id: String, text: String, k: Int): DataFrame = {
     require(k >= 1, "shingle size must be >= 1")
-    val tok = df.select(col(id), posexplode(tokens(col(text))).as(Seq("pos", "w")))
-    val w0 = Window.partitionBy(col(id)).orderBy(col("pos"))
-    val withLeads = (1 until k).foldLeft(tok) { (d, i) =>
-      d.withColumn(s"w$i", lead(col("w"), i).over(w0))
-    }
-    val complete =
-      if (k == 1) withLeads else withLeads.filter(col(s"w${k - 1}").isNotNull)
-    complete.select(col(id), col("pos"),
-      concat_ws(" ", col("w") +: (1 until k).map(i => col(s"w$i")): _*).as("sh"))
+    df.select(col(id), posexplode(textShingles(col(text), k)).as(Seq("pos", "sh")))
   }
 
   /** Exact Jaccard-similar pairs >= threshold, candidate generation by
@@ -297,12 +277,11 @@ object Dedup {
   def probeMinhashIndex(batch: DataFrame, id: String, text: String,
                         index: MinhashIndex, threshold: Double,
                         maxBucket: Int = 0,
+                        @deprecated("the batch signatures are a row-local " +
+                          "projection; the flag is ignored", "0.1.0")
                         materialize: Boolean = false): DataFrame = {
     val n = index.numPerm
-    val bsig0 = signatureTable(batch, id, text, index.k, n)
-    // the batch signature table feeds two branches (banding + the
-    // verify join's a-side); materialize signs the batch once
-    val bsig = if (materialize) Pins.persist(bsig0) else bsig0
+    val bsig = signatureTable(batch, id, text, index.k, n)
     val bands = bandTable(bsig, id, n, index.rowsPerBand, maxBucket)
     val cand = bands.select(col(id).as("new_id"), col("band"), col("bh"))
       .join(index.bands.select(col(id).as("corpus_id"), col("band"), col("bh")),
@@ -660,21 +639,6 @@ object Dedup {
     agg.select(col(id), concat(bits: _*).as("simhash"))
   }
 
-  /** Winnowing document fingerprints (Schleimer/Wilkerson/Aiken style):
-    * per position, the minimum shingle hash in a sliding window of
-    * `window` shingles; distinct selected hashes identify the document.
-    * One shuffle by doc id; window frame is ROWS-bounded so state is O(w).
-    */
-  /** SimHash near-dup PAIRS by banding: any two signatures within
-    * hamming distance `maxDist` < nBands must agree exactly on at least
-    * one of the nBands bit-bands (pigeonhole), so candidates come from
-    * an equi-join on (band, bits) — never an all-pairs comparison — and
-    * are then verified by the exact hamming distance (xor + bit_count
-    * per 16-bit chunk, all codegen'd built-ins).
-    *
-    * Takes the signature table (from [[simhash]]) so callers can
-    * materialize it across the plan's branches.
-    */
   /** Directed edge rows (both directions of every pair) below which
     * [[connectedComponents]] finishes on the driver: 2^20 rows, so the
     * collected (src, dst) longs stay under 16 MiB.
@@ -902,6 +866,16 @@ object Dedup {
       .filter(levenshtein(col("w_a"), col("w_b")) <= 1)
   }
 
+  /** SimHash near-dup PAIRS by banding: any two signatures within
+    * hamming distance `maxDist` < nBands must agree exactly on at least
+    * one of the nBands bit-bands (pigeonhole), so candidates come from
+    * an equi-join on (band, bits) — never an all-pairs comparison — and
+    * are then verified by the exact hamming distance (xor + bit_count
+    * per 16-bit chunk, all codegen'd built-ins).
+    *
+    * Takes the signature table (from [[simhash]]) so callers can
+    * materialize it across the plan's branches.
+    */
   def simhashPairs(sig: DataFrame, id: String, maxDist: Int = 3,
                    nBands: Int = 4, maxBucket: Int = 0): DataFrame = {
     require(maxDist < nBands, "banding is only complete for maxDist < nBands")
@@ -937,27 +911,22 @@ object Dedup {
       .select("doc_a", "doc_b", "hamming")
   }
 
-  /** Per-OCCURRENCE gram hashes: (id, h) for every word n-gram position
-    * (unlike [[shingleHashTable]], NOT distinct — repetition analysis
-    * needs multiplicity). Only the 60-bit [[h1]] hash survives the gram
-    * construction, so every downstream count shuffles 16-byte rows.
-    */
-  def gramOccurrences(df: DataFrame, id: String, text: String, n: Int): DataFrame =
-    leadShingles(df, id, text, n).select(col(id), h1(col("sh")).as("h"))
-
   /** Gopher-style intra-document repetition metrics (Rae et al. 2021,
     * "Scaling Language Models", Table A1): per doc, the fraction of
     * n-gram occurrences that are repeats of an earlier occurrence
     * (`dup_gram_frac`) and the fraction covered by the single most
     * frequent n-gram (`top_gram_frac`) — the standard filters for
-    * degenerate/looping text in web-scale training corpora. Two
-    * hash-partial aggregations over (id, h): both shuffles carry only
-    * 16–32-byte rows and combine map-side, so the cost at 100 TB is the
-    * token scan. Docs with fewer than n tokens emit no grams and are
-    * absent (nothing to measure — filter them with a length gate first).
+    * degenerate/looping text in web-scale training corpora. Every gram
+    * OCCURRENCE counts (not distinct: repetition needs multiplicity), and
+    * only its 60-bit [[h1]] hash leaves the row: one exchange clusters
+    * the 16-byte (id, h) rows on the id, and both aggregations run over
+    * that partitioning, so the cost at 100 TB is the token scan. Docs
+    * with fewer than n tokens emit no grams and are absent (nothing to
+    * measure); [[repetitionGate]] is the row-local keep/drop form.
     */
   def repetitionStats(df: DataFrame, id: String, text: String, n: Int): DataFrame =
-    gramOccurrences(df, id, text, n)
+    gramRows(df, id, text, n).select(col(id), h1(col("sh")).as("h"))
+      .repartition(col(id))
       .groupBy(col(id), col("h")).agg(count(lit(1)).as("c"))
       .groupBy(col(id))
       .agg(sum(col("c")).as("n_grams"),
@@ -968,13 +937,28 @@ object Dedup {
           .as("dup_gram_frac"),
         (col("top_count").cast("double") / col("n_grams")).as("top_gram_frac"))
 
+  /** The row-local form of the [[repetitionStats]] gate: true when the
+    * text's `dup_gram_frac` over its word n-grams is at most `maxFrac`,
+    * or when it has fewer than n tokens (no grams, nothing to measure).
+    * A repeat count is n_grams − n_distinct, so it is array_distinct
+    * arithmetic over the [[textShingles]] kernel — the
+    * [[TextOps.lineRepetition]] idiom, with no explode, shuffle or
+    * anti-join, so it rides a map-only filter.
+    */
+  def repetitionGate(text: Column, n: Int, maxFrac: Double): Column = {
+    val g = textShingles(text, n)
+    val c = size(g)
+    c === 0 || (c - size(array_distinct(g))).cast("double") /
+      greatest(c, lit(1)).cast("double") <= maxFrac
+  }
+
   /** (id, pos, h): the document's non-overlapping w-token spans — THE
     * span contract [[spanStats]] and [[spanDedupApply]] share (the
     * accounting must see exactly the spans the apply step keeps or
     * drops; two hand-kept copies would silently desynchronize).
     */
   private def spanTable(df: DataFrame, id: String, text: String, w: Int): DataFrame =
-    leadShingles(df, id, text, w)
+    gramRows(df, id, text, w)
       .filter(pmod(col("pos"), lit(w)) === 0)
       .select(col(id), col("pos"), h1(col("sh")).as("h"))
 
@@ -1054,7 +1038,7 @@ object Dedup {
     */
   private def dupGramPositions(df: DataFrame, id: String, text: String,
                                w: Int): DataFrame = {
-    val grams = leadShingles(df, id, text, w)
+    val grams = gramRows(df, id, text, w)
       .select(col(id), col("pos"), h1(col("sh")).as("h"))
     grams.join(firstSpan(grams, id), Seq("h"))
       .filter(isDupSpan(id))
@@ -1171,14 +1155,9 @@ object Dedup {
   private def contamGramPositions(df: DataFrame, id: String, text: String,
                                   evalDf: DataFrame, evalText: String,
                                   w: Int): DataFrame = {
-    // synthetic per-row ids: the gram window partitions per eval DOC
-    // (a shared constant id would interleave all suite docs' tokens
-    // into one garbage token stream — and one executor's partition)
-    val evalHashes = leadShingles(
-        evalDf.select(monotonically_increasing_id().as("__eid"),
-          col(evalText)), "__eid", evalText, w)
+    val evalHashes = evalDf.select(explode(textShingles(col(evalText), w)).as("sh"))
       .select(h1(col("sh")).as("h")).distinct()
-    leadShingles(df, id, text, w)
+    gramRows(df, id, text, w)
       .select(col(id), col("pos"), h1(col("sh")).as("h"))
       .join(evalHashes, "h")
       .select(col(id), col("pos"))
@@ -1211,13 +1190,15 @@ object Dedup {
     stripCoveredTokens(df, id, text, w,
       contamGramPositions(df, id, text, evalDf, evalText, w))
 
+  /** Winnowing document fingerprints (Schleimer/Wilkerson/Aiken style):
+    * per position, the minimum shingle hash in a sliding window of
+    * `window` shingles; distinct selected hashes identify the document.
+    * One shuffle by doc id; window frame is ROWS-bounded so state is O(w).
+    */
   def fingerprints(df: DataFrame, id: String, text: String,
                    k: Int, window: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // shingles via lead() over the SAME (id, pos) ordering the winnowing
-    // window needs anyway ([[leadShingles]]): the one shuffle is shared,
-    // and everything outside the two window nodes stays codegen'd
-    val sh = leadShingles(df, id, text, k).withColumn("h", md5(col("sh")))
+    val sh = gramRows(df, id, text, k).withColumn("h", md5(col("sh")))
     val w = Window.partitionBy(col(id)).orderBy(col("pos"))
       .rowsBetween(0, window - 1)
     sh.select(col(id), min(col("h")).over(w).as("fp")).distinct()

@@ -38,10 +38,4 @@ object Snapshots {
           .when(!(col("h_old") <=> col("h_new")), "changed")
           .otherwise("unchanged").as("status"))
   }
-
-  /** The churn report: status -> count (one 4-row artifact). */
-  def diffSummary(oldDf: DataFrame, newDf: DataFrame, id: String,
-                  text: String): DataFrame =
-    diff(oldDf, newDf, id, text)
-      .groupBy(col("status")).agg(count(lit(1)).as("cnt"))
 }

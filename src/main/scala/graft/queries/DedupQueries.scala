@@ -366,8 +366,7 @@ object DedupQueries extends QueryModule {
         "doc_id", "text", k = 3, numPerm = 16, rowsPerBand = 4,
         maxBucket = MaxBucket)
       Dedup.probeMinhashIndex(d.filter(col("doc_id") % 3 === 0),
-        "doc_id", "text", idx, threshold = 0.5, maxBucket = MaxBucket,
-        materialize = true)
+        "doc_id", "text", idx, threshold = 0.5, maxBucket = MaxBucket)
     }),
 
     // pairwise near-dup evidence -> dedup GROUPS: connected components

@@ -234,6 +234,59 @@ object LawsSpec extends Properties("graft.laws") {
     Prop(r.passed) :| r.status.toString
   }
 
+  // --- row-local word grams ------------------------------------------------
+
+  // (id, text) corpora over genSigText with ids drawn from a small range,
+  // so rows often share an id
+  private val genGramDocs: Gen[Seq[(Long, Option[String])]] =
+    Gen.listOf(Gen.zip(Gen.chooseNum(0L, 3L), genSigText)).map(_.take(8))
+
+  property("gram rows equal the local sliding-window grams with positions, per row") = {
+    import graft.operators.Dedup
+    val r = Test.check(Test.Parameters.default.withMinSuccessfulTests(20),
+      forAll(genGramDocs, Gen.chooseNum(1, 10)) { (raw, k) =>
+        val docs = raw.toDF("doc_id", "text")
+        // the oracle reads the texts back, as Spark stores them
+        val grams = docs.collect().toSeq.flatMap { row =>
+          Option(row.getString(1)).toSeq.flatMap(t =>
+            Dedup.tokensLocal(t).sliding(k).filter(_.size == k).zipWithIndex
+              .map { case (g, pos) => (row.getLong(0), pos, g.mkString(" ")) })
+        }
+        def hex(s: String) = java.security.MessageDigest.getInstance("MD5")
+          .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+        val hashes = grams.map { case (id, _, sh) =>
+          val h = hex(sh)
+          (id, java.lang.Long.parseLong(h.substring(0, 15), 16),
+            java.lang.Long.parseLong(h.substring(16, 31), 16))
+        }.toSet
+        val rows = Dedup.gramRows(docs, "doc_id", "text", k)
+          .as[(Long, Int, String)].collect().toSeq
+        val table = Dedup.shingleHashTable(docs, "doc_id", "text", k)
+          .as[(Long, Long, Long)].collect().toSeq
+        Prop(rows.sorted == grams.sorted) :| s"rows $rows != $grams" &&
+          Prop(table.size == hashes.size && table.toSet == hashes) :| s"hashes $table != $hashes"
+      })
+    Prop(r.passed) :| r.status.toString
+  }
+
+  property("the row-local repetition gate keeps exactly the ids repetitionStats and the anti-join keep") = {
+    import graft.operators.Dedup
+    val r = Test.check(Test.Parameters.default.withMinSuccessfulTests(20),
+      forAll(Gen.listOf(genSigText).map(_.take(12)), Gen.chooseNum(1, 4),
+        Gen.oneOf(0.0, 0.08, 0.2, 0.5, 1.0)) { (texts, n, maxFrac) =>
+        val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+        val gate = docs.filter(Dedup.repetitionGate(col("text"), n, maxFrac))
+          .select("doc_id").as[Long].collect().toSet
+        val antiJoin = docs.join(
+            Dedup.repetitionStats(docs, "doc_id", "text", n)
+              .filter(col("dup_gram_frac") > maxFrac).select("doc_id"),
+            Seq("doc_id"), "left_anti")
+          .select("doc_id").as[Long].collect().toSet
+        Prop(gate == antiJoin) :| s"gate $gate != anti-join $antiJoin"
+      })
+    Prop(r.passed) :| r.status.toString
+  }
+
   // --- as-of join ---------------------------------------------------------
 
   property("asof matches the naive latest-at-or-before oracle") =

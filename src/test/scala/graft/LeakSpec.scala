@@ -117,6 +117,16 @@ class LeakSpec extends AnyFunSuite {
     failsCleanly(SparkEntry.queries("dedup_clusters")(spark, badIds))
   }
 
+  test("a minhash probe with materialize = true registers nothing") {
+    val docs = Tables(spark, dir, "documents")
+    val index = Dedup.buildMinhashIndex(docs.filter(col("doc_id") % 3 =!= 0),
+      "doc_id", "text", 3, 16, 4)
+    val before = registered
+    Dedup.probeMinhashIndex(docs.filter(col("doc_id") % 3 === 0), "doc_id", "text",
+      index, threshold = 0.5, materialize = true).collect()
+    assert((registered -- before).isEmpty, s"the probe leaked ${registered -- before}")
+  }
+
   test("connected components nest: labels live until the enclosing scope closes") {
     import spark.implicits._
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a", "b")

@@ -322,15 +322,48 @@ class PlanSpec extends AnyFunSuite {
       s"naive inequality join in range-join plan:\n$p")
   }
 
-  test("repetition_filter reuses the gram window's doc partitioning: one exchange") {
+  test("repetition_filter clusters its gram hashes on the doc id once: one exchange") {
     val df = SparkEntry.queries("repetition_filter")(spark, dir)
     df.collect()
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    // the (id, pos) window shuffles once on doc_id; both downstream
+    // the (id, h) rows shuffle once on doc_id; both downstream
     // aggregations cluster on (doc_id, …) supersets, so HashPartitioning
     // (doc_id) satisfies them and nothing reshuffles
     val n = "Exchange".r.findAllIn(p).length
     assert(n == 1, s"expected exactly 1 exchange, got $n:\n$p")
+  }
+
+  test("word-gram lanes build their grams inside the row: no lead() window in any plan") {
+    val lanes = Seq("repetition_filter", "span_dedup", "span_dedup_apply", "substring_dedup",
+      "substring_dedup_apply", "decontaminate_substring", "decontaminate_substring_apply",
+      "dedup_minhash", "decontaminate", "fingerprint")
+    for (name <- lanes) {
+      val df = SparkEntry.queries(name)(spark, dir)
+      df.foreach(_ => ())
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("lead("), s"$name: a lead() token window in the plan:\n$p")
+      if (name == "fingerprint") {
+        val windows = PlanSpec.flat(df.queryExecution.executedPlan)
+          .count(_.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec])
+        assert(windows == 1, s"fingerprint should keep exactly its winnowing window:\n$p")
+      }
+    }
+  }
+
+  test("the row-local repetition gate filters inside the scan's stage: no Exchange, Window or Sort") {
+    import org.apache.spark.sql.functions.col
+    import graft.functions.WordShingles
+    import graft.operators.Dedup
+    val df = Tables(spark, dir, "documents")
+      .filter(Dedup.repetitionGate(col("text"), 2, 0.08))
+    df.foreach(_ => ())
+    val p = df.queryExecution.executedPlan
+    val nodes = PlanSpec.flat(p)
+    assert(nodes.exists(n => n.isInstanceOf[FilterExec] &&
+      n.expressions.exists(_.exists(_.isInstanceOf[WordShingles]))), s"no gate filter:\n$p")
+    val shown = p.toString
+    assert(!shown.contains("Exchange") && !shown.contains("Window") && !shown.contains("Sort"),
+      s"the gate shuffles, windows or sorts:\n$shown")
   }
 
   test("span_dedup joins spans on the 60-bit hash only — equi-join, no text shuffle") {

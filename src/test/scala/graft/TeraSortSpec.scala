@@ -34,22 +34,23 @@ class TeraSortSpec extends AnyFunSuite {
     import graft.sources.TeraIO
     val base = java.nio.file.Files.createTempDirectory("graft-tera").toString
     val inDir = s"$base/in"; val outDir = s"$base/out"
+    try {
+      val gen = TeraSort.teraGen(spark, 10000, 4)
+      val genChecksum = TeraSort.teraChecksum(gen)
+      TeraIO.write(gen, inDir)
+      // raw 100-byte records: exactly rows * 100 bytes on disk, no framing
+      assert(TeraIO.dataBytes(spark, inDir) == 10000L * TeraIO.RecordLength)
 
-    val gen = TeraSort.teraGen(spark, 10000, 4)
-    val genChecksum = TeraSort.teraChecksum(gen)
-    TeraIO.write(gen, inDir)
-    // raw 100-byte records: exactly rows * 100 bytes on disk, no framing
-    assert(TeraIO.dataBytes(spark, inDir) == 10000L * TeraIO.RecordLength)
+      val input = TeraIO.read(spark, inDir)
+      assert(input.count() == 10000)
+      assert(TeraSort.teraChecksum(input) == genChecksum, "write->read must be lossless")
 
-    val input = TeraIO.read(spark, inDir)
-    assert(input.count() == 10000)
-    assert(TeraSort.teraChecksum(input) == genChecksum, "write->read must be lossless")
-
-    TeraIO.write(TeraSort.teraSort(input, 4), outDir)
-    val back = TeraIO.read(spark, outDir)
-    val (ok, count) = TeraSort.teraValidate(back)
-    assert(ok && count == 10000)
-    assert(TeraSort.teraChecksum(back) == genChecksum)
+      TeraIO.write(TeraSort.teraSort(input, 4), outDir)
+      val back = TeraIO.read(spark, outDir)
+      val (ok, count) = TeraSort.teraValidate(back)
+      assert(ok && count == 10000)
+      assert(TeraSort.teraChecksum(back) == genChecksum)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
 
   test("TeraValidate rejects an unsorted dataset") {
